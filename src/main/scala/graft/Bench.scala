@@ -2,17 +2,26 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line for the driver's BENCH_r{N}.json.
+/** Benchmark main: times every SparkEntry query and bt_* row on
+  * SPARK_GRAFT_SF_DIR, writes the per-row board to SPARK_GRAFT_BENCH_OUT
+  * (default target/bench-results.json) and prints one summary JSON line
+  * (at most 1 KB) to stdout.
   *
   * - Results are fully materialized through the noop sink: `count()` would
   *   let Catalyst prune the projection, timing the scan instead of the
   *   operator under test.
-  * - A warmup pass touches every input table, the write path, and the video
-  *   ingest (so session/classloader/codegen startup and one-time ingest
-  *   aren't attributed to whichever query runs first).
-  * - A query that throws is reported with time -1 and listed in "failed" —
-  *   never as a fast success.
+  * - Every fixture (input tables, video stores, the 10x tier) is built in
+  *   an untimed step before the board.
+  * - Each row, in name order with the bt_* rows first, runs one untimed
+  *   warmup and then SPARK_GRAFT_BENCH_REPS (default 2) timed reps; the
+  *   published value is the min of the completed reps.
+  * - Every execution runs under a watchdog with one fixed cap. A query
+  *   that throws is reported with time -1 and counted as "failed"; one the
+  *   watchdog cancels is counted as "aborted" — never as a fast success.
+  *
+  * Environment: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_SF1_DIR, SPARK_GRAFT_CPUS,
+  * SPARK_GRAFT_BENCH_REPS, SPARK_GRAFT_BENCH_OUT. Query names given as
+  * arguments select a targeted subset.
   */
 object Bench {
   private def materialize(df: DataFrame): Unit =
@@ -38,12 +47,9 @@ object Bench {
       }
       lastEventAt = System.nanoTime()
     }
-    /** wait until the bus has been quiet for 120 ms (capped) so the
-      * counters include every task of the just-finished action; called
-      * OUTSIDE the timed window — drain latency is not engine cost.
-      * (120 ms quiet, not 200: the bus flushes task-end events within a
-      * few ms of the action returning; at ~2 drains x ~230 rows the
-      * extra 80 ms/drain was ~37 s of pure board wall) */
+    /** wait until the bus has been quiet for 120 ms (capped at 5 s) so
+      * the counters include every task of the just-finished action;
+      * called OUTSIDE the timed window — drain latency is not engine cost */
     def drain(): Unit = {
       val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
       while (System.nanoTime() - lastEventAt < 120L * 1000 * 1000 &&
@@ -51,12 +57,9 @@ object Bench {
     }
   }
 
-  /** Per-rep resource snapshot (deltas between two of these attribute a
-    * slow rep to GC vs host CPU-steal vs genuine work — the variance
-    * question the r6 verdict left open). loadavg + cgroup throttled time
-    * added for r12's unattributed 5-7x driver-vs-in-session inflation:
-    * recorded steal alone did not explain it, so each rep now carries the
-    * host run-queue depth and any CFS-quota throttling too. */
+  /** Per-rep resource snapshot: deltas between two of these attribute a
+    * slow rep to GC, host CPU steal, run-queue depth, CFS throttling or
+    * genuine work. */
   private final case class ResSnap(gcMs: Long, cpuNs: Long, stealTicks: Long,
       shR: Long, shW: Long, spill: Long, load1: Double, throttledNs: Long)
   private def readFirstLine(p: String): Option[String] =
@@ -70,20 +73,16 @@ object Bench {
       case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
       case _ => -1L
     }
-    // host-wide steal ticks (USER_HZ=100), field 8 of /proc/stat's cpu
-    // line; single-JVM benches own the host so the delta is attributable
+    // host-wide steal ticks (USER_HZ=100), field 8 of /proc/stat's cpu line
     val steal = try {
       val f = java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get("/proc/stat")).get(0).trim.split("\\s+")
       if (f.length > 8) f(8).toLong else -1L
     } catch { case _: Throwable => -1L }
-    // 1-minute host load average: run-queue pressure from OTHER tenants
-    // is the leading suspect for the driver-clock inflation
+    // 1-minute host load average: run-queue pressure from other tenants
     val load1 = readFirstLine("/proc/loadavg")
       .flatMap(_.split("\\s+").headOption).flatMap(_.toDoubleOption).getOrElse(-1.0)
-    // CFS throttle time (cgroup v1 cpu.stat throttled_time is ns; v2
-    // cpu.stat throttled_usec) — this host has quota -1 so expected 0,
-    // but a quota'd driver host would show up here directly
+    // CFS throttle time (cgroup v1 throttled_time is ns; v2 throttled_usec)
     val throttled = {
       def parse(p: String, key: String, mult: Long): Option[Long] =
         try java.nio.file.Files.readAllLines(java.nio.file.Paths.get(p)).asScala
@@ -111,25 +110,6 @@ object Bench {
       s""""cfs_thr_s":$thrS}"""
   }
 
-  /** ~0.5 s single-thread spin: measures effective per-core frequency /
-    * contention directly (Miters/s). Run before each heavy row so a slow
-    * rep can be attributed to "host is slow" (calibration low) vs "row
-    * regressed" (calibration normal) — VERDICT r12 ask 5. The work is a
-    * data-dependent integer chain the JIT cannot elide. */
-  private def spinCalibrate(): Double = {
-    var x = 0x9e3779b97f4a7c15L; var it = 0L
-    val t0 = System.nanoTime()
-    val deadline = t0 + 500L * 1000 * 1000
-    while (System.nanoTime() < deadline) {
-      var i = 0
-      while (i < 100000) { x = x * 6364136223846793005L + 1442695040888963407L; x ^= x >>> 29; i += 1 }
-      it += 100000
-    }
-    val el = (System.nanoTime() - t0) / 1e9
-    if (x == 42L) System.err.println("") // consume x: defeat dead-code elim
-    it / el / 1e6
-  }
-
   /** BASELINE.md "BENCH targets for the rebuild" as first-class timed
     * entries (prefix bt_), independent of SF dir:
     *  - target 2: Stride/Range/Gather on a 1M-row synthetic Elem table
@@ -140,8 +120,6 @@ object Bench {
     *    through the keyframe index (decode counts pinned by spec; this
     *    times it).
     */
-  /** pipe-bridge element count (default keeps the historical 100k row
-    * comparable across rounds; override for protocol-slope attribution) */
   /** idempotent fleet-scale WARC fixture for bt_warc_wet: 48 member-gzip
     * files x 400 deterministic HTML response records (~15 MB of markup);
     * built once, so timed reps pay only the parse + extract
@@ -175,8 +153,9 @@ object Bench {
     root
   }
 
-  private def pkElems: Long =
-    sys.env.getOrElse("SPARK_GRAFT_PK_ELEMS", "100000").toLong
+  /** pipe-bridge element count (keeps the historical 100k row comparable
+    * across rounds) */
+  private val PkElems = 100000L
 
   /** build-once video fixture store for the bt decode rows: under
     * target/ (NOT java.io.tmpdir) so a fresh-/tmp driver run doesn't
@@ -185,6 +164,43 @@ object Bench {
     */
   private def videoFixtureRoot: String =
     new java.io.File("target/bench-fixtures/video").getAbsolutePath
+
+  /** The untimed fixture step, run once before the board with no
+    * watchdog: every file fixture and video store a selected bt_* row
+    * reads is built here (when not yet present), so no warmup or timed
+    * execution encodes anything. The video stores persist under target/;
+    * the HD store encodes DISTRIBUTED — its 1.9 GB of raw frames never
+    * sit on the driver.
+    */
+  private def ensureFixtures(s: SparkSession, rows: Set[String]): Unit = {
+    if (rows("bt_warc_wet")) ensureWarcFleet()
+    if (rows("bt_h264_index")) queries.VideoQueries.ensureH264Fleet()
+    import s.implicits._
+    import sources.{DeflateVideoCodec, H264GopCodec, VideoStore}
+    import graft.model.CacheMode.Ignore
+    val root = videoFixtureRoot
+    def tiny = (0 until 10000).map(i =>
+      operators.StdKernels.syntheticFrame(0L, i.toLong, 16, 24, 3)).toDS()
+    val stores: Seq[(String, String, () => Unit)] = Seq(
+      ("bt_sparse_decode", "bt10k", () =>
+        VideoStore.ingest(tiny, root, "bt10k", gopSize = 100, Ignore)),
+      ("bt_deflate_decode", "btdz10k", () =>
+        VideoStore.ingest(tiny, root, "btdz10k", gopSize = 100, Ignore,
+          codec = DeflateVideoCodec)),
+      ("bt_h264_decode_vga", "btvga", () =>
+        VideoStore.ingest((0 until 512).map(i => operators.StdKernels
+          .syntheticFrame(0L, i.toLong, 480, 640, 1)).toDS(), root, "btvga",
+          gopSize = 16, Ignore, codec = H264GopCodec.Default)),
+      ("bt_h264_decode_hd", "bthd", () =>
+        VideoStore.ingest(s.range(0, 2048, 1, 32).map(i => operators.StdKernels
+          .syntheticFrame(0L, i, 720, 1280, 1)), root, "bthd",
+          gopSize = 16, Ignore, codec = H264GopCodec.Default)))
+    for ((row, store, build) <- stores
+         if rows(row) && !sources.NamedStorage.committed(s, root, store)) {
+      System.err.println(s"[bench] encoding fixture $store for $row")
+      build()
+    }
+  }
 
   private[graft] def benchTargets: Map[String, (SparkSession, String) => DataFrame] = {
     def elemsN(s: SparkSession, n: Long): DataFrame = {
@@ -221,18 +237,17 @@ object Bench {
       // for the external-kernel surface
       "bt_100k_prockernel" -> ((s, _) => {
         val enc = org.apache.spark.sql.Encoders.product[model.Elem]
-        val ds  = elemsN(s, pkElems).repartition(8).as[model.Elem](enc)
+        val ds  = elemsN(s, PkElems).repartition(8).as[model.Elem](enc)
         operators.ProcessKernel.run(ds, queries.ProcQueries.wordcountSpec).toDF()
       }),
       // the same elements through the BATCHED frame protocol (256 elems
       // per pipe frame): the delta against bt_100k_prockernel is the
       // per-line pipe cost the batch attribute exists to amortize (at the
-      // default 100k/8-partition size both rows sit near the ~0.5 s
-      // job-setup floor — raise SPARK_GRAFT_PK_ELEMS to expose the
-      // protocol slope; BENCHNOTES carries the 1M-element attribution)
+      // 100k/8-partition size both rows sit near the ~0.5 s job-setup
+      // floor; BENCHNOTES carries the 1M-element protocol attribution)
       "bt_100k_prockernel_batched" -> ((s, _) => {
         val enc = org.apache.spark.sql.Encoders.product[model.Elem]
-        val ds  = elemsN(s, pkElems).repartition(8).as[model.Elem](enc)
+        val ds  = elemsN(s, PkElems).repartition(8).as[model.Elem](enc)
         operators.ProcessKernel.run(ds,
           queries.ProcQueries.wordcountBatchedSpec(256)).toDF()
       }),
@@ -385,16 +400,13 @@ object Bench {
       // (df/N <= 1%). This is the regime where the posting join's 100 TB
       // claim lives: the Zipf head is pruned by the fraction, tail
       // postings are bounded, and the probe cost is sum over query terms
-      // of df — ~linear in n (measured via SPARK_GRAFT_ZIPF_N at n and
-      // 10n; BENCHNOTES carries the ratio).
+      // of df — ~linear in n (measured at n and 10n; BENCHNOTES carries
+      // the ratio).
       "bt_100k_zipf_bm25" -> ((s, _) => {
         import org.apache.spark.sql.functions._
-        val n = sys.env.getOrElse("SPARK_GRAFT_ZIPF_N", "100000").toLong
+        val n = 100000L
         val docs = tools.ScaleTier.zipfDocuments(s, n)
-        // 500 fixed queries at any n; max(1,...) keeps a small
-        // SPARK_GRAFT_ZIPF_N override from a silent %-by-zero null filter
-        val q = docs.select(col("doc_id"))
-          .filter(col("doc_id") % math.max(1L, n / 500) === 0)
+        val q = docs.select(col("doc_id")).filter(col("doc_id") % (n / 500) === 0)
         functions.TfIdf.bm25TopK(docs, q, "doc_id", "text", k = 5,
           ngram = 1, maxDf = functions.DfBound.Frac(0.01))
           .agg(count(lit(1)).as("n"), sum(col("score")).as("s"))
@@ -408,11 +420,6 @@ object Bench {
           (col("id") * 40503 % 1024).as("y"), col("id"))
         operators.Layout.zorderLayout(rows, Seq("x", "y"), bits = 10, partitions = 32)
       }),
-      // adversarial CC scale row: a single 1M-node PATH (diameter 1M —
-      // the worst case for label propagation, and the duplicate-subgraph
-      // prune can drop nothing since every node has an edge). The
-      // double-pointer-jump loop must still converge in ~log4(1M) ≈ 10
-      // driver rounds; DedupSpec pins the round count, this row times it.
       // the bucketed range join at stress scale: 1M points x 10k
       // half-open intervals (width 150 over a 1M domain, bucket 128 —
       // fan-out <= 3 buckets/interval, ~1.5M matches). The naive theta
@@ -428,6 +435,11 @@ object Bench {
         operators.JoinStrategies.bucketedRangeJoin(points, ivals, "p", "lo", "hi", 128L)
           .agg(count(lit(1)).as("n_matches"), countDistinct(col("iv")).as("n_ivals"))
       }),
+      // adversarial CC scale row: a single 1M-node PATH (diameter 1M —
+      // the worst case for label propagation, and the duplicate-subgraph
+      // prune can drop nothing since every node has an edge). The
+      // double-pointer-jump loop must still converge in ~log4(1M) ≈ 10
+      // driver rounds; DedupSpec pins the round count, this row times it.
       "bt_1m_cc" -> ((s, _) => {
         import org.apache.spark.sql.functions._
         val n = 1000000L
@@ -541,47 +553,22 @@ object Bench {
             normal.unionAll(heavy), "ctx", "item", k = 5, maxCtxDegree = 64)
           .agg(count(lit(1)).as("n"), sum(col("n_shared")).as("mass"))
       }),
-      "bt_sparse_decode" -> ((s, _) => {
-        val root = videoFixtureRoot
-        // construct+encode the 10k frames ONLY when not yet ingested —
-        // otherwise the timed run would pay driver-side frame synthesis
-        // unrelated to the sparse-decode path under measurement
-        if (!sources.NamedStorage.committed(s, root, "bt10k")) {
-          import s.implicits._
-          val frames = (0 until 10000).map(i =>
-            operators.StdKernels.syntheticFrame(0L, i.toLong, 16, 24, 3))
-          sources.VideoStore.ingest(frames.toDS(), root, "bt10k", gopSize = 100,
-            graft.model.CacheMode.Ignore)
-        }
-        FixtureDigests.check(root, "bt10k")
-        val want = (0 until 100).map(i => (i * 97L + 13) % 10000L).distinct.sorted
-        sources.VideoStore.gatherFrames(s, root, "bt10k", 0L, want).toDF()
-      }),
+      "bt_sparse_decode" -> ((s, _) => sources.VideoStore.gatherFrames(s, videoFixtureRoot,
+        "bt10k", 0L, (0 until 100).map(i => (i * 97L + 13) % 10000L).distinct.sorted).toDF()),
       // BASELINE target 1 made concrete now that the pixel codec is REAL:
       // full-scan H264 decode at the reference fixture's 640x480
       // (tests/videos.h:32-35). 512 VGA frames in 16-frame GOPs (IDR + 15
-      // P, CAVLC, motion-compensated), encoded ONCE outside the timed
-      // loop; the timed run is decode-only through the store — one task
+      // P, CAVLC, motion-compensated), encoded by the fixture step; the
+      // timed run is decode-only through the store — one task
       // per GOP, zero shuffle, the rate multiplies by executors.
-      "bt_h264_decode_vga" -> ((s, _) => {
-        val root = videoFixtureRoot
-        if (!sources.NamedStorage.committed(s, root, "btvga")) {
-          import s.implicits._
-          val frames = (0 until 512).map(i =>
-            operators.StdKernels.syntheticFrame(0L, i.toLong, 480, 640, 1))
-          sources.VideoStore.ingest(frames.toDS(), root, "btvga", gopSize = 16,
-            graft.model.CacheMode.Ignore, codec = sources.H264GopCodec.Default)
-        }
-        FixtureDigests.check(root, "btvga")
-        // the 32 ~0.5 MB GOP files bin-pack into ~2 scan partitions
-        // (openCost-tuned for I/O); decode is the bottleneck, so the
-        // library's decode-aware default (cpuBoundDecode -> one task per
-        // GOP here) must spread them — this row pins the AUTO behavior
-        // that replaced round 11's hand-tuned minDecodeTasks=32
-        // (measured 3.6 s unspread -> 0.75 s spread)
-        sources.VideoStore.frames(s, root, "btvga",
-            codec = sources.H264GopCodec.Default).toDF()
-      }),
+      // The 32 ~0.5 MB GOP files bin-pack into ~2 scan partitions
+      // (openCost-tuned for I/O); decode is the bottleneck, so the
+      // library's decode-aware default (cpuBoundDecode -> one task per
+      // GOP here) must spread them — this row pins the AUTO behavior
+      // that replaced round 11's hand-tuned minDecodeTasks=32
+      // (measured 3.6 s unspread -> 0.75 s spread)
+      "bt_h264_decode_vga" -> ((s, _) => sources.VideoStore.frames(s, videoFixtureRoot,
+        "btvga", codec = sources.H264GopCodec.Default).toDF()),
       // HD decode at fleet shape (VERDICT r11 ask 5): 2048 frames of
       // 1280x720 gray in 16-frame GOPs -> 128 GOP segments >> 32 cores,
       // the regime where the file scan's bin-packing SHOULD batch
@@ -590,21 +577,10 @@ object Bench {
       // override here — the row proves decode scales when segments
       // outnumber tasks. Output carries its own telemetry: frames
       // decoded (fps = frames / this row's wall) and the distinct scan
-      // task count the bin-packer actually produced. Fixture encodes
-      // once, DISTRIBUTED (1.9 GB of raw frames never sit on the
-      // driver), and persists under target/.
+      // task count the bin-packer actually produced.
       "bt_h264_decode_hd" -> ((s, _) => {
-        val root = videoFixtureRoot
-        if (!sources.NamedStorage.committed(s, root, "bthd")) {
-          import s.implicits._
-          val frames = s.range(0, 2048, 1, 32).map(i =>
-            operators.StdKernels.syntheticFrame(0L, i, 720, 1280, 1))
-          sources.VideoStore.ingest(frames, root, "bthd", gopSize = 16,
-            graft.model.CacheMode.Ignore, codec = sources.H264GopCodec.Default)
-        }
-        FixtureDigests.check(root, "bthd")
         import org.apache.spark.sql.functions._
-        sources.VideoStore.frames(s, root, "bthd",
+        sources.VideoStore.frames(s, videoFixtureRoot, "bthd",
             codec = sources.H264GopCodec.Default).toDF()
           .select(spark_partition_id().as("pid"))
           .groupBy().agg(count(lit(1)).as("frames"),
@@ -614,19 +590,8 @@ object Bench {
       // GOPs): 10k frames x 1152 B inflate+delta per task — the measurable
       // proxy for BASELINE target 1 (decode throughput) this container
       // permits; compare against bt_sparse_decode's prune economics
-      "bt_deflate_decode" -> ((s, _) => {
-        val root = videoFixtureRoot
-        if (!sources.NamedStorage.committed(s, root, "btdz10k")) {
-          import s.implicits._
-          val frames = (0 until 10000).map(i =>
-            operators.StdKernels.syntheticFrame(0L, i.toLong, 16, 24, 3))
-          sources.VideoStore.ingest(frames.toDS(), root, "btdz10k", gopSize = 100,
-            graft.model.CacheMode.Ignore, codec = sources.DeflateVideoCodec)
-        }
-        FixtureDigests.check(root, "btdz10k")
-        sources.VideoStore.frames(s, root, "btdz10k",
-            codec = sources.DeflateVideoCodec).toDF()
-      }))
+      "bt_deflate_decode" -> ((s, _) => sources.VideoStore.frames(s, videoFixtureRoot,
+        "btdz10k", codec = sources.DeflateVideoCodec).toDF()))
   }
 
   /** Stencil {-1,0,1} + window-sum over n rows across 8 streams — the
@@ -669,934 +634,334 @@ object Bench {
       .distinct()
   }
 
-  // ------------------------------------------------------------------
-  // Incremental board emission (VERDICT r11 ask 1): the r10 and r11
-  // driver benches were SIGTERM'd mid-board (rc 124) and the artifact of
-  // record was lost because the one-line JSON printed only after the
-  // WHOLE board. Three layers make a partial run still parseable:
-  //  1. after EVERY completed query the full JSON (marked
-  //     "truncated":true, with the not-yet-run rows in "skipped") is
-  //     rewritten to target/bench-results.json;
-  //  2. a JVM shutdown hook prints that latest JSON line to stdout when
-  //     the final print never happened (run/fork=true: sbt destroy()
-  //     sends SIGTERM, hooks run);
-  //  3. a self-imposed wall budget (SPARK_GRAFT_BENCH_BUDGET_S, default
-  //     1800 s, the r11 verdict's suggested number; the hook + file
-  //     layers keep a shorter real clock safe) stops the board CLEANLY —
-  //     rows run cheapest-first within (bt_* baseline targets, then the
-  //     query board) using the previous run's times as estimates, and a
-  //     row whose estimated cost would cross the deadline is skipped.
-  // ------------------------------------------------------------------
-  private object Emit {
-    @volatile var latest: String = """{"metric":"total","value":0,"unit":"sec","queries":{},"failed":[],"truncated":true,"skipped":["__board_not_started__"]}"""
-    // the COMPACT line printed to stdout (VERDICT r15 defect 1: the full
-    // line grew to ~60 KB of telemetry and the driver keeps only a ~2 KB
-    // stdout tail, so PERF comparisons were blind for two rounds). The
-    // compact line carries total + per-query min + failed/skipped/aborted
-    // + cpus + sf ONLY; telemetry/reps/ops/calibration stay in the file
-    // artifacts. Scalar fields come AFTER the queries map so that even a
-    // tail-truncated capture retains them plus the trailing rows.
-    @volatile var latestCompact: String = latest
-    // stamped into both JSONs and used to key the committed board file
-    @volatile var cpusTag: String = "?"
-    val finalPrinted = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val outPath: java.nio.file.Path = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench-results.json"))
-    // COMMITTED copy of the round's final board (VERDICT r14 defect 3:
-    // for 14 rounds the complete board lived only in the untracked
-    // target/ file and the driver's 2000-char stdout tail — the best run
-    // of a round vanished on target/ cleanup). Repo root so a plain
-    // `git add` preserves it; refreshed only by a COMPLETED run (the
-    // shutdown hook keeps partial boards in target/ alone, so a SIGTERM'd
-    // rerun can't clobber the round's good committed artifact).
-    // the committed copy of the MAIN-configuration board. A full run at a
-    // DIFFERENT core count (the driver's scaling run) must not clobber it
-    // (VERDICT r15 defect 2: the 8-core scaling run overwrote the 32-core
-    // board of record), so flushCommitted keys the file on cpus: only the
-    // main-cpus run refreshes the plain path; other counts get their own
-    // suffixed file.
-    val mainCpus: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_MAIN_CPUS", "32")
-    def commitPath: java.nio.file.Path = {
-      val base = sys.env.getOrElse("SPARK_GRAFT_BENCH_COMMIT_OUT", "BENCH_LOCAL_LATEST.json")
-      if (cpusTag == mainCpus) java.nio.file.Paths.get(base)
-      else java.nio.file.Paths.get(base.stripSuffix(".json") + s"_c$cpusTag.json")
-    }
-    def flushFile(): Unit =
-      try {
-        if (outPath.getParent != null) java.nio.file.Files.createDirectories(outPath.getParent)
-        java.nio.file.Files.write(outPath, latest.getBytes("UTF-8"))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] result-file write failed: $e") }
-    def flushCommitted(): Unit =
-      try java.nio.file.Files.write(commitPath, (latest + "\n").getBytes("UTF-8"))
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] committed result write failed: $e") }
-    def installHook(): Unit =
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        if (finalPrinted.compareAndSet(false, true)) {
-          // partial emission on SIGTERM: compact stdout line (the driver
-          // contract) + full file, no Spark use
-          println(latestCompact)
-          System.out.flush()
-          flushFile()
-        }
-      }, "graft-bench-emit"))
+  /** Cap on any single execution (warmup, timed rep or profile pass). It
+    * sits far above the heaviest row's cost (bt_1m_cc, ~100 s on 4 cores),
+    * so it only catches hangs, which are reported as "aborted". */
+  private val ExecCapS = 600.0
+
+  /** rows that get one extra untimed per-op attribution pass */
+  private val ProfileRows = Set("pipeline_clean_corpus", "dedup_cluster_keep",
+    "dedup_clusters", "pq_adc_topk", "sim_tfidf_topk")
+
+  /** The sf1 section: a scale subset re-timed over the 10x tier in the
+    * same run, only alongside an sf0.1 board. The retrieval family is not
+    * here: the fixture corpus is non-Zipfian (see ScaleTier.zipfDocuments),
+    * so its all-pairs similarity densifies quadratically with n; the
+    * posting join's scale evidence is bt_100k_zipf_bm25. */
+  private val Sf1Rows = Seq("dedup_c4_spans", "dedup_cluster_keep",
+    "dedup_clusters", "dedup_containment", "dedup_lsh_pairs",
+    "dedup_paragraphs", "dedup_simhash_pairs", "emb_kmeans", "emb_pca",
+    "pipeline_incremental_update", "pq_encode", "sem_dedup",
+    "txt_boilerplate", "txt_corpus_report", "txt_normalize")
+  /** sf1 rows that get the per-op attribution pass */
+  private val Sf1ProfileRows = Set("dedup_simhash_pairs", "txt_corpus_report")
+
+  /** per-query result: min/median wall of the completed reps, per-rep
+    * (sec, telemetry) with a watchdog-killed partial last, per-op ms, and
+    * whether the watchdog aborted the row. A row with no completed rep
+    * keeps the -1 sentinel: "failed" when it threw, "aborted" when the
+    * watchdog cancelled it. */
+  private[graft] final case class QueryResult(min: Double, med: Double,
+      reps: Seq[(Double, String)], ops: Map[String, Long],
+      aborted: Boolean = false) {
+    def failed: Boolean = min < 0 && !aborted
   }
 
-  /** Committed digest pin for the target/bench-fixtures video stores
-    * (VERDICT r14 defect 5): the decode rows time whatever bytes a prior
-    * run encoded, and a target/ clean silently re-encodes them with the
-    * CURRENT encoder — changing what the row measures with no trace.
-    * After each fixture ensure, the store's content digest is checked
-    * against BENCH_FIXTURES.json: a match is silent, a mismatch prints a
-    * LOUD repin line into the bench stderr (regenerate-and-repin policy —
-    * encoder evolution is expected; losing the comparability note is
-    * not), and a missing entry records one.
-    */
-  private object FixtureDigests {
-    val path: java.nio.file.Path = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_FIXTURE_DIGESTS", "BENCH_FIXTURES.json"))
-    private val recorded = scala.collection.mutable.Map.empty[String, String]
-    private val seen = scala.collection.mutable.Set.empty[String]
-    private var loaded = false
-    private def load(): Unit = if (!loaded) {
-      loaded = true
-      try {
-        if (java.nio.file.Files.exists(path)) {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val root = om.readTree(path.toFile)
-          import scala.jdk.CollectionConverters._
-          root.fields().asScala.foreach { e =>
-            if (!e.getKey.startsWith("_")) recorded(e.getKey) = e.getValue.asText()
-          }
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] fixture-digest load failed: $e") }
-    }
-    private def digestOf(dir: java.nio.file.Path): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      import scala.jdk.CollectionConverters._
-      val files = java.nio.file.Files.walk(dir).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .filterNot(_.getFileName.toString.startsWith(".")) // Hadoop .crc shadows
-        .toSeq.sortBy(dir.relativize(_).toString)
-      files.foreach { f =>
-        md.update(dir.relativize(f).toString.getBytes("UTF-8"))
-        md.update(java.nio.file.Files.readAllBytes(f))
-      }
-      md.digest().map(b => f"${b & 0xff}%02x").mkString
-    }
-    /** verify-or-record the digest of one fixture store directory */
-    def check(root: String, name: String): Unit = try {
-      load()
-      val dir = java.nio.file.Paths.get(root, name)
-      if (!java.nio.file.Files.isDirectory(dir)) return
-      val d = digestOf(dir)
-      seen += name
-      recorded.get(name) match {
-        case Some(prev) if prev == d => () // bytes unchanged: rows comparable
-        case Some(prev) =>
-          System.err.println(s"[bench] FIXTURE REPIN $name: stored bytes " +
-            s"$d != pinned $prev — the decode rows now measure a " +
-            "re-encoded fixture; cross-round decode comparisons break here")
-          recorded(name) = d
-          save()
-        case None =>
-          recorded(name) = d
-          save()
-      }
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] fixture-digest check($name) failed: $e") }
-    private def save(): Unit = try {
-      val body = recorded.toSeq.sortBy(_._1)
-        .map { case (n, d) => s""""$n":"$d"""" }.mkString(",")
-      java.nio.file.Files.write(path,
-        (s"""{"_comment":"md5 over the target/bench-fixtures video stores the decode rows measure; a bench run repins LOUDLY on mismatch (see Bench.FixtureDigests)",$body}""" + "\n")
-          .getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] fixture-digest save failed: $e") }
+  /** what produced a board; stamped into its summary line and file */
+  private[graft] final case class RunInfo(sf: String, cpus: Int, reps: Int,
+      gitRev: String, artifact: String)
+
+  /** JSON string literal: quotes, backslashes and every control char
+    * escaped (exception messages carry newlines and plan fragments) */
+  private[graft] def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  } + "\""
+
+  /** The stdout summary line. Every field is a count, a flag or a string
+    * clipped to 160 chars, so the line stays under 1 KB whatever the
+    * board's size; per-row numbers live only in the board file. `total`
+    * sums the published mins of the main board's rows. */
+  private[graft] def summaryLine(results: Seq[(String, QueryResult)],
+      skipped: Int, truncated: Boolean, wallS: Double, info: RunInfo): String = {
+    def clip(s: String) = jsonStr(if (s.length <= 160) s else "..." + s.takeRight(157))
+    val total = results.map(_._2.min).filter(_ >= 0).sum
+    s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
+      s""""n_rows":${results.size},"failed":${results.count(_._2.failed)},""" +
+      s""""aborted":${results.count(_._2.aborted)},"skipped":$skipped,""" +
+      s""""truncated":$truncated,"cpus":${info.cpus},"sf":${clip(info.sf)},""" +
+      s""""wall_s":${f"$wallS%.1f"},"git_rev":${clip(info.gitRev)},""" +
+      s""""artifact":${clip(info.artifact)}}"""
   }
 
-  /** previous run's min times (from the result file this run will
-    * overwrite) — ordering + skip estimates only, never published.
-    * Returns (sf0.1 board mins, sf1 section mins): the sf1 mins size the
-    * sf1 reserve from MEASURED cost (VERDICT r13 ask 1a — the flat 240 s
-    * reserve was advisory and the contended r13 board ate it, evicting
-    * 8/15 sf1 rows).
-    */
-  private def loadEstimates(): (Map[String, Double], Map[String, Double]) =
-    try {
-      val f = Emit.outPath.toFile
-      if (!f.exists()) (Map.empty, Map.empty)
-      else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(f)
-        import scala.jdk.CollectionConverters._
-        def mins(node: com.fasterxml.jackson.databind.JsonNode): Map[String, Double] =
-          if (node == null) Map.empty
-          else node.fields().asScala.map(e => e.getKey -> e.getValue.asDouble(-1.0))
-            .filter(_._2 > 0).toMap
-        val sf1 = root.get("sf1")
-        (mins(root.get("queries")),
-          if (sf1 == null) Map.empty else mins(sf1.get("queries")))
-      }
-    } catch { case _: Throwable => (Map.empty, Map.empty) }
+  /** One run's board, kept current after every row: the artifact file is
+    * rewritten (marked truncated, rows not yet run listed under
+    * "skipped") and so is the summary the shutdown hook prints. A run
+    * killed mid-board (sbt's destroy() sends SIGTERM; hooks run) thus
+    * still leaves a line and a file that parse. */
+  private[graft] final class Board(planned: Seq[String], sf1Planned: Seq[String],
+      sf1Dir: String, info: RunInfo, startNanos: Long = System.nanoTime()) {
+    private val rows  = scala.collection.mutable.ArrayBuffer.empty[(String, QueryResult)]
+    private val rows1 = scala.collection.mutable.ArrayBuffer.empty[(String, QueryResult)]
+    @volatile private var sf1Error: Option[String] = None
+    @volatile private var hookLine = line(truncated = true)
+    private val printed = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** Per-row best-known-min ledger (VERDICT r13 ask 1c): a COMMITTED
-    * file (repo root, not target/) recording each row's best min ever
-    * measured on a CALM rep — load1 < 10 and steal below 3% of the
-    * rep's cpu time — so cross-round comparison can separate "host
-    * regime" from "regression" without BENCHNOTES archaeology. The
-    * bench also reads it as an estimate fallback: a row whose previous
-    * run aborted (no published min — bt_1m_cc in r12 AND r13) otherwise
-    * gates on the useless group median.
-    */
-  private object Ledger {
-    val path: java.nio.file.Path = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_LEDGER", "BENCH_LEDGER.json"))
-    // "tier/name" -> (best calm min, load1 at record, steal_s at record);
-    // tier-keyed because the gate runs the same query names at sf0.01 —
-    // an untiered ledger would hand the sf0.1 board 10x-too-low
-    // estimates, and the 4x-est watchdog caps would kill healthy rows
-    val rows = scala.collection.mutable.Map.empty[String, (Double, Double, Double)]
-    @volatile private var dirty = false
-    def key(tier: String, name: String): String = s"$tier/$name"
-    /** calm mins for one tier, name-keyed */
-    def minsFor(tier: String): Map[String, Double] = {
-      val p = tier + "/"
-      rows.collect { case (k, v) if k.startsWith(p) =>
-        k.stripPrefix(p) -> v._1 }.toMap
+    private def wallS: Double = (System.nanoTime() - startNanos) / 1e9
+    def hookSummary: String = hookLine
+    def record(name: String, qr: QueryResult): Unit = synchronized { rows += ((name, qr)); refresh() }
+    def recordSf1(name: String, qr: QueryResult): Unit = synchronized { rows1 += ((name, qr)); refresh() }
+    def failSf1(msg: String): Unit = synchronized { sf1Error = Some(msg); refresh() }
+
+    private def line(truncated: Boolean): String = synchronized { summaryLine(rows.toSeq,
+      if (truncated) planned.size - rows.size else 0, truncated, wallS, info) }
+    private def names(rs: Iterable[String]) = rs.map(jsonStr).mkString("[", ",", "]")
+    private def section(rs: Seq[(String, QueryResult)], plan: Seq[String],
+        truncated: Boolean): String = {
+      val done = rs.map(_._1).toSet
+      s"""${sectionJson(rs)},"failed":${names(rs.collect { case (k, qr) if qr.failed => k })},""" +
+        s""""skipped":${names(if (truncated) plan.filterNot(done) else Nil)}"""
     }
-    def load(): Unit =
-      try {
-        if (java.nio.file.Files.exists(path)) {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val q = om.readTree(path.toFile).get("rows")
-          if (q != null) {
-            import scala.jdk.CollectionConverters._
-            q.fields().asScala.foreach { e =>
-              val v = e.getValue
-              rows(e.getKey) = (v.get("min").asDouble(-1.0),
-                if (v.has("load1")) v.get("load1").asDouble(-1.0) else -1.0,
-                if (v.has("steal_s")) v.get("steal_s").asDouble(-1.0) else -1.0)
-            }
-            rows.filterInPlace((_, v) => v._1 > 0)
-          }
+    def fileJson(truncated: Boolean): String = synchronized {
+      val res = rows.toSeq
+      val total = res.map(_._2.min).filter(_ >= 0).sum
+      val sf1Json =
+        if (sf1Planned.isEmpty) ""
+        else sf1Error match {
+          case Some(msg) => s""","sf1":{"dir":${jsonStr(sf1Dir)},"error":${jsonStr(msg)}}"""
+          case None =>
+            val mins01 = res.toMap
+            val ratios = rows1.collect {
+              case (k, qr) if qr.min > 0 && mins01.get(k).exists(_.min > 0) =>
+                jsonStr(k) + ":" + f"${qr.min / mins01(k).min}%.2f"
+            }.mkString("{", ",", "}")
+            s""","sf1":{"dir":${jsonStr(sf1Dir)},""" +
+              s"""${section(rows1.toSeq, sf1Planned, truncated)},"ratio_vs_sf0.1":$ratios}"""
         }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ledger load failed (starting fresh): $e") }
-    /** record a calm measurement; keeps the per-row min over history */
-    def offer(tier: String, name: String, sec: Double, load1: Double,
-        stealS: Double): Unit = {
-      val k = key(tier, name)
-      if (sec > 0 && rows.get(k).forall(_._1 > sec)) {
-        rows(k) = (sec, load1, stealS)
-        dirty = true
-      }
+      s"""{"metric":"total","value":$total,"unit":"sec","n_rows":${res.size},""" +
+        s"""${section(res, planned, truncated)},"reps":${info.reps},""" +
+        s""""sf":${jsonStr(info.sf)},"cpus":${info.cpus},"wall_s":${f"$wallS%.1f"},""" +
+        s""""git_rev":${jsonStr(info.gitRev)},"truncated":$truncated$sf1Json}"""
     }
-    def save(): Unit = if (dirty) try {
-      val body = rows.toSeq.sortBy(_._1).map { case (n, (m, l, s)) =>
-        s""""$n":{"min":${f"$m%.4f"},"load1":${f"$l%.2f"},"steal_s":${f"$s%.2f"}}"""
-      }.mkString(",")
-      java.nio.file.Files.write(path,
-        s"""{"_comment":"best-known calm min per bench row; a rep qualifies when host STEAL is under 3% of its cpu time (floor 0.5 s) and load1 under 48 as an absurdity guard — load1 is recorded for context, NOT the gate (the bench's own 32 threads push it to 10-30 by design); see Bench.Ledger","rows":{$body}}""".getBytes("UTF-8"))
-      dirty = false
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] ledger save failed: $e") }
+
+    private def write(path: java.nio.file.Path, body: String): Unit =
+      try {
+        if (path.getParent != null) java.nio.file.Files.createDirectories(path.getParent)
+        java.nio.file.Files.write(path, (body + "\n").getBytes("UTF-8"))
+      } catch { case e: Throwable => System.err.println(s"[bench] write of $path failed: $e") }
+    private def refresh(): Unit = {
+      hookLine = line(truncated = true)
+      write(java.nio.file.Paths.get(info.artifact), fileJson(truncated = true))
+    }
+
+    def installHook(): Unit = {
+      refresh()
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        if (printed.compareAndSet(false, true)) { println(hookLine); System.out.flush() },
+        "graft-bench-emit"))
+    }
+
+    /** Final emission: the complete file, plus — for an untargeted run —
+      * the committed board copy `BENCH_LOCAL_LATEST_c<cpus>.json`; then
+      * the summary line on stdout, which is returned. */
+    def finish(commit: Boolean): String = {
+      val body = fileJson(truncated = false)
+      write(java.nio.file.Paths.get(info.artifact), body)
+      val committed = s"BENCH_LOCAL_LATEST_c${info.cpus}.json"
+      if (commit) write(java.nio.file.Paths.get(committed), body)
+      System.err.println(s"[bench] board written to ${info.artifact}" +
+        (if (commit) s" and $committed" else " only (targeted run)"))
+      val l = line(truncated = false)
+      if (printed.compareAndSet(false, true)) { println(l); System.out.flush() }
+      l
+    }
   }
 
-  /** 1-minute host load average right now (calm-window scheduling for
-    * heavy rows — VERDICT r13 ask 1b) */
-  private def load1Now(): Double = readFirstLine("/proc/loadavg")
-    .flatMap(_.split("\\s+").headOption).flatMap(_.toDoubleOption).getOrElse(-1.0)
+  private def gitRev: String =
+    try scala.sys.process.Process(Seq("git", "describe", "--always", "--dirty", "--abbrev=12"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+    catch { case _: Throwable => "unknown" }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val startNanos = System.nanoTime()
-    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1800").toDouble
-    def elapsedS: Double = (System.nanoTime() - startNanos) / 1e9
-    Ledger.load()
-    val tierTag = new java.io.File(sfDir).getName // e.g. "sf0.1"
-    val (prevMins, prevSf1MinsFile) = loadEstimates()
-    val prevSf1Mins =
-      if (prevSf1MinsFile.nonEmpty) prevSf1MinsFile else Ledger.minsFor("sf1")
-    Emit.cpusTag = cpus
-    // ledger calm mins back-fill rows the previous run aborted or skipped
-    // (bt_1m_cc published NO min in r12 or r13, so it gated and capped on
-    // the group median / budget/12 — exactly the rows that most need a
-    // real estimate get none without the ledger)
-    val estimates = Ledger.minsFor(tierTag) ++ prevMins
-    Emit.installHook()
-    Emit.flushFile()
-    // Base timed reps per query after one untimed warmup: single-shot
-    // timings at sub-second scale are dominated by codegen/JIT and this
-    // host's virtualization steal bursts (the r2->r3 comparison showed
-    // 1.5-2x swings on queries whose plans did not change). Base is 2
-    // with AUTOMATIC escalation to 3 when the two reps disagree by >25%
-    // on a row with min >= 1 s (see timeAll): a steal burst on a heavy
-    // row still gets voted down by a third rep, while the ~200 cheap
-    // rows stop paying a third execution each — the r10 driver bench
-    // was killed on timeout (rc 124), and one rep x 230 rows was the
-    // single largest recoverable block of board wall.
-    val reps  = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val only  = args.toSet // optional query-name filter for targeted reruns
-    // queries that get the extra per-op-attribution profile pass
-    // (default: the heaviest five of the r6 bench)
-    val profileSet = sys.env.getOrElse("SPARK_GRAFT_BENCH_PROFILE",
-      "pipeline_clean_corpus,dedup_cluster_keep,dedup_clusters," +
-        "pq_adc_topk,sim_tfidf_topk").split(",").map(_.trim).toSet
-    val spark = GraftSession.local(cpus, "graft-bench")
+    val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // under target/ (NOT java.io.tmpdir): the workspace persists between
+    // runs while /tmp may be reaped (VERDICT r11 ask 6)
+    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
+      new java.io.File("target/graft-sf1").getAbsolutePath)
+    val cpus = GraftSession.envCpus
+    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
+    require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
+    val out  = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench-results.json")
+    val only = args.toSet // optional query-name filter for targeted reruns
+    val all  = SparkEntry.queries ++ benchTargets
     // fail loudly on a misspelled filter: a silent empty selection prints
     // total=0 and reads like a (nonsense) clean run
-    locally {
-      val known   = SparkEntry.queries.keySet ++ benchTargets.keySet
-      val unknown = only.diff(known)
-      require(unknown.isEmpty,
-        s"unknown bench query name(s): ${unknown.toSeq.sorted.mkString(", ")}; " +
-          s"known: ${known.toSeq.sorted.mkString(", ")}")
-    }
+    val unknown = only.diff(all.keySet)
+    require(unknown.isEmpty,
+      s"unknown bench query name(s): ${unknown.toSeq.sorted.mkString(", ")}; " +
+        s"known: ${all.keySet.toSeq.sorted.mkString(", ")}")
+    val (bt, rest) = all.toSeq.filter(p => only.isEmpty || only(p._1))
+      .sortBy(_._1).partition(_._1.startsWith("bt_"))
+    val ordered = bt ++ rest
+    val sf1 = if (sfDir.endsWith("sf0.1")) Sf1Rows.filter(n => only.isEmpty || only(n)) else Nil
+    val board = new Board(ordered.map(_._1), sf1, sf1Dir,
+      RunInfo(sfDir, cpus, reps, gitRev, out), startNanos)
+    board.installHook()
 
-    val tables = Seq("lineitem", "orders", "customer", "nation", "region",
-      "supplier", "part", "events", "documents", "embeddings")
-    tables.foreach { t =>
+    val spark = GraftSession.local(cpus.toString, "graft-bench")
+    // untimed fixture step: touch every input table (session, classloader
+    // and codegen start-up are not billed to whichever row runs first),
+    // ingest the shared test video, and build every bt_* fixture
+    Seq("lineitem", "orders", "customer", "nation", "region", "supplier",
+        "part", "events", "documents", "embeddings").foreach { t =>
       try materialize(spark.read.parquet(s"$sfDir/$t.parquet").limit(1000))
       catch { case _: Throwable => () }
     }
-    // the video warmups are a fixed ~30-60 s block — under a budget too
-    // short to reach the video rows anyway, skip them (the rows would be
-    // budget-skipped too, or pay their own ingest in their warmup rep)
-    if (budgetS - elapsedS > 120) {
-      try queries.VideoQueries.warmup(spark)
-      catch { case e: Throwable => System.err.println(s"warmup(video) failed: $e") }
-      // one-time 10k-frame ingest for bt_sparse_decode happens here, not in
-      // the timed loop (CacheMode.Ignore makes the timed run skip it)
-      try materialize(benchTargets("bt_sparse_decode")(spark, sfDir))
-      catch { case e: Throwable => System.err.println(s"warmup(bt video) failed: $e") }
-    } else System.err.println("[bench] skipping video warmups (budget)")
+    try {
+      queries.VideoQueries.warmup(spark)
+      ensureFixtures(spark, ordered.map(_._1).toSet)
+    } catch { case e: Throwable => System.err.println(s"[bench] fixture step failed: $e") }
 
-    val all = SparkEntry.queries ++ benchTargets
-    val selected = if (only.isEmpty) all else all.filter { case (n, _) => only(n) }
-    val estMedian =
-      if (estimates.isEmpty) 1.0
-      else estimates.values.toSeq.sorted.apply(estimates.size / 2)
-    // priority order (r12 lesson: bt_1m_cc at 442 s under driver-host
-    // contention ate a quarter of the budget FIRST and evicted the whole
-    // expensive library tail): cheap bt_* rows (the BASELINE-target
-    // evidence), then the full query board, then the HEAVY bt_* stress
-    // rows LAST — the board's ~190 rows cost ~350 s total and must never
-    // be hostage to a stress row. Cheapest-first within each group by the
-    // PREVIOUS run's published min (unknown rows take the group median).
-    val ordered: Seq[(String, (SparkSession, String) => DataFrame)] = {
-      def est(n: String) = estimates.getOrElse(n, estMedian)
-      val (bt, rest) = selected.toSeq.sortBy(_._1).partition(_._1.startsWith("bt_"))
-      val (btHeavy, btLight) = bt.partition(p => est(p._1) >= 30.0)
-      btLight.sortBy(p => est(p._1)) ++ rest.sortBy(p => est(p._1)) ++
-        btHeavy.sortBy(p => est(p._1))
-    }
-    val plannedNames = ordered.map(_._1)
     val tally = new MetricsTally
     spark.sparkContext.addSparkListener(tally)
-
-    // deadline for the sf0.1 board: keep a reserve for the sf1 section
-    // (so the 10x-ratio evidence isn't crowded out by the board's cheap
-    // tail) + final emission
-    def remaining(reserveS: Double): Double = budgetS - elapsedS - reserveS
-    val sf1Planned = sfDir.endsWith("sf0.1") &&
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1", "1") != "0"
-    // sf1 reserve sized from MEASURED sf1 cost when the previous run has
-    // one (sum of sf1 mins x 1.6 for rep overhead + 30 s section slack,
-    // never below the 240 s warm-tier floor, capped at a third of the
-    // budget); r13's flat 240 s underestimated a contended sf1 tier and
-    // 8/15 rows were evicted
-    val sf1Reserve =
-      if (!sf1Planned) 0.0
-      else if (prevSf1Mins.isEmpty) 240.0
-      else math.min(budgetS / 3,
-        math.max(240.0, prevSf1Mins.values.sum * 1.6 + 30.0))
-    if (sf1Planned) System.err.println(
-      f"[bench] sf1 reserve $sf1Reserve%.0fs (prev measured ${prevSf1Mins.values.sum}%.0fs over ${prevSf1Mins.size} rows)")
-    val doneBuf = scala.collection.mutable.ArrayBuffer.empty[(String, QueryResult)]
-    @volatile var sf1Part = ""
-    @volatile var sf1Compact = ""
-    def emitPartial(skippedNow: Seq[String]): Unit = {
-      val snapDone = doneBuf.toSeq
-      val failedNow = snapDone.collect {
-        case (k, qr) if qr.min < 0 && !qr.aborted => "\"" + k + "\"" }
-        .mkString("[", ",", "]")
-      val totalNow = snapDone.map(_._2.min).filter(_ >= 0).sum
-      val sk = skippedNow.map("\"" + _ + "\"").mkString("[", ",", "]")
-      Emit.latest =
-        s"""{"metric":"total","value":$totalNow,"unit":"sec",${sectionJson(snapDone)},"reps":$reps,"failed":$failedNow,"sf":"$sfDir","cpus":$cpus,"budget_s":$budgetS,"truncated":true,"skipped":$sk$sf1Part}"""
-      Emit.latestCompact = compactJson(snapDone, reps, sfDir, cpus, budgetS,
-        elapsedS, truncated = true, skippedNow, sf1Compact)
-      Emit.flushFile()
+    ordered.foreach { case (name, fn) =>
+      board.record(name, timeOne(spark, tally, name, fn, sfDir, reps, ProfileRows(name)))
     }
-    // per-execution watchdog cap (r12 ask 1a): 4x the previous run's min
-    // for known rows, budget/12 for unknown ones, never below 45 s — this
-    // host's contention swings are legitimately 10-15x on multi-MB-working-
-    // set rows (BENCHNOTES r13: bt_h264_decode_hd 2.15 s calm / ~31 s
-    // contended; the r13 validation run killed it at the old 20 s floor
-    // and lost the board entry). 45 s still bounds a runaway to a 40th of
-    // the budget; the r12 disaster rep (442 s) dies at budget/12 = 150 s.
-    // the single heaviest known row gets ONE attempt at a budget/8 cap
-    // (VERDICT r13 ask 1b: bt_1m_cc's calm cost is 81-90 s but the 150 s
-    // budget/12 cap killed both reps under load1 >= 15 two rounds
-    // running — 225 s at the default budget absorbs a 2.5x contention
-    // multiple while still bounding a runaway to an eighth of the clock)
-    val heaviestRow: Option[String] = {
-      val bt = selected.keysIterator.filter(n =>
-        n.startsWith("bt_") && estimates.getOrElse(n, 0.0) >= 30.0)
-      if (bt.isEmpty) None else Some(bt.maxBy(n => estimates(n)))
-    }
-    val capFor: String => Double = n => {
-      val base = math.max(45.0,
-        estimates.get(n).map(e => math.min(4 * e, budgetS / 12)).getOrElse(budgetS / 12))
-      if (heaviestRow.contains(n)) math.max(base, budgetS / 8) else base
-    }
-    // heavy-row reserve (r13 validation run: the cheap tail + sf1 reserve
-    // left no room and bt_1m_cc — the single most expensive row, deferred
-    // to run LAST — was the one skip of an otherwise-complete board).
-    // While a deferred heavy row hasn't run, its estimated cost is held
-    // back from every EARLIER row's budget; the row itself (and rows
-    // after it) no longer see its reserve.
-    val heavyNames = ordered.map(_._1)
-      .filter(n => n.startsWith("bt_") &&
-        estimates.getOrElse(n, estMedian) >= 30.0)
-    def heavyReserve(upTo: String): Double = {
-      val later = plannedNames.dropWhile(_ != upTo).drop(1).toSet
-      heavyNames.filter(later).map(n => estimates.getOrElse(n, estMedian) * 1.2 + 5).sum
-    }
-    val (results, skipped0) = timeAll(spark, tally, ordered, sfDir, reps, profileSet,
-      estimates = estimates,
-      remainingS = n => remaining(20.0 + sf1Reserve + heavyReserve(n)),
-      fallbackEst = estMedian, capFor = capFor,
-      deferHeavyWhenBusy = true, ledgerTier = tierTag,
-      onResult = { (name, qr) =>
-        doneBuf += ((name, qr))
-        Ledger.save()
-        val doneNames = doneBuf.map(_._1).toSet
-        emitPartial(plannedNames.filterNot(doneNames))
-      })
-
-    val failed = results.collect {
-      case (k, qr) if qr.min < 0 && !qr.aborted => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
-    // sf1 section (VERDICT r8 ask 8): a ~10-query scale subset over the
-    // 10x documents/embeddings tier, measured IN the driver artifact with
-    // the same telemetry, so 10x-data ratios no longer rely on builder
-    // snapshots. Runs only alongside the sf0.1 perf run (the gate's
-    // sf0.01 run skips it); the tier is (re)generated deterministically
-    // when absent — ScaleTier is xxhash64-keyed, so the data is
-    // byte-stable across regenerations.
-    val sf1Json =
-      if (!sfDir.endsWith("sf0.1") ||
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1", "1") == "0") ""
-      // not enough clock left for a meaningful 10x section: report WHY
-      // instead of risking the whole artifact on a mid-section SIGTERM
-      else if (remaining(20.0) < 90.0)
-        s""","sf1":{"skipped_reason":"budget exhausted after sf0.1 board (${f"$elapsedS%.0f"}s elapsed of ${budgetS}s)"}"""
-      else try {
-        // drop the sf0.1 board's session-shared relations (memoized
-        // TermIndex) before the 10x tier brings in its own corpus
-        CacheScope.releaseShared(blocking = true)
-        // default under target/ (NOT java.io.tmpdir): the workspace
-        // persists between driver runs while /tmp may be reaped — a
-        // fresh-tmp driver run was regenerating the 10x tier before a
-        // single timed rep (VERDICT r11 ask 6)
-        val sf1Dir  = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
-          new java.io.File("target/graft-sf1").getAbsolutePath)
-        val sf1Reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1_REPS", "2").toInt
-        // the retrieval family (sim_tfidf/bm25/hybrid) is deliberately
-        // NOT in this subset: the fixture corpus is non-Zipfian (every
-        // bigram ~5.7% df at any SF — see ScaleTier.zipfDocuments), so
-        // its all-pairs similarity densifies quadratically with n; a 10x
-        // run measures a distribution shift, not scaling. The posting
-        // join's scale evidence lives in bt_100k_zipf_bm25 (Zipf corpus,
-        // fractional prune), where cost IS ~linear in n.
-        val names = sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1_QUERIES",
-          "dedup_lsh_pairs,dedup_simhash_pairs,dedup_clusters," +
-            "dedup_cluster_keep,dedup_paragraphs,dedup_c4_spans," +
-            "sem_dedup,pq_encode,emb_kmeans,txt_normalize," +
-            "txt_corpus_report,txt_boilerplate,dedup_containment," +
-            "pipeline_incremental_update,emb_pca").split(",").map(_.trim).toSet
-        // check BOTH tables: a run that died between the two writes (or a
-        // tmp-reaper that took one) must still trigger regeneration
-        val tierAbsent =
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(
-            s"$sf1Dir/documents.parquet", "_SUCCESS")) ||
-          !java.nio.file.Files.exists(java.nio.file.Paths.get(
-            s"$sf1Dir/embeddings.parquet", "_SUCCESS"))
-        if (tierAbsent && remaining(20.0) < 240.0)
-          s""","sf1":{"skipped_reason":"10x tier absent at $sf1Dir and only ${f"${remaining(20.0)}%.0f"}s of budget left (generation + board needs ~240s)"}"""
-        else {
-        if (tierAbsent) {
-          System.err.println(s"[bench] generating sf1 tier at $sf1Dir (10x)")
-          tools.ScaleTier.documents(spark, 50000L).write.mode("overwrite")
-            .parquet(s"$sf1Dir/documents.parquet")
-          tools.ScaleTier.embeddings(spark, 20000L).write.mode("overwrite")
-            .parquet(s"$sf1Dir/embeddings.parquet")
-        }
-        // a targeted invocation (query names as args) also narrows the
-        // sf1 section, so dev reruns stay fast
-        val sel1names = SparkEntry.queries.keySet
-          .filter(n => names(n) && (only.isEmpty || only(n)))
-        // cheapest-first by the sf0.1 board's own mins (the best
-        // in-session predictor of relative sf1 cost)
-        val mins01 = results.toMap
-        val sel1 = SparkEntry.queries.filter { case (n, _) => sel1names(n) }
-          .toSeq.sortBy { case (n, _) => mins01.get(n).map(_.min).getOrElse(1.0) }
-        // per-op attribution at the 10x tier for the queries whose sf1
-        // ratios the verdicts have asked to attribute (r8 asks 3 and 7)
-        val prof1 = sys.env.getOrElse("SPARK_GRAFT_BENCH_SF1_PROFILE",
-          "dedup_simhash_pairs,txt_corpus_report").split(",").map(_.trim).toSet
-        def sf1Section(res1: Seq[(String, QueryResult)], skipped1: Seq[String]): String = {
-          val ratios = res1.collect {
-            case (k, qr) if qr.min > 0 &&
-                mins01.get(k).exists(_.min > 0) =>
-              s"\"" + k + "\":" + f"${qr.min / mins01(k).min}%.2f"
-          }.mkString("{", ",", "}")
-          // failed list for THIS section too — the top-level "failed" only
-          // covers the sf0.1 results, and a consumer checking it would
-          // otherwise see a clean run while sf1 numbers silently miss
-          val failed1 = res1.collect {
-            case (k, qr) if qr.min < 0 && !qr.aborted => "\"" + k + "\"" }
-            .mkString("[", ",", "]")
-          val sk1 = skipped1.map("\"" + _ + "\"").mkString("[", ",", "]")
-          // compact sf1 summary for the stdout line: total + per-row mins
-          // + failure lists (ratios/telemetry stay in the file artifact)
-          val tot1 = res1.map(_._2.min).filter(_ >= 0).sum
-          val q1 = res1.map { case (k, qr) =>
-            "\"" + k + "\":" + (if (qr.min < 0) qr.min.toString else f"${qr.min}%.3f")
-          }.mkString("{", ",", "}")
-          sf1Compact =
-            s""","sf1_total":${f"$tot1%.2f"},"sf1_queries":$q1,"sf1_failed":$failed1,"sf1_skipped":$sk1"""
-          s""","sf1":{"dir":"$sf1Dir","reps":$sf1Reps,${sectionJson(res1)},"failed":$failed1,"skipped":$sk1,"ratio_vs_sf0.1":$ratios}"""
-        }
-        val done1 = scala.collection.mutable.ArrayBuffer.empty[(String, QueryResult)]
-        val planned1 = sel1.map(_._1)
-        // sf1 rows carry no prior-run history; cap each execution at 10x
-        // its sf0.1 min (the tier is 10x the data) or budget/12
-        val (res1, skipped1) = timeAll(spark, tally, sel1, sf1Dir, sf1Reps,
-          profileSet = prof1, tag = "sf1 ", warmup = false,
-          remainingS = _ => remaining(15.0), ledgerTier = "sf1",
-          capFor = n => math.max(20.0, mins01.get(n).map(_.min)
-            .filter(_ > 0).map(m => math.min(10 * m * 4, budgetS / 12))
-            .getOrElse(budgetS / 12)),
-          onResult = { (name, qr) =>
-            done1 += ((name, qr))
-            val dn = done1.map(_._1).toSet
-            sf1Part = sf1Section(done1.toSeq, planned1.filterNot(dn))
-            emitPartial(skipped0)
-          })
-        sf1Section(res1, skipped1)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] sf1 section failed: $e")
-        // full JSON string escape: exception messages carry newlines and
-        // backslashes (plan fragments) that would invalidate the whole
-        // results file a JSON consumer reads
-        val msg = e.toString.flatMap {
-          case '"'  => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        }
-        sf1Compact = s""","sf1_error":true"""
-        s""","sf1":{"error":"$msg"}"""
+    if (sf1.nonEmpty) try {
+      // drop the sf0.1 board's session-shared relations (memoized
+      // TermIndex) before the 10x tier brings in its own corpus
+      CacheScope.releaseShared(blocking = true)
+      // generated deterministically when absent (ScaleTier is
+      // xxhash64-keyed, so the data is byte-stable across regenerations);
+      // both tables are checked so a half-written tier is rebuilt
+      val tierAbsent = Seq("documents", "embeddings").exists(t =>
+        !java.nio.file.Files.exists(java.nio.file.Paths.get(s"$sf1Dir/$t.parquet", "_SUCCESS")))
+      if (tierAbsent) {
+        System.err.println(s"[bench] generating sf1 tier at $sf1Dir (10x)")
+        tools.ScaleTier.documents(spark, 50000L).write.mode("overwrite")
+          .parquet(s"$sf1Dir/documents.parquet")
+        tools.ScaleTier.embeddings(spark, 20000L).write.mode("overwrite")
+          .parquet(s"$sf1Dir/embeddings.parquet")
       }
-    // a board that dropped rows to the budget is still marked truncated
-    // in the FINAL artifact — a consumer must never read a budget-cut
-    // board as a complete one
-    val wasCut = skipped0.nonEmpty
-    val skJson = skipped0.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",${sectionJson(results)},"reps":$reps,"failed":$failed,"sf":"$sfDir","cpus":$cpus,"budget_s":$budgetS,"wall_s":${f"$elapsedS%.1f"},"truncated":$wasCut,"skipped":$skJson$sf1Json}"""
-    // stdout gets the COMPACT line (driver contract; VERDICT r15 defect 1
-    // — the full line's telemetry overflowed the driver's ~2 KB stdout
-    // tail for two rounds and PERF per-query comparison went blind); the
-    // FULL JSON goes to the file artifacts, which cost r5 ~35 of 96 query
-    // numbers to learn the hard way
-    val compact = compactJson(results, reps, sfDir, cpus, budgetS, elapsedS,
-      truncated = wasCut, skipped0, sf1Compact)
-    Emit.latest = json
-    Emit.latestCompact = compact
-    Emit.flushFile()
-    // a COMPLETED FULL run also refreshes the committed board copy —
-    // partial runs deliberately don't, and neither do TARGETED subset
-    // runs (a one-row rerun must not clobber the round's full board:
-    // exactly that happened in r15 before this guard)
-    if (only.isEmpty) {
-      Emit.flushCommitted()
-      System.err.println(s"[bench] full results written to ${Emit.outPath} " +
-        s"and committed copy ${Emit.commitPath}")
-    } else
-      System.err.println(s"[bench] targeted run: results written to " +
-        s"${Emit.outPath} only (committed board copy untouched)")
-    Ledger.save()
-    System.err.println(s"[bench] calm best-min ledger at ${Ledger.path} (${Ledger.rows.size} rows)")
-    if (Emit.finalPrinted.compareAndSet(false, true)) println(compact)
+      sf1.foreach { name =>
+        board.recordSf1(name, timeOne(spark, tally, name, SparkEntry.queries(name),
+          sf1Dir, reps, Sf1ProfileRows(name), tag = "sf1 "))
+      }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] sf1 section failed: $e")
+      board.failSf1(e.toString)
+    }
+    board.finish(commit = only.isEmpty)
     spark.stop()
   }
 
-  /** the one-line stdout JSON: the driver-parseable contract line. Total +
-    * per-query min + failure lists + cpus + sf ONLY — the scalar fields sit
-    * AFTER the queries map so a tail-truncated stdout capture still retains
-    * them together with the trailing per-query rows. Everything else
-    * (per-rep walls, telemetry, per-op attribution, calibration, the full
-    * sf1 section) lives in the file artifacts. */
-  private def compactJson(results: Seq[(String, QueryResult)], reps: Int,
-      sfDir: String, cpus: String, budgetS: Double, wallS: Double,
-      truncated: Boolean, skipped: Seq[String], sf1Compact: String): String = {
-    val qs = results.map { case (k, qr) =>
-      "\"" + k + "\":" + (if (qr.min < 0) qr.min.toString else f"${qr.min}%.3f")
-    }.mkString("{", ",", "}")
-    val total = results.map(_._2.min).filter(_ >= 0).sum
-    val failed = results.collect {
-      case (k, qr) if qr.min < 0 && !qr.aborted => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val aborted = results.collect {
-      case (k, qr) if qr.aborted => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    val sk = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec","queries":$qs,"reps":$reps,"failed":$failed,"aborted":$aborted,"skipped":$sk,"truncated":$truncated,"sf":"$sfDir","cpus":$cpus,"budget_s":$budgetS,"wall_s":${f"$wallS%.1f"}$sf1Compact}"""
-  }
-
-  /** per-query result: min/median wall, per-rep (sec, telemetry), per-op
-    * ms, whether the watchdog aborted the row, and the pre-row spin
-    * calibration (Miters/s; -1 when not run) */
-  private final case class QueryResult(min: Double, med: Double,
-      reps: Seq[(Double, String)], ops: Map[String, Long],
-      aborted: Boolean = false, calibMops: Double = -1.0)
-
   /** accumulated timed+warmup wall since the last settle GC (see
-    * timeOne's gc gate) — main is single-threaded */
+    * timeOne) — main is single-threaded */
   private var unGcWall = 0.0
 
-  /** the shared timing loop: warmup + reps + telemetry + optional per-op
-    * profile pass per query, identical for the sf0.1 and sf1 sections.
-    * Runs `selected` IN ORDER; before each row, `remainingS()` (the
-    * self-imposed wall budget) gates it — a row whose estimated cost
-    * (previous run's min x planned executions, group-median `fallbackEst`
-    * when the row has no history) would cross the deadline is skipped,
-    * and once the deadline passes everything remaining is. `capFor`
-    * bounds any single execution via a job-group watchdog (r12: one
-    * uncapped 442 s row evicted 44 others). `onResult` fires after each
-    * completed row for incremental emission.
-    * @return (completed results, skipped row names)
-    */
-  private def timeAll(spark: SparkSession, tally: MetricsTally,
-      selected: Seq[(String, (SparkSession, String) => DataFrame)],
-      sfDir: String, reps: Int, profileSet: Set[String],
-      tag: String = "", warmup: Boolean = true,
-      estimates: Map[String, Double] = Map.empty,
-      remainingS: String => Double = _ => Double.MaxValue,
-      fallbackEst: Double = 1.0,
-      capFor: String => Double = _ => Double.MaxValue,
-      deferHeavyWhenBusy: Boolean = false,
-      ledgerTier: String = "",
-      onResult: (String, QueryResult) => Unit = (_, _) => ())
-      : (Seq[(String, QueryResult)], Seq[String]) = {
-    val out     = scala.collection.mutable.ArrayBuffer.empty[(String, QueryResult)]
-    val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
-    // contention-adaptive gating (r13: the board's reps ran 2-4x their
-    // calm estimates under load1 15-28 and the cheap tail ate the sf1
-    // reserve): once >= 20 s of estimated work has completed, scale every
-    // later row's estimated cost by the observed actual/estimated ratio
-    // (clamped to [1, 3]) so the budget gate sheds load EARLY on a
-    // contended host instead of overrunning the reserves
-    var estSum = 0.0; var actSum = 0.0
-    def inflation: Double =
-      if (estSum < 20.0) 1.0 else math.min(3.0, math.max(1.0, actSum / estSum))
-    val queue = scala.collection.mutable.Queue(selected: _*)
-    val deferred = scala.collection.mutable.Set.empty[String]
-    while (queue.nonEmpty) {
-      val (name, fn) = queue.dequeue()
-      val rem = remainingS(name)
-      // the untimed warmup exists for codegen/JIT constants, which
-      // only dominate CHEAP rows; a row known to run >= 2 s is
-      // steady-state work and skipping its warmup saves a full
-      // execution. (Was >= 5 s through the r13 validation runs: the
-      // complete board + sf1 measured 1797.7 s wall against the 1800 s
-      // budget and dropped its 15-row expensive tail — the 2-5 s rows'
-      // warmups were the largest recoverable block.)
-      val warm = warmup && estimates.get(name).forall(_ < 2.0)
-      // rows known to run >= 10 s get ONE timed rep (a steal burst is
-      // amortized over tens of seconds of work, and second reps of the
-      // board's heaviest rows were its largest recoverable wall);
-      // MEASUREMENT-FLOOR rows (< 0.3 s) get 3 reps — they are cheap
-      // exactly where reps are affordable, and min-of-3 cuts the
-      // lowconf flag count (r12 ask 7) where the flags actually
-      // concentrate
-      val est = estimates.get(name)
-      val rowReps =
-        if (est.exists(_ >= 10.0)) 1
-        else if (est.exists(_ < 0.3)) math.max(3, reps)
-        else reps
-      // planned executions: warmup (when it will actually run) + reps
-      // (+ the occasional escalation rep and the profile pass where
-      // configured), plus a small constant. Unknown rows gate on the
-      // group-median estimate (ADVICE r12: they used to bypass the check
-      // entirely, so one new heavy row could overrun the wall budget).
-      val estCost = (est.getOrElse(fallbackEst) *
-        (rowReps + (if (warm) 1 else 0) + (if (profileSet(name)) 1 else 0)) + 0.5) *
-        inflation
-      // calm-window scheduling for heavy rows (VERDICT r13 ask 1b):
-      // a >= 30 s row arriving inside a contention window (load1 >= 12
-      // — the r13 bt_1m_cc kills all happened at load1 >= 15) is pushed
-      // to the back of the queue ONCE; when it comes up again still
-      // contended, wait one bounded 45 s calm window, then run
-      // regardless — a bounded abort beats an unmeasured row, but a
-      // calm rep beats both.
-      lazy val busy = load1Now() >= 12.0
-      if (deferHeavyWhenBusy && est.exists(_ >= 30.0) && busy &&
-          !deferred(name) && queue.nonEmpty) {
-        deferred += name
-        queue.enqueue((name, fn))
-        System.err.println(f"[bench] $tag$name DEFERRED (load1 ${load1Now()}%.1f >= 12; retrying later in the run)")
-      } else if (rem <= 0 || estCost > rem) {
-        skipped += name
-        System.err.println(f"[bench] $tag$name SKIPPED (budget: $rem%.0fs left" +
-          f", est $estCost%.0fs @ inflation ${inflation}%.2f)")
-      } else {
-        if (deferHeavyWhenBusy && est.exists(_ >= 30.0) && deferred(name) &&
-            busy && rem - estCost > 90.0) {
-          System.err.println(f"[bench] $tag$name still contended after deferral; waiting one 45 s calm window")
-          val deadline = System.nanoTime() + 45L * 1000 * 1000 * 1000
-          while (load1Now() >= 12.0 && System.nanoTime() < deadline)
-            Thread.sleep(5000)
-        }
-        val t0 = System.nanoTime()
-        val qr = timeOne(spark, tally, name, fn, sfDir, rowReps, profileSet, tag,
-          warm, capS = capFor(name), calibrate = est.exists(_ >= 10.0),
-          prevMin = est, ledgerTier = ledgerTier)
-        est.foreach { e =>
-          estSum += estCost / inflation
-          actSum += (System.nanoTime() - t0) / 1e9
-        }
-        out += ((name, qr))
-        onResult(name, qr)
-      }
-    }
-    (out.toSeq, skipped.toSeq)
-  }
-
-  /** one row of the board: calibration + warmup + timed reps (each under
-    * a job-group watchdog) + escalation + profile */
+  /** one row of the board: an untimed warmup, then `reps` timed reps,
+    * then the optional profile pass — each execution under the watchdog */
   private def timeOne(spark: SparkSession, tally: MetricsTally,
       name: String, fn: (SparkSession, String) => DataFrame,
-      sfDir: String, reps: Int, profileSet: Set[String],
-      tag: String, warmup: Boolean, capS: Double = Double.MaxValue,
-      calibrate: Boolean = false, prevMin: Option[Double] = None,
-      ledgerTier: String = ""): QueryResult = {
-      // pre-row spin calibration on heavy rows: a slow rep with a LOW
-      // calibration is "host is slow", with a normal one it's "row
-      // regressed" — the distinction r12's telemetry could not make
-      val calib = if (calibrate) spinCalibrate() else -1.0
-      if (calib >= 0) System.err.println(f"[bench] $tag$name calib=$calib%.0f Miters/s")
-      // every execution of this row (warmup included — ADVICE r12: the
-      // warmup used to run open-loop) lives in a job group a watchdog can
-      // cancel: r12's artifact lost 44 rows to ONE uncapped 442 s rep
-      val rowAborted = new java.util.concurrent.atomic.AtomicBoolean(false)
-      // (wall s, telemetry json, steal_s, cpu_s, load1 after) — the
-      // numeric trio feeds the calm-rep ledger gate
-      def runCapped(timed: Boolean): Option[(Double, String, Double, Double, Double)] = {
-        val pre = snap(tally)
-        val sc = spark.sparkContext
-        val group = s"graft-bench-$name"
-        sc.setJobGroup(group, s"bench $name", interruptOnCancel = true)
-        val watchdog = new java.util.Timer("graft-bench-watchdog", true)
-        if (capS < Double.MaxValue)
-          watchdog.schedule(new java.util.TimerTask {
-            def run(): Unit = {
-              System.err.println(f"[bench] $tag$name WATCHDOG fired at $capS%.0fs — cancelling job group")
-              rowAborted.set(true)
-              sc.cancelJobGroup(group)
-            }
-          }, math.max(1L, (capS * 1000).toLong))
-        val t0 = System.nanoTime()
-        val ok =
-          try { materialize(fn(spark, sfDir)); true }
-          catch { case e: Throwable =>
-            if (!rowAborted.get)
-              System.err.println(s"bench query $name failed: $e")
-            false
-          } finally { watchdog.cancel(); sc.clearJobGroup() }
-        val sec = (System.nanoTime() - t0) / 1e9
-        unGcWall += sec
-        // drain the async bus (untimed) so the rep's shuffle counters are
-        // complete, then snapshot BEFORE release so cleanup cost is
-        // excluded from the rep's telemetry
-        tally.drain()
-        val post = snap(tally)
-        // library ops register their reused self-join relations (signatures,
-        // band keys) in CacheScope; release them per rep — both so 100
-        // queries in one session don't accumulate storage memory and so
-        // every rep pays the query's full cost (honest isolation)
-        CacheScope.release(blocking = true)
-        if (ok || rowAborted.get) {
-          val stealS = if (pre.stealTicks < 0 || post.stealTicks < 0) -1.0
-            else (post.stealTicks - pre.stealTicks) / 100.0
-          val cpuS = if (pre.cpuNs < 0 || post.cpuNs < 0) -1.0
-            else (post.cpuNs - pre.cpuNs) / 1e9
-          Some((sec, telemetryJson(pre, post), stealS, cpuS, post.load1))
-        } else None
-      }
-      // one UNTIMED warm-up execution: the first 1-2 runs of a query pay
-      // plan compile + Janino codegen + C2 JIT of the generated classes —
-      // measured 2-3x the steady state on sub-second queries. The number
-      // the 100 TB design cares about is per-row throughput, which the
-      // warmed runs measure; the one-time costs amortize to zero at scale.
-      // (the sf1 section passes warmup=false: every sf1 query already ran
-      // its sf0.1 twin in this session, so codegen + C2 are warm and the
-      // min-of-2 estimator absorbs any residual first-rep constant)
-      // completed measurements and watchdog-killed partials live in
-      // SEPARATE buffers: a killed rep's wall is a lower bound, not a
-      // measurement — it must stay visible in the telemetry but never
-      // enter min/median (r13 run: a contention burst on rep 2 recorded
-      // three rows as -1 although rep 1 had measured them at 3-4 s)
-      val timedBuf = scala.collection.mutable.ArrayBuffer.empty[(Double, String, Double, Double, Double)]
-      val killedBuf = scala.collection.mutable.ArrayBuffer.empty[(Double, String, Double, Double, Double)]
-      if (warmup && !rowAborted.get) {
-        val w = runCapped(timed = false)
-        // an aborted warmup still surfaces its partial telemetry
-        if (rowAborted.get) w.foreach(killedBuf += _)
-      }
-      // settle the JVM before the reps (collecting prior queries'
-      // garbage lets the ContextCleaner reclaim their broadcast/shuffle
-      // state — without it, a query's reps absorb its NEIGHBORS' cleanup:
-      // seq_stencil_sum measured 3.1-6.2 s inside the suite vs 0.87 s in
-      // isolation, all plans identical). Deliberately NOT between reps,
-      // and since round 12 not between every QUERY either: a full GC on
-      // this heap costs 0.3-1 s, and one per ~230 rows was ~200 s of
-      // board wall. Instead, collect once ~3 s of un-collected work
-      // (timed reps AND warmups) has accumulated — heavy rows still
-      // settle every time, cheap rows amortize to one GC per ~dozen.
-      if (unGcWall > 3.0) { System.gc(); unGcWall = 0.0 }
-      var i = 0
-      var stop = rowAborted.get
-      while (i < reps && !stop) {
-        runCapped(timed = true) match {
-          case Some(rep @ (sec, _, _, _, _)) =>
-            if (rowAborted.get) { killedBuf += rep; stop = true }
-            else {
-              timedBuf += rep
-              // single-rep fallback (r12 ask 1b): a first rep over 60 s is
-              // amortized past steal noise and a second would only burn
-              // budget the board's tail needs
-              if (sec > 60.0) stop = true
-              // confirmation mode (r13: the 3600s-budget full board spent
-              // 840 s on non-min reps): this host's noise is virtualization
-              // steal, which only INFLATES a rep — so a first rep at or
-              // below ~1.25x the previous run's min cannot itself be a
-              // burst, and IS a valid min sample; further reps add no
-              // information. A regressed or burst-hit rep1 fails the
-              // check and the row keeps its full rep count.
-              if (timedBuf.size == 1 && prevMin.exists(p => sec <= 1.25 * p))
-                stop = true
-            }
-          case None => () // genuine failure; remaining reps may still pass
+      dir: String, reps: Int, profile: Boolean, tag: String = ""): QueryResult = {
+    val sc = spark.sparkContext
+    var aborted = false
+    // every execution of this row lives in a job group the watchdog can
+    // cancel: r12's artifact lost 44 rows to ONE uncapped 442 s rep
+    def capped(body: => Unit): Boolean = {
+      val group = s"graft-bench-$name"
+      val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+      sc.setJobGroup(group, s"bench $name", interruptOnCancel = true)
+      val watchdog = new java.util.Timer("graft-bench-watchdog", true)
+      watchdog.schedule(new java.util.TimerTask {
+        def run(): Unit = {
+          System.err.println(f"[bench] $tag$name WATCHDOG fired at $ExecCapS%.0fs — cancelling job group")
+          fired.set(true)
+          sc.cancelJobGroup(group)
         }
-        i += 1
+      }, (ExecCapS * 1000).toLong)
+      try { body; !fired.get }
+      catch { case e: Throwable =>
+        if (!fired.get) System.err.println(s"bench query $name failed: $e")
+        false
+      } finally {
+        watchdog.cancel(); sc.clearJobGroup()
+        if (fired.get) aborted = true
       }
-      var timed = timedBuf.toSeq
-      // aborted = the watchdog fired during warmup or the base reps (an
-      // abort on the optional escalation rep below leaves the row's base
-      // measurement valid — the partial rep is just excluded)
-      var aborted = rowAborted.get
-      // ONE recovery rep when the abort left no completed measurement:
-      // it distinguishes "genuinely over cap" (aborts again — stays -1)
-      // from "a passing steal burst ate the only rep" (r13 run:
-      // bt_h264_decode_vga — a BASELINE target row — landed -1 on one
-      // 66 steal-seconds burst and measured 3.9 s seconds later)
-      if (aborted && timed.isEmpty) {
-        rowAborted.set(false)
-        runCapped(timed = true) match {
-          case Some(rep @ (sec, _, _, _, _)) if !rowAborted.get =>
-            timed = Seq(rep)
-            aborted = false
-            System.err.println(
-              f"[bench] $tag$name recovery rep $sec%.3f s after watchdog abort (burst passed)")
-          case Some(rep) => killedBuf += rep
-          case None => ()
-        }
+    }
+    // one execution: (wall s, telemetry json, completed)
+    def run(): (Double, String, Boolean) = {
+      val pre = snap(tally)
+      val t0 = System.nanoTime()
+      val ok = capped(materialize(fn(spark, dir)))
+      val sec = (System.nanoTime() - t0) / 1e9
+      unGcWall += sec
+      // drain the async bus (untimed) so the rep's shuffle counters are
+      // complete, then snapshot BEFORE release so cleanup cost is
+      // excluded from the rep's telemetry
+      tally.drain()
+      val post = snap(tally)
+      // library ops register their reused self-join relations (signatures,
+      // band keys) in CacheScope; release them per execution — both so
+      // hundreds of queries in one session don't accumulate storage memory
+      // and so every rep pays the query's full cost (honest isolation)
+      CacheScope.release(blocking = true)
+      (sec, telemetryJson(pre, post), ok)
+    }
+    // a watchdog-killed partial's wall is a lower bound, not a
+    // measurement: it stays in the telemetry but never enters min/median
+    val timed = scala.collection.mutable.ArrayBuffer.empty[(Double, String)]
+    var killed = Seq.empty[(Double, String)]
+    def execute(isTimed: Boolean): Unit = {
+      val (sec, tel, ok) = run()
+      if (aborted) killed = Seq((sec, tel))
+      else if (ok && isTimed) timed += ((sec, tel))
+    }
+    // one UNTIMED warm-up execution: the first 1-2 runs of a query pay
+    // plan compile + Janino codegen + C2 JIT of the generated classes —
+    // measured 2-3x the steady state on sub-second queries
+    execute(isTimed = false)
+    // settle the JVM before the reps: collecting prior rows' garbage lets
+    // the ContextCleaner reclaim their broadcast/shuffle state, which the
+    // reps would otherwise absorb (seq_stencil_sum: 3.1-6.2 s in the suite
+    // vs 0.87 s alone). A full GC costs 0.3-1 s, so it runs once ~3 s of
+    // un-collected work has accumulated, not before every row.
+    if (unGcWall > 3.0) { System.gc(); unGcWall = 0.0 }
+    var i = 0
+    while (i < reps && !aborted) { execute(isTimed = true); i += 1 }
+    val times = timed.map(_._1).toSeq
+    // Headline value = MIN of the completed reps: this host's steal
+    // bursts put 3x-6x outliers on random reps of an unchanged plan, and
+    // a rep's wall is true_cost + steal_delay, so min is the consistent
+    // estimator of engine cost. The true median rides alongside.
+    val sec = if (times.isEmpty) -1.0 else times.min
+    val med =
+      if (times.isEmpty) -1.0
+      else {
+        val s = times.sorted
+        if (s.size % 2 == 1) s(s.size / 2)
+        else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
       }
-      // escalation rep: a heavy row whose base reps disagree by >25% has
-      // likely eaten a steal burst — one more rep restores the old
-      // reps=3 noise floor exactly where a false signal would matter
-      if (!aborted && timed.size >= 2) {
-        val t = timed.map(_._1)
-        if (t.min >= 1.0 && (t.max - t.min) / t.min > 0.25) {
-          val extra = runCapped(timed = true)
-          if (!rowAborted.get) timed = timed ++ extra
-        }
+    System.err.println(
+      f"[bench] $tag$name reps=${times.map(t => f"$t%.3f").mkString(",")} min=$sec%.3f median=$med%.3f" +
+        (if (aborted) " ABORTED" else ""))
+    timed.foreach { case (t, tel) => System.err.println(f"[bench]   rep $t%.3f s $tel") }
+    killed.foreach { case (t, tel) =>
+      System.err.println(f"[bench]   rep $t%.3f s (KILLED partial) $tel") }
+    // per-op attribution for the configured heavy set: ONE extra untimed
+    // profiled run, task time broken down by the library op that spent it
+    var ops = Map.empty[String, Long]
+    if (profile && times.nonEmpty && !aborted) {
+      capped {
+        val (_, prof) = Profiler.profile(spark) { materialize(fn(spark, dir)) }
+        ops = prof.byOp
+        System.err.println(s"[bench] $tag$name op breakdown: " + ops.toSeq
+          .sortBy(-_._2).map { case (o, ms) => s"$o=${ms}ms" }.mkString(" "))
       }
-      // killed partials never enter times: min/median come from genuine
-      // completed reps only (an aborted row with one completed rep keeps
-      // that rep's min and the aborted flag — both signals survive)
-      val times = timed.map(_._1)
-      // Headline value = MIN of the successful reps; median kept alongside.
-      // Why min, not median: this host shows virtualization steal bursts —
-      // /proc/stat steal measured ~30% of busy CPU across a bench run, with
-      // multi-second de-schedules that put 3x-6x outliers on random reps of
-      // an unchanged sub-second plan (GC ruled out with -Xlog:gc: zero full
-      // collections, young pauses <= 216 ms). A rep's wall time is
-      // true_cost + steal_delay, so min is the consistent estimator of
-      // engine cost; median-of-3 still reports a steal burst whenever 2 of
-      // 3 reps are hit. A query that always throws keeps the -1 sentinel
-      // and lands in "failed".
-      // an aborted row keeps the -1 sentinel too (its partial rep stays
-      // visible in the telemetry) but lands in "aborted", not "failed"
-      val sec = if (times.isEmpty) -1.0 else times.min
-      // true median: average the two middles for even rep counts — the
-      // upper-middle shortcut would report the WORST of 2 reps, i.e. the
-      // steal burst this field exists to see past
-      val med =
-        if (times.isEmpty) -1.0
-        else {
-          val s = times.sorted
-          if (s.size % 2 == 1) s(s.size / 2)
-          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-        }
-      System.err.println(
-        f"[bench] $tag$name reps=${times.map(t => f"$t%.3f").mkString(",")} min=$sec%.3f median=$med%.3f" +
-          (if (aborted) " ABORTED" else ""))
-      timed.foreach { case (t, tel, _, _, _) => System.err.println(f"[bench]   rep $t%.3f s $tel") }
-      killedBuf.foreach { case (t, tel, _, _, _) =>
-        System.err.println(f"[bench]   rep $t%.3f s (KILLED partial) $tel") }
-      // calm-rep ledger gate: host STEAL under 3% of the rep's cpu time
-      // (floor 0.5 s for sub-second reps where a single tick is noise)
-      // and load1 under 48 as an absurdity guard — steal measures
-      // EXTERNAL contention, which is what the ledger must exclude;
-      // load1 alone cannot (the bench's own 32 Spark threads push it to
-      // ~10-30 by design, and a load1 < 10 gate starved the ledger of
-      // exactly the heavy rows it exists for)
-      if (ledgerTier.nonEmpty) timed.foreach { case (t, _, stealS, cpuS, load1) =>
-        if (load1 >= 0 && load1 < 48.0 && stealS >= 0 &&
-            stealS < math.max(0.5, 0.03 * math.max(cpuS, t)))
-          Ledger.offer(ledgerTier, name, t, load1, stealS)
-      }
-      // per-op attribution for the configured heavy set: ONE extra
-      // untimed profiled run, task time broken down by the library op
-      // that spent it (graft:cc-round vs the composed (final) action ...)
-      val ops: Map[String, Long] =
-        if (!profileSet.contains(name) || times.isEmpty) Map.empty
-        else try {
-          val (_, prof) = Profiler.profile(spark) { materialize(fn(spark, sfDir)) }
-          CacheScope.release(blocking = true); System.gc()
-          System.err.println(s"[bench] $tag$name op breakdown: " + prof.byOp.toSeq
-            .sortBy(-_._2).map { case (o, ms) => s"$o=${ms}ms" }.mkString(" "))
-          prof.byOp
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $tag$name profile pass failed: $e"); Map.empty
-        }
-      // killed partials ride along in the telemetry list (observability)
-      // AFTER min/median were computed from the genuine reps above
-      QueryResult(sec, med, (timed ++ killedBuf).map(r => (r._1, r._2)),
-        ops, aborted, calib)
+      CacheScope.release(blocking = true); System.gc()
+    }
+    QueryResult(sec, med, timed.toSeq ++ killed, ops, aborted)
   }
 
   /** the per-section JSON fields shared by the sf0.1 and sf1 sections:
@@ -1606,42 +971,29 @@ object Bench {
     * self-diagnosing — one rep 3-6x the others on an unchanged plan is a
     * de-schedule, not a regression) */
   private def sectionJson(results: Seq[(String, QueryResult)]): String = {
-    val qs = results.map { case (k, qr) => s"\"" + k + "\":" + qr.min }
-      .mkString("{", ",", "}")
-    val meds = results.map { case (k, qr) => s"\"" + k + "\":" + qr.med }
-      .mkString("{", ",", "}")
-    val perRep = results.map { case (k, qr) =>
-      s"\"" + k + "\":[" + qr.reps.map(t => f"${t._1}%.4f").mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val perTel = results.map { case (k, qr) =>
-      s"\"" + k + "\":[" + qr.reps.map(_._2).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val perOps = results.collect { case (k, qr) if qr.ops.nonEmpty =>
-      s"\"" + k + "\":" + qr.ops.toSeq.sortBy(-_._2).map { case (o, ms) =>
-        s"\"" + o.stripPrefix("graft:") + "\":" + ms
-      }.mkString("{", ",", "}")
-    }.mkString("{", ",", "}")
-    // rows the per-row watchdog cancelled: bounded spend, partial
-    // telemetry retained — distinct from "failed" (a thrown plan) so a
-    // consumer can tell "too slow under this clock" from "broken"
-    val aborted = results.collect { case (k, qr) if qr.aborted => s"\"" + k + "\"" }
+    def obj(f: QueryResult => Option[String]) =
+      results.flatMap { case (k, qr) => f(qr).map(v => jsonStr(k) + ":" + v) }
+        .mkString("{", ",", "}")
+    val qs     = obj(qr => Some(qr.min.toString))
+    val meds   = obj(qr => Some(qr.med.toString))
+    val perRep = obj(qr => Some(qr.reps.map(t => f"${t._1}%.4f").mkString("[", ",", "]")))
+    val perTel = obj(qr => Some(qr.reps.map(_._2).mkString("[", ",", "]")))
+    val perOps = obj(qr => if (qr.ops.isEmpty) None else Some(
+      qr.ops.toSeq.sortBy(-_._2).map { case (o, ms) =>
+        jsonStr(o.stripPrefix("graft:")) + ":" + ms }.mkString("{", ",", "}")))
+    // rows the watchdog cancelled: distinct from "failed" (a thrown plan)
+    // so a consumer can tell "hung" from "broken"
+    val aborted = results.collect { case (k, qr) if qr.aborted => jsonStr(k) }
       .mkString("[", ",", "]")
-    // pre-row spin calibrations (Miters/s): LOW values attribute a slow
-    // rep to host contention rather than an engine regression
-    val calib = results.collect { case (k, qr) if qr.calibMops >= 0 =>
-      s"\"" + k + "\":" + f"${qr.calibMops}%.0f"
-    }.mkString("{", ",", "}")
     // sub-second rows whose min lacks corroboration — the second-lowest
-    // rep disagrees with the min by >25% — are FLAGGED, not escalated:
-    // cross-round comparisons should discount any row listed here
-    // (ADVICE r11; with 3 base reps on sub-second rows since r13 the
-    // flag now means "even min-of-3 failed to agree")
+    // rep disagrees with the min by >25% — are FLAGGED: cross-round
+    // comparisons should discount any row listed here (ADVICE r11)
     val lowconf = results.collect {
       case (k, qr) if qr.min > 0 && qr.min < 1.0 && qr.reps.size >= 2 && {
         val s = qr.reps.map(_._1).sorted
         (s(1) - s(0)) / s(0) > 0.25
-      } => s"\"" + k + "\""
+      } => jsonStr(k)
     }.mkString("[", ",", "]")
-    s""""queries":$qs,"queries_median":$meds,"queries_reps":$perRep,"queries_telemetry":$perTel,"queries_ops_ms":$perOps,"queries_calib":$calib,"aborted":$aborted,"queries_lowconf":$lowconf"""
+    s""""queries":$qs,"queries_median":$meds,"queries_reps":$perRep,"queries_telemetry":$perTel,"queries_ops_ms":$perOps,"aborted":$aborted,"queries_lowconf":$lowconf"""
   }
 }

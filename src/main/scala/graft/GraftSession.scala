@@ -17,6 +17,19 @@ import org.apache.spark.sql.SparkSession
   *   swings); Kryo writes the pair as two varints.
   */
 object GraftSession {
+  /** `SPARK_GRAFT_CPUS` as the core count every main passes to [[local]];
+    * defaults to this host's available processors and fails fast, naming
+    * the variable, on a non-integer or non-positive value.
+    */
+  def envCpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def parseCpus(v: Option[String]): Int = v match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(s) => s.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
   /** `maxTaskFailures > 1` enables task retries in local mode
     * (`local[N,F]`), matching cluster behavior where a task attempt can
     * fail and be re-run — required by the fault-tolerance specs.
@@ -35,10 +48,6 @@ object GraftSession {
       // OPTIMIZATION_r16.md). Env-overridable for A/B.
       .config("spark.kryo.referenceTracking",
         sys.env.getOrElse("SPARK_GRAFT_KRYO_REFTRACK", "false"))
-      // shuffle/cache block codec, env-parameterized for the guide §2.3
-      // lz4-vs-zstd A/B (lz4 = Spark default)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

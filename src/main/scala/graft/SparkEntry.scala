@@ -34,6 +34,5 @@ object SparkEntry {
       graft.queries.FileSourceQueries.oracles ++
       graft.queries.StreamQueries.oracles ++
       graft.queries.ProcQueries.oracles ++
-      graft.queries.GraphQueries.oracles ++
-      graft.queries.PinnedOracles.oracles
+      graft.queries.GraphQueries.oracles
 }

@@ -6,8 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus, "graft-verify")
+    val spark = GraftSession.local(GraftSession.envCpus.toString, "graft-verify")
     dump(spark, sfDir, outDir, SparkEntry.queries.keys.toSeq)
     spark.stop()
   }

@@ -1207,9 +1207,7 @@ object VideoQueries {
       |  1232::BIGINT AS n_interior, TRUE AS u_ok, TRUE AS v_ok
       |FROM range(0,2) a, range(1,48) b ORDER BY 1, 2""".stripMargin
 
-  /** recomputed where the source is closed-form; the remaining video
-    * queries (flow/thumb/shot-cut/h264 pipelines) read generated codec
-    * segments whose transforms SQL can't replay — pinned VALUES literals
-    * (see [[PinnedOracles]]) */
+  /** every video gate's DuckDB oracle, recomputed from the closed-form
+    * sources (see [[recomputed]]) */
   val oracles: Map[String, String] = recomputed
 }

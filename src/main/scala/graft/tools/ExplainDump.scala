@@ -21,7 +21,7 @@ object ExplainDump {
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     Files.createDirectories(Paths.get(outDir))
     val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-explain")
+      GraftSession.envCpus.toString, "graft-explain")
     names.foreach { name =>
       val df = all(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(

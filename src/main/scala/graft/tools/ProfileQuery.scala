@@ -13,7 +13,7 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args.take(2)
     val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-profile")
+      GraftSession.envCpus.toString, "graft-profile")
     // bt_* stress rows are profile-able too — they are where the scale
     // questions live
     val fn = SparkEntry.queries.getOrElse(name, graft.Bench.benchTargets(name))

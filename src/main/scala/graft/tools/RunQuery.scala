@@ -18,7 +18,7 @@ object RunQuery {
     val all = SparkEntry.queries ++ graft.Bench.benchTargets
     val unknown = names.filterNot(all.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"), "graft-runquery")
+    val spark = GraftSession.local(GraftSession.envCpus.toString, "graft-runquery")
     val (qNames, btNames) = names.partition(SparkEntry.queries.contains)
     btNames.foreach { name =>
       all(name)(spark, sfDir).coalesce(1).write.mode("overwrite")

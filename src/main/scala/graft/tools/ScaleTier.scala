@@ -107,7 +107,7 @@ object ScaleTier {
     val Array(outDir, factorS) = args
     val factor = factorS.toInt
     val s = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), "graft-scale-tier")
+      graft.GraftSession.envCpus.toString, "graft-scale-tier")
     documents(s, 5000L * factor).write.mode("overwrite")
       .parquet(s"$outDir/documents.parquet")
     embeddings(s, 2000L * factor).write.mode("overwrite")
