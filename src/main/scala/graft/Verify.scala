@@ -11,20 +11,25 @@ object Verify {
     spark.stop()
   }
 
-  /** Write each named query's result under `outDir/<name>` and the
-    * matching subset of oracle SQL as `outDir/oracle_sql.json` — shared
-    * by the full driver gate above and the dev-loop
-    * [[graft.tools.RunQuery]] so the dump format and JSON escaping can
-    * never drift between them.
+  /** Write each named query's result under `outDir/<name>`, the matching
+    * subset of oracle SQL as `outDir/oracle_sql.json`, and every query
+    * that threw as `outDir/failed.json` (name -> message) — shared by the
+    * full driver gate above and the dev-loop [[graft.tools.RunQuery]] so
+    * the dump format and JSON escaping can never drift between them.
+    * Each result directory is deleted before its query runs, so a stale
+    * result from an earlier run never stands in for a failed query.
     */
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       names: Seq[String]): Unit = {
     new java.io.File(outDir).mkdirs()
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     names.foreach { name =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed(name) = String.valueOf(e.getMessage)
       }
       CacheScope.release() // scope library-op caches to the query
     }
@@ -40,8 +45,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def json(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(SparkEntry.oracleSql.filter(kv => names.contains(kv._1))))
+    Files.writeString(Paths.get(s"$outDir/failed.json"), json(failed))
   }
 }

@@ -86,7 +86,17 @@ object Dedup {
     */
   def connectedComponentsWithStats(nodes: DataFrame, pairs: DataFrame,
       idCol: String, maxIters: Int = 20,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
+      checkpointDir: Option[String] = None): (DataFrame, Int) =
+    ccWithStats(nodes, pairs, idCol, maxIters, checkpointDir,
+      GraphRank.maxLocalEdges)
+
+  /** [[connectedComponentsWithStats]] with the partition-local loop's
+    * edge bound as an argument (0 forces the distributed loop — the
+    * path-agreement spec's lever)
+    */
+  private[graft] def ccWithStats(nodes: DataFrame, pairs: DataFrame,
+      idCol: String, maxIters: Int, checkpointDir: Option[String],
+      localEdgeLimit: Long): (DataFrame, Int) = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.sql.Row
@@ -211,12 +221,10 @@ object Dedup {
     // pathologically dense subgraph could still hold O(n²) edges — past
     // this bound the distributed loop below runs instead (same recurrence,
     // same fixpoint), so the one-task heap exposure is explicit, not
-    // implied by the node sizing. Overridable for tests (prop) and ops (env).
-    val maxLocalEdges = sys.props.get("graft.cc.maxLocalEdges")
-      .orElse(sys.env.get("GRAFT_CC_MAX_LOCAL_EDGES"))
-      .flatMap(_.toLongOption).getOrElse(5000000L)
+    // implied by the node sizing (the bound and the measured reason for
+    // keeping both loops: [[GraphRank.maxLocalEdges]])
     val localLoop = part.numPartitions == 1 &&
-      edgesDf.count() <= maxLocalEdges
+      edgesDf.count() <= localEdgeLimit
     if (localLoop) {
       // SMALL-SUBGRAPH FAST PATH: the partitioner is sized to the dup
       // subgraph, so P == 1 means the whole label loop fits one
@@ -278,7 +286,6 @@ object Dedup {
       iter = roundsAcc.value.toInt
       changed = leftAcc.value
     } else while (changed > 0 && iter < maxIters) {
-      val t0 = System.nanoTime()
       import scala.collection.mutable.LongMap
       // Per-round relational joins run as zipPartitions over primitive
       // LongMaps instead of RDD join/leftOuterJoin (r16, guide §1.2 step 2
@@ -368,8 +375,6 @@ object Dedup {
       }
       changed = chgAcc.value
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(f"[cc] round $iter ${(System.nanoTime() - t0) / 1e9}%.2fs changed=$changed")
       labels.unpersist(blocking = true) // prior round's blocks
       labels = next
     }

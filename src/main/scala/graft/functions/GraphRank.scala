@@ -36,15 +36,27 @@ import graft.CacheScope
   */
 object GraphRank {
 
-  /** edge bound for the P == 1 partition-local fast paths (here and the
-    * callers' reading of it): one task holds the whole edge array, so the
-    * node-count partitioner sizing alone must not imply the heap bound.
-    * Overridable for tests.
+  /** Edge bound for the P == 1 partition-local fast paths of PageRank,
+    * HITS and [[Dedup.connectedComponents]]: one task holds the whole edge
+    * array, so the node-count partitioner sizing alone must not imply the
+    * heap bound. Past it the distributed loop runs (same recurrence, same
+    * bits).
+    *
+    * Why both loops stay: measured on 4 cores at sf0.1, min of 3 reps,
+    * with the distributed loop forced at P == 1, the fast path is still
+    * faster on every row but one:
+    * {{{
+    *   row               fast path (s)   distributed only (s)
+    *   graph_pagerank        2.59            4.15
+    *   graph_ppr             2.67            3.99
+    *   graph_hits            2.49            5.22
+    *   sim_knn_clusters      5.12            6.72
+    *   dedup_clusters        3.12            3.45
+    *   graph_report          5.33            5.05 (flat)
+    * }}}
+    * The fast paths can go once the distributed loop is cheap at small P.
     */
-  private[graft] def maxLocalEdges: Long = sys.props
-    .get("graft.graph.maxLocalEdges")
-    .orElse(sys.env.get("GRAFT_GRAPH_MAX_LOCAL_EDGES"))
-    .flatMap(_.toLongOption).getOrElse(5000000L)
+  private[graft] val maxLocalEdges = 5000000L
 
   /** drain a unique-key (Long, Long) iterator into a primitive LongMap —
     * the lookup side of the narrow per-round joins below (r16: cogroup
@@ -149,9 +161,12 @@ object GraphRank {
       scale: Long = 1000000000000L, dampPct: Int = 85): DataFrame =
     prCore(edges, Some(weightCol), Some(seeds), iters, scale, dampPct)
 
-  private def prCore(edges: DataFrame, weightColOpt: Option[String],
+  /** the PageRank family's one loop; `localEdgeLimit` bounds the P == 1
+    * fast path (0 forces the distributed loop)
+    */
+  private[graft] def prCore(edges: DataFrame, weightColOpt: Option[String],
       seedsOpt: Option[DataFrame], iters: Int,
-      scale: Long, dampPct: Int): DataFrame = {
+      scale: Long, dampPct: Int, localEdgeLimit: Long = maxLocalEdges): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
     require(dampPct >= 0 && dampPct <= 100, s"dampPct $dampPct out of [0,100]")
     // overflow envelope: d*(incoming + dm/|S|) <= 100 * 2*scale must fit a long
@@ -243,7 +258,7 @@ object GraphRank {
     // bound the distributed loop runs (same recurrence, same bits). The
     // count materializes edgesR's persist, which the loop reads anyway.
     val localLoop = part.numPartitions == 1 &&
-      edgesR.count() <= GraphRank.maxLocalEdges
+      edgesR.count() <= localEdgeLimit
     if (localLoop) {
       val itersL = iters
       ranks = degR.zipPartitions(edgesR, preservesPartitioning = true) { (itD, itE) =>
@@ -350,7 +365,12 @@ object GraphRank {
     * @return (node LONG, hub LONG, auth LONG), each column summing to
     *         ~`scale` (minus deterministic truncation)
     */
-  def hits(edges: DataFrame, iters: Int = 8, scale: Long = 1000000000L): DataFrame = {
+  def hits(edges: DataFrame, iters: Int = 8, scale: Long = 1000000000L): DataFrame =
+    hitsLoop(edges, iters, scale, maxLocalEdges)
+
+  /** [[hits]] with the P == 1 fast path's edge bound as an argument */
+  private[graft] def hitsLoop(edges: DataFrame, iters: Int, scale: Long,
+      localEdgeLimit: Long): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
     require(scale >= 1000 && scale <= 1000000000000L, s"scale $scale out of [1e3, 1e12]")
     val spark = edges.sparkSession
@@ -415,7 +435,7 @@ object GraphRank {
     // identical per-node BigInt normalisation. P > 1 untouched. Gated on
     // the edge count too (nEdges is already computed for the overflow
     // envelope): a dense 50k-node graph falls back to the distributed loop.
-    if (part.numPartitions == 1 && nEdges <= GraphRank.maxLocalEdges) {
+    if (part.numPartitions == 1 && nEdges <= localEdgeLimit) {
       val itersL = iters
       val ha = nodesR.zipPartitions(bySrc, byDst, preservesPartitioning = true) {
         (itN, itS, itD) =>

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -40,6 +40,30 @@ object StreamQueries {
     ss
   }
 
+  /** The bounded-execution harness every gate shares: start `out` into a
+    * memory sink under a fresh `graft-<tag>-ck` checkpoint, let `feed` add
+    * data (it gets a drain: process everything available), collect
+    * `view` of the sink so the result outlives the query, stop it, and
+    * delete the checkpoint on every exit path.
+    */
+  private def runBounded(s: SparkSession, out: Dataset[_], mode: OutputMode,
+      tag: String)(feed: (() => Unit) => Unit)(
+      view: DataFrame => DataFrame = identity): DataFrame = {
+    val qname = s"${tag}_" + System.nanoTime()
+    val ckpt = java.nio.file.Files.createTempDirectory(s"graft-$tag-ck")
+    try {
+      val q = out.writeStream.format("memory").queryName(qname)
+        .outputMode(mode)
+        .option("checkpointLocation", ckpt.toString)
+        .start()
+      try {
+        feed(() => q.processAllAvailable())
+        val res = view(out.sparkSession.table(qname))
+        s.createDataFrame(s.sparkContext.parallelize(res.collect().toSeq, 1), res.schema)
+      } finally q.stop()
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the INCREMENTAL clean-corpus pipeline (StreamingOps.streamingCleanCorpus):
     // streaming exact dedup -> static corpus band-index probe (keep misses)
@@ -75,15 +99,9 @@ object StreamQueries {
         in.toDF().toDF("doc_id", "text", "ts"), index,
         "doc_id", "text", "ts",
         watermark = "10 seconds", windowLen = "1 minute")
-      val qname = "scc_" + System.nanoTime()
-      val ckpt  = java.nio.file.Files.createTempDirectory("graft-scc-ck").toString
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .start()
-      try {
+      runBounded(s, out, OutputMode.Append(), "scc") { drain =>
         in.addData(shard.toSeq.map { case (id, t) => (id, t, t0) })
-        q.processAllAvailable()
+        drain()
         // sentinels: 1-token texts (sentinel band, fail the quality gate)
         // whose event times close the shard's window; their own windows
         // never close, so they can't emit. TWO sentinel batches because
@@ -91,18 +109,14 @@ object StreamQueries {
         // band-miss count): the first flush emits the keeper agg, the
         // second lets the downstream agg see the advanced watermark.
         in.addData(Seq((-1L, "flush", new java.sql.Timestamp(3600L * 1000))))
-        q.processAllAvailable()
+        drain()
         in.addData(Seq((-2L, "flush", new java.sql.Timestamp(7200L * 1000))))
-        q.processAllAvailable()
-        val res = ss.table(qname)
-          .filter(col("id") >= 0)
+        drain()
+      } { sink =>
+        sink.filter(col("id") >= 0)
           .select(col("id").as("doc_id"), md5(col("text")).as("clean_digest"),
             col("n_tokens"), col("stop_ratio"))
-        // detach from the memory sink (collect) before the query stops
-        val rows = res.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
-          .orderBy("doc_id")
-      } finally q.stop()
+      }.orderBy("doc_id")
     }),
 
     // Streaming decontamination replayed bounded: the non-benchmark docs
@@ -121,23 +135,13 @@ object StreamQueries {
       val in = MemoryStream[(Long, String)]
       val out = StreamingOps.streamingDecontaminate(
         in.toDF().toDF("doc_id", "text"), bench, "doc_id", "text", n = 4)
-      val qname = "sdc_" + System.nanoTime()
-      val ckpt  = java.nio.file.Files.createTempDirectory("graft-sdc-ck").toString
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .start()
-      try {
+      runBounded(s, out, OutputMode.Append(), "sdc") { drain =>
         val (half1, half2) = shard.toSeq.splitAt(shard.length / 2)
         in.addData(half1)
-        q.processAllAvailable()
+        drain()
         in.addData(half2)
-        q.processAllAvailable()
-        val res = ss.table(qname)
-        val rows = res.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
-          .orderBy("doc_id", "contaminated_by")
-      } finally q.stop()
+        drain()
+      }().orderBy("doc_id", "contaminated_by")
     }),
 
     // Event-time sessionization replayed bounded: the full event stream
@@ -162,33 +166,24 @@ object StreamQueries {
       val out = StreamingOps.sessionizeEventTime(
         in.toDF().toDF("user_id", "ts_ns", "ts"),
         gapMs = 1800L * 1000, watermark = "10 seconds")
-      val qname = "ssz_" + System.nanoTime()
-      val ckpt  = java.nio.file.Files.createTempDirectory("graft-ssz-ck").toString
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt)
-        .start()
-      try {
+      runBounded(s, out, OutputMode.Append(), "ssz") { drain =>
         in.addData(rows.toSeq.map { case (u, ns) =>
           (u, ns, new java.sql.Timestamp(ns / 1000000L))
         })
-        q.processAllAvailable()
+        drain()
         val far   = new java.sql.Timestamp(4102444800000L) // 2100-01-01
         // sentinel ts_ns must ride far in the future too: its own state's
         // timeout is armed at ts_ns + gap, which must stay >= the watermark
         val farNs = 4102444800000L * 1000000L
         in.addData(Seq((-1L, farNs, far))) // advances the watermark
-        q.processAllAvailable()
+        drain()
         in.addData(Seq((-2L, farNs, far))) // batch in which timeouts fire
-        q.processAllAvailable()
-        val res = ss.table(qname)
-          .filter(col("user_id") >= 0)
+        drain()
+      } { sink =>
+        sink.filter(col("user_id") >= 0)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
-        val collected = res.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(collected, 1), res.schema)
-          .orderBy("user_id")
-      } finally q.stop()
+      }.orderBy("user_id")
     }),
 
     // Live co-visitation graph: events arrive across micro-batches and
@@ -209,25 +204,15 @@ object StreamQueries {
       val in = MemoryStream[(Long, String)]
       val out = graft.streaming.StreamingOps.streamingCoVisitation(
         in.toDF().toDF("user_id", "props"), "user_id", "props")
-      val qname = "scv_" + System.nanoTime()
-      val ckpt  = java.nio.file.Files.createTempDirectory("graft-scv-ck").toString
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode(OutputMode.Complete())
-        .option("checkpointLocation", ckpt)
-        .start()
-      try {
+      runBounded(s, out, OutputMode.Complete(), "scv") { drain =>
         // three arrival waves: the final complete table must not depend
         // on how interactions split across micro-batches
         val third = math.max(1, ev.length / 3)
         ev.grouped(third).foreach { wave =>
           in.addData(wave.toSeq)
-          q.processAllAvailable()
+          drain()
         }
-        val res = ss.table(qname)
-        val rows = res.collect().toSeq
-        s.createDataFrame(s.sparkContext.parallelize(rows, 1), res.schema)
-          .orderBy("u", "k")
-      } finally q.stop()
+      }().orderBy("u", "k")
     })
   )
 

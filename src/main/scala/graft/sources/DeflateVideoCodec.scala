@@ -34,8 +34,13 @@ import graft.model.FrameElem
   */
 object DeflateVideoCodec extends GopCodec {
 
-  private val MAGIC = 0x47444631 // "GDF1"
+  private[sources] val MAGIC = 0x47444631 // "GDF1"
   private val LEVEL = 6          // zlib default: determinism + ratio
+
+  private[sources] def header(payload: Array[Byte]): GopCodec.Header = {
+    val bb = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
+    GopCodec.Header(bb.getInt(4), bb.getInt(8), bb.getInt(17))
+  }
 
   override def encodeGop(frames: Seq[FrameElem]): Array[Byte] = {
     require(frames.nonEmpty, "empty GOP")

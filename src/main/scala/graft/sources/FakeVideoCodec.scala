@@ -22,6 +22,11 @@ import graft.model.FrameElem
   */
 object FakeVideoCodec extends GopCodec {
 
+  private[sources] def header(payload: Array[Byte]): GopCodec.Header = {
+    val bb = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
+    GopCodec.Header(bb.getInt(0), bb.getInt(4), bb.getInt(13))
+  }
+
   /** encode consecutive frames (one GOP) into a single segment payload */
   override def encodeGop(frames: Seq[FrameElem]): Array[Byte] = {
     require(frames.nonEmpty, "empty GOP")

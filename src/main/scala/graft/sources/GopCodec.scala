@@ -49,3 +49,24 @@ trait GopCodec extends Serializable {
     */
   def cpuBoundDecode: Boolean = false
 }
+
+object GopCodec {
+
+  /** the frame shape and count a segment payload's header records */
+  final case class Header(height: Int, width: Int, frames: Int)
+
+  /** a payload prefix this long covers every codec's header */
+  private[graft] val HeaderBytes = 21
+
+  /** Read a stored payload's header with the codec whose magic it starts
+    * with; [[FakeVideoCodec]]'s layout carries no magic and is the
+    * fallback. The container layer (MP4 export/demux) reads dimensions
+    * and frame counts through this, so it serves every store.
+    */
+  private[graft] def header(payload: Array[Byte]): Header =
+    java.nio.ByteBuffer.wrap(payload).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(0) match {
+      case H264GopCodec.MAGIC      => H264GopCodec.header(payload)
+      case DeflateVideoCodec.MAGIC => DeflateVideoCodec.header(payload)
+      case _                       => FakeVideoCodec.header(payload)
+    }
+}

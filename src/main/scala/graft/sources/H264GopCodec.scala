@@ -38,8 +38,6 @@ final class H264GopCodec(qp: Int = 12, pcm: Boolean = false,
     * tier: the NAL walk + unescape is still ~10x slower than a read) */
   override def cpuBoundDecode: Boolean = true
 
-  private val MAGIC = 0x47483236 // "GH26"
-
   override def encodeGop(frames: Seq[FrameElem]): Array[Byte] = {
     require(frames.nonEmpty, "empty GOP")
     val head = frames.head
@@ -58,7 +56,7 @@ final class H264GopCodec(qp: Int = 12, pcm: Boolean = false,
       aqp = aqp, chromaModes = chromaModes, wpImplicit = wpImplicit,
       cqm = cqm, reorder = reorder, slicesPerFrame = slicesPerFrame)
     val out = ByteBuffer.allocate(21 + stream.length).order(ByteOrder.LITTLE_ENDIAN)
-    out.putInt(MAGIC).putInt(head.height).putInt(head.width)
+    out.putInt(H264GopCodec.MAGIC).putInt(head.height).putInt(head.width)
       .put(head.channels.toByte).put(head.dtype)
       .putInt(frames.size).put(if (pcm) 1.toByte else 0.toByte)
     out.put(stream)
@@ -68,7 +66,7 @@ final class H264GopCodec(qp: Int = 12, pcm: Boolean = false,
   override def decodeGop(payload: Array[Byte], streamId: Long, startIndex: Long,
       upTo: Int, decoded: Option[LongAccumulator]): Iterator[FrameElem] = {
     val bb = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
-    require(bb.getInt() == MAGIC, "not an H264 GOP payload")
+    require(bb.getInt() == H264GopCodec.MAGIC, "not an H264 GOP payload")
     val h = bb.getInt(); val w = bb.getInt()
     val c = bb.get().toInt; val dtype = bb.get()
     val n = bb.getInt(); bb.get() // mode flag (informational on decode)
@@ -145,6 +143,13 @@ final class H264GopCodec(qp: Int = 12, pcm: Boolean = false,
 }
 
 object H264GopCodec {
+  private[sources] val MAGIC = 0x47483236 // "GH26"
+
+  private[sources] def header(payload: Array[Byte]): GopCodec.Header = {
+    val bb = ByteBuffer.wrap(payload).order(ByteOrder.LITTLE_ENDIAN)
+    GopCodec.Header(bb.getInt(4), bb.getInt(8), bb.getInt(14))
+  }
+
   /** lossless grayscale store (I_PCM macroblocks) */
   val Pcm: H264GopCodec = new H264GopCodec(pcm = true)
   /** default compressed store */

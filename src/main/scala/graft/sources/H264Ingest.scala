@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   *
   * GOP segments pair with [[VideoStore]]'s keyframe-seek model: each
   * segment payload starts with an IDR plus its parameter sets, so a
-  * sparse read decodes only the covering segments — decode itself stays
-  * behind the [[GopCodec]] seam until a real decoder is available.
+  * sparse read decodes ([[H264Codec.decode]]) only the covering segments.
   */
 object H264Ingest {
 
@@ -48,17 +47,14 @@ object H264Ingest {
     * row-group stats prune on segId; streamId is the file's position in
     * the sorted listing (the `ingestMp4Dir` convention). The stored
     * payloads are REAL self-contained H264 (parameter sets present at
-    * every leading IDR), so everything metadata-driven on the store —
-    * sparse-read segment planning, pruned scans, ordered concatenation
-    * back to one Annex-B stream — runs today; only pixel decode of these
-    * segments waits on a real H264 [[GopCodec]] behind the seam.
+    * every leading IDR): each segment decodes on its own
+    * ([[H264Codec.decode]]), and [[VideoStore.exportConcat]] writes a
+    * stream back out as one Annex-B file.
     */
   def ingestH264Dir(spark: SparkSession, dirPath: String, root: String,
       name: String,
       mode: graft.model.CacheMode = graft.model.CacheMode.Error)
       : graft.model.StreamDescriptor =
-    // Hadoop FS throughout (any backend), executor-side opens via a
-    // broadcast conf — the ingestMp4Dir pattern (VideoStore.scala:300)
     ingestDirWith(spark, dirPath, root, name, mode, ".h264",
       bytes => H264.index(bytes))
 
@@ -87,7 +83,7 @@ object H264Ingest {
   def saveMp4(spark: SparkSession, root: String, name: String,
       streamId: Long, outPath: String, fps: Int = 30): Long = {
     val buf = new java.io.ByteArrayOutputStream()
-    streamPayloads(spark, root, name, streamId).foreach(buf.write)
+    VideoStore.payloads(spark, root, name, streamId).foreach(buf.write)
     val ix = H264.index(buf.toByteArray)
     val p = new org.apache.hadoop.fs.Path(outPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -95,72 +91,26 @@ object H264Ingest {
     try H264Mp4.mux(ix, out, fps) finally out.close()
   }
 
-  /** one stream's GOP payloads in segId order, streamed through
-    * `toLocalIterator` — the shared concatenation source of
-    * [[saveAnnexB]] (writes as it goes) and [[saveMp4]] (must buffer:
-    * the container header needs every sample size first)
-    */
-  private def streamPayloads(spark: SparkSession, root: String,
-      name: String, streamId: Long): Iterator[Array[Byte]] = {
-    import scala.jdk.CollectionConverters._
-    VideoStore.segments(spark, root, name)
-      .filter(col("streamId") === streamId)
-      .orderBy("segId")
-      .toLocalIterator().asScala.map(_.payload)
-  }
-
   /** shared distributed walk of [[ingestH264Dir]]/[[ingestMp4H264Dir]]:
-    * list, broadcast conf, per-file open + index + segment
+    * one [[FileFleet]] task per run of files, each file read whole,
+    * indexed and cut into GOP segments of stream = its listing position
     */
   private def ingestDirWith(spark: SparkSession, dirPath: String,
       root: String, name: String, mode: graft.model.CacheMode, ext: String,
       indexer: Array[Byte] => H264.StreamIndex)
       : graft.model.StreamDescriptor = {
-    import scala.jdk.CollectionConverters._
-    import spark.implicits._
-    val dir = new org.apache.hadoop.fs.Path(dirPath)
-    val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs0.listStatus(dir).map(_.getPath)
-      .filter(_.getName.toLowerCase.endsWith(ext))
-      .map(_.toString).sorted
-    require(files.nonEmpty, s"no $ext files under $dirPath")
-    val confKV = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    val confB = spark.sparkContext.broadcast(confKV)
-    val withIds = files.zipWithIndex.map { case (p, i) => (p, i.toLong) }.toSeq
-    val nParts = math.max(1,
-      math.min(spark.sparkContext.defaultParallelism, files.length))
-    // the ingestMp4Dir ordering trick (VideoStore.scala:311): range-sort
-    // the TINY (path, sid) relation, emit per-file segments in segId
-    // order, and write with NO global sort — parquet comes out
-    // (streamId, segId)-ordered without an exchange over the payloads
-    val segs = withIds.toDF("path", "sid")
-      .repartitionByRange(nParts, col("sid"))
-      .sortWithinPartitions("sid")
-      .as[(String, Long)]
-      .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val hc = new org.apache.hadoop.conf.Configuration(false)
-          confB.value.foreach { case (k, v) => hc.set(k, v) }
-          it.flatMap { case (pathStr, sid) =>
-            val p = new org.apache.hadoop.fs.Path(pathStr)
-            val fs = p.getFileSystem(hc)
-            val len = fs.getFileStatus(p).getLen
-            require(len <= Int.MaxValue,
-              s"$pathStr is $len bytes; single-stream indexing is bounded " +
-                "at 2 GiB — split the stream or extend to a streaming NAL walk")
-            val bytes = new Array[Byte](len.toInt)
-            val in = fs.open(p)
-            try in.readFully(0L, bytes) finally in.close()
-            indexer(bytes).gopSegments.map { case (g, start, n, payload) =>
-              VideoStore.Segment(sid, g.toLong, start, n, payload)
-            }
-          }
-        }
+    val segs = FileFleet.read(spark, dirPath, ext) { (task, p, sid) =>
+      val len = task.fs(p).getFileStatus(p).getLen
+      require(len <= Int.MaxValue,
+        s"$p is $len bytes; single-stream indexing is bounded " +
+          "at 2 GiB — split the stream or extend to a streaming NAL walk")
+      val bytes = new Array[Byte](len.toInt)
+      task.open(p).readFully(0L, bytes)
+      indexer(bytes).gopSegments.iterator.map { case (g, start, n, payload) =>
+        VideoStore.Segment(sid, g.toLong, start, n, payload)
       }
-      .toDF()
-    NamedStorage.write(segs, root, name, mode)
+    }
+    NamedStorage.write(spark.createDataset(segs)(VideoStore.segEnc).toDF(), root, name, mode)
   }
 
   /** Sparse access-unit gather over an H264 segment store: for the
@@ -200,27 +150,6 @@ object H264Ingest {
       }
       .toDF("streamId", "frame", "keyframe", "frame_num", "n_slices",
         "byte_size")
-  }
-
-  /** Export one stored stream back to a single Annex-B file — the
-    * `save_mp4` twin for raw H264 stores
-    * (`python/scannerpy/column.py:283-342` semantics: ordered segment
-    * concatenation; valid here because every GOP payload is
-    * self-contained). Segments stream through `toLocalIterator` in
-    * segId order — driver memory stays one-GOP bounded however long
-    * the stream. Returns the byte count written.
-    */
-  def saveAnnexB(spark: SparkSession, root: String, name: String,
-      streamId: Long, outPath: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    var n = 0L
-    try streamPayloads(spark, root, name, streamId).foreach { payload =>
-      out.write(payload)
-      n += payload.length
-    } finally out.close()
-    n
   }
 
   /** keyframe-aligned GOP segments: (path, gop, start_frame, n_frames,

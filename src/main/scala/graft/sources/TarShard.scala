@@ -164,10 +164,7 @@ object TarShard {
       nWriters: Int = 0): Long = {
     import org.apache.spark.sql.functions._
     val spark = df.sparkSession
-    import scala.jdk.CollectionConverters._
-    val confKV = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    val confB = spark.sparkContext.broadcast(confKV)
+    val shipped = FileFleet.shipConf(spark)
     val writers = if (nWriters > 0) nWriters
       else spark.sparkContext.defaultParallelism
     // Write into a temporary subdirectory and PROMOTE (rename + stale
@@ -186,10 +183,8 @@ object TarShard {
         org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.STRING,
           org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.BINARY))
       .rdd.mapPartitionsWithIndex { (pid, rows) =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confB.value.foreach { case (k, v) => conf.set(k, v) }
         val dir = new org.apache.hadoop.fs.Path(tmpDirStr)
-        val fs = dir.getFileSystem(conf)
+        val fs = dir.getFileSystem(FileFleet.conf(shipped))
         fs.mkdirs(dir)
         var seq = 0
         var out: OutputStream = null
@@ -260,48 +255,13 @@ object TarShard {
     */
   def readDir(spark: SparkSession, dirPath: String,
       keepPayloads: Boolean = true): DataFrame = {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val dir = new org.apache.hadoop.fs.Path(dirPath)
-    val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs0.listStatus(dir).map(_.getPath)
-      .filter(_.getName.endsWith(".tar")).map(_.toString).sorted
-    require(files.nonEmpty, s"no .tar shards under $dirPath")
-    val confKV = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    val confB = spark.sparkContext.broadcast(confKV)
-    val nParts = math.max(1,
-      math.min(spark.sparkContext.defaultParallelism, files.length))
-    spark.sparkContext.parallelize(files.toIndexedSeq, nParts)
-      .mapPartitions { paths =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confB.value.foreach { case (k, v) => conf.set(k, v) }
-        paths.flatMap { pathStr =>
-          val p = new org.apache.hadoop.fs.Path(pathStr)
-          val in = p.getFileSystem(conf).open(p)
-          // close on ANY task exit path, not just full drain; NonFatal,
-          // not just IOException — a close-time throw must not fail the task
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ =>
-              try in.close() catch { case scala.util.control.NonFatal(_) => () }))
-          val es = entries(in)
-          var idx = -1L
-          new Iterator[(String, Long, String, String, Long, Array[Byte])] {
-            override def hasNext: Boolean = {
-              val h = es.hasNext
-              if (!h) in.close()
-              h
-            }
-            override def next() = {
-              val (name, payload) = es.next()
-              idx += 1
-              val (key, ext) = splitKey(name)
-              (p.getName, idx, key, ext, payload.length.toLong,
-                if (keepPayloads) payload else Array.emptyByteArray)
-            }
-          }
-        }
+    FileFleet.read(spark, dirPath, ".tar") { (task, p, _) =>
+      entries(task.open(p)).zipWithIndex.map { case ((name, payload), idx) =>
+        val (key, ext) = splitKey(name)
+        (p.getName, idx.toLong, key, ext, payload.length.toLong,
+          if (keepPayloads) payload else Array.emptyByteArray)
       }
-      .toDF("shard", "entry_idx", "key", "ext", "payload_len", "payload")
+    }.toDF("shard", "entry_idx", "key", "ext", "payload_len", "payload")
   }
 }

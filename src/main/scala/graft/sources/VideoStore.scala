@@ -49,7 +49,7 @@ object VideoStore {
     def step: Int = if (lossless) 1 else math.max(1, (100 - quality) / 4)
   }
 
-  private val segEnc   = Encoders.product[Segment]
+  private[sources] val segEnc = Encoders.product[Segment]
   private val frameEnc = Encoders.product[FrameElem]
 
   /** Ingest a frame stream into GOP segments of `gopSize` frames. Frames
@@ -250,35 +250,18 @@ object VideoStore {
     (needed, pruned)
   }
 
-  /** MP4 ingest — the container half of the reference's flagship path
-    * (`scanner/engine/ingest.cpp:175-380`: demux the container, index the
-    * keyframe-aligned sample runs, store segments + index). The ISO-BMFF
-    * demux is REAL ([[Mp4Writer.parseSampleTable]]): the driver reads only
-    * box headers plus the (small) `moov` box and the 17-byte GOP headers —
-    * the reference's single-pass index build — then each EXECUTOR
-    * positioned-reads its own samples' byte ranges, so payload bytes never
-    * route through the driver and ingest parallelism = #samples. The
-    * session's Hadoop configuration travels to executors as broadcast
-    * key-value pairs, so object-store credentials/endpoints set via
-    * spark.hadoop.* resolve there too.
-    *
-    * Samples must be GOP payloads of the stand-in codec until a real
-    * [[GopCodec]] lands (the sample payload is opaque to the demux layer
-    * itself).
-    */
   /** Demux one container's index: top-level box walk (full 14496-12 size
     * grammar — compact, `largesize`, 0 = to-end-of-file), one moov read,
     * sample refs + per-sample frame counts from the stts deltas (our
     * muxer's timescale is 1 unit = 1 frame), and a constant-cost
     * cross-check of sample 0's GOP header against its stts delta so a
     * foreign-timescale file fails loudly instead of silently mis-indexing.
-    * Exactly one header walk + one moov read + one 4-byte peek — the
+    * Exactly one header walk + one moov read + one GOP-header peek — the
     * reference's single-pass index build (`scanner/engine/ingest.cpp:
     * 175-380`). Runs on the driver (single-file ingest) or inside an
     * executor task (directory ingest).
     */
-  private def demuxIndex(fs: org.apache.hadoop.fs.FileSystem, p: Path)
-      : (Seq[Mp4Writer.SampleRef], Seq[Int]) = {
+  private def demuxIndex(fs: org.apache.hadoop.fs.FileSystem, p: Path): IndexedSeq[Sample] = {
     import java.nio.{ByteBuffer, ByteOrder}
     val len = fs.getFileStatus(p).getLen
     val in  = fs.open(p)
@@ -305,64 +288,48 @@ object VideoStore {
       require(moov != null, s"no moov box in $p")
       val (rs, ns) = Mp4Writer.parseSampleTableWithDurations(moov)
       rs.headOption.foreach { r0 =>
-        val nbuf = new Array[Byte](4)
-        in.readFully(r0.offset + 13, nbuf, 0, 4)
-        val headerN = ByteBuffer.wrap(nbuf).order(ByteOrder.LITTLE_ENDIAN).getInt
+        val hbuf = new Array[Byte](math.min(GopCodec.HeaderBytes, r0.bytes))
+        in.readFully(r0.offset, hbuf, 0, hbuf.length)
+        val headerN = GopCodec.header(hbuf).frames
         require(headerN == ns.head,
           s"mp4: stts delta ${ns.head} != GOP header frame count $headerN — " +
             "not a 1-unit-per-frame file; re-mux or ingest via frames()")
       }
-      (rs, ns)
+      val starts = ns.scanLeft(0L)(_ + _)
+      rs.iterator.zip(ns).zip(starts).zipWithIndex.map { case (((r, n), st), i) =>
+        Sample(i.toLong, st, n, r.offset, r.bytes)
+      }.toIndexedSeq
     } finally in.close()
   }
 
+  /** one MP4 sample = one stored GOP, located in its container */
+  private final case class Sample(segId: Long, startIndex: Long, numFrames: Int,
+      offset: Long, bytes: Int)
+
+  /** MP4 ingest — the container half of the reference's flagship path
+    * (`scanner/engine/ingest.cpp:175-380`: demux the container, index the
+    * keyframe-aligned sample runs, store segments + index). The ISO-BMFF
+    * demux is REAL ([[Mp4Writer.parseSampleTable]]): the driver reads only
+    * box headers plus the (small) `moov` box and the first GOP header —
+    * the reference's single-pass index build — then each EXECUTOR
+    * positioned-reads its own samples' byte ranges ([[FileFleet]] ships
+    * the Hadoop conf), so payload bytes never route through the driver
+    * and ingest parallelism = #samples. Samples are GOP payloads of any
+    * store codec ([[GopCodec.header]] reads their headers).
+    */
   def ingestMp4(spark: SparkSession, mp4Path: String, root: String, name: String,
       streamId: Long, mode: CacheMode = CacheMode.Error): StreamDescriptor = {
-    val p   = new Path(mp4Path)
-    val fs0 = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (refs, frameCounts) = demuxIndex(fs0, p)
-    val starts = frameCounts.scanLeft(0L)(_ + _)
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    // ship the session's Hadoop configuration to the executors as plain
-    // (key, value) pairs — a fresh default Configuration() there would
-    // drop every spark.hadoop.* setting (s3a credentials, endpoints)
-    val confKV = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    val confB = spark.sparkContext.broadcast(confKV)
-    val meta = refs.zipWithIndex.map { case (r, i) =>
-      (i.toLong, starts(i), frameCounts(i), r.offset, r.bytes)
+    val p = new Path(mp4Path)
+    val samples = demuxIndex(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    // the segId-ordered sample list parallelizes into contiguous ascending
+    // slices, so the payload fetch writes segId-ordered parquet with no
+    // sort: each sample's bytes are read exactly once (a global orderBy
+    // after the fetch would re-read every sample in its sampling pass —
+    // pinned by the spy-filesystem read-count spec)
+    val segs = FileFleet.parallelize(spark, samples) { (task, it) =>
+      fetchSamples(task, p, streamId, it)
     }
-    // Range-partition + sort the TINY metadata relation BEFORE the payload
-    // fetch, then write with no further ordering: a global orderBy after
-    // the fetch would run the RangePartitioner's sampling pass over the
-    // fetched relation — every sample's bytes read TWICE from the object
-    // store (pinned by the spy-filesystem read-count spec). Ordering the
-    // metadata first costs a sampling pass over #samples driver-local rows,
-    // keeps parquet files segId-ordered for row-group pruning, and reads
-    // each payload byte exactly once.
-    val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism, meta.size))
-    val segs = meta.toDF("segId", "startIndex", "numFrames", "off", "sz")
-      .as[(Long, Long, Int, Long, Int)]
-      .repartitionByRange(nParts, col("segId"))
-      .sortWithinPartitions("segId")
-      .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val hc = new org.apache.hadoop.conf.Configuration(false)
-          confB.value.foreach { case (k, v) => hc.set(k, v) }
-          val path = new Path(mp4Path)
-          val s    = path.getFileSystem(hc).open(path)
-          Option(org.apache.spark.TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit](_ => s.close()))
-          it.map { case (segId, st, n, off, sz) =>
-            val b = new Array[Byte](sz)
-            s.readFully(off, b, 0, sz)
-            Segment(streamId, segId, st, n, b)
-          }
-        }
-      }(segEnc)
-    NamedStorage.write(segs.toDF(), root, name, mode)
+    NamedStorage.write(spark.createDataset(segs)(segEnc).toDF(), root, name, mode)
   }
 
   /** Distributed multi-file MP4 ingest: a DIRECTORY of containers becomes
@@ -372,61 +339,29 @@ object VideoStore {
     * twin of [[ingestMp4]], whose per-file driver walk would cost 10k
     * sequential object-store round-trips). streamId = position of the file
     * in the lexicographically sorted listing (deterministic; name files
-    * with zero-padded ids to control it). The tiny (path, streamId)
-    * relation is range-partitioned by streamId before the fetch, so
-    * parquet files come out stream-then-segId ordered for row-group
-    * pruning without a payload re-read.
+    * with zero-padded ids to control it). [[FileFleet]] hands each task
+    * a contiguous ascending run of files, so parquet files come out
+    * stream-then-segId ordered for row-group pruning with no sort.
     */
   def ingestMp4Dir(spark: SparkSession, dirPath: String, root: String, name: String,
       mode: CacheMode = CacheMode.Error): StreamDescriptor = {
-    import scala.jdk.CollectionConverters._
-    val dir = new Path(dirPath)
-    val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs0.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.toLowerCase.endsWith(".mp4"))
-      .map(_.toString).sorted
-    require(files.nonEmpty, s"no .mp4 files under $dirPath")
-    val confKV = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    val confB = spark.sparkContext.broadcast(confKV)
-    import spark.implicits._
-    val nParts = math.max(1, math.min(spark.sparkContext.defaultParallelism, files.length))
-    val segs = files.zipWithIndex.map { case (f, i) => (f, i.toLong) }.toSeq
-      .toDF("path", "sid").as[(String, Long)]
-      .repartitionByRange(nParts, col("sid"))
-      .sortWithinPartitions("sid")
-      .mapPartitions { it =>
-        val hc = new org.apache.hadoop.conf.Configuration(false)
-        confB.value.foreach { case (k, v) => hc.set(k, v) }
-        it.flatMap { case (pathStr, sid) =>
-          val p  = new Path(pathStr)
-          val fs = p.getFileSystem(hc)
-          val (refs, ns) = demuxIndex(fs, p)
-          val starts = ns.scanLeft(0L)(_ + _)
-          val in = fs.open(p)
-          // safety net for partially-consumed iterators (task failure);
-          // normal path closes at exhaustion so a task over many files
-          // holds one handle at a time
-          Option(org.apache.spark.TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit](_ =>
-              try in.close() catch { case _: java.io.IOException => () }))
-          // lazy per-sample reads: one segment in memory at a time
-          new Iterator[Segment] {
-            private var i = 0
-            def hasNext: Boolean = i < refs.size
-            def next(): Segment = {
-              val r = refs(i)
-              val b = new Array[Byte](r.bytes)
-              in.readFully(r.offset, b, 0, r.bytes)
-              val seg = Segment(sid, i.toLong, starts(i), ns(i), b)
-              i += 1
-              if (i == refs.size) in.close()
-              seg
-            }
-          }
-        }
-      }(segEnc)
-    NamedStorage.write(segs.toDF(), root, name, mode)
+    val segs = FileFleet.read(spark, dirPath, ".mp4") { (task, p, sid) =>
+      fetchSamples(task, p, sid, demuxIndex(task.fs(p), p).iterator)
+    }
+    NamedStorage.write(spark.createDataset(segs)(segEnc).toDF(), root, name, mode)
+  }
+
+  /** `samples` of container `p` as segments of stream `sid`, read lazily
+    * one positioned read at a time (one segment in memory)
+    */
+  private def fetchSamples(task: FileFleet.Task, p: Path, sid: Long,
+      samples: Iterator[Sample]): Iterator[Segment] = {
+    lazy val in = task.open(p)
+    samples.map { smp =>
+      val b = new Array[Byte](smp.bytes)
+      in.readFully(smp.offset, b, 0, b.length)
+      Segment(sid, smp.segId, smp.startIndex, smp.numFrames, b)
+    }
   }
 
   /** Full `save_mp4` export: stored segments wrapped in a REAL ISO-BMFF
@@ -441,7 +376,6 @@ object VideoStore {
     */
   def exportMp4(spark: SparkSession, root: String, name: String,
       streamId: Long, outPath: String, fps: Int = 30): Long = {
-    import scala.jdk.CollectionConverters._
     val mine = segments(spark, root, name).filter(col("streamId") === streamId)
     val metas = mine
       .select(col("segId"), length(col("payload")).cast("long").as("sz"), col("numFrames"))
@@ -451,15 +385,12 @@ object VideoStore {
       .toSeq
     require(metas.nonEmpty, s"stream $streamId has no segments in $name")
     // frame dims live in the codec payload header; peek at one segment
-    val head = mine.orderBy("segId").select(col("payload")).limit(1)
-      .collect().head.getAs[Array[Byte]]("payload")
-    val bb = java.nio.ByteBuffer.wrap(head).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val h  = bb.getInt; val w = bb.getInt
+    val shape = GopCodec.header(mine.orderBy("segId").select(col("payload")).limit(1)
+      .collect().head.getAs[Array[Byte]]("payload"))
     val p   = new Path(outPath)
     val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
-    try Mp4Writer.write(out, metas, w, h, fps,
-      mine.orderBy("segId").select(col("payload")).toLocalIterator().asScala
-        .map(_.getAs[Array[Byte]]("payload")))
+    try Mp4Writer.write(out, metas, shape.width, shape.height, fps,
+      payloads(spark, root, name, streamId))
     finally out.close()
   }
 
@@ -481,10 +412,7 @@ object VideoStore {
     */
   def exportMp4All(spark: SparkSession, root: String, name: String,
       outDir: String, fps: Int = 30): Array[(Long, String, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val confKV = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    val confB = spark.sparkContext.broadcast(confKV)
+    val shipped = FileFleet.shipConf(spark)
     // Overwrite semantics are settled ONCE here on the driver, before any
     // task runs: clear prior committed outputs so the task-side commit can
     // be pure rename-first. A task must never delete the destination — a
@@ -501,10 +429,8 @@ object VideoStore {
     segments(spark, root, name)
       .groupByKey(_.streamId)(Encoders.scalaLong)
       .flatMapSortedGroups(col("segId")) { (sid: Long, it: Iterator[Segment]) =>
-        val hc = new org.apache.hadoop.conf.Configuration(false)
-        confB.value.foreach { case (k, v) => hc.set(k, v) }
         val dir = new Path(outDir)
-        val fs  = dir.getFileSystem(hc)
+        val fs  = dir.getFileSystem(FileFleet.conf(shipped))
         fs.mkdirs(dir)
         // ATTEMPT-UNIQUE scratch names: speculative/retried attempts of the
         // same stream's task must never share spool or output files, or
@@ -517,15 +443,11 @@ object VideoStore {
         val tmp   = new Path(dir, s".tmp-$sid-$attempt")
         val part  = new Path(dir, s".part-$sid-$attempt")
         val metas = Seq.newBuilder[Mp4Writer.SampleMeta]
-        var h = -1; var w = -1
+        var shape: GopCodec.Header = null
         var total = 0L
         val t = fs.create(tmp, true)
         try it.foreach { s =>
-          if (h < 0) {
-            val bb = java.nio.ByteBuffer.wrap(s.payload)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            h = bb.getInt; w = bb.getInt
-          }
+          if (shape == null) shape = GopCodec.header(s.payload)
           metas += Mp4Writer.SampleMeta(s.payload.length.toLong, s.numFrames)
           t.write(s.payload); total += s.payload.length
         } finally t.close()
@@ -544,7 +466,8 @@ object VideoStore {
               var n = in.read(buf)
               while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
             } finally in.close()
-            out.write(Mp4Writer.moov(ms, w, h, fps, head.length.toLong + mh.length))
+            out.write(Mp4Writer.moov(ms, shape.width, shape.height, fps,
+              head.length.toLong + mh.length))
           } finally out.close()
           fs.delete(tmp, false)
           // Rename-first commit: never touch the destination except via the
@@ -561,23 +484,30 @@ object VideoStore {
       .collect()
   }
 
-  /** Ordered concatenation of stored segments into a single container file
-    * (the raw-stream export twin of [[exportMp4]]). Streams through the
-    * driver — never materializes more than one segment.
+  /** Ordered concatenation of one stream's segments into a single file —
+    * the raw-stream twin of [[exportMp4]] (for H.264 stores, whose GOP
+    * payloads are self-contained, an Annex-B file). Streams through the
+    * driver — never materializes more than one segment. Returns the
+    * bytes written.
     */
   def exportConcat(spark: SparkSession, root: String, name: String,
       streamId: Long, outPath: String): Long = {
-    import scala.jdk.CollectionConverters._
     val p   = new Path(outPath)
     val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
     var bytes = 0L
-    try {
-      segments(spark, root, name)
-        .filter(col("streamId") === streamId)
-        .orderBy("segId")
-        .toLocalIterator().asScala
-        .foreach { s => out.write(s.payload); bytes += s.payload.length }
+    try payloads(spark, root, name, streamId).foreach { b =>
+      out.write(b); bytes += b.length
     } finally out.close()
     bytes
+  }
+
+  /** one stream's GOP payloads in segId order, streamed to the driver
+    * through `toLocalIterator` (one segment at a time)
+    */
+  private[sources] def payloads(spark: SparkSession, root: String,
+      name: String, streamId: Long): Iterator[Array[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    segments(spark, root, name).filter(col("streamId") === streamId)
+      .orderBy("segId").toLocalIterator().asScala.map(_.payload)
   }
 }

@@ -30,8 +30,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * line of that message.
   *
   * Scale shape: the FILE is the parallelism unit (Common Crawl ships
-  * ~100k × ~1 GB files per snapshot). [[readDir]] lists the directory,
-  * broadcasts the Hadoop conf, and each executor task OPENS AND STREAMS
+  * ~100k × ~1 GB files per snapshot). [[readDir]] reads through
+  * [[FileFleet]]: each executor task OPENS AND STREAMS
   * its file — records iterate off the (decompressing) stream with no
   * whole-file buffering, so a 1 GB member-gzip WARC costs one record's
   * memory at a time. No shuffle: ingest is embarrassingly parallel,
@@ -254,70 +254,22 @@ object Warc {
     */
   def readDir(spark: SparkSession, dirPath: String,
       keepBodies: Boolean = true): DataFrame = {
-    import scala.jdk.CollectionConverters._
     import spark.implicits._
-    val dir = new org.apache.hadoop.fs.Path(dirPath)
-    val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = fs0.listStatus(dir).map(_.getPath)
-      .filter { p =>
-        val n = p.getName.toLowerCase
-        n.endsWith(".warc") || n.endsWith(".warc.gz")
+    FileFleet.read(spark, dirPath, ".warc", ".warc.gz") { (task, p, _) =>
+      // the raw stream is tracked before the gzip header read (which can
+      // throw); the gzip chain then takes its place, so early exit also
+      // releases the Inflater instead of leaving it to GC
+      val raw = task.open(p)
+      val in = new BufferedInputStream(raw, 1 << 16)
+      val recs = records(
+        if (p.getName.toLowerCase.endsWith(".gz")) task.wrap(raw, new GZIPInputStream(in)) else in)
+      recs.zipWithIndex.map { case (r, idx) =>
+        (p.toString, idx.toLong, r.warcType, r.recordId, r.targetUri.getOrElse(""),
+          r.date, r.contentType.getOrElse(""), r.httpStatus.getOrElse(-1),
+          r.httpContentType.getOrElse(""), r.body.length.toLong,
+          if (keepBodies) r.body else Array.emptyByteArray)
       }
-      .map(_.toString).sorted
-    require(files.nonEmpty, s"no .warc/.warc.gz files under $dirPath")
-    val confKV = spark.sparkContext.hadoopConfiguration.iterator().asScala
-      .map(e => (e.getKey, e.getValue)).toArray
-    val confB = spark.sparkContext.broadcast(confKV)
-    val nParts = math.max(1,
-      math.min(spark.sparkContext.defaultParallelism, files.length))
-    spark.sparkContext.parallelize(files.toIndexedSeq, nParts)
-      .mapPartitions { paths =>
-        val conf = new org.apache.hadoop.conf.Configuration(false)
-        confB.value.foreach { case (k, v) => conf.set(k, v) }
-        paths.flatMap { pathStr =>
-          val p = new org.apache.hadoop.fs.Path(pathStr)
-          val in = p.getFileSystem(conf).open(p)
-          // close the OUTERMOST stream on ANY task exit (limit/take,
-          // downstream early-exit, failure) — closing only the raw FS
-          // stream would leave a GZIPInputStream's Inflater native memory
-          // to GC finalization. The holder starts at the raw stream so the
-          // listener is armed before the gzip header read (which itself
-          // can throw); closes are idempotent and a close-time throw must
-          // not fail the task, hence NonFatal, not just IOException.
-          var outer: InputStream = in
-          def closeAll(): Unit = {
-            try outer.close()
-            catch { case scala.util.control.NonFatal(_) => () }
-            try in.close()
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => closeAll()))
-          outer =
-            if (pathStr.toLowerCase.endsWith(".gz"))
-              new GZIPInputStream(new BufferedInputStream(in, 1 << 16))
-            else new BufferedInputStream(in, 1 << 16)
-          val recs = records(outer)
-          var idx = -1L
-          new Iterator[(String, Long, String, String, String, String, String,
-              Int, String, Long, Array[Byte])] {
-            override def hasNext: Boolean = {
-              val h = recs.hasNext
-              if (!h) closeAll()
-              h
-            }
-            override def next() = {
-              val r = recs.next()
-              idx += 1
-              (pathStr, idx, r.warcType, r.recordId, r.targetUri.getOrElse(""),
-                r.date, r.contentType.getOrElse(""), r.httpStatus.getOrElse(-1),
-                r.httpContentType.getOrElse(""), r.body.length.toLong,
-                if (keepBodies) r.body else Array.emptyByteArray)
-            }
-          }
-        }
-      }
-      .toDF("path", "rec_idx", "warc_type", "record_id", "target_uri",
+    }.toDF("path", "rec_idx", "warc_type", "record_id", "target_uri",
         "warc_date", "content_type", "http_status", "http_content_type",
         "body_len", "body")
   }

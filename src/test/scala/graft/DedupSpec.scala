@@ -154,28 +154,21 @@ class DedupSpec extends SparkSpec {
   }
 
   test("edge-count gate: past maxLocalEdges the distributed loop runs — identical labels AND rounds") {
-    val key = "graft.cc.maxLocalEdges"
-    val prev = sys.props.get(key)
     val nodes = (0L until 60L).toDF("doc_id")
     val chain = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
-    def run(): (Map[Long, Long], Int) = {
-      val (df, rounds) = Dedup.connectedComponentsWithStats(nodes, chain, "doc_id")
+    def run(localEdgeLimit: Long): (Map[Long, Long], Int) = {
+      val (df, rounds) = Dedup.ccWithStats(nodes, chain, "doc_id", 20, None,
+        localEdgeLimit)
       val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       CacheScope.release()
       (m, rounds)
     }
-    try {
-      val (mLocal, rLocal) = run() // default gate: P==1 local loop
-      sys.props(key) = "1"         // force the distributed loop at P==1
-      val (mDist, rDist) = run()
-      assert(mLocal == mDist, "gate changed the labels")
-      assert(rLocal == rDist, "gate changed the round count — the local " +
-        "loop no longer replays the distributed recurrence")
-      assert(mLocal.size == 60 && mLocal.values.forall(_ == 0L))
-    } finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    val (mLocal, rLocal) = run(graft.functions.GraphRank.maxLocalEdges) // P==1 local loop
+    val (mDist, rDist) = run(0L) // force the distributed loop at P==1
+    assert(mLocal == mDist, "gate changed the labels")
+    assert(rLocal == rDist, "gate changed the round count — the local " +
+      "loop no longer replays the distributed recurrence")
+    assert(mLocal.size == 60 && mLocal.values.forall(_ == 0L))
   }
 
   test("connectedComponents with a reliable checkpoint dir: same labels, checkpoint files written") {

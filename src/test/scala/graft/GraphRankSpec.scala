@@ -52,28 +52,27 @@ class GraphRankSpec extends SparkSpec {
     // recurrence exactly — force the distributed loops via the gate and
     // compare bit-for-bit (this is also the P > 1 loop shape's only
     // in-suite coverage, since test graphs always size to one partition)
-    val key = "graft.graph.maxLocalEdges"
-    val prev = sys.props.get(key)
     val edges = (0L until 150L).flatMap(i =>
       Seq((i, (i * 7 + 1) % 150L), (i, (i * 13 + 5) % 150L)))
-    def hitsMap() = {
-      val m = GraphRank.hits(edges.toDF("src", "dst"), iters = 4)
+    def hitsMap(localEdgeLimit: Long) = {
+      val m = GraphRank.hitsLoop(edges.toDF("src", "dst"), 4, 1000000000L, localEdgeLimit)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       CacheScope.release()
       m
     }
-    def prMap() = { val m = run(edges, iters = 4); CacheScope.release(); m }
-    try {
-      val (prLocal, hLocal) = (prMap(), hitsMap())
-      sys.props(key) = "0" // every graph takes the distributed loop
-      val (prDist, hDist) = (prMap(), hitsMap())
-      assert(prLocal == prDist, "pageRank local/distributed paths diverged")
-      assert(hLocal == hDist, "hits local/distributed paths diverged")
-      assert(prLocal == refPageRank(edges, 4))
-    } finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
+    def prMap(localEdgeLimit: Long) = {
+      val m = GraphRank.prCore(edges.toDF("src", "dst"), None, None, 4,
+          1000000000000L, 85, localEdgeLimit)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      CacheScope.release()
+      m
     }
+    val local = GraphRank.maxLocalEdges
+    val (prLocal, hLocal) = (prMap(local), hitsMap(local))
+    val (prDist, hDist) = (prMap(0L), hitsMap(0L)) // every graph takes the distributed loop
+    assert(prLocal == prDist, "pageRank local/distributed paths diverged")
+    assert(hLocal == hDist, "hits local/distributed paths diverged")
+    assert(prLocal == refPageRank(edges, 4))
   }
 
   test("pageRank semantics: hub with many in-links outranks leaf nodes; mass ~conserved") {

@@ -84,9 +84,9 @@ class H264IngestSpec extends SparkSpec {
     assert(acc.value == 3L, s"must open exactly the 3 covering segments, got ${acc.value}")
   }
 
-  test("saveAnnexB export re-ingests to the original frame structure") {
+  test("exportConcat of an H264 store re-ingests to the original frame structure") {
     val out = sys.props("java.io.tmpdir") + "/graft-h264-export/stream0.h264"
-    val n = H264Ingest.saveAnnexB(spark, root, "realvid", 0L, out)
+    val n = VideoStore.exportConcat(spark, root, "realvid", 0L, out)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out))
     assert(n == bytes.length && n > 0)
     val ix = H264.index(bytes)

@@ -7,15 +7,18 @@ import org.apache.spark.sql.functions._
 
 import graft.model.CacheMode
 import graft.operators.StdKernels
-import graft.sources.{NamedStorage, TarShard, VideoStore, Warc}
+import graft.sources.{H264, H264Ingest, H264Mp4, NamedStorage, TarShard, VideoStore, Warc}
 
 /** Round-11 hardening pins:
   *  - the whole VideoStore/NamedStorage lifecycle through a NON-DEFAULT
   *    Hadoop filesystem (spy://, a RawLocalFileSystem subclass) — any
   *    hidden `java.io.File` assumption in the store would miss the
   *    scheme and read/write the wrong tree or throw;
-  *  - WARC early-exit stream closure (limit(1) must close every opened
-  *    gzip chain via the task-completion listener, not wait for GC);
+  *  - the shared close contract of the directory sources (WARC and tar
+  *    limit(1) early exit, MP4 and H.264 directory ingest): every opened
+  *    stream is closed exactly once, via the task-completion listener on
+  *    early exit, not left to GC — and directory ingest writes part files
+  *    in (streamId, segId) order with streamId = listing position;
   *  - TarShard overwrite promotion (a FAILED rewrite must leave the
   *    prior shards intact; a successful rewrite with fewer writers must
   *    leave no stale shards behind).
@@ -59,13 +62,75 @@ class SourceHardeningSpec extends SparkSpec {
         httpResponse = true)))
       finally out.close()
     }
-    SpyFileSystem.reset()
-    val one = Warc.readDir(spark, s"spy://$dir").limit(1).collect()
-    assert(one.length == 1)
-    assert(SpyFileSystem.opens.get() > 0)
-    assert(SpyFileSystem.closes.get() >= SpyFileSystem.opens.get(),
-      s"early exit leaked streams: opens=${SpyFileSystem.opens.get()} " +
-        s"closes=${SpyFileSystem.closes.get()}")
+    def closesEveryOpen(what: String)(run: => Unit): Unit = {
+      SpyFileSystem.reset()
+      run
+      assert(SpyFileSystem.opens.get() > 0, s"$what opened nothing through spy://")
+      assert(SpyFileSystem.closes.get() == SpyFileSystem.opens.get(),
+        s"$what: opens=${SpyFileSystem.opens.get()} closes=${SpyFileSystem.closes.get()}")
+    }
+    closesEveryOpen("WARC limit(1)") {
+      assert(Warc.readDir(spark, s"spy://$dir").limit(1).collect().length == 1)
+    }
+
+    import spark.implicits._
+    val tarDir = Files.createTempDirectory("graft-spytar").toString
+    TarShard.writeSamples((0 until 40).map(i => (f"k$i%03d", "txt", s"p$i".getBytes(UTF_8)))
+      .toDF("key", "ext", "payload"), tarDir, maxShardBytes = 256, nWriters = 2)
+    closesEveryOpen("tar limit(1)") {
+      assert(TarShard.readDir(spark, s"spy://$tarDir").limit(1).collect().length == 1)
+    }
+
+    val root = Files.createTempDirectory("graft-spyingest").toString
+    val mp4Dir = s"$root/mp4"
+    VideoStore.ingest((0 until 12).map(i => StdKernels.syntheticFrame(i % 2, (i / 2).toLong, 8, 12, 3))
+      .toDS(), root, "src", gopSize = 2)
+    VideoStore.exportMp4All(spark, root, "src", mp4Dir)
+    closesEveryOpen("ingestMp4Dir") {
+      VideoStore.ingestMp4Dir(spark, s"spy://$mp4Dir", root, "back")
+    }
+
+    val h264Mp4Dir = Files.createTempDirectory("graft-spyh264")
+    new java.io.File(queries.VideoQueries.ensureH264Fixture()).listFiles()
+      .filter(_.getName.endsWith(".h264")).foreach { f =>
+        val out = Files.newOutputStream(h264Mp4Dir.resolve(f.getName.replace(".h264", ".mp4")))
+        try H264Mp4.mux(H264.index(Files.readAllBytes(f.toPath)), out) finally out.close()
+      }
+    closesEveryOpen("ingestMp4H264Dir") {
+      H264Ingest.ingestMp4H264Dir(spark, s"spy://$h264Mp4Dir", root, "h264")
+    }
+  }
+
+  test("directory ingest writes (streamId, segId)-ordered part files, streamId = listing position") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-dirorder").toString
+    // five streams of distinct lengths, exported and renamed so the sorted
+    // listing runs in REVERSE stream order: file i holds source stream 4 - i
+    val frames = (0 until 5).flatMap(sid => (0 until 2 * (sid + 1)).map(i =>
+      StdKernels.syntheticFrame(sid.toLong, i.toLong, 8, 12, 3)))
+    VideoStore.ingest(frames.toDS(), root, "src", gopSize = 2)
+    val exported = s"$root/exp"
+    val listed = s"$root/listed"
+    new java.io.File(listed).mkdirs()
+    VideoStore.exportMp4All(spark, root, "src", exported).foreach { case (sid, path, _) =>
+      Files.move(java.nio.file.Paths.get(new java.net.URI(path).getPath),
+        java.nio.file.Paths.get(listed, s"v${4 - sid}.mp4"))
+    }
+    VideoStore.ingestMp4Dir(spark, listed, root, "back")
+    val parts = new java.io.File(s"$root/back/data").listFiles()
+      .filter(_.getName.startsWith("part-")).map(_.getPath).sorted
+    assert(parts.length > 1, "one part file cannot show cross-task ordering")
+    val written = parts.toSeq.flatMap(p => spark.read.parquet(p)
+      .select("streamId", "segId").as[(Long, Long)].collect().toSeq)
+    assert(written == written.sorted, s"part files out of (streamId, segId) order: $written")
+    val src = VideoStore.segments(spark, root, "src").collect()
+    val back = VideoStore.segments(spark, root, "back").collect()
+    assert(back.length == src.length)
+    back.foreach { b =>
+      val s = src.find(s => s.streamId == 4 - b.streamId && s.segId == b.segId).get
+      assert(java.util.Arrays.equals(s.payload, b.payload),
+        s"stream ${b.streamId} is not the file at that listing position")
+    }
   }
 
   test("TarShard rewrite with fewer writers leaves no stale shards") {

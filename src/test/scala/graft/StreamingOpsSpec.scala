@@ -737,4 +737,17 @@ class StreamingOpsSpec extends SparkSpec {
       CacheScope.release()
     }
   }
+
+  test("a bounded stream_* gate deletes its checkpoint directory") {
+    val dir = Files.createTempDirectory("graft-stream-docs").toString
+    (1L to 40L).map(i => (i, s"doc $i shares the words alpha beta gamma ${i % 7}"))
+      .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def checkpoints(): Set[String] = tmp.listFiles().map(_.getName)
+      .filter(_.matches("graft-.+-ck.*")).toSet
+    val before = checkpoints()
+    queries.StreamQueries.queries("stream_decontaminate")(spark, dir).count()
+    val left = checkpoints() -- before
+    assert(left.isEmpty, s"streaming gate left checkpoints behind: $left")
+  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.model.FrameElem
 import graft.operators.StdKernels
-import graft.sources.{FakeVideoCodec, H264GopCodec, Mp4Writer, VideoStore}
+import graft.sources.{DeflateVideoCodec, FakeVideoCodec, GopCodec, H264GopCodec, Mp4Writer, VideoStore}
 
 /** FakeVideoCodec with a static encode counter (executors share the test
   * JVM in local mode, so the counter sees every task's calls)
@@ -151,25 +151,33 @@ class VideoStoreSpec extends SparkSpec {
   }
 
   test("mp4 round-trip: export -> demux ingest -> identical frames and segment index") {
-    val root = freshRoot()
     import spark.implicits._
     val frames = synthFrames(0L, 20)
-    VideoStore.ingest(frames.toDS(), root, "orig", gopSize = 8)
-    val out = s"$root/rt.mp4"
-    VideoStore.exportMp4(spark, root, "orig", 0L, out, fps = 24)
-    // demux the container back into a second stored stream
-    VideoStore.ingestMp4(spark, out, root, "fromMp4", streamId = 0L)
-    val origSegs = VideoStore.segments(spark, root, "orig").collect().sortBy(_.segId)
-    val backSegs = VideoStore.segments(spark, root, "fromMp4").collect().sortBy(_.segId)
-    assert(backSegs.map(s => (s.segId, s.startIndex, s.numFrames)).toSeq ==
-      origSegs.map(s => (s.segId, s.startIndex, s.numFrames)).toSeq)
-    origSegs.zip(backSegs).foreach { case (a, b) =>
-      assert(java.util.Arrays.equals(a.payload, b.payload))
+    // every store codec: the container layer reads each payload header
+    // (dims for the sample entry, frame count for the demux cross-check)
+    // with the codec that wrote it
+    for (codec <- Seq[GopCodec](FakeVideoCodec, H264GopCodec.Default, DeflateVideoCodec)) {
+      val root = freshRoot()
+      VideoStore.ingest(frames.toDS(), root, "orig", gopSize = 8, codec = codec)
+      val out = s"$root/rt.mp4"
+      VideoStore.exportMp4(spark, root, "orig", 0L, out, fps = 24)
+      // demux the container back into a second stored stream
+      VideoStore.ingestMp4(spark, out, root, "fromMp4", streamId = 0L)
+      val origSegs = VideoStore.segments(spark, root, "orig").collect().sortBy(_.segId)
+      val backSegs = VideoStore.segments(spark, root, "fromMp4").collect().sortBy(_.segId)
+      assert(backSegs.map(s => (s.segId, s.startIndex, s.numFrames)).toSeq ==
+        origSegs.map(s => (s.segId, s.startIndex, s.numFrames)).toSeq)
+      origSegs.zip(backSegs).foreach { case (a, b) =>
+        assert(java.util.Arrays.equals(a.payload, b.payload))
+      }
+      val back = VideoStore.frames(spark, root, "fromMp4", codec = codec).collect()
+        .sortBy(_.index)
+      assert(back.length == 20)
+      val orig = VideoStore.frames(spark, root, "orig", codec = codec).collect()
+        .sortBy(_.index)
+      orig.zip(back).foreach { case (a, b) => assertSameFrame(a, b) }
+      if (codec == FakeVideoCodec) frames.zip(back).foreach { case (a, b) => assertSameFrame(a, b) }
     }
-    val back = VideoStore.frames(spark, root, "fromMp4").collect()
-      .sortBy(_.index)
-    assert(back.length == 20)
-    frames.zip(back).foreach { case (a, b) => assertSameFrame(a, b) }
   }
 
   test("save_mp4 writes a structurally valid ISO-BMFF container around the stored GOPs") {

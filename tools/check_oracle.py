@@ -4,6 +4,10 @@ against DuckDB oracle SQL on the same parquet tables, compare row counts,
 schemas (column names), and exact values (columns sorted by name, rows
 sorted). Strictest interpretation — exact equality, no FP tolerance.
 
+Every oracle_sql.json key needs a fresh result: a query listed in
+failed.json (graft.Verify writes it; the query threw) or with no result
+directory is a FAIL (missing), counted in the fail total.
+
 Usage: python tools/check_oracle.py <sfDir> <verifyOutDir>
 """
 import sys, json, glob, os
@@ -18,9 +22,19 @@ def main(sf_dir, out_dir):
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = n_noracle = 0
-    for qdir in sorted(glob.glob(f"{out_dir}/*/")):
-        name = qdir.rstrip("/").split("/")[-1]
+    failed_path = f"{out_dir}/failed.json"
+    failed = json.load(open(failed_path)) if os.path.exists(failed_path) else {}
+    qdirs = {d.rstrip("/").split("/")[-1]: d for d in glob.glob(f"{out_dir}/*/")}
+    n_pass = n_fail = n_noracle = n_missing = 0
+    for name in sorted(set(oracle) | set(failed)):
+        if name in failed or name not in qdirs:
+            why = f"query failed: {failed[name]}" if name in failed else "no result directory"
+            print(f"FAIL {name}: missing ({why})")
+            n_missing += 1
+            n_fail += 1
+    for name, qdir in sorted(qdirs.items()):
+        if name in failed:
+            continue
         got = con.sql(f"SELECT * FROM '{qdir}/*.parquet'").df()
         if name not in oracle:
             n_noracle += 1
@@ -60,7 +74,7 @@ def main(sf_dir, out_dir):
             print(f"  PASS {name}: {len(got)} rows")
         else:
             n_fail += 1
-    print(f"== {n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
+    print(f"== {n_pass} pass, {n_fail} fail, {n_missing} missing, {n_noracle} rows-only")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
