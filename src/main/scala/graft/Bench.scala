@@ -292,7 +292,7 @@ object Bench {
       // the number that holds at video-corpus scale
       "bt_h264_index" -> ((s, _) => {
         val dir = queries.VideoQueries.ensureH264Fleet()
-        sources.H264Ingest.indexFiles(s, dir + "/*.h264")
+        sources.H264Ingest.indexFiles(s, dir)
           .groupBy().agg(org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)).as("n"),
             org.apache.spark.sql.functions.sum("byte_size").as("bytes"))

@@ -126,7 +126,17 @@ object GraphStructure {
     *         contributes `steps+1` rows unless it hits a sink early
     */
   def randomWalks(edges: DataFrame, steps: Int, maxDegree: Int = 1024,
-      srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
+      srcCol: String = "src", dstCol: String = "dst"): DataFrame =
+    walks(edges, steps, maxDegree, srcCol, dstCol, WalkBcastBytes)
+
+  /** the broadcast cap of the walks' adjacency, in measured cached bytes */
+  private[graft] val WalkBcastBytes = 64L << 20
+
+  /** [[randomWalks]] with the adjacency broadcast when its cached size is
+    * at most `bcastBytes` (a spec passes -1 to force the shuffled join)
+    */
+  private[graft] def walks(edges: DataFrame, steps: Int, maxDegree: Int,
+      srcCol: String, dstCol: String, bcastBytes: Long): DataFrame = {
     require(steps >= 1 && steps <= 64, s"steps $steps out of [1, 64]")
     require(maxDegree >= 1, s"maxDegree $maxDegree must be >= 1")
     // NOT cached (measured, round 15): caching this pre-distinct relation
@@ -144,17 +154,14 @@ object GraphStructure {
     // raw upstream scan, so the planner sort-merge-joined every step —
     // one frontier exchange + sort per hop. When the adjacency is small,
     // hint it broadcast and every hop becomes a narrow BroadcastHashJoin —
-    // zero per-step exchanges. The gate is the MEASURED neighbor-entry
-    // count (one tiny agg over the cache, which the first hop would have
-    // to materialize anyway): entries × 8 B bounds the broadcast payload,
-    // default cap 8M entries ≈ 64 MB. Large graphs keep the shuffled
-    // join; the gate is data size, never core count.
-    val adjBcastEntries = sys.props.get("graft.walk.bcastEntries")
-      .orElse(sys.env.get("GRAFT_WALK_BCAST_ENTRIES"))
-      .flatMap(_.toLongOption).getOrElse(8000000L)
-    val adjRow = adj.agg(sum(size(col("nbrs")))).head
-    val adjEntries = if (adjRow.isNullAt(0)) 0L else adjRow.getLong(0)
-    val adjSide = if (adjEntries <= adjBcastEntries) broadcast(adj) else adj
+    // zero per-step exchanges. The gate is the cache's MEASURED size: one
+    // count materializes it (the first hop would have to anyway), after
+    // which the cached relation's statistics report the bytes it holds
+    // rather than an estimate. Large graphs keep the shuffled join; the
+    // gate is data size, never core count.
+    adj.count()
+    val adjBytes = adj.select("*").queryExecution.optimizedPlan.stats.sizeInBytes
+    val adjSide = if (adjBytes <= bcastBytes) broadcast(adj) else adj
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
 

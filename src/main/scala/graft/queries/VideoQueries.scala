@@ -152,13 +152,12 @@ object VideoQueries {
     // stand-in codec is lossless, so the digests must equal
     // video_histogram's stream-0 rows — any regression in mux, demux,
     // sample-table math, or executor-side positioned reads flips the hash.
+    // Every execution exports and re-ingests, so the row times both.
     "video_roundtrip_histogram" -> ((s, _) => {
       val root = ensureIngested(s)
-      if (!graft.sources.NamedStorage.committed(s, root, "testvid_rt")) {
-        val mp4 = root + "/testvid_rt.mp4"
-        VideoStore.exportMp4(s, root, "testvid", 0L, mp4)
-        VideoStore.ingestMp4(s, mp4, root, "testvid_rt", 0L, CacheMode.Ignore)
-      }
+      val mp4 = root + "/testvid_rt.mp4"
+      VideoStore.exportMp4(s, root, "testvid", 0L, mp4)
+      VideoStore.ingestMp4(s, mp4, root, "testvid_rt", 0L, CacheMode.Overwrite)
       val frames = VideoStore.frames(s, root, "testvid_rt").toDF()
       val ranged = SequenceOps.range(frames, 0L, 30L)
       val hists  = StdKernels.histogramOp(ranged.as[FrameElem](frameEnc))
@@ -363,7 +362,7 @@ object VideoQueries {
     // width/height parsed from the SPS tail.
     "video_h264_index" -> ((s, _) => {
       val dir = ensureH264Fixture()
-      graft.sources.H264Ingest.indexFiles(s, dir + "/*.h264")
+      graft.sources.H264Ingest.indexFiles(s, dir)
         .withColumn("stream",
           regexp_extract(col("path"), "stream(\\d+)", 1).cast("long"))
         .select(col("stream"), col("frame"), col("byte_offset"),
@@ -441,12 +440,13 @@ object VideoQueries {
     // row gates codec, muxer, demuxer, indexer, and segmenter together.
     // (per-PIXEL emission since round 12: PCM is lossless, so the DuckDB
     // oracle regenerates every decoded luma sample from [[grayPixel]] —
-    // the md5 pin this replaced could only say "something changed")
+    // the md5 pin this replaced could only say "something changed").
+    // The ingest overwrites its store, so every execution runs it.
     "video_h264_mp4_pixels" -> ((s, _) => {
       val dir = ensureH264Mp4Fixture(s)
       val root = sys.props("java.io.tmpdir") + "/graft-h264store"
       graft.sources.H264Ingest.ingestMp4H264Dir(s, dir, root, "h264mp4",
-        graft.model.CacheMode.Ignore)
+        graft.model.CacheMode.Overwrite)
       import s.implicits._
       VideoStore.segments(s, root, "h264mp4")
         .flatMap { seg =>
@@ -619,7 +619,7 @@ object VideoQueries {
 
     "video_h264_gop_stats" -> ((s, _) => {
       val dir = ensureH264Fixture()
-      graft.sources.H264Ingest.indexFiles(s, dir + "/*.h264")
+      graft.sources.H264Ingest.indexFiles(s, dir)
         .withColumn("stream",
           regexp_extract(col("path"), "stream(\\d+)", 1).cast("long"))
         .groupBy(col("stream"))

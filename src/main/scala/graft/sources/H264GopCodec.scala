@@ -20,7 +20,7 @@ import graft.model.{FrameElem, FrameType}
   *    so inherently lossy for RGB even under PCM (chroma subsampling),
   *    deterministic both ways.
   *
-  * Payload = 21-byte header (magic, dims, channels, dtype, n, mode) +
+  * Payload = 19-byte header (magic, dims, channels, dtype, n, mode) +
   * the Annex-B stream, so sparse reads can stop after `upTo + 1` access
   * units exactly like the reference's sequential-from-keyframe decode.
   */
@@ -55,7 +55,7 @@ final class H264GopCodec(qp: Int = 12, pcm: Boolean = false,
       parts = parts, weightedPred = weightedPred, tdirect = tdirect,
       aqp = aqp, chromaModes = chromaModes, wpImplicit = wpImplicit,
       cqm = cqm, reorder = reorder, slicesPerFrame = slicesPerFrame)
-    val out = ByteBuffer.allocate(21 + stream.length).order(ByteOrder.LITTLE_ENDIAN)
+    val out = ByteBuffer.allocate(19 + stream.length).order(ByteOrder.LITTLE_ENDIAN)
     out.putInt(H264GopCodec.MAGIC).putInt(head.height).putInt(head.width)
       .put(head.channels.toByte).put(head.dtype)
       .putInt(frames.size).put(if (pcm) 1.toByte else 0.toByte)
@@ -70,7 +70,7 @@ final class H264GopCodec(qp: Int = 12, pcm: Boolean = false,
     val h = bb.getInt(); val w = bb.getInt()
     val c = bb.get().toInt; val dtype = bb.get()
     val n = bb.getInt(); bb.get() // mode flag (informational on decode)
-    val stream = new Array[Byte](payload.length - 21)
+    val stream = new Array[Byte](payload.length - 19)
     bb.get(stream)
     val want = if (upTo == Int.MaxValue) n else math.min(n, upTo + 1)
     val yuvs = H264Codec.decode(stream, maxFrames = want)

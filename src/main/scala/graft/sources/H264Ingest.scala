@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Distributed ingest of real H.264 Annex-B byte streams: one executor
   * task per file runs [[H264.index]] (NAL walk → access-unit split →
@@ -10,7 +9,7 @@ import org.apache.spark.sql.functions._
   * DataFrames. The reference's equivalent ingest path is
   * `scanner/engine/ingest.cpp:175-380` feeding
   * `h264_byte_stream_index_creator.cpp`; here the parallelism unit is
-  * the FILE (Spark's binaryFile source distributes the directory; each
+  * the FILE ([[FileFleet]] distributes the directory; each
   * stream's index is sequential by construction — NAL n's slice header
   * needs SPS/PPS state from NALs before it), so a 100 TB corpus of
   * many videos scales horizontally exactly like the reference's
@@ -26,19 +25,15 @@ object H264Ingest {
     "keyframe", "frame_num", "poc_lsb", "slice_type", "n_slices",
     "width", "height", "profile_idc")
 
-  /** per-frame index rows for every `.h264` file under `glob` */
-  def indexFiles(spark: SparkSession, glob: String): DataFrame = {
+  /** per-frame index rows for every `.h264` file under `dirPath` */
+  def indexFiles(spark: SparkSession, dirPath: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(glob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val ix = H264.index(bytes)
-        ix.frames.map(f => (path, f.frame, f.byteOffset, f.byteSize,
-          f.keyframe, f.frameNum, f.pocLsb, f.sliceType, f.nSlices,
-          ix.width, ix.height, ix.profileIdc))
-      }
-      .toDF(frameSchema: _*)
+    FileFleet.read(spark, dirPath, ".h264") { (task, p, _) =>
+      val ix = H264.index(readWhole(task, p))
+      ix.frames.iterator.map(f => (p.toString, f.frame, f.byteOffset, f.byteSize,
+        f.keyframe, f.frameNum, f.pocLsb, f.sliceType, f.nSlices,
+        ix.width, ix.height, ix.profileIdc))
+    }.toDF(frameSchema: _*)
   }
 
   /** Ingest a directory of `.h264` files into the SAME committed
@@ -74,21 +69,32 @@ object H264Ingest {
       bytes => H264Mp4.indexMp4(bytes))
 
   /** Export one stored stream as a real `avc1` MP4 (AVCC samples, avcC
-    * parameter sets, stss sync table). The stream's segments concatenate
-    * to one Annex-B stream (each is self-contained), which re-indexes
-    * and muxes; the driver holds ONE stream's bytes — the sample table
-    * needs every access-unit size before the container header is known.
+    * parameter sets, stss sync table). Each stored GOP is self-contained,
+    * so it indexes on its own and its access units stream into
+    * [[VideoStore.writeMp4]] one GOP at a time — the driver never holds
+    * the stream — and `outPath` commits like every export. The result is
+    * byte-equal to [[H264Mp4.mux]] of the whole concatenated stream, and
+    * keeps its refusals (no IDR; an SPS/PPS id redefined mid-stream).
     * Returns bytes written.
     */
   def saveMp4(spark: SparkSession, root: String, name: String,
-      streamId: Long, outPath: String, fps: Int = 30): Long = {
-    val buf = new java.io.ByteArrayOutputStream()
-    VideoStore.payloads(spark, root, name, streamId).foreach(buf.write)
-    val ix = H264.index(buf.toByteArray)
-    val p = new org.apache.hadoop.fs.Path(outPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try H264Mp4.mux(ix, out, fps) finally out.close()
+      streamId: Long, outPath: String, fps: Int = 30): Long =
+    FileFleet.writeFile(spark, outPath) { (task, file) =>
+      val track = new H264Mp4.Avc1Track
+      VideoStore.writeMp4(task, file, fps,
+        VideoStore.streamSegments(spark, root, name, streamId)
+          .flatMap(s => track.samples(H264.index(s.payload)).map((_, 1))))(track.result)
+    }
+
+  /** one whole file, bounded at 2 GiB */
+  private def readWhole(task: FileFleet.Task, p: org.apache.hadoop.fs.Path): Array[Byte] = {
+    val len = task.fs(p).getFileStatus(p).getLen
+    require(len <= Int.MaxValue,
+      s"$p is $len bytes; single-stream indexing is bounded " +
+        "at 2 GiB — split the stream or extend to a streaming NAL walk")
+    val bytes = new Array[Byte](len.toInt)
+    task.open(p).readFully(0L, bytes)
+    bytes
   }
 
   /** shared distributed walk of [[ingestH264Dir]]/[[ingestMp4H264Dir]]:
@@ -100,13 +106,7 @@ object H264Ingest {
       indexer: Array[Byte] => H264.StreamIndex)
       : graft.model.StreamDescriptor = {
     val segs = FileFleet.read(spark, dirPath, ext) { (task, p, sid) =>
-      val len = task.fs(p).getFileStatus(p).getLen
-      require(len <= Int.MaxValue,
-        s"$p is $len bytes; single-stream indexing is bounded " +
-          "at 2 GiB — split the stream or extend to a streaming NAL walk")
-      val bytes = new Array[Byte](len.toInt)
-      task.open(p).readFully(0L, bytes)
-      indexer(bytes).gopSegments.iterator.map { case (g, start, n, payload) =>
+      indexer(readWhole(task, p)).gopSegments.iterator.map { case (g, start, n, payload) =>
         VideoStore.Segment(sid, g.toLong, start, n, payload)
       }
     }
@@ -150,21 +150,5 @@ object H264Ingest {
       }
       .toDF("streamId", "frame", "keyframe", "frame_num", "n_slices",
         "byte_size")
-  }
-
-  /** keyframe-aligned GOP segments: (path, gop, start_frame, n_frames,
-    * payload) — each payload independently decodable
-    */
-  def gopSegments(spark: SparkSession, glob: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(glob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        H264.index(bytes).gopSegments.map { case (g, s, n, payload) =>
-          (path, g, s, n, payload)
-        }
-      }
-      .toDF("path", "gop", "start_frame", "n_frames", "payload")
   }
 }

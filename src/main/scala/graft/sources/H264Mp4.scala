@@ -52,17 +52,7 @@ object H264Mp4 {
 
   /** `avc1` visual sample entry wrapping an avcC child box */
   def avc1Entry(width: Int, height: Int, avcCBytes: Array[Byte]): Array[Byte] =
-    Mp4Writer.box("avc1") { d =>
-      d.write(new Array[Byte](6)); d.writeShort(1)   // reserved, dataRefIdx
-      d.writeShort(0); d.writeShort(0)               // predefined, reserved
-      (0 until 3).foreach(_ => d.writeInt(0))        // predefined
-      d.writeShort(width); d.writeShort(height)
-      d.writeInt(0x00480000); d.writeInt(0x00480000) // 72 dpi
-      d.writeInt(0); d.writeShort(1)                 // reserved, frame count
-      d.write(new Array[Byte](32))                   // compressor name
-      d.writeShort(0x18); d.writeShort(-1)           // depth, predefined
-      d.write(Mp4Writer.box("avcC")(b => b.write(avcCBytes)))
-    }
+    Mp4Writer.sampleEntry("avc1", width, height, Mp4Writer.box("avcC")(_.write(avcCBytes)))
 
   /** one access unit's NALs, Annex-B framing -> one AVCC sample
     * (4-byte length prefix per NAL; parameter sets excluded — they
@@ -86,42 +76,66 @@ object H264Mp4 {
     * the sync table. Returns bytes written.
     */
   def mux(ix: H264.StreamIndex, out: OutputStream, fps: Int = 30): Long = {
-    // an stss-less track means ALL samples are sync points per ISO
-    // 14496-12 — the opposite of the truth for a keyframe-less stream
-    // (a tail cut mid-GOP); refuse rather than write a lying container
-    require(ix.keyframes.nonEmpty,
-      "cannot mux a stream with no IDR keyframe: every sample would be " +
-        "mis-declared seekable (absent stss = all-sync)")
-    // collect parameter sets from the demuxed stream. avcC is GLOBAL
-    // (out-of-band, no sequential scope), so a stream that REDEFINES an
-    // sps_id/pps_id mid-stream with different content cannot be
-    // represented faithfully — early GOPs would decode against the later
-    // definition after a round trip. Refuse loudly; such streams need an
-    // id rewrite or a per-GOP split first.
-    val nals = H264.nalUnits(ix.demuxed)
-    def collectUnique(tpe: Int, parseId: Array[Byte] => Int, kind: String) = {
-      val byId = nals.filter(_.nalType == tpe).map(_.bytes)
-        .map(b => parseId(b) -> b)
-      byId.groupBy(_._1).foreach { case (id, vs) =>
-        require(vs.map(_._2.toSeq).distinct.size == 1,
-          s"stream redefines $kind id $id mid-stream: not representable " +
-            "in a single avcC record")
+    val track = new Avc1Track
+    val samples = track.samples(ix).toVector
+    val t = track.result
+    Mp4Writer.write(out, samples.map(s => Mp4Writer.SampleMeta(s.length.toLong, 1)),
+      t.width, t.height, fps, samples.iterator, t.entry, t.sync)
+  }
+
+  /** An `avc1` track built one self-contained indexed piece at a time (a
+    * whole stream for [[mux]], one stored GOP for
+    * [[H264Ingest.saveMp4]]): each piece's access units become AVCC
+    * samples while its parameter sets and IDRs are recorded.
+    */
+  private[sources] final class Avc1Track {
+    private val sps = scala.collection.mutable.LinkedHashMap.empty[Int, Array[Byte]]
+    private val pps = scala.collection.mutable.LinkedHashMap.empty[Int, Array[Byte]]
+    private val sync = Vector.newBuilder[Int]
+    private var n = 0
+
+    /** `ix`'s AVCC samples, one per access unit */
+    def samples(ix: H264.StreamIndex): Iterator[Array[Byte]] = {
+      H264.nalUnits(ix.demuxed).foreach { nal =>
+        def id(parse: H264.BitReader => Int) = parse(new H264.BitReader(H264.rbsp(nal.bytes, 1)))
+        if (nal.nalType == 7) keep(sps, id(H264.parseSps(_).spsId), nal.bytes, "SPS")
+        if (nal.nalType == 8) keep(pps, id(H264.parsePps(_).ppsId), nal.bytes, "PPS")
       }
-      byId.map(_._2).distinctBy(_.toSeq)
+      ix.keyframes.foreach(k => sync += n + k.toInt + 1) // stss is 1-based
+      n += ix.frames.size
+      ix.frames.iterator.map(f => auToAvccSample(java.util.Arrays.copyOfRange(
+        ix.demuxed, f.byteOffset.toInt, (f.byteOffset + f.byteSize).toInt)))
     }
-    val sps = collectUnique(7,
-      b => H264.parseSps(new H264.BitReader(H264.rbsp(b, 1))).spsId, "SPS")
-    val pps = collectUnique(8,
-      b => H264.parsePps(new H264.BitReader(H264.rbsp(b, 1))).ppsId, "PPS")
-    val samples = ix.frames.map { f =>
-      auToAvccSample(java.util.Arrays.copyOfRange(
-        ix.demuxed, f.byteOffset.toInt, (f.byteOffset + f.byteSize).toInt))
+
+    // avcC is GLOBAL (out-of-band, no sequential scope), so a stream that
+    // REDEFINES an sps_id/pps_id mid-stream with different content cannot
+    // be represented faithfully — early GOPs would decode against the
+    // later definition after a round trip. Refuse loudly; such streams
+    // need an id rewrite or a per-GOP split first.
+    private def keep(m: scala.collection.mutable.Map[Int, Array[Byte]], id: Int,
+        bytes: Array[Byte], kind: String): Unit =
+      if (!m.get(id).exists(java.util.Arrays.equals(_, bytes))) {
+        require(!m.contains(id), s"stream redefines $kind id $id mid-stream: " +
+          "not representable in a single avcC record")
+        m(id) = bytes
+      }
+
+    /** the track once every piece is in: dims from the lowest-id SPS,
+      * `avcC` from every parameter set, the IDR samples as sync
+      */
+    def result: Mp4Writer.Track = {
+      // an stss-less track means ALL samples are sync points per ISO
+      // 14496-12 — the opposite of the truth for a keyframe-less stream
+      // (a tail cut mid-GOP); refuse rather than write a lying container
+      val syncs = sync.result()
+      require(syncs.nonEmpty,
+        "cannot mux a stream with no IDR keyframe: every sample would be " +
+          "mis-declared seekable (absent stss = all-sync)")
+      val config = avcC(sps.values.toSeq, pps.values.toSeq)
+      val head = H264.parseSps(new H264.BitReader(H264.rbsp(sps(sps.keys.min), 1)))
+      Mp4Writer.Track(head.width, head.height,
+        Some(avc1Entry(head.width, head.height, config)), syncs)
     }
-    val metas = samples.map(s => Mp4Writer.SampleMeta(s.length.toLong, 1))
-    val sync = ix.keyframes.map(k => k.toInt + 1) // stss is 1-based
-    Mp4Writer.write(out, metas, ix.width, ix.height, fps, samples.iterator,
-      entryOverride = Some(avc1Entry(ix.width, ix.height, avcC(sps, pps))),
-      syncSamples = sync)
   }
 
   // ----------------------------------------------------------- demux side
@@ -151,22 +165,16 @@ object H264Mp4 {
     val compat = b(o + 2) & 0xff
     val level = b(o + 3) & 0xff
     val lenSize = (b(o + 4) & 3) + 1
-    val nSps = b(o + 5) & 0x1f
+    // `n` length-prefixed parameter sets from `o` on
+    def sets(n: Int) = (0 until n).map { _ =>
+      val l = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
+      o += 2 + l
+      java.util.Arrays.copyOfRange(b, o - l, o)
+    }
     o += 6
-    val sps = (0 until nSps).map { _ =>
-      val l = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-      val arr = java.util.Arrays.copyOfRange(b, o + 2, o + 2 + l)
-      o += 2 + l
-      arr
-    }
-    val nPps = b(o) & 0xff
+    val sps = sets(b(o - 1) & 0x1f)
     o += 1
-    val pps = (0 until nPps).map { _ =>
-      val l = ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-      val arr = java.util.Arrays.copyOfRange(b, o + 2, o + 2 + l)
-      o += 2 + l
-      arr
-    }
+    val pps = sets(b(o - 1) & 0xff)
     AvcConfig(profile, compat, level, lenSize, sps, pps, width, height)
   }
 

@@ -26,6 +26,12 @@ object Mp4Writer {
   /** metadata of one sample (= one stored GOP segment), in stream order */
   final case class SampleMeta(bytes: Long, frames: Int)
 
+  /** a track's frame dims, sample description (the stand-in entry when
+    * empty) and 1-based sync samples (none = all sync)
+    */
+  private[sources] final case class Track(width: Int, height: Int, entry: Option[Array[Byte]] = None,
+      sync: Seq[Int] = Nil)
+
   private[sources] def box(tpe: String)(body: DataOutputStream => Unit): Array[Byte] = {
     val buf = new ByteArrayOutputStream()
     val d   = new DataOutputStream(buf)
@@ -68,9 +74,12 @@ object Mp4Writer {
     out.toByteArray
   }
 
-  /** the sample description — the codec swap point (avc1+avcC for H264) */
-  private def sampleEntry(width: Int, height: Int): Array[Byte] =
-    box("gfvc") { d =>
+  /** a visual sample description — the codec swap point: the stand-in
+    * `gfvc`, or `avc1` with its `avcC` child for H264
+    */
+  private[sources] def sampleEntry(fourcc: String, width: Int, height: Int,
+      children: Array[Byte]*): Array[Byte] =
+    box(fourcc) { d =>
       d.write(new Array[Byte](6)); d.writeShort(1)      // reserved, dataRefIdx
       d.writeShort(0); d.writeShort(0)                  // predefined, reserved
       (0 until 3).foreach(_ => d.writeInt(0))           // predefined
@@ -79,6 +88,7 @@ object Mp4Writer {
       d.writeInt(0); d.writeShort(1)                    // reserved, frame count
       d.write(new Array[Byte](32))                      // compressor name
       d.writeShort(0x18); d.writeShort(-1)              // depth, predefined
+      children.foreach(d.write)
     }
 
   /** complete `moov` for one video track; `timescale` units = frames
@@ -141,7 +151,7 @@ object Mp4Writer {
     }
     val stsd = fullBox("stsd") { d =>
       d.writeInt(1)
-      d.write(entryOverride.getOrElse(sampleEntry(width, height)))
+      d.write(entryOverride.getOrElse(sampleEntry("gfvc", width, height)))
     }
     // sync-sample (keyframe) table: omitted when EVERY sample is a sync
     // point (absence means all-sync per the spec — the GOP-segment case);

@@ -51,16 +51,24 @@ object TarShard {
     System.arraycopy(octal(0, 8), 0, h, 116, 8)         // gid
     System.arraycopy(octal(size, 12), 0, h, 124, 12)    // size
     System.arraycopy(octal(0, 12), 0, h, 136, 12)       // mtime (deterministic)
-    java.util.Arrays.fill(h, 148, 156, ' '.toByte)      // chksum blanked for sum
     h(156) = '0'                                        // typeflag: regular file
     System.arraycopy("ustar\u000000".getBytes(US_ASCII), 0, h, 257, 8)
-    var sum = 0L
-    var i = 0
-    while (i < BLOCK) { sum += h(i) & 0xff; i += 1 }
-    val chk = java.lang.Long.toOctalString(sum)
+    val chk = java.lang.Long.toOctalString(checksum(h))
     val chkField = ("0" * (6 - chk.length)) + chk + "\u0000 "
     System.arraycopy(chkField.getBytes(US_ASCII), 0, h, 148, 8)
     h
+  }
+
+  /** the header's checksum: the sum of its bytes, the checksum field
+    * counted as spaces
+    */
+  private def checksum(h: Array[Byte]): Long = {
+    var sum = 8L * ' '
+    var i = 0
+    while (i < BLOCK) { sum += h(i) & 0xff; i += 1 }
+    i = 148
+    while (i < 156) { sum -= h(i) & 0xff; i += 1 }
+    sum
   }
 
   /** append one entry (header + padded payload) */
@@ -81,31 +89,24 @@ object TarShard {
       private var nextE: (String, Array[Byte]) = null
       private var done = false
 
-      private def readBlock(): Array[Byte] = {
-        val b = new Array[Byte](BLOCK)
+      /** `b` filled from the stream; a short read is a truncated tar */
+      private def fill(b: Array[Byte], what: => String): Array[Byte] = {
         var off = 0
-        while (off < BLOCK) {
-          val r = buf.read(b, off, BLOCK - off)
+        while (off < b.length) {
+          val r = buf.read(b, off, b.length - off)
           if (r < 0) throw new EOFException(
-            s"truncated tar: header block cut at $off bytes")
+            s"truncated tar: $what cut at $off of ${b.length} bytes")
           off += r
         }
         b
       }
 
       private def advance(): Unit = {
-        val h = readBlock()
+        val h = fill(new Array[Byte](BLOCK), "header block")
         if (h.forall(_ == 0)) { done = true; return } // first zero block ends
-        // checksum: sum with chksum field as spaces
-        var sum = 0L
-        var i = 0
-        while (i < BLOCK) {
-          sum += (if (i >= 148 && i < 156) ' '.toLong else (h(i) & 0xff).toLong)
-          i += 1
-        }
         val stored = new String(h, 148, 8, US_ASCII)
           .takeWhile(c => c >= '0' && c <= '7')
-        require(stored.nonEmpty && java.lang.Long.parseLong(stored, 8) == sum,
+        require(stored.nonEmpty && java.lang.Long.parseLong(stored, 8) == checksum(h),
           "tar header checksum mismatch — corrupt shard")
         require(h(156) == '0' || h(156) == 0,
           s"unsupported tar entry type '${h(156).toChar}' (regular files only)")
@@ -114,21 +115,8 @@ object TarShard {
           .takeWhile(c => c >= '0' && c <= '7')
         val size = java.lang.Long.parseLong(sizeStr, 8)
         require(size <= Int.MaxValue - 8, s"tar entry over 2 GiB: $name")
-        val payload = new Array[Byte](size.toInt)
-        var off = 0
-        while (off < payload.length) {
-          val r = buf.read(payload, off, payload.length - off)
-          if (r < 0) throw new EOFException(
-            s"truncated tar: entry '$name' cut at $off of $size bytes")
-          off += r
-        }
-        val pad = ((BLOCK - (size % BLOCK)) % BLOCK).toInt
-        var skipped = 0L
-        while (skipped < pad) {
-          val r = buf.skip(pad - skipped)
-          if (r <= 0) throw new EOFException("truncated tar: padding missing")
-          skipped += r
-        }
+        val payload = fill(new Array[Byte](size.toInt), s"entry '$name'")
+        fill(new Array[Byte](((BLOCK - (size % BLOCK)) % BLOCK).toInt), s"padding of '$name'")
         nextE = (name, payload)
       }
 
@@ -158,92 +146,46 @@ object TarShard {
     * `nWriters` tasks BY KEY (a sample's files always land in one task),
     * ordered (key, ext) within the task, and rolled into
     * `shard-<writer>-<seq>.tar` files of at most ~`maxShardBytes` of
-    * payload — rolling only between samples. Returns the shard count.
+    * payload — rolling only between samples. The shards commit through
+    * [[FileFleet.write]]: a failed job leaves the prior shards as they
+    * were, and a successful one deletes the stale `shard-*.tar` a prior
+    * run with more writers left (which [[readDir]] would read back).
+    * Returns the shard count.
     */
   def writeSamples(df: DataFrame, outDir: String, maxShardBytes: Long = 1L << 30,
       nWriters: Int = 0): Long = {
     import org.apache.spark.sql.functions._
     val spark = df.sparkSession
-    val shipped = FileFleet.shipConf(spark)
     val writers = if (nWriters > 0) nWriters
       else spark.sparkContext.defaultParallelism
-    // Write into a temporary subdirectory and PROMOTE (rename + stale
-    // delete) only after the job succeeds: deleting stale shard-*.tar up
-    // front would (a) destroy prior output on a failed job and (b) eat
-    // the input of a lazy lineage that READS shards from outDir and
-    // writes back to the same dir. readDir never globs subdirectories,
-    // so an orphaned _tmp dir from a crashed run is inert.
-    val tmpName = s"_tmp-shards-${java.util.UUID.randomUUID().toString.take(8)}"
-    val tmpDirStr = s"$outDir/$tmpName"
-    val counts = df.select(col("key").cast("string"), col("ext").cast("string"),
+    val rows = df.select(col("key").cast("string"), col("ext").cast("string"),
         col("payload").cast("binary"))
       .repartition(writers, col("key"))
       .sortWithinPartitions("key", "ext")
       .as[(String, String, Array[Byte])](
         org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.STRING,
           org.apache.spark.sql.Encoders.STRING, org.apache.spark.sql.Encoders.BINARY))
-      .rdd.mapPartitionsWithIndex { (pid, rows) =>
-        val dir = new org.apache.hadoop.fs.Path(tmpDirStr)
-        val fs = dir.getFileSystem(FileFleet.conf(shipped))
-        fs.mkdirs(dir)
+      .rdd
+    FileFleet.write(spark, rows, outDir, n => n.startsWith("shard-") && n.endsWith(".tar")) {
+      (task, pid, part) =>
+        val it = part.buffered
         var seq = 0
-        var out: OutputStream = null
-        var written = 0L
-        var nShards = 0L
-        var curKey: String = null
-        def roll(): Unit = {
-          if (out != null) { finish(out); out.close() }
-          out = fs.create(new org.apache.hadoop.fs.Path(dir,
-            f"shard-$pid%04d-$seq%04d.tar"), true)
-          seq += 1; nShards += 1; written = 0L
-        }
-        rows.foreach { case (key, ext, payload) =>
-          val atBoundary = curKey == null || key != curKey
-          if (out == null || (atBoundary && written >= maxShardBytes)) roll()
-          curKey = key
-          val name = if (ext.isEmpty) key else s"$key.$ext"
-          writeEntry(out, name, payload)
-          written += payload.length.toLong + BLOCK
-        }
-        if (out != null) { finish(out); out.close() }
-        Iterator.single(nShards)
-      }.sum().toLong
-    // the job succeeded: promote. Stale shards (a prior run with
-    // different parallelism/volume leaves extra shard-*.tar readDir
-    // would glob in) are deleted only now, then the fresh set renames
-    // into place and the tmp dir goes away. Note the overwrite is NOT
-    // atomic as a whole — a crash inside this window can mix old/new —
-    // but the window no longer spans the (arbitrarily long) write job.
-    locally {
-      val dir = new org.apache.hadoop.fs.Path(outDir)
-      val tmp = new org.apache.hadoop.fs.Path(tmpDirStr)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fresh =
-        if (fs.exists(tmp)) fs.listStatus(tmp).map(_.getPath)
-          .filter(p => p.getName.startsWith("shard-") && p.getName.endsWith(".tar"))
-        else Array.empty[org.apache.hadoop.fs.Path]
-      val freshNames = fresh.map(_.getName).toSet
-      val stale =
-        if (fs.exists(dir)) fs.listStatus(dir).map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            n.startsWith("shard-") && n.endsWith(".tar")
+        while (it.hasNext) {
+          task.output(f"shard-$pid%04d-$seq%04d.tar") { out =>
+            var written = 0L
+            var key: String = null
+            while (it.hasNext && (written < maxShardBytes || it.head._1 == key)) {
+              val (k, ext, payload) = it.next()
+              writeEntry(out, if (ext.isEmpty) k else s"$k.$ext", payload)
+              written += payload.length.toLong + BLOCK
+              key = k
+            }
+            finish(out)
           }
-        else Array.empty[org.apache.hadoop.fs.Path]
-      // colliding names must go first (FileSystem.rename refuses an
-      // existing target on most impls — by returning FALSE, not
-      // throwing); non-colliding stale shards are deleted only AFTER
-      // every rename succeeded, so a failed promote never leaves the
-      // fresh set stranded in tmp for the recursive delete below
-      stale.filter(p => freshNames(p.getName)).foreach(p => fs.delete(p, false))
-      fresh.foreach { p =>
-        val dst = new org.apache.hadoop.fs.Path(dir, p.getName)
-        require(fs.rename(p, dst), s"tar-shard promote failed: $p -> $dst")
-      }
-      stale.filterNot(p => freshNames(p.getName)).foreach(p => fs.delete(p, false))
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-    }
-    counts
+          seq += 1
+        }
+        Iterator.single(seq.toLong)
+    }.sum
   }
 
   /** Distributed shard SOURCE: one task per `shard-*.tar` under `dirPath`,

@@ -369,145 +369,106 @@ object VideoStore {
     * tables; one sample per GOP, all sync). The reference does this by
     * shelling to ffmpeg client-side (`python/scannerpy/column.py:283-342`);
     * here the mux is native and only the sample-description fourcc is the
-    * stand-in codec's. Two passes, both driver-streamed like the
-    * reference's export: a metadata pass for the sample table (sizes and
-    * frame counts only), then the payload stream — never more than one
-    * segment in memory.
+    * stand-in codec's. The payloads stream through the driver once, one
+    * segment at a time, into [[writeMp4]] — the same assembly
+    * [[exportMp4All]] runs per stream — and `outPath` commits only when
+    * the whole file is written ([[FileFleet.writeFile]]).
     */
   def exportMp4(spark: SparkSession, root: String, name: String,
-      streamId: Long, outPath: String, fps: Int = 30): Long = {
-    val mine = segments(spark, root, name).filter(col("streamId") === streamId)
-    val metas = mine
-      .select(col("segId"), length(col("payload")).cast("long").as("sz"), col("numFrames"))
-      .orderBy("segId")
-      .collect()
-      .map(r => Mp4Writer.SampleMeta(r.getAs[Long]("sz"), r.getAs[Int]("numFrames")))
-      .toSeq
-    require(metas.nonEmpty, s"stream $streamId has no segments in $name")
-    // frame dims live in the codec payload header; peek at one segment
-    val shape = GopCodec.header(mine.orderBy("segId").select(col("payload")).limit(1)
-      .collect().head.getAs[Array[Byte]]("payload"))
-    val p   = new Path(outPath)
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
-    try Mp4Writer.write(out, metas, shape.width, shape.height, fps,
-      payloads(spark, root, name, streamId))
-    finally out.close()
-  }
+      streamId: Long, outPath: String, fps: Int = 30): Long =
+    FileFleet.writeFile(spark, outPath) { (task, file) =>
+      segmentsMp4(task, file, fps, streamSegments(spark, root, name, streamId))
+    }
 
   /** Distributed multi-stream `save_mp4`: every stream of the named store
-    * exported as its own MP4, ONE EXECUTOR TASK PER STREAM — the driver
-    * never touches payload bytes (the reference loops its client per
-    * stream, `python/scannerpy/column.py:283-342`; single-stream
-    * [[exportMp4]] keeps that shape, this is the 10k-streams path).
-    *
-    * The mdat size must precede the payloads in the file, so each task
-    * spools its stream's payloads to `<outDir>/.tmp-<sid>` while
-    * accumulating the sample table, then assembles header + payload copy +
-    * trailing moov and deletes the spool — 2x write, 1x read of payload
-    * bytes per stream, all executor-side and embarrassingly parallel
-    * across streams.
+    * exported as its own `stream-<sid>.mp4`, each stream's segments
+    * assembled inside one executor task — the driver never touches
+    * payload bytes (the reference loops its client per stream,
+    * `python/scannerpy/column.py:283-342`; single-stream [[exportMp4]]
+    * keeps that shape, this is the 10k-streams path). The files commit
+    * through [[FileFleet.write]]: a failed export leaves the previous
+    * export as it was, and a successful one deletes the `stream-N.mp4`
+    * of streams no longer in the store.
     *
     * @return (streamId, path, bytes) per exported stream (collected —
     *         3 small values per stream)
     */
   def exportMp4All(spark: SparkSession, root: String, name: String,
       outDir: String, fps: Int = 30): Array[(Long, String, Long)] = {
-    val shipped = FileFleet.shipConf(spark)
-    // Overwrite semantics are settled ONCE here on the driver, before any
-    // task runs: clear prior committed outputs so the task-side commit can
-    // be pure rename-first. A task must never delete the destination — a
-    // losing speculative attempt that deleted the winner's file and then
-    // died would silently lose committed output.
-    locally {
-      val dirP = new Path(outDir)
-      val dfs  = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (dfs.exists(dirP))
-        dfs.listStatus(dirP).iterator
-          .filter(st => st.getPath.getName.matches("stream-\\d+\\.mp4"))
-          .foreach(st => dfs.delete(st.getPath, false))
+    val byStream = segments(spark, root, name)
+      .repartition(col("streamId")).sortWithinPartitions("streamId", "segId").rdd
+    FileFleet.write(spark, byStream, outDir, _.matches("stream-\\d+\\.mp4")) { (task, _, segs) =>
+      // one run of same-streamId segments per file, each consumed whole
+      // before the next run starts
+      val it = segs.buffered
+      Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+        val sid = it.head.streamId
+        val file = s"stream-$sid.mp4"
+        (sid, new Path(new Path(outDir), file).toString, segmentsMp4(task, file, fps,
+          Iterator.continually(it).takeWhile(i => i.hasNext && i.head.streamId == sid).map(_.next())))
+      }
     }
-    segments(spark, root, name)
-      .groupByKey(_.streamId)(Encoders.scalaLong)
-      .flatMapSortedGroups(col("segId")) { (sid: Long, it: Iterator[Segment]) =>
-        val dir = new Path(outDir)
-        val fs  = dir.getFileSystem(FileFleet.conf(shipped))
-        fs.mkdirs(dir)
-        // ATTEMPT-UNIQUE scratch names: speculative/retried attempts of the
-        // same stream's task must never share spool or output files, or
-        // their writes interleave. Each attempt assembles its own part file
-        // and commits via rename; every attempt produces identical bytes
-        // (the group sort is deterministic), so whichever rename lands
-        // first wins and the loser just cleans up.
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        val tmp   = new Path(dir, s".tmp-$sid-$attempt")
-        val part  = new Path(dir, s".part-$sid-$attempt")
-        val metas = Seq.newBuilder[Mp4Writer.SampleMeta]
-        var shape: GopCodec.Header = null
-        var total = 0L
-        val t = fs.create(tmp, true)
-        try it.foreach { s =>
-          if (shape == null) shape = GopCodec.header(s.payload)
-          metas += Mp4Writer.SampleMeta(s.payload.length.toLong, s.numFrames)
-          t.write(s.payload); total += s.payload.length
-        } finally t.close()
-        val ms = metas.result()
-        if (ms.isEmpty) { fs.delete(tmp, false); Iterator.empty }
-        else {
-          val outP = new Path(dir, s"stream-$sid.mp4")
-          val out  = fs.create(part, true)
-          val head = Mp4Writer.ftyp
-          val mh   = Mp4Writer.mdatHeader(total)
-          try {
-            out.write(head); out.write(mh)
-            val in  = fs.open(tmp)
-            val buf = new Array[Byte](1 << 20)
-            try {
-              var n = in.read(buf)
-              while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-            } finally in.close()
-            out.write(Mp4Writer.moov(ms, shape.width, shape.height, fps,
-              head.length.toLong + mh.length))
-          } finally out.close()
-          fs.delete(tmp, false)
-          // Rename-first commit: never touch the destination except via the
-          // atomic rename. If the rename loses (HDFS-style fail-on-existing
-          // destination), another byte-identical attempt already committed —
-          // delete only our own part file and yield to the winner.
-          if (!fs.rename(part, outP)) {
-            fs.delete(part, false)
-            require(fs.exists(outP), s"mp4 export commit failed for stream $sid")
-          }
-          Iterator.single((sid, outP.toString, fs.getFileStatus(outP).getLen))
-        }
-      }(Encoders.tuple(Encoders.scalaLong, Encoders.STRING, Encoders.scalaLong))
-      .collect()
+  }
+
+  /** one stream's segments as an MP4 of the store codec's GOPs: frame
+    * dims from the first payload's header ([[GopCodec.header]])
+    */
+  private def segmentsMp4(task: FileFleet.Task, file: String, fps: Int,
+      segs: Iterator[Segment]): Long = {
+    var shape: GopCodec.Header = null
+    writeMp4(task, file, fps, segs.map { s =>
+      if (shape == null) shape = GopCodec.header(s.payload)
+      (s.payload, s.numFrames)
+    })(Mp4Writer.Track(shape.width, shape.height))
+  }
+
+  /** The one MP4 assembly every export runs: the `mdat` size must precede
+    * the payloads, so `samples` (payload, frame count) spool to a scratch
+    * file while the sample table collects, then `file` gets ftyp + mdat
+    * (the spool copied back) + moov, with the sample description and sync
+    * table `track` gives once every sample has been seen. One payload in
+    * memory at a time; 2x write, 1x read of the payload bytes.
+    */
+  private[sources] def writeMp4(task: FileFleet.Task, file: String, fps: Int,
+      samples: Iterator[(Array[Byte], Int)])(track: => Mp4Writer.Track): Long = {
+    val metas = Vector.newBuilder[Mp4Writer.SampleMeta]
+    task.scratch(s"$file.spool") { spool =>
+      samples.foreach { case (p, n) =>
+        spool.write(p)
+        metas += Mp4Writer.SampleMeta(p.length.toLong, n)
+      }
+    } { in =>
+      val ms = metas.result()
+      require(ms.nonEmpty, s"$file: no samples to export")
+      val t = track
+      task.output(file)(out => Mp4Writer.write(out, ms, t.width, t.height, fps,
+        Iterator.continually(in.readNBytes(1 << 20)).takeWhile(_.nonEmpty),
+        t.entry, t.sync))
+    }
   }
 
   /** Ordered concatenation of one stream's segments into a single file —
     * the raw-stream twin of [[exportMp4]] (for H.264 stores, whose GOP
     * payloads are self-contained, an Annex-B file). Streams through the
-    * driver — never materializes more than one segment. Returns the
-    * bytes written.
+    * driver — never materializes more than one segment — and commits
+    * like [[exportMp4]]. Returns the bytes written.
     */
   def exportConcat(spark: SparkSession, root: String, name: String,
-      streamId: Long, outPath: String): Long = {
-    val p   = new Path(outPath)
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
-    var bytes = 0L
-    try payloads(spark, root, name, streamId).foreach { b =>
-      out.write(b); bytes += b.length
-    } finally out.close()
-    bytes
-  }
+      streamId: Long, outPath: String): Long =
+    FileFleet.writeFile(spark, outPath) { (task, file) =>
+      task.output(file) { out =>
+        streamSegments(spark, root, name, streamId)
+          .map { s => out.write(s.payload); s.payload.length.toLong }.sum
+      }
+    }
 
-  /** one stream's GOP payloads in segId order, streamed to the driver
+  /** one stream's segments in segId order, streamed to the driver
     * through `toLocalIterator` (one segment at a time)
     */
-  private[sources] def payloads(spark: SparkSession, root: String,
-      name: String, streamId: Long): Iterator[Array[Byte]] = {
+  private[sources] def streamSegments(spark: SparkSession, root: String,
+      name: String, streamId: Long): Iterator[Segment] = {
     import scala.jdk.CollectionConverters._
     segments(spark, root, name).filter(col("streamId") === streamId)
-      .orderBy("segId").toLocalIterator().asScala.map(_.payload)
+      .orderBy("segId").toLocalIterator().asScala
   }
 }

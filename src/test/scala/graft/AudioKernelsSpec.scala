@@ -64,7 +64,7 @@ class AudioKernelsSpec extends SparkSpec {
 
   test("audio chunks persist through NamedStorage like any element stream") {
     import graft.sources.NamedStorage
-    val root = java.nio.file.Files.createTempDirectory("graft-audio").toString
+    val root = tempDir("graft-audio").toString
     val ds = (0 until 10).map(i => AudioKernels.syntheticChunk(1L, i.toLong)).toDS()
     val d  = NamedStorage.write(ds.toDF(), root, "pcm")
     assert(d.committed && d.rows == 10L)

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * killed one — is at most 1 KB, parses as JSON and carries the board's
   * total and row counts; the per-row board goes to the artifact file.
   */
-class BenchContractSpec extends AnyFunSuite {
+class BenchContractSpec extends AnyFunSuite with TempDirs {
   import Bench.{Board, QueryResult, RunInfo}
 
   private val om = new ObjectMapper()
@@ -29,7 +29,7 @@ class BenchContractSpec extends AnyFunSuite {
   private def publishedTotal(rs: Seq[(String, QueryResult)]) = rs.map(_._2.min).filter(_ >= 0).sum
 
   private def withBoard[T](sf: String = "/root/testdata/sf0.1")(f: (Board, java.nio.file.Path) => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bench-contract")
+    val dir = tempDir("graft-bench-contract")
     val artifact = dir.resolve("bench-results.json")
     try f(new Board(rows.map(_._1), Seq("dedup_clusters"), dir.resolve("sf1").toString,
         RunInfo(sf, 4, 2, "0123456789ab", artifact.toString)), artifact)

@@ -9,7 +9,7 @@ class ChunkSpec extends SparkSpec {
   private def toks(n: Int) = (0 until n).map(i => s"t$i").mkString(" ")
 
   test("fence-post chunk counts and overlap reconstruction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunk").toString
+    val dir = tempDir("graft-chunk").toString
     import spark.implicits._
     Seq(
       (1L, toks(10)),  // n < w            -> 1 chunk of 10

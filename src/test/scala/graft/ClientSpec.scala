@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.model.{CacheMode, FrameElem}
 import graft.operators.{SequenceOps, StdKernels}
 import org.apache.spark.sql.Encoders
@@ -17,7 +15,7 @@ class ClientSpec extends SparkSpec {
   private val frameEnc = Encoders.product[FrameElem]
 
   test("tutorial flow: ingest -> sample -> histogram -> sink -> load") {
-    val cl = Client(spark, Files.createTempDirectory("graft-client").toString)
+    val cl = Client(spark, tempDir("graft-client").toString)
 
     val frames = (0 until 120).map(i => StdKernels.syntheticFrame(0L, i.toLong, 8, 12, 3))
     cl.ingestFrames("vid", frames.toDS(), gopSize = 40)

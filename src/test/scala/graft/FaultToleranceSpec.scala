@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.{SparkException, TaskContext}
 import org.apache.spark.sql.{DataFrame, Encoders}
 
@@ -20,7 +18,7 @@ class FaultToleranceSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-fault").toString
+    tempDir("graft-fault").toString
 
   private def sampleDf(n: Int): DataFrame =
     (0 until n).map(i => (0L, i.toLong, Array[Byte](i.toByte)))

@@ -148,7 +148,7 @@ class DeflateVideoCodecContractSpec
   }
 
   test("DeflateVideoCodec: VideoStore ingest/decode round-trips through the seam") {
-    val root = java.nio.file.Files.createTempDirectory("graft-deflate-store").toString
+    val root = tempDir("graft-deflate-store").toString
     import graft.sources.VideoStore
     import org.apache.spark.sql.Encoders
     val fe = Encoders.product[FrameElem]

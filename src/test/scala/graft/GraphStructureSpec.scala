@@ -81,8 +81,10 @@ class GraphStructureSpec extends SparkSpec {
     nbrs((h % nbrs.size).toInt)
   }
 
-  private def walks(edges: Seq[(Long, Long)], steps: Int, maxDeg: Int = 1024): Seq[(Long, Long, Long)] =
-    graft.functions.GraphStructure.randomWalks(edges.toDF("src", "dst"), steps, maxDeg)
+  private def walks(edges: Seq[(Long, Long)], steps: Int, maxDeg: Int = 1024,
+      bcastBytes: Long = graft.functions.GraphStructure.WalkBcastBytes): Seq[(Long, Long, Long)] =
+    graft.functions.GraphStructure.walks(edges.toDF("src", "dst"), steps, maxDeg,
+      "src", "dst", bcastBytes)
       .orderBy("start", "step")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
 
@@ -126,18 +128,12 @@ class GraphStructureSpec extends SparkSpec {
   }
 
   test("randomWalks: broadcast-adjacency gate off reproduces the shuffled-join walks exactly") {
-    val key = "graft.walk.bcastEntries"
-    val prev = sys.props.get(key)
     val edges = (0L until 100L).flatMap(i => Seq((i, (i * 13 + 1) % 100L), (i, (i * 7 + 3) % 100L)))
-    try {
-      val bcast = walks(edges, 4) // default gate: small adjacency broadcasts
-      sys.props(key) = "0"        // force the shuffled join on every hop
-      val shuffled = walks(edges, 4)
-      assert(bcast == shuffled, "broadcast vs shuffled hop joins diverged")
-    } finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    // default gate: this small adjacency broadcasts; a negative cap
+    // keeps the hop join unhinted
+    val bcast = walks(edges, 4)
+    val shuffled = walks(edges, 4, bcastBytes = -1L)
+    assert(bcast == shuffled, "broadcast vs shuffled hop joins diverged")
   }
 
   test("randomWalks degree cap restricts choices to the first sorted neighbors") {

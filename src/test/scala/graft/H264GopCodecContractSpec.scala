@@ -9,7 +9,19 @@ import graft.sources.H264GopCodec
   * QP 8 quantisation over the synthetic ramp content).
   */
 class H264GopCodecContractSpec
-  extends GopCodecContract("h264-cavlc", new H264GopCodec(qp = 8), maxMeanAbsError = 4.0)
+  extends GopCodecContract("h264-cavlc", new H264GopCodec(qp = 8), maxMeanAbsError = 4.0) {
+
+  test("h264-cavlc: a payload with two trailing zero bytes (the old layout) decodes the same") {
+    val codec = new H264GopCodec(qp = 8)
+    val frames = (0 until 4).map(i => graft.operators.StdKernels.syntheticFrame(1L, i.toLong, 12, 16, 3))
+    val payload = codec.encodeGop(frames)
+    val padded = payload ++ Array[Byte](0, 0)
+    val a = codec.decodeGop(payload, 1L, 0L).toSeq
+    val b = codec.decodeGop(padded, 1L, 0L).toSeq
+    assert(a.size == 4 && b.size == 4)
+    a.zip(b).foreach { case (x, y) => assert(java.util.Arrays.equals(x.data, y.data)) }
+  }
+}
 
 /** the High-profile-shaped tier (Intra_8x8 + 8x8 transform in the per-MB
   * competition) under the identical contract

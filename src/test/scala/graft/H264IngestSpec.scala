@@ -71,6 +71,21 @@ class H264IngestSpec extends SparkSpec {
     assert(ix.frames.length == 15 && ix.keyframes == Vector(0L, 5L, 10L))
   }
 
+  test("saveMp4 is byte-equal to mux of the stream's concatenated payloads") {
+    import graft.sources.H264Mp4
+    val dir = tempDir("graft-h264-save")
+    for (sid <- Seq(0L, 1L)) {
+      val out = dir.resolve(s"s$sid.mp4")
+      H264Ingest.saveMp4(spark, root, "realvid", sid, out.toString)
+      val concat = VideoStore.segments(spark, root, "realvid").collect()
+        .filter(_.streamId == sid).sortBy(_.segId).flatMap(_.payload.toSeq)
+      val want = new java.io.ByteArrayOutputStream()
+      H264Mp4.mux(H264.index(concat), want)
+      assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(out), want.toByteArray),
+        s"stream $sid: per-GOP export diverges from the whole-stream mux")
+    }
+  }
+
   test("gatherAccessUnits reads ONLY covering segments and returns exact frame rows") {
     val acc = spark.sparkContext.longAccumulator("h264-gather-scanned")
     // stream 0 GOPs cover frames [0,5) [5,10) [10,15): frames 1 and 12

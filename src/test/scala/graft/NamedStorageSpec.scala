@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.model.{CacheMode, StreamDescriptor}
 import graft.sources.NamedStorage
 
@@ -9,7 +7,7 @@ class NamedStorageSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-storage").toString
+    tempDir("graft-storage").toString
 
   private def sampleDf(n: Int) =
     (0 until n).map(i => (0L, i.toLong, Array[Byte](i.toByte)))

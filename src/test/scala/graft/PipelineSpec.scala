@@ -20,7 +20,7 @@ class PipelineSpec extends SparkSpec {
     (12 until 24).map(i => s"x$i") ++ Seq("and")).mkString(" ") + " " + shared
 
   test("every stage's drop decision lands on the designed doc") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline").toString
+    val dir = tempDir("graft-pipeline").toString
     import spark.implicits._
     Seq(
       (1L, base),        // survives untouched
@@ -55,7 +55,7 @@ class PipelineSpec extends SparkSpec {
     //    doc 1's -> clean text empty -> dies at the token gate (stage 0
     //    kills whole-doc dups before exact dedup even sees them)
     //  - doc 1: untouched by rendering, owns all its keepers -> intact
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline-pd").toString
+    val dir = tempDir("graft-pipeline-pd").toString
     import spark.implicits._
     def toks(p: String) = {
       val a = (0 until 32).map(i => s"$p$i").toArray
@@ -87,7 +87,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("surviving text is the span-cut, PII-redacted original") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline2").toString
+    val dir = tempDir("graft-pipeline2").toString
     import spark.implicits._
     // doc 8 shares doc 7's 22-token span and carries an email; both keep
     // >= 20 tokens after the cut, so both survive with the span gone

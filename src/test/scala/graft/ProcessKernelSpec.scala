@@ -150,7 +150,7 @@ class ProcessKernelSpec extends SparkSpec {
       .queryName("pk_stream_" + System.nanoTime())
       .outputMode(OutputMode.Append())
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-pk-ck").toString)
+        tempDir("graft-pk-ck").toString)
       .start()
     try {
       in.addData(Seq(Elem(0L, 0L, "a".getBytes(UTF_8)), Elem(0L, 1L, "b".getBytes(UTF_8))))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,7 +23,7 @@ class SchemaDriftSpec extends SparkSpec {
 
   /** Write `canonical` re-encoded as `<variant dir>/events.parquet`. */
   private def writeVariant(encode: DataFrame => DataFrame): String = {
-    val dir = Files.createTempDirectory("graft-drift").toString
+    val dir = tempDir("graft-drift").toString
     // TIMESTAMP_MICROS (not the INT96 legacy default) matches the driver's
     // writer; NTZ columns are always written as isAdjustedToUTC=false
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
@@ -79,7 +78,7 @@ class SchemaDriftSpec extends SparkSpec {
   private lazy val embVariants: Map[String, String] = {
     val canonical = spark.read.parquet(s"$sfDir/embeddings.parquet")
     def write(encode: DataFrame => DataFrame): String = {
-      val dir = Files.createTempDirectory("graft-edrift").toString
+      val dir = tempDir("graft-edrift").toString
       encode(canonical).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       dir
     }

@@ -1,9 +1,11 @@
 package graft
 
-import java.io.{FileNotFoundException, InputStream}
+import java.io.{FilterOutputStream, OutputStream}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, Path, PositionedReadable, RawLocalFileSystem, Seekable}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FSInputStream, Path, PositionedReadable, RawLocalFileSystem, Seekable}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** A `spy://` Hadoop filesystem over the local disk that counts positioned
   * reads — lets specs assert HOW MANY read round-trips an access pattern
@@ -20,7 +22,10 @@ object SpyFileSystem {
   /** stream closes on spy:// files (close is idempotent upstream, so a
     * double-close counts twice — leak specs assert closes >= opens) */
   val closes = new AtomicLong(0)
-  def reset(): Unit = { positionedReads.set(0); opens.set(0); closes.set(0) }
+  /** files created on spy:// and closes of those created streams */
+  val creates = new AtomicLong(0)
+  val createdCloses = new AtomicLong(0)
+  def reset(): Unit = Seq(positionedReads, opens, closes, creates, createdCloses).foreach(_.set(0))
 }
 
 class SpyFileSystem extends RawLocalFileSystem {
@@ -31,6 +36,30 @@ class SpyFileSystem extends RawLocalFileSystem {
     // missing files already throw FileNotFoundException in super.open
     SpyFileSystem.opens.incrementAndGet()
     new FSDataInputStream(new CountingStream(super.open(f, bufferSize)))
+  }
+
+  // RawLocalFileSystem implements both create entry points directly
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    counted(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    counted(super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
+
+  private def counted(inner: FSDataOutputStream): FSDataOutputStream = {
+    SpyFileSystem.creates.incrementAndGet()
+    new FSDataOutputStream(new CountingOut(inner), null)
+  }
+
+  /** counts closes of a created stream (write-through otherwise) */
+  private class CountingOut(inner: OutputStream) extends FilterOutputStream(inner) {
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = inner.write(b, off, len)
+    override def close(): Unit = {
+      SpyFileSystem.createdCloses.incrementAndGet()
+      inner.close()
+    }
   }
 
   /** delegates everything, counts the positioned-read entry points */

@@ -18,7 +18,7 @@ class StreamingOpsSpec extends SparkSpec {
   import spark.implicits._
 
   private def checkpoint(): String =
-    Files.createTempDirectory("graft-stream-ck").toString
+    tempDir("graft-stream-ck").toString
 
   private def runBatches(batches: Seq[Seq[Elem]],
       maxPending: Int = 10000): Seq[(Long, Long, Long)] = {
@@ -357,7 +357,7 @@ class StreamingOpsSpec extends SparkSpec {
       .map(r => (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2))).sorted.toSeq
 
     // FileStreamSource requires a directory; stage the single parquet file
-    val stageDir = Files.createTempDirectory("graft-stream-src")
+    val stageDir = tempDir("graft-stream-src")
     Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
       stageDir.resolve("events.parquet"))
     val stream = spark.readStream.schema(batch.schema).parquet(stageDir.toString)
@@ -739,7 +739,7 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("a bounded stream_* gate deletes its checkpoint directory") {
-    val dir = Files.createTempDirectory("graft-stream-docs").toString
+    val dir = tempDir("graft-stream-docs").toString
     (1L to 40L).map(i => (i, s"doc $i shares the words alpha beta gamma ${i % 7}"))
       .toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
     val tmp = new java.io.File(sys.props("java.io.tmpdir"))

@@ -74,7 +74,7 @@ class TarShardSpec extends SparkSpec {
       Seq((key, "txt", ("body " * 60 + i).getBytes(UTF_8)),
         (key, "json", s"""{"i":$i}""".getBytes(UTF_8)))
     }.toDF("key", "ext", "payload")
-    val dir = Files.createTempDirectory("wds").toString
+    val dir = tempDir("wds").toString
     val nShards = TarShard.writeSamples(df, dir, maxShardBytes = 2048, nWriters = 3)
     assert(nShards > 3, s"tiny budget must roll multiple shards, got $nShards")
     val back = TarShard.readDir(spark, dir)

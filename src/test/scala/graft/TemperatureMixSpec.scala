@@ -13,7 +13,7 @@ import graft.functions.{TextFunctions => TF}
 class TemperatureMixSpec extends SparkSpec {
 
   test("alpha=0.5 quotas: rare language kept wholesale, head language thinned") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tmix").toString
+    val dir = tempDir("graft-tmix").toString
     import spark.implicits._
     val rows = (1L to 9L).map(i => (i, s"text $i", "aa")) :+ ((10L, "text ten", "bb"))
     rows.toDF("doc_id", "text", "lang").write.parquet(s"$dir/documents.parquet")

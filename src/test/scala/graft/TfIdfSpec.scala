@@ -99,7 +99,7 @@ class TfIdfSpec extends SparkSpec {
   }
 
   test("one retrieval call = one corpus scan (spy-FS open count)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tfidf-spy")
+    val dir = tempDir("graft-tfidf-spy")
     corpus.coalesce(1).write.mode("overwrite").parquet(dir.toString)
     spark.sparkContext.hadoopConfiguration
       .set("fs.spy.impl", classOf[SpyFileSystem].getName)

@@ -23,7 +23,7 @@ object CountingCodec extends graft.sources.GopCodec {
 class VideoStoreSpec extends SparkSpec {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-video").toString
+    tempDir("graft-video").toString
 
   private def synthFrames(streamId: Long, n: Int): Seq[FrameElem] =
     (0 until n).map(i => StdKernels.syntheticFrame(streamId, i.toLong, 8, 12, 3))
@@ -317,11 +317,11 @@ class VideoStoreSpec extends SparkSpec {
       }
       // no spool or part files left behind
       val leftovers = new java.io.File(outDir).listFiles()
-        .filter(f => f.getName.startsWith(".tmp-") || f.getName.startsWith(".part-"))
+        .filter(f => Seq("_tmp-", ".tmp-", ".part-").exists(f.getName.startsWith))
       assert(leftovers.isEmpty, s"scratch files not cleaned: ${leftovers.mkString(",")}")
     }
     // re-export into the same directory commits cleanly over the previous
-    // files (the delete + rename path of the attempt-unique protocol)
+    // files (the colliding-name delete + rename of the commit rule)
     val before = Files.readAllBytes(java.nio.file.Paths.get(s"$outDir/stream-0.mp4"))
     val again  = VideoStore.exportMp4All(spark, root, "many", outDir, fps = 24)
     assert(again.length == 2)

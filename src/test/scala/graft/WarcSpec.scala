@@ -69,7 +69,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("readDir streams records from both compression layouts in parallel") {
-    val dir = Files.createTempDirectory("warcspec")
+    val dir = tempDir("warcspec")
     val gz = Files.newOutputStream(dir.resolve("a.warc.gz"))
     try Warc.writeGz(gz, (1 to 3).map(i => rec(i, s"<i>$i</i>"))) finally gz.close()
     val pl = Files.newOutputStream(dir.resolve("b.warc"))
