@@ -681,13 +681,15 @@ object Bench {
   /** The stdout summary line. Every field is a count, a flag or a string
     * clipped to 160 chars, so the line stays under 1 KB whatever the
     * board's size; per-row numbers live only in the board file. `total`
-    * sums the published mins of the main board's rows. */
+    * sums the published mins of the main board's rows; `failed` counts
+    * the main board's failed rows plus `sf1Failed`. */
   private[graft] def summaryLine(results: Seq[(String, QueryResult)],
-      skipped: Int, truncated: Boolean, wallS: Double, info: RunInfo): String = {
+      skipped: Int, truncated: Boolean, wallS: Double, info: RunInfo,
+      sf1Failed: Int): String = {
     def clip(s: String) = jsonStr(if (s.length <= 160) s else "..." + s.takeRight(157))
     val total = results.map(_._2.min).filter(_ >= 0).sum
     s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
-      s""""n_rows":${results.size},"failed":${results.count(_._2.failed)},""" +
+      s""""n_rows":${results.size},"failed":${results.count(_._2.failed) + sf1Failed},""" +
       s""""aborted":${results.count(_._2.aborted)},"skipped":$skipped,""" +
       s""""truncated":$truncated,"cpus":${info.cpus},"sf":${clip(info.sf)},""" +
       s""""wall_s":${f"$wallS%.1f"},"git_rev":${clip(info.gitRev)},""" +
@@ -713,8 +715,10 @@ object Bench {
     def recordSf1(name: String, qr: QueryResult): Unit = synchronized { rows1 += ((name, qr)); refresh() }
     def failSf1(msg: String): Unit = synchronized { sf1Error = Some(msg); refresh() }
 
+    // the sf1 section adds its failed rows, or 1 if the section threw
     private def line(truncated: Boolean): String = synchronized { summaryLine(rows.toSeq,
-      if (truncated) planned.size - rows.size else 0, truncated, wallS, info) }
+      if (truncated) planned.size - rows.size else 0, truncated, wallS, info,
+      if (sf1Error.isDefined) 1 else rows1.count(_._2.failed)) }
     private def names(rs: Iterable[String]) = rs.map(jsonStr).mkString("[", ",", "]")
     private def section(rs: Seq[(String, QueryResult)], plan: Seq[String],
         truncated: Boolean): String = {

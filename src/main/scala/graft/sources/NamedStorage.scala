@@ -2,6 +2,12 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CommandResult
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.types.StructType
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.model.{CacheMode, StreamDescriptor}
@@ -124,10 +130,22 @@ object NamedStorage {
     }
     delete(spark, root, name)
 
-    df.write.options(options).mode(SaveMode.Overwrite).parquet(dataDir(root, name).toString)
-    // row count from parquet footers only (metadata-only count, no data scan);
-    // an accumulator would double-count on task retries
-    val rows = spark.read.parquet(dataDir(root, name).toString).count()
+    // the write command's own `numOutputRows` is the row count: its stats
+    // tracker sums one result per COMMITTED task, so a retried task counts
+    // once, and no re-read of the written parquet is needed
+    val write = DataSource(spark, "parquet",
+        options = options + ("path" -> dataDir(root, name).toString))
+      .planForWriting(SaveMode.Overwrite, df.queryExecution.analyzed)
+    val qe = spark.sessionState.executePlan(write)
+    qe.assertCommandExecuted()
+    // adaptive execution wraps the write command in its final result stage
+    def writeExec(p: SparkPlan): DataWritingCommandExec = p match {
+      case a: AdaptiveSparkPlanExec => writeExec(a.executedPlan)
+      case r: ResultQueryStageExec  => writeExec(r.plan)
+      case w: DataWritingCommandExec => w
+    }
+    val rows = writeExec(qe.commandExecuted.asInstanceOf[CommandResult].commandPhysicalPlan)
+      .metrics("numOutputRows").value
 
     val d = StreamDescriptor(name, committed = true, df.columns.toSeq, rows)
     val p = descPath(root, name)
@@ -139,10 +157,18 @@ object NamedStorage {
   /** Read a committed named stream; refuses uncommitted remains. Inplace
     * streams read from their external `location`.
     */
-  def read(spark: SparkSession, root: String, name: String): DataFrame = {
+  def read(spark: SparkSession, root: String, name: String): DataFrame =
+    read(spark, root, name, None)
+
+  /** `schema`, when the caller knows it, replaces parquet schema inference
+    * (a footer-merging job per read)
+    */
+  private[graft] def read(spark: SparkSession, root: String, name: String,
+      schema: Option[StructType]): DataFrame = {
     if (!committed(spark, root, name)) throw new UncommittedStreamException(name)
     val d = descriptor(spark, root, name)
-    spark.read.parquet(d.location.getOrElse(dataDir(root, name).toString))
+    schema.fold(spark.read)(spark.read.schema)
+      .parquet(d.location.getOrElse(dataDir(root, name).toString))
   }
 
   /** Inplace registration — the reference's inplace ingest

@@ -13,8 +13,9 @@ import graft.model.{CacheMode, FrameElem, StreamDescriptor}
   *  - ingest (`scanner/engine/ingest.cpp:867-1018`): frames → GOP segments
   *    + a keyframe index. Here the segment table IS the keyframe index:
   *    one row per GOP `(streamId, segId, startIndex, numFrames, payload)`,
-  *    stored as a committed [[NamedStorage]] stream, sorted by
-  *    (streamId, segId) so parquet row-group stats prune on segId.
+  *    stored as a committed [[NamedStorage]] stream, each stream whole in
+  *    one part file in segId order, so parquet row-group stats prune on
+  *    segId.
   *  - sparse decode (`scanner/video/decoder_automata.h:40-51`,
   *    `dag_analysis.cpp` TaskStream row pruning): reading a sparse frame set
   *    first plans against segment METADATA only (payload column never read),
@@ -69,17 +70,11 @@ object VideoStore {
         Iterator.single(Segment(
           key._1, key._2, gop.head.index, gop.size, codec.encodeGop(gop)))
       }(segEnc)
-      .toDF()
-    // persist across the orderBy: the write's range sort runs a
-    // RangePartitioner SAMPLING job first, and without the cache that job
-    // re-executes the whole group-and-encode pipeline — every GOP encoded
-    // twice (the ingestMp4 twin of this cost was pinned by the spy-read
-    // spec; here a counting codec pins it). The cache bounds the second
-    // pass to a (memory-then-disk) read of the encoded segments.
-    segs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try NamedStorage.write(segs.orderBy("streamId", "segId"), root, name, mode,
+      .repartition(col("streamId")).sortWithinPartitions("streamId", "segId").toDF()
+    // whole streams per part file, segId-ordered, with no range sort: a
+    // RangePartitioner's sampling job would re-run the encode
+    NamedStorage.write(segs, root, name, mode,
       options = Map("compression" -> hints.storageCodec))
-    finally segs.unpersist()
   }
 
   /** lossy pre-quantization: every U8 sample floored to a multiple of
@@ -97,7 +92,7 @@ object VideoStore {
   }
 
   def segments(spark: SparkSession, root: String, name: String): Dataset[Segment] =
-    NamedStorage.read(spark, root, name).as[Segment](segEnc)
+    NamedStorage.read(spark, root, name, Some(segEnc.schema)).as[Segment](segEnc)
 
   /** Full-scan decode: per-segment work, no cross-segment dependencies.
     *

@@ -95,6 +95,25 @@ class BenchContractSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("sf1 failures count in the summary line's failed: each failed row, or 1 if the section threw") {
+    val ok = QueryResult(2.0, 2.0, Seq((2.0, "{}")), Map.empty)
+    val bad = QueryResult(-1.0, -1.0, Nil, Map.empty)
+    withBoard() { (board, artifact) =>
+      rows.foreach { case (n, qr) => board.record(n, qr) }
+      board.recordSf1("dedup_clusters", bad)
+      board.recordSf1("txt_normalize", ok)
+      val j = parseSummary(board.finish(commit = false))
+      assert(j.get("failed").asInt == 13 + 1)
+      assert(om.readTree(artifact.toFile).get("sf1").get("failed").size == 1)
+    }
+    withBoard() { (board, _) =>
+      rows.foreach { case (n, qr) => board.record(n, qr) }
+      board.failSf1("java.lang.IllegalStateException: tier generation failed")
+      assert(parseSummary(board.hookSummary).get("failed").asInt == 13 + 1)
+      assert(parseSummary(board.finish(commit = false)).get("failed").asInt == 13 + 1)
+    }
+  }
+
   test("SPARK_GRAFT_CPUS parses to a positive Int or fails naming the variable") {
     assert(GraftSession.parseCpus(None) == Runtime.getRuntime.availableProcessors)
     assert(GraftSession.parseCpus(Some("4")) == 4)

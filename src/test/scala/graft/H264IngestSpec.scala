@@ -11,8 +11,8 @@ class H264IngestSpec extends SparkSpec {
 
   private lazy val root: String = {
     val dir = queries.VideoQueries.ensureH264Fixture()
-    val r = sys.props("java.io.tmpdir") + "/graft-h264-store"
-    H264Ingest.ingestH264Dir(spark, dir, r, "realvid", CacheMode.Ignore)
+    val r = tempDir("graft-h264-store").toString
+    H264Ingest.ingestH264Dir(spark, dir, r, "realvid", CacheMode.Overwrite)
     r
   }
 
@@ -37,8 +37,7 @@ class H264IngestSpec extends SparkSpec {
     import graft.sources.H264Mp4
     // wrap each fixture stream in a real avc1 container, ingest the dir
     val h264Dir = queries.VideoQueries.ensureH264Fixture()
-    val mp4Dir = new java.io.File(sys.props("java.io.tmpdir"), "graft-h264-mp4")
-    mp4Dir.mkdirs()
+    val mp4Dir = tempDir("graft-h264-mp4").toFile
     new java.io.File(h264Dir).listFiles().filter(_.getName.endsWith(".h264"))
       .sortBy(_.getName).foreach { f =>
         val ix = H264.index(java.nio.file.Files.readAllBytes(f.toPath))
@@ -46,9 +45,9 @@ class H264IngestSpec extends SparkSpec {
           new java.io.File(mp4Dir, f.getName.replace(".h264", ".mp4")))
         try H264Mp4.mux(ix, out) finally out.close()
       }
-    val r2 = sys.props("java.io.tmpdir") + "/graft-h264-store-mp4"
+    val r2 = tempDir("graft-h264-store-mp4").toString
     H264Ingest.ingestMp4H264Dir(spark, mp4Dir.getPath, r2, "realvid",
-      CacheMode.Ignore)
+      CacheMode.Overwrite)
     val a = VideoStore.segments(spark, root, "realvid").collect()
       .sortBy(s => (s.streamId, s.segId))
       .map(s => (s.streamId, s.segId, s.startIndex, s.numFrames))
@@ -61,7 +60,7 @@ class H264IngestSpec extends SparkSpec {
 
   test("saveMp4 exports a real avc1 container that re-ingests structurally") {
     import graft.sources.H264Mp4
-    val out = sys.props("java.io.tmpdir") + "/graft-h264-export/stream0.mp4"
+    val out = tempDir("graft-h264-export").resolve("stream0.mp4").toString
     val n = H264Ingest.saveMp4(spark, root, "realvid", 0L, out)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out))
     assert(n == bytes.length)
@@ -100,7 +99,7 @@ class H264IngestSpec extends SparkSpec {
   }
 
   test("exportConcat of an H264 store re-ingests to the original frame structure") {
-    val out = sys.props("java.io.tmpdir") + "/graft-h264-export/stream0.h264"
+    val out = tempDir("graft-h264-export").resolve("stream0.h264").toString
     val n = VideoStore.exportConcat(spark, root, "realvid", 0L, out)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out))
     assert(n == bytes.length && n > 0)

@@ -99,4 +99,41 @@ class NamedStorageSpec extends SparkSpec {
     assert(!NamedStorage.exists(spark, root, "ip"))
     assert(spark.read.parquet(ext).count() == 12)
   }
+
+  test("write of a shuffle-free DataFrame starts exactly 1 job: the row count comes from the write") {
+    val root = freshRoot()
+    val df = sampleDf(50)
+    var d: StreamDescriptor = null
+    assert(jobsStarted { d = NamedStorage.write(df, root, "one") } == 1)
+    assert(d.rows == 50L)
+  }
+
+  test("a retried write task commits the rows read back, counted once") {
+    import org.apache.spark.TaskContext
+    val root = freshRoot()
+    // the shared session allows 2 attempts per task: partition 0's first
+    // attempt writes part of its rows, then throws
+    val flaky = sampleDf(100).repartition(2).mapPartitions { it =>
+      val tc = TaskContext.get()
+      val failing = tc.partitionId() == 0 && tc.attemptNumber() == 0
+      it.zipWithIndex.map { case (r, i) =>
+        if (failing && i == 10) throw new RuntimeException("injected failure, attempt 0")
+        r
+      }
+    }(org.apache.spark.sql.Encoders.row(sampleDf(0).schema))
+    val d = NamedStorage.write(flaky, root, "retried")
+    val back = NamedStorage.read(spark, root, "retried")
+    assert(d.rows == back.count() && d.rows == 100L)
+    assert(NamedStorage.len(spark, root, "retried") == 100L)
+    assert(back.select("index").distinct().count() == 100L)
+  }
+
+  test("an empty DataFrame commits rows = 0 and reads back with its columns") {
+    val root = freshRoot()
+    val d = NamedStorage.write(sampleDf(0), root, "empty")
+    assert(d.committed && d.rows == 0L)
+    val back = NamedStorage.read(spark, root, "empty")
+    assert(back.columns.toSeq == Seq("streamId", "index", "payload"))
+    assert(back.count() == 0L)
+  }
 }

@@ -400,4 +400,13 @@ class SimilaritySpec extends SparkSpec {
     assert(run(4096) == run(40),
       "cap at exactly the cell size changed a healthy assignment's result")
   }
+
+  test("VecMeanAgg refuses an element past its exact-mean envelope, naming the ~9.2e10 bound") {
+    val agg = new Similarity.VecMeanAgg
+    val ok = agg.reduce(agg.zero, Seq[java.lang.Double](9.0e10))
+    assert(agg.finish(ok).cv.head == 9.0e10)
+    val e = intercept[IllegalStateException](
+      agg.reduce(agg.zero, Seq[java.lang.Double](1.0, 1e12)))
+    assert(e.getMessage.contains("1.0E12") && e.getMessage.contains("9.2e10"), e.getMessage)
+  }
 }

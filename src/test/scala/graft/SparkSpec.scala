@@ -31,4 +31,26 @@ trait TempDirs extends BeforeAndAfterAll { this: Suite =>
 
 abstract class SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** The number of Spark jobs `body` starts. `body` runs under its own job
+    * group; the status store fills from the listener bus in submission
+    * order, so once a marker job submitted after `body` is listed, every
+    * job of `body` is too.
+    */
+  def jobsStarted(body: => Any): Int = {
+    val sc = spark.sparkContext
+    def inGroup(g: String)(f: => Any): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    inGroup(group)(body)
+    inGroup(s"$group-marker")(sc.parallelize(Seq(0), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty) {
+      assert(System.nanoTime() < deadline, "marker job never reached the status store")
+      Thread.sleep(5)
+    }
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
 }

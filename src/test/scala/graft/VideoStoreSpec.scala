@@ -11,13 +11,16 @@ import graft.sources.{DeflateVideoCodec, FakeVideoCodec, GopCodec, H264GopCodec,
   */
 object CountingCodec extends graft.sources.GopCodec {
   val encodes = new java.util.concurrent.atomic.AtomicLong(0)
+  val decodes = new java.util.concurrent.atomic.AtomicLong(0)
   override def encodeGop(frames: Seq[FrameElem]): Array[Byte] = {
     encodes.incrementAndGet()
     FakeVideoCodec.encodeGop(frames)
   }
   override def decodeGop(payload: Array[Byte], streamId: Long, startIndex: Long,
-      upTo: Int, decoded: Option[org.apache.spark.util.LongAccumulator]) =
+      upTo: Int, decoded: Option[org.apache.spark.util.LongAccumulator]) = {
+    decodes.incrementAndGet()
     FakeVideoCodec.decodeGop(payload, streamId, startIndex, upTo, decoded)
+  }
 }
 
 class VideoStoreSpec extends SparkSpec {
@@ -427,6 +430,56 @@ class VideoStoreSpec extends SparkSpec {
       .collect().sortBy(_.index)
     assert(back.length == 120)
     back.foreach(f => assertSameFrame(f, StdKernels.syntheticFrame(0L, f.index, 8, 12, 3)))
+  }
+
+  test("ingest starts exactly 3 jobs and building segments or frames starts none") {
+    val root = freshRoot()
+    import spark.implicits._
+    def gray(sid: Long, n: Int) = (0 until n).map(i => StdKernels.syntheticFrame(sid, i.toLong, 16, 16, 1))
+    val frames = (gray(0L, 40) ++ gray(1L, 24)).toDS()
+    // 1: the (streamId, GOP) group shuffle's map stage (reads the frames);
+    // 2: the streamId shuffle's map stage (encodes every GOP once);
+    // 3: the parquet write (sorts each partition by (streamId, segId))
+    assert(jobsStarted(VideoStore.ingest(frames, root, "jobs", gopSize = 8,
+      codec = H264GopCodec.Pcm)) == 3)
+    // the segment schema is known, so no read infers it from the footers;
+    // a CPU-bound codec's decode spread is planned from the file listing
+    assert(jobsStarted {
+      VideoStore.segments(spark, root, "jobs")
+      VideoStore.frames(spark, root, "jobs", codec = H264GopCodec.Pcm)
+      VideoStore.frames(spark, root, "jobs", codec = H264GopCodec.Pcm, minDecodeTasks = 3)
+    } == 0)
+    assert(VideoStore.frames(spark, root, "jobs", codec = H264GopCodec.Pcm).count() == 64L)
+  }
+
+  test("ingest layout: each stream whole in one (streamId, segId)-sorted part file; gather opens only covering GOPs") {
+    val root = freshRoot()
+    import spark.implicits._
+    val all = synthFrames(0L, 50) ++ synthFrames(1L, 30) ++ synthFrames(2L, 45)
+    // without partition coalescing the streams hash to several part files
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    try VideoStore.ingest(spark.createDataset(all).repartition(3), root, "layout",
+      gopSize = 10, codec = CountingCodec)
+    finally spark.conf.unset(coalesce)
+    val parts = new java.io.File(s"$root/layout/data").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    val perFile = parts.toSeq.map(f => spark.read.parquet(f.getPath)
+      .select("streamId", "segId").as[(Long, Long)].collect().toSeq)
+      .filter(_.nonEmpty)
+    perFile.foreach(keys => assert(keys == keys.sorted, s"part file out of order: $keys"))
+    val streamsPerFile = perFile.map(_.map(_._1).distinct)
+    assert(streamsPerFile.flatten.sorted == Seq(0L, 1L, 2L),
+      s"each stream must sit in exactly one part file: $streamsPerFile")
+    assert(perFile.flatten.size == 5 + 3 + 5)
+    // stream 0 frames 12, 47 sit in GOPs 1 and 4; stream 2 frame 0 in GOP 0
+    CountingCodec.decodes.set(0)
+    val got = VideoStore.gatherFramesMulti(spark, root, "layout",
+        Map(0L -> Seq(12L, 47L), 2L -> Seq(0L)), codec = CountingCodec)
+      .collect().map(f => (f.streamId, f.index)).sorted.toSeq
+    assert(got == Seq((0L, 12L), (0L, 47L), (2L, 0L)))
+    assert(CountingCodec.decodes.get() == 3L,
+      s"only the 3 covering GOPs may decode, got ${CountingCodec.decodes.get()}")
   }
 
   test("ingestMp4 builds its whole index from ONE moov read — no per-sample driver round-trips") {
