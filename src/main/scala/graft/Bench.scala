@@ -58,10 +58,12 @@ object Bench {
   }
 
   /** Per-rep resource snapshot: deltas between two of these attribute a
-    * slow rep to GC, host CPU steal, run-queue depth, CFS throttling or
+    * slow rep to GC, host CPU steal, run-queue depth, CFS throttling,
+    * codegen compiles (classes the codegen cache no longer held) or
     * genuine work. */
-  private final case class ResSnap(gcMs: Long, cpuNs: Long, stealTicks: Long,
-      shR: Long, shW: Long, spill: Long, load1: Double, throttledNs: Long)
+  private[graft] final case class ResSnap(gcMs: Long, cpuNs: Long, stealTicks: Long,
+      shR: Long, shW: Long, spill: Long, load1: Double, throttledNs: Long,
+      cgCompiles: Long)
   private def readFirstLine(p: String): Option[String] =
     try Some(java.nio.file.Files.readAllLines(java.nio.file.Paths.get(p)).get(0))
     catch { case _: Throwable => None }
@@ -93,11 +95,11 @@ object Bench {
         .getOrElse(-1L)
     }
     ResSnap(gc, cpu, steal, t.shuffleRead.get, t.shuffleWrite.get, t.spill.get,
-      load1, throttled)
+      load1, throttled, Profiler.compileCount)
   }
 
   /** one rep's telemetry as a JSON object string */
-  private def telemetryJson(a: ResSnap, b: ResSnap): String = {
+  private[graft] def telemetryJson(a: ResSnap, b: ResSnap): String = {
     def mb(x: Long) = f"${x / 1048576.0}%.1f"
     val cpuS   = if (a.cpuNs < 0 || b.cpuNs < 0) "-1" else f"${(b.cpuNs - a.cpuNs) / 1e9}%.2f"
     val stealS = if (a.stealTicks < 0 || b.stealTicks < 0) "-1"
@@ -107,7 +109,7 @@ object Bench {
     s"""{"gc_ms":${b.gcMs - a.gcMs},"cpu_s":$cpuS,"steal_s":$stealS,""" +
       s""""sh_r_mb":${mb(b.shR - a.shR)},"sh_w_mb":${mb(b.shW - a.shW)},""" +
       s""""spill_mb":${mb(b.spill - a.spill)},"load1":${f"${b.load1}%.2f"},""" +
-      s""""cfs_thr_s":$thrS}"""
+      s""""cfs_thr_s":$thrS,"cg_compiles":${b.cgCompiles - a.cgCompiles}}"""
   }
 
   /** BASELINE.md "BENCH targets for the rebuild" as first-class timed
@@ -657,13 +659,14 @@ object Bench {
   private val Sf1ProfileRows = Set("dedup_simhash_pairs", "txt_corpus_report")
 
   /** per-query result: min/median wall of the completed reps, per-rep
-    * (sec, telemetry) with a watchdog-killed partial last, per-op ms, and
-    * whether the watchdog aborted the row. A row with no completed rep
-    * keeps the -1 sentinel: "failed" when it threw, "aborted" when the
-    * watchdog cancelled it. */
+    * (sec, telemetry) with a watchdog-killed partial last, per-op ms,
+    * whether the watchdog aborted the row, and the profile pass's (jobs,
+    * codegen compiles) when it ran. A row with no completed rep keeps the
+    * -1 sentinel: "failed" when it threw, "aborted" when the watchdog
+    * cancelled it. */
   private[graft] final case class QueryResult(min: Double, med: Double,
       reps: Seq[(Double, String)], ops: Map[String, Long],
-      aborted: Boolean = false) {
+      aborted: Boolean = false, profiled: Option[(Int, Long)] = None) {
     def failed: Boolean = min < 0 && !aborted
   }
 
@@ -924,7 +927,9 @@ object Bench {
     }
     // one UNTIMED warm-up execution: the first 1-2 runs of a query pay
     // plan compile + Janino codegen + C2 JIT of the generated classes —
-    // measured 2-3x the steady state on sub-second queries
+    // measured 2-3x the steady state on sub-second queries. The reps skip
+    // the Janino part only while the row's classes fit the codegen cache
+    // (GraftSession.CodegenCacheEntries); each rep's cg_compiles shows it.
     execute(isTimed = false)
     // settle the JVM before the reps: collecting prior rows' garbage lets
     // the ContextCleaner reclaim their broadcast/shuffle state, which the
@@ -956,21 +961,25 @@ object Bench {
     // per-op attribution for the configured heavy set: ONE extra untimed
     // profiled run, task time broken down by the library op that spent it
     var ops = Map.empty[String, Long]
+    var profiled = Option.empty[(Int, Long)]
     if (profile && times.nonEmpty && !aborted) {
       capped {
         val (_, prof) = Profiler.profile(spark) { materialize(fn(spark, dir)) }
         ops = prof.byOp
+        profiled = Some((prof.jobs, prof.codegenCompiles))
         System.err.println(s"[bench] $tag$name op breakdown: " + ops.toSeq
-          .sortBy(-_._2).map { case (o, ms) => s"$o=${ms}ms" }.mkString(" "))
+          .sortBy(-_._2).map { case (o, ms) => s"$o=${ms}ms" }.mkString(" ") +
+          s" jobs=${prof.jobs} cg_compiles=${prof.codegenCompiles}")
       }
       CacheScope.release(blocking = true); System.gc()
     }
-    QueryResult(sec, med, timed.toSeq ++ killed, ops, aborted)
+    QueryResult(sec, med, timed.toSeq ++ killed, ops, aborted, profiled)
   }
 
   /** the per-section JSON fields shared by the sf0.1 and sf1 sections:
     * min/median/per-rep wall + per-rep resource telemetry + per-op
-    * attribution (the sh_r/w_mb telemetry is the per-query shuffle volume
+    * attribution with the profile pass's jobs and codegen compiles (the
+    * sh_r/w_mb telemetry is the per-query shuffle volume
     * the 100 TB extrapolation needs; per-rep walls make a steal-burst run
     * self-diagnosing — one rep 3-6x the others on an unchanged plan is a
     * de-schedule, not a regression) */
@@ -985,6 +994,8 @@ object Bench {
     val perOps = obj(qr => if (qr.ops.isEmpty) None else Some(
       qr.ops.toSeq.sortBy(-_._2).map { case (o, ms) =>
         jsonStr(o.stripPrefix("graft:")) + ":" + ms }.mkString("{", ",", "}")))
+    val perProf = obj(_.profiled.map { case (jobs, cg) =>
+      s"""{"jobs":$jobs,"cg_compiles":$cg}""" })
     // rows the watchdog cancelled: distinct from "failed" (a thrown plan)
     // so a consumer can tell "hung" from "broken"
     val aborted = results.collect { case (k, qr) if qr.aborted => jsonStr(k) }
@@ -998,6 +1009,6 @@ object Bench {
         (s(1) - s(0)) / s(0) > 0.25
       } => jsonStr(k)
     }.mkString("[", ",", "]")
-    s""""queries":$qs,"queries_median":$meds,"queries_reps":$perRep,"queries_telemetry":$perTel,"queries_ops_ms":$perOps,"aborted":$aborted,"queries_lowconf":$lowconf"""
+    s""""queries":$qs,"queries_median":$meds,"queries_reps":$perRep,"queries_telemetry":$perTel,"queries_ops_ms":$perOps,"queries_profile":$perProf,"aborted":$aborted,"queries_lowconf":$lowconf"""
   }
 }

@@ -30,6 +30,32 @@ object GraftSession {
         s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
   }
 
+  /** Size of Spark's JVM-wide cache of compiled generated classes. It is
+    * a static SQL conf; the cache is sized once, at the JVM's first
+    * generated class, from the session active then. One corpus_dedup op
+    * (LSH pairs, connected components, TF-IDF top-k, PageRank) generates
+    * about 154 distinct classes, more than Spark's default of 100: the LRU
+    * then evicts each op's classes before the next op, and every op
+    * recompiles ~141 of them in Janino, ~26% of its CPU. At 1000 a
+    * repeated op reuses them all, and Metaspace stays at ~148 MB either
+    * way. `Profiler.Profile.codegenCompiles` shows whether a query's
+    * classes still miss the cache.
+    */
+  private val CodegenCacheEntries = 1000
+
+  /** Session confs that keep generated code cacheable across queries.
+    * Whole-stage classes are named without their codegen stage id: AQE
+    * numbers a query's stages in the order they are planned, which varies
+    * from run to run, and an id in the class name made an unchanged
+    * pipeline a new class (a cache miss) whenever its number moved.
+    * Without the id, identical pipelines in different stages also share
+    * one class: the dedup chain of DedupSpec compiles 128 classes on its
+    * first run instead of 156.
+    */
+  private val codegenConfs = Map(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   /** `maxTaskFailures > 1` enables task retries in local mode
     * (`local[N,F]`), matching cluster behavior where a task attempt can
     * fail and be re-run — required by the fault-tolerance specs.
@@ -44,10 +70,12 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       // the RDD loops shuffle/cache only acyclic records (primitive
       // tuples) and acyclic broadcasts; Kryo's reference tracking is pure
-      // per-record bookkeeping there (measured on bt_1m_cc, r16 — see
-      // OPTIMIZATION_r16.md). Env-overridable for A/B.
+      // per-record bookkeeping there (measured on bt_1m_cc).
+      // SPARK_GRAFT_KRYO_REFTRACK=true turns it back on for a session
+      // whose own RDD records may be cyclic.
       .config("spark.kryo.referenceTracking",
         sys.env.getOrElse("SPARK_GRAFT_KRYO_REFTRACK", "false"))
+      .config(codegenConfs)
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -76,6 +104,7 @@ object GraftSession {
       .appName(appName)
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
+      .config(codegenConfs)
       .config("spark.sql.shuffle.partitions", (workers * cores).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -29,15 +29,29 @@ object Profiler {
       submittedMs: Long = 0L,
       completedMs: Long = 0L)
 
+  /** What one profiled block executed.
+    *
+    * @param jobs            Spark jobs started in the block's job group
+    * @param codegenCompiles generated classes compiled while the block ran:
+    *   the exact change in Spark's compilation count
+    *   (`CodegenMetrics.METRIC_COMPILATION_TIME`), i.e. misses of the
+    *   codegen cache. The count is JVM-wide: it includes compiles of any
+    *   other work running in this JVM meanwhile and, in local mode, the
+    *   executors' own; executors in other JVMs are not counted. 0 on a
+    *   re-run means the query's generated classes all stayed cached.
+    */
   final case class Profile(stages: Seq[StageProfile],
-      byOp: Map[String, Long] = Map.empty) {
+      byOp: Map[String, Long] = Map.empty,
+      jobs: Int = 0,
+      codegenCompiles: Long = 0L) {
     def totalTaskTimeMs: Long    = stages.map(_.taskTimeMs).sum
     def totalShuffleRead: Long   = stages.map(_.shuffleReadBytes).sum
     def totalShuffleWrite: Long  = stages.map(_.shuffleWriteBytes).sum
     def numStages: Int           = stages.size
     def render: String =
-      f"stages=$numStages taskTime=${totalTaskTimeMs}ms " +
-        f"shuffleR=$totalShuffleRead shuffleW=$totalShuffleWrite\n" +
+      f"jobs=$jobs stages=$numStages taskTime=${totalTaskTimeMs}ms " +
+        f"shuffleR=$totalShuffleRead shuffleW=$totalShuffleWrite " +
+        f"codegenCompiles=$codegenCompiles\n" +
         byOp.toSeq.sortBy(-_._2).map { case (op, ms) =>
           f"  op $op%-24s $ms%7dms" }.mkString("\n") + "\n" +
         stages.sortBy(-_.taskTimeMs).map(s =>
@@ -90,6 +104,11 @@ object Profiler {
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
+  /** Generated classes compiled in this JVM so far: every codegen cache
+    * miss compiles once and records one compile-time sample. */
+  private[graft] def compileCount: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** Run `body` with its Spark jobs labeled as library op `op` — the
     * attribution seam the reference's per-op profiler totals map to
     * (`python/scannerpy/profiler.py` op timelines). Library operators
@@ -123,6 +142,7 @@ object Profiler {
     val spill     = mutable.Map.empty[Key, Long].withDefaultValue(0L)
     val done      = mutable.LinkedHashMap.empty[Key, SparkListenerStageCompleted]
     val myStages  = mutable.Set.empty[Int]
+    var jobs      = 0
     val stageOp   = mutable.Map.empty[Int, String]
     val groupId   = s"graft-profile-${java.util.UUID.randomUUID()}"
     @volatile var lastEventAt = System.nanoTime()
@@ -131,6 +151,7 @@ object Profiler {
         synchronized {
           if (j.properties != null &&
               groupId == j.properties.getProperty("spark.jobGroup.id")) {
+            jobs += 1
             myStages ++= j.stageIds
             // stages of a job launched inside Profiler.attributed carry
             // the op label in the job description; everything else is the
@@ -166,13 +187,15 @@ object Profiler {
     val savedDesc  = spark.sparkContext.getLocalProperty("spark.job.description")
     spark.sparkContext.setJobGroup(groupId, "graft profiled block", false)
     try {
+      val compiles0 = compileCount
       val result = body
+      val compiles = compileCount - compiles0
       // the listener bus is async (and not public API): wait until it has
       // been quiet for 300 ms, capped at 10 s
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       while (System.nanoTime() - lastEventAt < 300L * 1000 * 1000 &&
              System.nanoTime() < deadline) Thread.sleep(50)
-      val (stages, byOp) = listener.synchronized {
+      val (stages, byOp, nJobs) = listener.synchronized {
         val st = done.collect { case (key @ (sid, _), s) if myStages.contains(sid) =>
           StageProfile(
             sid, s.stageInfo.name, taskCount(key), taskTime(key), taskMax(key),
@@ -185,9 +208,9 @@ object Profiler {
         }.toSeq
         val ops = st.groupBy(p => stageOp.getOrElse(p.stageId, "(final)"))
           .map { case (op, ss) => op -> ss.map(_.taskTimeMs).sum }
-        (st, ops)
+        (st, ops, jobs)
       }
-      (result, Profile(stages, byOp))
+      (result, Profile(stages, byOp, nJobs, compiles))
     } finally {
       if (savedGroup != null) spark.sparkContext.setJobGroup(savedGroup,
         if (savedDesc != null) savedDesc else "", false)

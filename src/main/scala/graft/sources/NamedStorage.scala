@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ResultQueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.datasources.DataSource
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.model.{CacheMode, StreamDescriptor}
@@ -45,8 +45,11 @@ object NamedStorage {
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** minimal JSON codec for StreamDescriptor — no library dependencies */
-  private[graft] def toJson(d: StreamDescriptor): String = {
+  /** minimal JSON codec for StreamDescriptor — no library dependencies.
+    * `schema`, the data's Spark schema, is stored last as a JSON string
+    * (Spark's own schema JSON, escaped) for [[read]]. */
+  private[graft] def toJson(d: StreamDescriptor,
+      schema: Option[StructType] = None): String = {
     def q(s: String) = "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
@@ -54,14 +57,23 @@ object NamedStorage {
     } + "\""
     s"""{"name":${q(d.name)},"committed":${d.committed},""" +
       s""""columns":[${d.columns.map(q).mkString(",")}],"rows":${d.rows}""" +
-      d.location.map(l => s""","location":${q(l)}""").getOrElse("") + "}"
+      d.location.map(l => s""","location":${q(l)}""").getOrElse("") +
+      schema.map(t => s""","schema":${q(t.json)}""").getOrElse("") + "}"
   }
+
+  /** the schema [[toJson]] recorded; None for a descriptor written
+    * without one */
+  private[graft] def schemaFromJson(s: String): Option[StructType] =
+    jsonStr(s, "schema").map(j => DataType.fromJson(j).asInstanceOf[StructType])
+
+  /** the value of top-level string field `k`, unescaped */
+  private def jsonStr(s: String, k: String): Option[String] =
+    s""""$k"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(s)
+      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
 
   private[graft] def fromJson(s: String): StreamDescriptor = {
     def str(k: String) =
-      s""""$k"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(s)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-        .getOrElse(sys.error(s"missing $k in descriptor: $s"))
+      jsonStr(s, k).getOrElse(sys.error(s"missing $k in descriptor: $s"))
     def lng(k: String) =
       s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
         .getOrElse(sys.error(s"missing $k in descriptor: $s"))
@@ -73,10 +85,8 @@ object NamedStorage {
     val colList =
       if (cols.trim.isEmpty) Seq.empty[String]
       else """"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(cols).map(_.group(1)).toSeq
-    val location =
-      s""""location"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""".r.findFirstMatchIn(s)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
-    StreamDescriptor(str("name"), bool("committed"), colList, lng("rows"), location)
+    StreamDescriptor(str("name"), bool("committed"), colList, lng("rows"),
+      jsonStr(s, "location"))
   }
 
   def exists(spark: SparkSession, root: String, name: String): Boolean = {
@@ -90,7 +100,10 @@ object NamedStorage {
     f.exists(p) && descriptor(spark, root, name).committed
   }
 
-  def descriptor(spark: SparkSession, root: String, name: String): StreamDescriptor = {
+  def descriptor(spark: SparkSession, root: String, name: String): StreamDescriptor =
+    fromJson(descriptorJson(spark, root, name))
+
+  private def descriptorJson(spark: SparkSession, root: String, name: String): String = {
     val p = descPath(root, name)
     val f = fs(spark, p)
     // size from the file status, then readFully: available()/single read()
@@ -99,7 +112,15 @@ object NamedStorage {
     val bytes = new Array[Byte](size)
     val in    = f.open(p)
     try in.readFully(0L, bytes) finally in.close()
-    fromJson(new String(bytes, UTF_8))
+    new String(bytes, UTF_8)
+  }
+
+  /** the commit: write the descriptor, with the data's schema, last */
+  private def writeDescriptor(spark: SparkSession, root: String,
+      d: StreamDescriptor, schema: StructType): Unit = {
+    val p = descPath(root, d.name)
+    val out = fs(spark, p).create(p, true)
+    try out.write(toJson(d, Some(schema)).getBytes(UTF_8)) finally out.close()
   }
 
   /** reference `len()` (`storage.py:170-173`) without scanning data */
@@ -148,9 +169,7 @@ object NamedStorage {
       .metrics("numOutputRows").value
 
     val d = StreamDescriptor(name, committed = true, df.columns.toSeq, rows)
-    val p = descPath(root, name)
-    val out = fs(spark, p).create(p, true)
-    try out.write(toJson(d).getBytes(UTF_8)) finally out.close()
+    writeDescriptor(spark, root, d, df.schema)
     d
   }
 
@@ -160,15 +179,17 @@ object NamedStorage {
   def read(spark: SparkSession, root: String, name: String): DataFrame =
     read(spark, root, name, None)
 
-  /** `schema`, when the caller knows it, replaces parquet schema inference
-    * (a footer-merging job per read)
+  /** The read uses `schema` when the caller knows it, else the schema the
+    * descriptor recorded at commit; only a descriptor written without one
+    * falls back to parquet schema inference (a footer-merging job per
+    * read).
     */
   private[graft] def read(spark: SparkSession, root: String, name: String,
       schema: Option[StructType]): DataFrame = {
     if (!committed(spark, root, name)) throw new UncommittedStreamException(name)
-    val d = descriptor(spark, root, name)
-    schema.fold(spark.read)(spark.read.schema)
-      .parquet(d.location.getOrElse(dataDir(root, name).toString))
+    val json = descriptorJson(spark, root, name)
+    schema.orElse(schemaFromJson(json)).fold(spark.read)(spark.read.schema)
+      .parquet(fromJson(json).location.getOrElse(dataDir(root, name).toString))
   }
 
   /** Inplace registration — the reference's inplace ingest
@@ -189,9 +210,7 @@ object NamedStorage {
     val df   = spark.read.parquet(dataPath) // validates readability + schema
     val rows = df.count()                   // parquet-footer metadata count
     val d = StreamDescriptor(name, committed = true, df.columns.toSeq, rows, Some(dataPath))
-    val p = descPath(root, name)
-    val out = fs(spark, p).create(p, true)
-    try out.write(toJson(d).getBytes(UTF_8)) finally out.close()
+    writeDescriptor(spark, root, d, df.schema)
     d
   }
 

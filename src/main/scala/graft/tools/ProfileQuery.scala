@@ -3,9 +3,11 @@ package graft.tools
 import graft.{CacheScope, GraftSession, Profiler, SparkEntry}
 
 /** Stage-level profile of one named query at a given SF dir: warmup run,
-  * then a profiled run printing per-stage task time / shuffle volume and
-  * the per-op attribution — the drill-down for any bench row whose
-  * telemetry looks off.
+  * then a profiled run printing its jobs, codegen compiles, per-stage
+  * task time / shuffle volume and the per-op attribution — the drill-down
+  * for any bench row whose telemetry looks off. After the warmup, a
+  * nonzero compile count means the query's generated classes did not
+  * stay in the codegen cache (or its plan changed between the runs).
   *
   * {{{ sbt "runMain graft.tools.ProfileQuery <sfDir> <query>" }}}
   */

@@ -114,6 +114,21 @@ class BenchContractSpec extends AnyFunSuite with TempDirs {
     }
   }
 
+  test("per-rep telemetry and the profile rows carry codegen compiles") {
+    val a = Bench.ResSnap(0L, 0L, 0L, 0L, 0L, 0L, 0.5, 0L, cgCompiles = 40L)
+    val tel = om.readTree(Bench.telemetryJson(a, a.copy(cgCompiles = 47L)))
+    assert(tel.get("cg_compiles").asLong == 7L)
+    val profiled = QueryResult(2.0, 2.0, Seq((2.0, "{}")), Map("(final)" -> 9L),
+      profiled = Some((65, 0L)))
+    withBoard() { (board, artifact) =>
+      rows.foreach { case (n, qr) => board.record(n, qr) }
+      board.record("dedup_clusters", profiled)
+      parseSummary(board.finish(commit = false))
+      val row = om.readTree(artifact.toFile).get("queries_profile").get("dedup_clusters")
+      assert(row.get("jobs").asInt == 65 && row.get("cg_compiles").asLong == 0L)
+    }
+  }
+
   test("SPARK_GRAFT_CPUS parses to a positive Int or fails naming the variable") {
     assert(GraftSession.parseCpus(None) == Runtime.getRuntime.availableProcessors)
     assert(GraftSession.parseCpus(Some("4")) == 4)

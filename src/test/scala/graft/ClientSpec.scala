@@ -46,4 +46,30 @@ class ClientSpec extends SparkSpec {
     val out = cl.storageRoot + "/vid.fvc"
     assert(cl.export("vid", 0L, out) > 0)
   }
+
+  test("stream reads with the schema recorded at commit: no job, same schema as inference") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.NamedStorage
+    val cl = Client(spark, tempDir("graft-client-schema").toString)
+    // non-nullable top-level and nested fields: inference reads them all
+    // back as nullable, and the recorded schema must do the same
+    val df = spark.range(0, 10, 1, 2).select(col("id").as("streamId"),
+      col("id").as("index"), array(col("id"), lit(7L)).as("arr"),
+      struct(col("id").as("a"), lit("x").as("b")).as("st"),
+      col("id").cast("string").cast("binary").as("payload"))
+    cl.run(df, "s")
+    val inferred = spark.read.parquet(s"${cl.storageRoot}/s/data").schema
+    var got: org.apache.spark.sql.DataFrame = null
+    assert(jobsStarted { got = cl.stream("s") } == 0)
+    assert(got.schema == inferred, s"${got.schema.treeString} vs ${inferred.treeString}")
+    assert(got.orderBy("index").collect().map(_.getLong(0)).toSeq == (0L until 10L))
+
+    // a descriptor committed without a schema still reads, by inference
+    val desc = java.nio.file.Paths.get(cl.storageRoot, "s", "descriptor.json")
+    java.nio.file.Files.deleteIfExists(desc.resolveSibling(".descriptor.json.crc"))
+    java.nio.file.Files.write(desc, NamedStorage.toJson(
+      NamedStorage.descriptor(spark, cl.storageRoot, "s")).getBytes("UTF-8"))
+    assert(jobsStarted { got = cl.stream("s") } > 0)
+    assert(got.schema == inferred)
+  }
 }

@@ -377,4 +377,55 @@ class DedupSpec extends SparkSpec {
       .sortBy(_._1).toSeq
     assert(got == Seq((1L, 10L, 2L), (4L, 10L, 2L)))
   }
+
+  test("a repeated LSH -> CC -> TF-IDF top-k -> PageRank chain recompiles none of its generated classes") {
+    // the chain generates more classes than Spark's default codegen cache
+    // holds (100); GraftSession's cache size must keep all of them, so a
+    // repeat run on the same input is served from the cache
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.functions.{GraphRank, TfIdf}
+    val rnd = new java.util.Random(11)
+    // 12 planted clusters x 4 variants of 30 words, one word changed each
+    val docs = (0 until 12).flatMap { c =>
+      val base = Array.fill(30)(s"w${rnd.nextInt(400)}")
+      (0 until 4).map { v =>
+        val words = base.clone(); words(rnd.nextInt(30)) = s"v$c$v"
+        ((c * 4 + v).toLong, words.mkString(" "))
+      }
+    }
+    def chain(): (Int, Int) = {
+      // RDD-backed inputs, as a scanned shard would be
+      def rddDf(rows: Seq[(Long, String)], names: String*) =
+        spark.sparkContext.parallelize(rows, 1).toDF(names: _*)
+      val docsDf = rddDf(docs, "id", "text")
+      val pairs = Dedup.lshCandidatePairs(docsDf, "id", "text", 64, 4)
+      pairs.collect()
+      val (labels, _) = Dedup.connectedComponentsWithStats(docsDf, pairs, "id")
+      val lab = labels.collect()
+      val keep = lab.filter(r => r.getLong(0) == r.getLong(1)).map(_.getLong(0)).toSet
+      val kept = rddDf(docs.filter(d => keep(d._1)), "doc", "text")
+      val nbrs = TfIdf.topKNeighbors(kept, "doc", "text", 5)
+        .select("doc", "id").as[(Long, Long)].collect()
+      val ranks = GraphRank.pageRank(
+        spark.sparkContext.parallelize(nbrs.toSeq, 1).toDF("src", "dst")).collect()
+      CacheScope.release(blocking = true)
+      (keep.size, ranks.length)
+    }
+    val first = chain()
+    assert(first._1 == 12, s"expected the 12 planted clusters, got ${first._1}")
+    def repeatCompiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(chain() == first)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    // AQE takes a top-k join's broadcast side from whichever input stage
+    // finishes first, so a repeat can meet a plan variant not compiled yet
+    // (2-8 classes); each variant compiles once, and a later repeat then
+    // compiles nothing. Evicted classes would instead be recompiled on
+    // every repeat: ~130 of them with Spark's default cache.
+    val compiles = scala.collection.mutable.ArrayBuffer(repeatCompiles())
+    while (compiles.last > 0 && compiles.size < 6) compiles += repeatCompiles()
+    assert(compiles.last == 0L && compiles.max < 20,
+      s"repeat runs compiled ${compiles.mkString(", ")} generated classes")
+  }
 }

@@ -83,6 +83,14 @@ class NamedStorageSpec extends SparkSpec {
     assert(NamedStorage.fromJson(NamedStorage.toJson(empty)) == empty)
     val inplace = StreamDescriptor("ip", committed = true, Seq("c"), 7L, Some("/ext/path"))
     assert(NamedStorage.fromJson(NamedStorage.toJson(inplace)) == inplace)
+    // the recorded schema rides along without disturbing the other fields
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("a \"quoted\" col", LongType, nullable = false),
+      StructField("name", ArrayType(StringType, containsNull = false))))
+    val withSchema = NamedStorage.toJson(inplace, Some(schema))
+    assert(NamedStorage.fromJson(withSchema) == inplace)
+    assert(NamedStorage.schemaFromJson(withSchema).contains(schema))
+    assert(NamedStorage.schemaFromJson(NamedStorage.toJson(inplace)).isEmpty)
   }
 
   test("inplace registration indexes external data without copying (ingest.cpp:382-546)") {

@@ -49,6 +49,28 @@ class ProfilerSpec extends SparkSpec {
   test("profile isolates the block: nothing recorded for an empty body") {
     val (_, prof) = Profiler.profile(spark) { () }
     assert(prof.numStages == 0)
+    assert(prof.jobs == 0)
+  }
+
+  test("profile counts the block's jobs and codegen compiles; a re-run compiles nothing") {
+    import org.apache.spark.sql.functions._
+    // an integer literal is inlined into the generated code, so a modulus
+    // no earlier query used makes the first run compile new classes
+    val m = 1000 + (System.nanoTime() & 0xfffff)
+    def body(): Unit = {
+      spark.range(0, 5000, 1, 4).select((col("id") % m).as("k"), col("id"))
+        .groupBy("k").agg(sum("id"), countDistinct("id")).collect()
+      spark.range(0, 100).filter(col("id") % 7 === 3).count()
+    }
+    val (_, first) = Profiler.profile(spark)(body())
+    val (_, again) = Profiler.profile(spark)(body())
+    assert(first.jobs > 0 && again.jobs == first.jobs)
+    assert(first.codegenCompiles > 0, "a never-seen query must compile")
+    assert(again.codegenCompiles == 0L,
+      s"an identical re-run compiled ${again.codegenCompiles} generated classes")
+    assert(jobsStarted(body()) == again.jobs)
+    assert(again.render.contains(s"jobs=${again.jobs} ") &&
+      again.render.contains("codegenCompiles=0"))
   }
 
   test("per-op attribution: library-internal rounds separate from the final action") {
