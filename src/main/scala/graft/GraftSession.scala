@@ -15,6 +15,17 @@ import org.apache.spark.sql.SparkSession
   *   RDD[(Long, Long)] every round — JavaSerializer there costs ~10x the
   *   bytes-on-wire CPU and dominates old-gen churn (the bt_1m_cc GC/CPU
   *   swings); Kryo writes the pair as two varints.
+  * - Kryo reference tracking is off: it is per-record bookkeeping that the
+  *   library's RDD loops (primitive tuples, acyclic broadcasts) never need
+  *   (measured on bt_1m_cc). This is a contract for the WHOLE session, not
+  *   only for graft's own loops — every shuffled RDD record, serialized
+  *   cache block and broadcast goes through the same serializer, user jobs
+  *   included. Records must be acyclic: a cyclic object graph overflows
+  *   the stack of the task that serializes it, a fatal error on which
+  *   Spark ends the executor — in local mode, the whole JVM. An object
+  *   reachable twice from one record is written twice, so the reader gets
+  *   two copies, and a mutation through one copy is not seen through the
+  *   other.
   */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS` as the core count every main passes to [[local]];
@@ -56,6 +67,20 @@ object GraftSession {
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
     "spark.sql.codegen.useIdInClassName" -> "false")
 
+  /** The confs of every session, [[local]] and [[localCluster]] alike, so
+    * a multi-JVM run serializes and plans exactly as the specs and the
+    * benches do.
+    */
+  private def sessionConfs(shufflePartitions: String): Map[String, String] =
+    codegenConfs ++ Map(
+      "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
+      "spark.kryo.referenceTracking" -> "false",
+      "spark.sql.shuffle.partitions" -> shufflePartitions,
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.ui.enabled" -> "false",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
   /** `maxTaskFailures > 1` enables task retries in local mode
     * (`local[N,F]`), matching cluster behavior where a task attempt can
     * fail and be re-run — required by the fault-tolerance specs.
@@ -67,20 +92,7 @@ object GraftSession {
       .master(master)
       .withExtensions(graft.plans.GraftExtensions)
       .appName(appName)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      // the RDD loops shuffle/cache only acyclic records (primitive
-      // tuples) and acyclic broadcasts; Kryo's reference tracking is pure
-      // per-record bookkeeping there (measured on bt_1m_cc).
-      // SPARK_GRAFT_KRYO_REFTRACK=true turns it back on for a session
-      // whose own RDD records may be cyclic.
-      .config("spark.kryo.referenceTracking",
-        sys.env.getOrElse("SPARK_GRAFT_KRYO_REFTRACK", "false"))
-      .config(codegenConfs)
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(sessionConfs(cores))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -102,14 +114,8 @@ object GraftSession {
       .master(s"local-cluster[$workers,$cores,$memMb]")
       .withExtensions(graft.plans.GraftExtensions)
       .appName(appName)
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .config(sessionConfs((workers * cores).toString))
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config(codegenConfs)
-      .config("spark.sql.shuffle.partitions", (workers * cores).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     extraConfs.foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * from the [[TermIndex]]'s indexed-doc count, because an absolute count
   * silently changes meaning as the corpus grows (a df=50 cap that prunes
   * stop-terms at 5k docs deletes the discriminative mid-frequency band
-  * at 50M docs, and the r8 sf1 bench measured the fixed cap turning the
+  * at 50M docs, and on the sf1 bench tier the fixed cap turned the
   * posting-join shuffle superlinear: 15.7x bytes for 10x docs). An
   * absolute count stays available (`DfBound.Abs`, or just a `Long` via
   * the implicit lift) for fixed-vocabulary corpora.
@@ -42,8 +42,14 @@ object TfIdf {
   final case class TermIndex(terms: DataFrame, nDocs: Long)
 
   def buildTermIndex(docs: DataFrame, idCol: String, textCol: String,
-      ngram: Int = 2, attrTag: String = "tfidf-index"): TermIndex = {
-    val terms = graft.CacheScope.cache(
+      ngram: Int = 2, attrTag: String = "tfidf-index"): TermIndex =
+    indexTerms(docs, idCol, textCol, ngram, graft.CacheScope.cache(_), attrTag)
+
+  /** the tokenize+count pass, persisted in the given cache tier, and the
+    * indexed-doc count action (profiled under `attrTag`) that fills it */
+  private def indexTerms(docs: DataFrame, idCol: String, textCol: String,
+      ngram: Int, persist: DataFrame => DataFrame, attrTag: String): TermIndex = {
+    val terms = persist(
       docs.select(col(idCol).as("id"),
           explode(TextFunctions.shingles(col(textCol), ngram)).as("t"))
         .groupBy(col("id"), col("t")).agg(count(lit(1)).as("n")))
@@ -62,8 +68,8 @@ object TfIdf {
     * by every ranker probing that corpus. This is how a retrieval stack
     * is actually deployed — the index is built once and queried many
     * times; rebuilding an identical index per ranking call re-scans the
-    * corpus for nothing (the r9 bench measured ~27 s of one board's wall
-    * as three rebuilds of the same sf0.1 index). The caller owns key
+    * corpus for nothing (three rebuilds of the same sf0.1 index cost ~27 s
+    * of one bench board's wall). The caller owns key
     * correctness: `corpusKey` must uniquely name the corpus SNAPSHOT
     * (e.g. the table path — never reuse a key across changed data). The
     * cached terms live in [[graft.CacheScope]]'s shared tier; corpus
@@ -71,39 +77,30 @@ object TfIdf {
     */
   def memoTermIndex(docs: => DataFrame, idCol: String, textCol: String,
       ngram: Int, corpusKey: String): TermIndex =
-    indexMemo.computeIfAbsent(s"$corpusKey|$idCol|$textCol|ngram=$ngram", { _ =>
-      val d = docs
-      val terms = graft.CacheScope.cacheShared(
-        d.select(col(idCol).as("id"),
-            explode(TextFunctions.shingles(col(textCol), ngram)).as("t"))
-          .groupBy(col("id"), col("t")).agg(count(lit(1)).as("n")))
-      val nDocs = graft.Profiler.attributed(d.sparkSession, "term-index(shared)") {
-        terms.select(countDistinct(col("id"))).head.getLong(0)
-      }
-      TermIndex(terms, nDocs)
-    })
+    indexMemo.computeIfAbsent(s"$corpusKey|$idCol|$textCol|ngram=$ngram", _ =>
+      indexTerms(docs, idCol, textCol, ngram, graft.CacheScope.cacheShared(_),
+        "term-index(shared)"))
 
   /** The shared TF-IDF weight chain off a prebuilt index: cached
     * (id, t, w) weights (stop-term pruned at `maxDf`, IDF over the
     * indexed-doc count) and the positive-norm relation (id, nrm). One
     * definition so no ranker's weights can drift from another's.
     *
-    * The weights cache is REPARTITIONED by term before persisting (r16,
-    * guide §2.5/§2.6): AQE's partition coalescing shrank the small weight
-    * relation's build to ONE partition, and since the posting self-join
-    * broadcasts its build side, the probe side streamed the cache — the
-    * ENTIRE sum(df²) pair fan-out of sim_tfidf_topk ran in one task
-    * (profiled: a single 24 s task writing the 141 MB pair partial-agg
-    * exchange while 31 cores idled). Clustering the cache by `t` spreads
-    * each posting list's probe across the session's shuffle partitions;
-    * the exchange it adds moves only the (small) weight relation once.
+    * For the corpus self-join the weights cache is REPARTITIONED by term
+    * before persisting: AQE's partition coalescing shrinks the small
+    * weight relation to ONE partition, and a posting join whose probe
+    * side streams that cache runs the ENTIRE sum(df²) pair fan-out of
+    * sim_tfidf_topk in one task (profiled: a single 24 s task writing the
+    * 141 MB pair partial-agg exchange while 31 cores idled). Clustering
+    * the cache by `t` spreads each posting list's probe across the
+    * session's shuffle partitions; the exchange it adds moves only the
+    * (small) weight relation once.
     *
-    * NOT taken (r16, measured): dictionary-encoding `t` to a dense long
-    * join key (VERDICT #3). The posting self-join is a BROADCAST hash
-    * join here — there is no t-keyed exchange to shrink — and the dict's
-    * RDD-backed build destroyed the broadcast (unknown stats → sort-merge
-    * join) plus doubled the single-task cache scans: sim_tfidf_topk
-    * measured 15.7 → 28.4 s. Reverted; plan evidence in plans/r16/.
+    * Not taken: dictionary-encoding `t` to a dense long join key. The
+    * dictionary's RDD-backed build hides the relation's size statistics,
+    * which turned the broadcast posting join into a sort-merge join and
+    * doubled the single-task cache scans: sim_tfidf_topk went from 15.7
+    * to 28.4 s.
     */
   private def tfidfWeightsFrom(idx: TermIndex, maxDf: DfBound,
       clusterByTerm: Boolean = false): (DataFrame, DataFrame) = {
@@ -117,11 +114,7 @@ object TfIdf {
       .select(col("id"), col("t"),
         (col("n").cast("double")
           * log(lit(idx.nDocs).cast("double") / col("df").cast("double"))).as("w"))
-    // clusterByTerm only for the corpus SELF-join consumer (r16, guide
-    // §2.5/§2.6): AQE coalesced this small cache to ONE partition, and
-    // since the pair join's probe streams the cache, sim_tfidf_topk's
-    // whole sum(df²) fan-out ran in a single 24 s task while 31 cores
-    // idled. The explicit term-clustered repartition spreads the probe;
+    // clusterByTerm only for the corpus SELF-join consumer (see above);
     // numShufflePartitions is the session's scale dial, not a core-count
     // constant. The query-side rankers stay unclustered: their probe
     // volume is linear and the extra exchange measured as a pure loss

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Paths
 
 import graft.model.Elem
 import graft.operators.Placement
@@ -72,42 +71,10 @@ class PlacementSpec extends SparkSpec {
     // runs as a real stage whose tasks hold the gpu address in
     // TaskContext.resources(), and an unplaced control stage does not.
     // The probe self-asserts; this test checks its verdict line + exit 0.
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    // forward this JVM's --add-opens set (Spark-on-JDK17 module opens,
-    // injected by build.sbt's javaOptions) to the probe driver JVM
-    import scala.jdk.CollectionConverters._
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.toVector
-    // both spellings occur: "--add-opens p=ALL-UNNAMED" (two args) and
-    // "--add-opens=p=ALL-UNNAMED" (one)
-    val opens = jvmArgs.zipWithIndex.flatMap {
-      case (a, i) if a == "--add-opens" && i + 1 < jvmArgs.length =>
-        Seq(a, jvmArgs(i + 1))
-      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
-      case _ => Nil
-    }
-    val cmd = Seq(javaBin) ++ opens ++
-      Seq("-cp", sys.props("java.class.path"), "-Xmx1536m", "graft.tools.GpuProbe")
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.environment().put("SPARK_SCALA_VERSION", "2.13")
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    // drain stdout on a separate thread: a blocking readAllBytes on THIS
-    // thread would make the 240 s waitFor timeout unreachable if the
-    // probe hangs (the exact scenario the timeout exists for)
-    val outBuf = new java.io.ByteArrayOutputStream
-    val drain = new Thread(() => proc.getInputStream.transferTo(outBuf),
-      "gpu-probe-drain")
-    drain.setDaemon(true)
-    drain.start()
-    val exited = proc.waitFor(240, java.util.concurrent.TimeUnit.SECONDS)
-    if (!exited) proc.destroyForcibly()
-    drain.join(5000)
-    val out = outBuf.toString(UTF_8)
-    assert(exited, "GpuProbe did not finish within 240 s:\n" +
-      out.linesIterator.toSeq.takeRight(40).mkString("\n"))
-    assert(proc.exitValue() === 0, s"GpuProbe exited ${proc.exitValue()}:\n" +
-      out.linesIterator.toSeq.takeRight(40).mkString("\n"))
-    assert(out.contains("GPU-PROBE OK placed=8 unplaced=8 addr=0"), out.take(4000))
+    val r = ForkedJvm.run("graft.tools.GpuProbe", timeoutSeconds = 240,
+      env = Map("SPARK_SCALA_VERSION" -> "2.13"))
+    assert(r.exited, "GpuProbe did not finish within 240 s:\n" + r.tail)
+    assert(r.exitCode === 0, s"GpuProbe exited ${r.exitCode}:\n" + r.tail)
+    assert(r.output.contains("GPU-PROBE OK placed=8 unplaced=8 addr=0"), r.output.take(4000))
   }
 }

@@ -12,6 +12,49 @@ object TestSpark {
   lazy val spark: SparkSession = GraftSession.local("4", "graft-test", maxTaskFailures = 2)
 }
 
+/** Runs a main class of this classpath in its own JVM: for checks that
+  * need a second SparkContext, or that end the JVM they run in.
+  */
+object ForkedJvm {
+  final case class Result(exited: Boolean, exitCode: Int, output: String) {
+    def tail: String = output.linesIterator.toSeq.takeRight(40).mkString("\n")
+  }
+
+  def run(mainClass: String, timeoutSeconds: Int,
+      env: Map[String, String] = Map.empty): Result = {
+    import scala.jdk.CollectionConverters._
+    val javaBin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
+    // forward this JVM's --add-opens set (Spark-on-JDK17 module opens,
+    // injected by build.sbt's javaOptions); both spellings occur:
+    // "--add-opens p=ALL-UNNAMED" (two args) and "--add-opens=p=ALL-UNNAMED"
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toVector
+    val opens = jvmArgs.zipWithIndex.flatMap {
+      case (a, i) if a == "--add-opens" && i + 1 < jvmArgs.length =>
+        Seq(a, jvmArgs(i + 1))
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case _ => Nil
+    }
+    val cmd = Seq(javaBin) ++ opens ++
+      Seq("-cp", sys.props("java.class.path"), "-Xmx1536m", mainClass)
+    val pb = new ProcessBuilder(cmd: _*)
+    env.foreach { case (k, v) => pb.environment().put(k, v) }
+    pb.redirectErrorStream(true)
+    val proc = pb.start()
+    // drain stdout on a separate thread: a blocking readAllBytes on THIS
+    // thread would make the waitFor timeout unreachable if the child hangs
+    val outBuf = new java.io.ByteArrayOutputStream
+    val drain = new Thread(() => proc.getInputStream.transferTo(outBuf), s"$mainClass-drain")
+    drain.setDaemon(true)
+    drain.start()
+    val exited = proc.waitFor(timeoutSeconds.toLong, java.util.concurrent.TimeUnit.SECONDS)
+    if (!exited) proc.destroyForcibly()
+    drain.join(5000)
+    Result(exited, if (exited) proc.exitValue() else -1,
+      outBuf.toString(java.nio.charset.StandardCharsets.UTF_8))
+  }
+}
+
 /** Temp directories that live as long as the suite: each one made by
   * [[tempDir]] is deleted, with its contents, after the suite's tests.
   */
