@@ -437,11 +437,11 @@ object Bench {
         operators.JoinStrategies.bucketedRangeJoin(points, ivals, "p", "lo", "hi", 128L)
           .agg(count(lit(1)).as("n_matches"), countDistinct(col("iv")).as("n_ivals"))
       }),
-      // adversarial CC scale row: a single 1M-node PATH (diameter 1M —
-      // the worst case for label propagation, and the duplicate-subgraph
-      // prune can drop nothing since every node has an edge). The
-      // double-pointer-jump loop must still converge in ~log4(1M) ≈ 10
-      // driver rounds; DedupSpec pins the round count, this row times it.
+      // CC scale row: a single 1M-node PATH (diameter 1M — the worst case
+      // for label propagation) in 32 range partitions. Step 1's union-find
+      // contracts each range to one root, so the rounds run on a 32-root
+      // path; DedupSpec pins the round count of a path whose partitions
+      // hold no two neighbouring edges, this row times the scale.
       "bt_1m_cc" -> ((s, _) => {
         import org.apache.spark.sql.functions._
         val n = 1000000L

@@ -1,7 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.CacheScope
 
@@ -42,34 +48,54 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol))
       .select(col(idCol))
 
-  /** Connected components over a near-dup pair graph: label every node
-    * with the minimum id reachable through pairs — the step that turns
-    * pairwise candidates into keep-one-per-cluster decisions. Min-label
-    * propagation with double pointer jumping: each round takes the min
-    * over neighbor labels (one edge hop), then twice replaces each label
-    * with its label's label (path compression), so resolved label
-    * distance grows ~4x per round and the loop converges in
-    * ~ceil(log4(diameter)) + 1 driver-synchronous rounds.
+  /** Connected components over a near-dup pair graph: label every given
+    * node with the smallest id of its component — the step that turns
+    * pairwise candidates into keep-one-per-cluster decisions. `pairs`
+    * holds the columns `a` and `b`. An edge counts only when both of its
+    * endpoints are given nodes: any other edge is dropped before a single
+    * union, so there are no phantom rows. A node without edges labels
+    * itself; a null id is no node.
     *
-    * The iteration runs as a co-partitioned RDD loop, not a Catalyst
-    * plan-per-round: node ids are dictionary-encoded to dense longs once
-    * (in natural id order, so min-code ≡ min-id and decoded labels are
-    * bit-identical to a DataFrame min), and edges + labels share one
-    * HashPartitioner for the whole loop. Every per-round join is then a
-    * narrow co-partitioned zip — the only shuffles are the (combined)
-    * message reduction and the two pointer-jump relabelings, all moving
-    * compact (long, long) pairs instead of full Tungsten rows, and no
-    * per-round planning/AQE work happens at all. (The previous
-    * DataFrame-loop formulation re-planned and re-shuffled the full label
-    * relation 4-5x per round: 137 s / 3.2 GB shuffle on the 1M-chain
-    * bench; this loop is the same algorithm minus that overhead.)
+    * One algorithm at every scale, over compact (long, long) pair RDDs:
     *
-    * The driver issues exactly ONE job per round (convergence detection
-    * rides the round's materialization via an accumulator — no separate
-    * count). Pass `checkpointDir` (an HDFS/S3 path on a real cluster) for
-    * reliable per-round lineage truncation that survives executor loss;
-    * without one each round's labels persist MEMORY_AND_DISK and the loop
-    * releases the previous round's blocks explicitly.
+    *  1. Partition-local union-find. Each input partition of `pairs` runs
+    *     a union-find over its own edges and emits (node, smallest id of
+    *     its local tree). A graph that arrives in one partition is
+    *     finished here and runs no round.
+    *  2. Contraction rounds over the cross-partition remainder only. A
+    *     node that several input partitions touch links their local
+    *     roots, and only those links enter the rounds. A round sends each
+    *     link to the partitions of both its endpoints and runs the same
+    *     union-find in every partition, emitting (node, smallest id of
+    *     its local tree). With one node per partition that is one
+    *     Hash-to-Min step (Rastogi et al., ICDE 2013); a partition that
+    *     holds many nodes merges all of their neighbourhoods at once. The
+    *     loop stops after the first round whose input is already one star
+    *     per component around its smallest id (every node has either only
+    *     larger neighbours or exactly one smaller one), so the last round
+    *     only confirms.
+    *
+    * Every node then takes the star centre of its smallest local root.
+    * Jobs: one per round plus one that materializes the labels, all
+    * attributed `cc-round`, and none to count, size or gate anything — a
+    * graph in one input partition costs one job.
+    *
+    * Foreign edges: the distinct endpoints of each input partition meet
+    * the node set in one shuffle, and the ids that are not nodes travel
+    * back to the partition that named them, which drops their edges. The
+    * edges themselves never move before step 1, so whatever locality the
+    * caller's partitioning has (a path split into ranges, say) is what
+    * step 1 contracts.
+    *
+    * Ids: LongType ids are used as they are. Any other orderable type is
+    * encoded once as its rank in Spark's `orderBy` order (sort +
+    * zipWithIndex over the node set) and decoded by two joins: Java's
+    * `String.compareTo` and `Array[Byte]` equality are not Spark's order.
+    *
+    * `checkpointDir` (an HDFS/S3 path on a real cluster) makes every
+    * round and the labels reliable checkpoints that survive executor
+    * loss; without one they persist MEMORY_AND_DISK_SER. A remainder
+    * still unsettled after `maxIters` rounds throws.
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       idCol: String, maxIters: Int = 20,
@@ -77,357 +103,207 @@ object Dedup {
     connectedComponentsWithStats(nodes, pairs, idCol, maxIters,
       checkpointDir)._1
 
-  /** [[connectedComponents]] plus the number of driver-synchronous rounds
-    * the loop ran — the convergence-envelope observable: with one
-    * edge-hop propagation and two pointer jumps per round, resolved label
-    * distance grows ~4x per round, so rounds should track
-    * ceil(log4(diameter)) + 1. The bt_1m_cc bench row and the DedupSpec
-    * long-chain pin assert exactly that.
+  /** [[connectedComponents]] plus the number of contraction rounds it ran:
+    * 0 when `pairs` arrives in one partition, else at least 1 (the round
+    * that finds the remainder settled). The count depends on how the
+    * remainder spreads over the loop's partitions, not on the graph alone.
+    * Measured at 4 loop partitions on a path of d edges whose input
+    * partitions hold no two neighbouring edges (step 1 merges nothing, so
+    * the whole path is the remainder): 4 rounds for d from 1,023 to
+    * 131,071 with ids rising along the path, 6 for d = 16,383 with
+    * shuffled ids; DedupSpec pins at most 6. A simulation of the weakest
+    * round, one node per partition (one Hash-to-Min step), took
+    * ⌈log2 d⌉ + 2 rounds on a rising-id path at d = 15 and 1,023, so a
+    * long path over many loop partitions can need more than the default
+    * `maxIters`.
     */
   def connectedComponentsWithStats(nodes: DataFrame, pairs: DataFrame,
       idCol: String, maxIters: Int = 20,
-      checkpointDir: Option[String] = None): (DataFrame, Int) =
-    ccWithStats(nodes, pairs, idCol, maxIters, checkpointDir,
-      GraphRank.maxLocalEdges)
-
-  /** [[connectedComponentsWithStats]] with the partition-local loop's
-    * edge bound as an argument (0 forces the distributed loop — the
-    * path-agreement spec's lever)
-    */
-  private[graft] def ccWithStats(nodes: DataFrame, pairs: DataFrame,
-      idCol: String, maxIters: Int, checkpointDir: Option[String],
-      localEdgeLimit: Long): (DataFrame, Int) = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import org.apache.spark.storage.StorageLevel
-
+      checkpointDir: Option[String] = None): (DataFrame, Int) = {
     val spark = nodes.sparkSession
-    // reliable (HDFS/S3) checkpointing survives executor loss mid-loop;
-    // without a dir the loop persists each round's pair RDD instead
-    // (executor-local blocks — fine on local[N], lossy on a real cluster)
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
-
-    val nodeIds = CacheScope.cache(nodes.select(col(idCol).as("id")).distinct())
-    // contract: label exactly the given nodes — edges touching ids outside
-    // `nodes` are dropped (both endpoints must be present), so no phantom
-    // rows and every node's own id is always a candidate label
-    // cached: consumed once to derive paired/dict and again to build
-    // edgesR — without the cache the caller's `pairs` plan (the LSH band
-    // self-join in the dedup pipelines) would evaluate twice
-    val edgesDf = CacheScope.cache(pairs.select(col("a"), col("b"))
-      .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-      .join(nodeIds.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-      .join(nodeIds.withColumnRenamed("id", "b"), Seq("b"), "left_semi"))
-    // the loop only touches nodes that occur in an edge: a singleton can
-    // never change label, so it never enters a round. At corpus scale the
-    // iteration runs over the (tiny) duplicate subgraph, not all of
-    // `nodes`; singletons rejoin at the end with self-labels.
-    val paired = CacheScope.cache(nodeIds
-      .join(edgesDf.select(col("a").as("id")).distinct(), Seq("id"), "left_semi"))
-
-    // Dictionary-encode paired node ids to dense longs IN NATURAL ID ORDER:
-    // code order mirrors id order, so the min-code fixpoint decodes to
-    // exactly the min-id labels the callers' oracles expect, for any
-    // orderable id type (longs, md5 strings, ...).
-    //
-    // one partitioner for the WHOLE loop: edges and every round's labels
-    // stay co-partitioned, so the per-round joins below are narrow.
-    // Size it to the duplicate SUBGRAPH, not the session default: every
-    // round is several driver-synchronous shuffle stages, and a corpus
-    // whose dup subgraph is a few hundred nodes pays pure per-stage
-    // scheduling latency on partitions that hold a handful of rows
-    // (50k labels/partition keeps tasks meaningful; the count is a
-    // cached-scan job that also materializes the paired cache — and the
-    // whole upstream pair plan — exactly once).
-    val idField = StructField("id", nodeIds.schema.head.dataType, nodeIds.schema.head.nullable)
-    val nPaired = paired.count()
-    val part = new HashPartitioner(math.max(1,
-      math.min(spark.sessionState.conf.numShufflePartitions,
-        math.ceil(nPaired / 50000.0).toInt)))
-
-    // The dict has two representations by subgraph size:
-    //  - P == 1 (≤ 50k paired ids by partitioner construction): the
-    //    ordered ids COLLECT to the driver once; codes are array indices,
-    //    the encode map broadcasts, and decode is an array lookup — no
-    //    sort exchange, no zipWithIndex pre-job, no dict cache, and no
-    //    encode/decode joins (4 fixture-scale stages per CC call gone).
-    //    The ordering comes from the same Spark orderBy, so code order
-    //    (hence every min-code fixpoint) is identical to the
-    //    distributed dict's.
-    //  - P > 1: the audited distributed dict (sort + zipWithIndex),
-    //    unchanged.
-    // the driver-side dict keys a java.util.HashMap on raw row values:
-    // BinaryType ids surface as Array[Byte], which hashes/compares by
-    // REFERENCE — every lookup would miss and NPE. Ids containing binary
-    // anywhere take the distributed dict (which handles any orderable id
-    // type); everything else Spark returns as value-equal JVM objects.
-    def valueEqual(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case org.apache.spark.sql.types.BinaryType => false
-      case org.apache.spark.sql.types.ArrayType(et, _) => valueEqual(et)
-      case org.apache.spark.sql.types.StructType(fs) => fs.forall(f => valueEqual(f.dataType))
-      case org.apache.spark.sql.types.MapType(k, v, _) => valueEqual(k) && valueEqual(v)
-      case _ => true
-    }
-    val localIds: Array[Any] =
-      if (part.numPartitions == 1 && valueEqual(idField.dataType))
-        paired.orderBy("id").collect().map(_.get(0))
-      else null
-    val dict: DataFrame =
-      if (localIds != null) null
-      else CacheScope.cache(spark.createDataFrame(
-        paired.orderBy("id").rdd.zipWithIndex()
+    val ids = nodes.select(col(idCol).as("id")).where(col("id").isNotNull)
+    val field = ids.schema.head
+    val ends = pairs
+      .select(col("a").cast(field.dataType).as("a"), col("b").cast(field.dataType).as("b"))
+      .where(col("a").isNotNull && col("b").isNotNull)
+    def longPairs(df: DataFrame): RDD[(Long, Long)] =
+      df.rdd.map(r => (r.getLong(0), r.getLong(1)))
+    def rows(labels: RDD[(Long, Long)]): RDD[Row] =
+      labels.map { case (i, c) => Row(i, c) }
+    if (field.dataType == LongType) {
+      val (labels, rounds) = components(spark, ids.rdd.map(_.getLong(0)),
+        longPairs(ends), maxIters, checkpointDir.isDefined)
+      (spark.createDataFrame(rows(labels),
+        StructType(Seq(field, field.copy(name = "cluster")))), rounds)
+    } else {
+      val dict = CacheScope.cache(spark.createDataFrame(
+        ids.distinct().orderBy("id").rdd.zipWithIndex()
           .map { case (r, code) => Row(r.get(0), code) },
-        StructType(Seq(idField, StructField("code", LongType, nullable = false)))))
-
-    val edgesR: RDD[(Long, Long)] =
-      (if (localIds != null) {
-        val codeOf = new java.util.HashMap[Any, java.lang.Long](localIds.length * 2)
-        localIds.zipWithIndex.foreach { case (v, i) => codeOf.put(v, i.toLong) }
-        val bc = spark.sparkContext.broadcast(codeOf)
-        // keyed by source b: b's label flows to a (endpoints ⊆ paired by
-        // the semi-joins above, so the map lookups always hit)
-        edgesDf.rdd.map(r => (bc.value.get(r.get(1)).longValue,
-          bc.value.get(r.get(0)).longValue))
-      } else edgesDf
-        .join(dict.select(col("id").as("a"), col("code").as("ca")), Seq("a"))
-        .join(dict.select(col("id").as("b"), col("code").as("cb")), Seq("b"))
-        .select(col("cb"), col("ca")).rdd // keyed by source b
-        .map(r => (r.getLong(0), r.getLong(1))))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-
-    // _SER levels everywhere in the loop: a deserialized cache holds two
-    // boxed Longs + a Tuple2 per row (~48 heap bytes each, all promoted to
-    // old gen because rounds outlive young collections) and re-persists a
-    // fresh object graph per round; the serialized form is ~10 bytes/row
-    // of Kryo varints in a handful of byte arrays — GC-invisible.
-    var labels: RDD[(Long, Long)] =
-      (if (localIds != null)
-        spark.sparkContext.parallelize(0L until localIds.length.toLong, 1)
-          .map(c => (c, c))
-      else dict.select("code").rdd
-        .map(r => (r.getLong(0), r.getLong(0))))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-
-    val minL: (Long, Long) => Long = math.min
-    val chgAcc  = spark.sparkContext.longAccumulator("ccChanged")
-    var changed = 1L
-    var iter    = 0
-    // defensive edge-count gate on the partition-local loop: the
-    // partitioner is sized by NODES (<= 50k at P == 1), but a
-    // pathologically dense subgraph could still hold O(n²) edges — past
-    // this bound the distributed loop below runs instead (same recurrence,
-    // same fixpoint), so the one-task heap exposure is explicit, not
-    // implied by the node sizing (the bound and the measured reason for
-    // keeping both loops: [[GraphRank.maxLocalEdges]])
-    val localLoop = part.numPartitions == 1 &&
-      edgesDf.count() <= localEdgeLimit
-    if (localLoop) {
-      // SMALL-SUBGRAPH FAST PATH: the partitioner is sized to the dup
-      // subgraph, so P == 1 means the whole label loop fits one
-      // partition — where each distributed round paid ~5 one-task
-      // shuffle stages of pure scheduler latency (measured ~350 ms/round
-      // at fixture scale). The identical recurrence (min-message fold,
-      // then TWO pointer jumps per round, convergence when no label
-      // improves) runs partition-locally over primitive-long maps in ONE
-      // narrow job: same per-round label states, hence the same round
-      // count and the same fixpoint — DedupSpec's long-chain round pin
-      // and the CC oracles verify both. P > 1 takes the distributed loop
-      // below, character-identical to the audited r8-r14 shape.
-      // MAX-semantics accumulators: the loop's (rounds, unconverged) are
-      // deterministic per partition, so a retried or speculative task
-      // re-reports the SAME value and max keeps it — a plain add would
-      // double-count and inflate the spec-pinned round observable
-      val roundsAcc = new MaxAccumulator
-      val leftAcc   = new MaxAccumulator
-      spark.sparkContext.register(roundsAcc, "ccLocalRounds")
-      spark.sparkContext.register(leftAcc, "ccLocalUnconverged")
-      val maxItersL = maxIters
-      val res = labels.zipPartitions(edgesR, preservesPartitioning = true) { (itL, itE) =>
-        var lab = new scala.collection.mutable.LongMap[Long]()
-        itL.foreach { case (i, c) => lab.update(i, c) }
-        val edgeArr = itE.toArray // (b, a): b's label flows to a
-        def jumpL(cur: scala.collection.mutable.LongMap[Long])
-            : scala.collection.mutable.LongMap[Long] = {
-          val out = new scala.collection.mutable.LongMap[Long](cur.size)
-          cur.foreach { case (i, c) => out.update(i, math.min(c, cur.getOrElse(c, c))) }
-          out
-        }
-        var chg = 1L
-        var rounds = 0
-        while (chg > 0 && rounds < maxItersL) {
-          val prop = new scala.collection.mutable.LongMap[Long](lab.size)
-          lab.foreach { case (i, c) => prop.update(i, c) }
-          edgeArr.foreach { case (b, a) =>
-            val c = lab(b)
-            if (c < prop(a)) prop.update(a, c)
-          }
-          val next = jumpL(jumpL(prop))
-          chg = 0L
-          next.foreach { case (i, nc) => if (nc < lab(i)) chg += 1 }
-          lab = next
-          rounds += 1
-        }
-        roundsAcc.add(rounds)
-        if (chg > 0) leftAcc.add(chg)
-        lab.iterator
-      }.persist(StorageLevel.MEMORY_AND_DISK_SER)
-      // reliable-checkpoint contract (lineage truncation that survives
-      // executor loss) holds on this path too: the converged labels are
-      // checkpointed once (persist-before-checkpoint, same as the
-      // distributed loop, so the writer's second pass reads the cache)
-      if (checkpointDir.isDefined) res.checkpoint()
-      graft.Profiler.attributed(spark, "cc-round") { res.count() }
-      labels.unpersist(blocking = true)
-      labels = res
-      iter = roundsAcc.value.toInt
-      changed = leftAcc.value
-    } else while (changed > 0 && iter < maxIters) {
-      import scala.collection.mutable.LongMap
-      // Per-round relational joins run as zipPartitions over primitive
-      // LongMaps instead of RDD join/leftOuterJoin (r16, guide §1.2 step 2
-      // + §5): every operand pair is co-partitioned on `part` and the
-      // lookup side has unique keys, so a cogroup-based join only added
-      // CompactBuffer + boxed-Option allocation per row — the LongMap
-      // lookups produce the identical (node, label) values with none of
-      // it. Shuffle count and bytes per round are unchanged (the message
-      // reduction and the two jump re-keyings); only the narrow per-task
-      // work got cheaper.
-      def lookupOf(it: Iterator[(Long, Long)]): LongMap[Long] = {
-        val m = new LongMap[Long]()
-        it.foreach { case (k, v) => m.update(k, v) }
-        m
-      }
-      // min over own label and all neighbors' labels: the edge-side label
-      // lookup is narrow (both sides on `part`; endpoints ⊆ paired ids by
-      // the semi-joins, so lab(b) always hits); the only shuffle is the
-      // map-side-combined message reduction
-      // (preservesPartitioning = false: the output re-keys from b to a, so
-      // the reduceByKey below must plant its real shuffle)
-      val msgs = edgesR.zipPartitions(labels, preservesPartitioning = false) {
-          (itE, itL) =>
-            val lab = lookupOf(itL)
-            itE.map { case (b, a) => (a, lab(b)) }
-        }
-        .reduceByKey(part, minL)
-      // labels holds every paired id; msgs keys are unique post-reduce —
-      // the left-outer min fold is a plain map lookup
-      val prop = labels.zipPartitions(msgs, preservesPartitioning = true) {
-        (itL, itM) =>
-          val m = lookupOf(itM)
-          itL.map { case (i, c) => (i, math.min(c, m.getOrElse(i, c))) }
-      }
-      // ...then pointer-jump (label <- label of label) twice: path
-      // compression makes convergence logarithmic in component diameter;
-      // two jumps per materialized round squares the compression again so
-      // the count of driver-synchronous rounds (the real cost) halves.
-      // Each jump shuffles only compact (long, long) pairs: once to key by
-      // cluster for the parent lookup (the lookup itself is narrow), once
-      // to bring the jumped labels back to their node's partition. Every
-      // label IS some node's code, so rel(c) always hits; rel has one
-      // record per node, so the jumped keys are already unique and the
-      // return re-keying is a plain partitionBy (the old reduceByKey's
-      // min fold never fired — map-side combine on unique keys built a
-      // per-partition hash map for nothing).
-      def jump(rel: RDD[(Long, Long)]): RDD[(Long, Long)] = {
-        // NOTE preservesPartitioning = false on the lookup stage: its
-        // output re-keys from c to i, so the following partitionBy must
-        // see "unknown partitioner" and do the real shuffle back to i
-        val jumped = rel.map { case (i, c) => (c, i) }
-          .partitionBy(part)
-          .zipPartitions(rel, preservesPartitioning = false) { (itJ, itR) =>
-            val m = lookupOf(itR)
-            itJ.map { case (c, i) => (i, m(c)) }
-          }
-          .partitionBy(part)
-        rel.zipPartitions(jumped, preservesPartitioning = true) { (itR, itJ) =>
-          val m = lookupOf(itJ)
-          itR.map { case (i, c) => (i, math.min(c, m.getOrElse(i, c))) }
-        }
-      }
-      // Convergence detection rides the round's one materialization job:
-      // the old label zips in (narrow), a mapPartitions bumps an
-      // accumulator per improved row — no separate count() job runs. A
-      // resubmitted task can at worst over-count (never report 0 when
-      // labels moved), which only risks one extra cheap round.
-      chgAcc.reset()
-      val flagged = jump(jump(prop))
-        .zipPartitions(labels, preservesPartitioning = true) { (itN, itL) =>
-          val old = lookupOf(itL)
-          itN.map { case (i, nc) =>
-            if (nc < old(i)) chgAcc.add(1L)
-            (i, nc)
-          }
-        }
-      // one driver-synchronous job per round, labeled for Profiler's
-      // per-op breakdown (graft:cc-round vs the composed query's action).
-      // persist BEFORE checkpoint: the checkpoint writer's second pass
-      // then reads the cache instead of recomputing (which would also
-      // double-fire the convergence accumulator).
-      val next = graft.Profiler.attributed(spark, "cc-round") {
-        flagged.persist(StorageLevel.MEMORY_AND_DISK_SER)
-        if (checkpointDir.isDefined) flagged.checkpoint()
-        flagged.count()
-        flagged
-      }
-      changed = chgAcc.value
-      iter += 1
-      labels.unpersist(blocking = true) // prior round's blocks
-      labels = next
+        StructType(Seq(field, StructField("code", LongType, nullable = false)))))
+      def code(c: String) = dict.select(col("id").as(c), col("code").as(s"${c}_code"))
+      // the inner joins drop every edge with a non-node endpoint
+      val (labels, rounds) = components(spark, dict.select("code").rdd.map(_.getLong(0)),
+        longPairs(ends.join(code("a"), Seq("a")).join(code("b"), Seq("b"))
+          .select("a_code", "b_code")),
+        maxIters, checkpointDir.isDefined)
+      val coded = spark.createDataFrame(rows(labels), StructType(Seq(
+        StructField("code", LongType, nullable = false),
+        StructField("ccode", LongType, nullable = false))))
+      (coded.join(dict, Seq("code"))
+        .join(dict.select(col("code").as("ccode"), col("id").as("cluster")), Seq("ccode"))
+        .select(col("id"), col("cluster")), rounds)
     }
-    edgesR.unpersist(blocking = false)
-    // fail loudly rather than silently return non-converged labels (a
-    // wrong keep-one-per-cluster decision would keep duplicates)
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxIters rounds")
-    // decode back to the caller's id type — an array lookup over the
-    // broadcast driver dict at P == 1, two small dict joins otherwise;
-    // singletons rejoin with self-labels. The returned relation reads the
-    // final round's blocks + the cached node relations — they live until
-    // the caller's CacheScope.release().
-    CacheScope.registerRdd(labels)
-    val decoded =
-      if (localIds != null) {
-        val bcIds = spark.sparkContext.broadcast(localIds)
-        spark.createDataFrame(
-          labels.map { case (i, c) =>
-            Row(bcIds.value(i.toInt), bcIds.value(c.toInt)) },
-          StructType(Seq(idField,
-            StructField("cluster", idField.dataType, idField.nullable))))
-      } else {
-        val labDf = spark.createDataFrame(
-          labels.map { case (i, c) => Row(i, c) },
-          StructType(Seq(StructField("code", LongType, nullable = false),
-            StructField("ccode", LongType, nullable = false))))
-        labDf
-          .join(dict, Seq("code"))
-          .join(dict.select(col("code").as("ccode"), col("id").as("cluster")), Seq("ccode"))
-          .select(col("id"), col("cluster"))
-      }
-    val singletons = nodeIds.join(paired, Seq("id"), "left_anti")
-      .withColumn("cluster", col("id"))
-    (decoded.unionByName(singletons), iter)
   }
 
-  /** Long accumulator with MAX merge semantics: deterministic per-task
-    * values survive task retries/speculation un-inflated (see the CC
-    * local loop's round count).
+  // record kinds of the step that groups local roots per node
+  private val Link = 0  // (local root, smallest local root of a shared node)
+  private val Label = 1 // (node, final label)
+  private val Ask = 2   // (smallest local root, node): label = that root's centre
+
+  /** [[connectedComponents]]' two steps over long ids: the persisted
+    * (node, label) pair of every distinct node, and the round count
     */
-  private final class MaxAccumulator
-      extends org.apache.spark.util.AccumulatorV2[Long, Long] {
-    private var _v = 0L
-    override def isZero: Boolean = _v == 0L
-    override def copy(): MaxAccumulator = {
-      val c = new MaxAccumulator; c._v = _v; c }
-    override def reset(): Unit = _v = 0L
-    override def add(v: Long): Unit = if (v > _v) _v = v
-    override def merge(o: org.apache.spark.util.AccumulatorV2[Long, Long]): Unit =
-      if (o.value > _v) _v = o.value
-    override def value: Long = _v
+  private def components(spark: SparkSession, nodes: RDD[Long],
+      pairs: RDD[(Long, Long)], maxIters: Int,
+      checkpoint: Boolean): (RDD[(Long, Long)], Int) = {
+    val sc = spark.sparkContext
+    val level = StorageLevel.MEMORY_AND_DISK_SER
+    // read by the foreign-id shuffle and by step 1: the caller's pair
+    // plan runs once
+    val edges = (if (pairs.getNumPartitions > 0) pairs
+                 else sc.parallelize(Seq.empty[(Long, Long)], 1)).persist(level)
+    val nIn = edges.getNumPartitions
+    // the loop follows the inputs' own partitioning, capped at the
+    // session's shuffle width: inputs that arrive in one partition are
+    // small enough for one task
+    val part = new HashPartitioner(math.max(1, math.min(
+      spark.sessionState.conf.numShufflePartitions,
+      math.max(nIn, nodes.getNumPartitions))))
+    val nodeSet = nodes.map(x => (x, true)).partitionBy(part)
+    val foreign = nodeSet.zipPartitions(
+        edges.mapPartitionsWithIndex { (p, it) =>
+          val seen = new mutable.LongMap[Boolean]()
+          it.flatMap { case (a, b) => Iterator(a, b) }
+            .filter(x => seen.put(x, true).isEmpty).map(x => (x, p))
+        }.partitionBy(part)) { (itN, itE) =>
+        val known = new mutable.LongMap[Boolean]()
+        itN.foreach { case (x, _) => known.update(x, true) }
+        itE.collect { case (x, p) if !known.contains(x) => (p, x) }
+      }
+      .partitionBy(new HashPartitioner(nIn)) // Int key p lands on partition p
+    // step 1
+    val local = edges.zipPartitions(foreign) { (itE, itF) =>
+      val drop = new mutable.LongMap[Boolean]()
+      itF.foreach { case (_, x) => drop.update(x, true) }
+      val uf = new MinUnionFind
+      itE.foreach { case (a, b) =>
+        if (!drop.contains(a) && !drop.contains(b)) uf.union(a, b) }
+      uf.trees
+    }
+    val settled = nIn == 1 // step 1 saw the whole graph
+    val grouped = nodeSet.zipPartitions(local.partitionBy(part)) { (itN, itL) =>
+      val seen = mutable.ArrayBuffer.empty[(Long, Long)]
+      val low = new mutable.LongMap[Long]()
+      itL.foreach { case (x, r) =>
+        seen += ((x, r))
+        if (r < low.getOrElse(x, Long.MaxValue)) low.update(x, r)
+      }
+      val links = seen.iterator.collect { case (x, r) if r != low(x) => (Link, r, low(x)) }
+      val done = new mutable.LongMap[Boolean]()
+      links ++ itN.collect { case (x, _) if done.put(x, true).isEmpty =>
+        low.get(x) match {
+          case None => (Label, x, x)
+          case Some(r) => if (settled) (Label, x, r) else (Ask, r, x)
+        }
+      }
+    }
+    def materialize[T](rdd: RDD[T]): RDD[T] =
+      graft.Profiler.attributed(spark, "cc-round") {
+        rdd.persist(level)
+        if (checkpoint) rdd.checkpoint() // after persist: the writer reads the cache
+        rdd.count()
+        rdd
+      }
+
+    // step 2: each round's accumulator counts the nodes of its INPUT that
+    // are not yet a leaf of their component's star or its centre
+    val unsettled = sc.longAccumulator("ccUnsettled")
+    if (!settled) grouped.persist(level)
+    var g: RDD[(Long, Long)] = grouped.flatMap { case (k, u, v) =>
+      if (k == Link) Iterator.single((u, v)) else Iterator.empty }
+    var rounds = 0
+    var open = !settled
+    while (open) {
+      if (rounds == maxIters)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge within $maxIters rounds")
+      unsettled.reset()
+      val prev = g
+      g = materialize(g.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
+        .partitionBy(part)
+        .mapPartitions { it =>
+          val uf = new MinUnionFind
+          val lo = new mutable.LongMap[Long]()
+          val hi = new mutable.LongMap[Long]()
+          it.foreach { case (x, y) => // x is a node of this partition
+            uf.union(x, y)
+            if (y < lo.getOrElse(x, Long.MaxValue)) lo.update(x, y)
+            if (y > hi.getOrElse(x, Long.MinValue)) hi.update(x, y)
+          }
+          lo.foreach { case (x, l) => if (l < x && hi(x) != l) unsettled.add(1L) }
+          uf.trees.filter { case (x, r) => x != r }
+        })
+      if (rounds > 0) prev.unpersist(blocking = false)
+      open = unsettled.value > 0
+      rounds += 1
+    }
+
+    val labels = materialize(
+      if (settled) grouped.map { case (_, x, c) => (x, c) }
+      else grouped.flatMap { case (k, x, c) =>
+          if (k == Label) Iterator.single((x, c)) else Iterator.empty }
+        .union(grouped
+          .flatMap { case (k, r, x) => if (k == Ask) Iterator.single((r, x)) else Iterator.empty }
+          .partitionBy(part)
+          .zipPartitions(g.partitionBy(part)) { (itA, itC) =>
+            val centre = new mutable.LongMap[Long]()
+            itC.foreach { case (x, c) => centre.update(x, c) }
+            itA.map { case (r, x) => (x, centre.getOrElse(r, r)) }
+          }))
+    Seq(edges, grouped, g).foreach(_.unpersist(blocking = false))
+    CacheScope.registerRdd(labels)
+    (labels, rounds)
+  }
+
+  /** Union-find over long ids whose every root is the smallest id of its
+    * set (a union hangs the larger root under the smaller one)
+    */
+  private final class MinUnionFind {
+    private val parent = new mutable.LongMap[Long]()
+    private def find(x0: Long): Long = {
+      var x = x0
+      var p = parent(x)
+      while (p != x) {
+        val gp = parent(p)
+        parent.update(x, gp) // path halving
+        x = gp
+        p = parent(x)
+      }
+      x
+    }
+    def union(a: Long, b: Long): Unit = {
+      if (!parent.contains(a)) parent.update(a, a)
+      if (!parent.contains(b)) parent.update(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent.update(rb, ra) else if (rb < ra) parent.update(ra, rb)
+    }
+    /** (id, root) for every id seen, roots included */
+    def trees: Iterator[(Long, Long)] = {
+      val ids = parent.keys.toArray
+      ids.iterator.map(x => (x, find(x)))
+    }
   }
 
   /** MinHash hash model: ONE strong hash per shingle, k cheap universal

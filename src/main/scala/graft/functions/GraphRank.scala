@@ -24,8 +24,7 @@ import graft.CacheScope
   * 100 TB, reproducible curation decisions are the difference between an
   * auditable corpus and one that changes under re-execution.
   *
-  * Scale shape (mirrors the connected-components loop in
-  * [[graft.functions.Dedup]]): compact (long, long) pair RDDs under ONE
+  * Scale shape: compact (long, long) pair RDDs under ONE
   * HashPartitioner for the whole loop, so the per-round rank lookup join
   * is narrow and the main shuffle per PageRank round is the map-side-
   * combined contribution reduction. Rounds are fixed-count (no convergence
@@ -36,11 +35,10 @@ import graft.CacheScope
   */
 object GraphRank {
 
-  /** Edge bound for the P == 1 partition-local fast paths of PageRank,
-    * HITS and [[Dedup.connectedComponents]]: one task holds the whole edge
-    * array, so the node-count partitioner sizing alone must not imply the
-    * heap bound. Past it the distributed loop runs (same recurrence, same
-    * bits).
+  /** Edge bound for the P == 1 partition-local fast paths of PageRank
+    * and HITS: one task holds the whole edge array, so the node-count
+    * partitioner sizing alone must not imply the heap bound. Past it the
+    * distributed loop runs (same recurrence, same bits).
     *
     * Why both loops stay: measured on 4 cores at sf0.1, min of 3 reps,
     * with the distributed loop forced at P == 1, the fast path is still
@@ -50,8 +48,6 @@ object GraphRank {
     *   graph_pagerank        2.59            4.15
     *   graph_ppr             2.67            3.99
     *   graph_hits            2.49            5.22
-    *   sim_knn_clusters      5.12            6.72
-    *   dedup_clusters        3.12            3.45
     *   graph_report          5.33            5.05 (flat)
     * }}}
     * The fast paths can go once the distributed loop is cheap at small P.
@@ -188,8 +184,10 @@ object GraphRank {
     })
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
-    // out-WEIGHT per node (plain out-degree when unweighted)
-    val deg = e.groupBy(col("src").as("id")).agg(sum(col("w")).as("outdeg"))
+    // out-WEIGHT per node (plain out-degree when unweighted) and the
+    // number of out-edges, whose sum sizes the fast path below
+    val deg = e.groupBy(col("src").as("id"))
+      .agg(sum(col("w")).as("outdeg"), count(lit(1)).as("nout"))
     val seedFlag = seedsOpt match {
       case None => nodes.select(col("id"), lit(true).as("seed"))
       case Some(sd) =>
@@ -200,16 +198,19 @@ object GraphRank {
           .select(col("id"), coalesce(col("seed"), lit(false)).as("seed"))
     }
     val nodeDeg = seedFlag.join(deg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"), col("seed"))
+      .select(col("id"), coalesce(col("outdeg"), lit(0L)).as("outdeg"), col("seed"),
+        coalesce(col("nout"), lit(0L)).as("nout"))
 
     // one partitioner for the whole loop, sized to the graph (not the
     // session default): every round is a driver-synchronous stage chain,
     // and scheduling empty partitions is pure latency on small graphs
-    val degPairs: RDD[(Long, (Long, Boolean))] = nodeDeg.rdd
+    val degRows = nodeDeg.rdd
+    val degPairs: RDD[(Long, (Long, Boolean))] = degRows
       .map(r => (r.getLong(0), (r.getLong(1), r.getBoolean(2))))
-    val counts = degPairs.map { case (_, (_, s)) => (1L, if (s) 1L else 0L) }
-      .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-    val (n, nSeeds) = counts
+    // (nodes, seeds, edges) in one job
+    val (n, nSeeds, nEdges) = degRows
+      .map(r => (1L, if (r.getBoolean(2)) 1L else 0L, r.getLong(3)))
+      .fold((0L, 0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
     require(n > 0, "pageRank over an empty edge relation")
     require(nSeeds > 0, "personalizedPageRank: no seed id appears in the graph")
     val part = new HashPartitioner(math.max(1,
@@ -253,12 +254,11 @@ object GraphRank {
     // ranks land bit-identical — the oracle gates and the recurrence-
     // replay specs verify exactly that. At P > 1 the loop below is
     // untouched.
-    // defensive edge-count gate (shared with the CC loop's): P == 1 bounds
-    // NODES at 50k, but a dense graph could hold O(n²) edges — past the
-    // bound the distributed loop runs (same recurrence, same bits). The
-    // count materializes edgesR's persist, which the loop reads anyway.
-    val localLoop = part.numPartitions == 1 &&
-      edgesR.count() <= localEdgeLimit
+    // defensive edge-count gate: P == 1 bounds NODES at 50k, but a dense
+    // graph could hold O(n²) edges — past the bound the distributed loop
+    // runs (same recurrence, same bits). The edge count rides the node
+    // fold above, so the gate runs no job of its own.
+    val localLoop = part.numPartitions == 1 && nEdges <= localEdgeLimit
     if (localLoop) {
       val itersL = iters
       ranks = degR.zipPartitions(edgesR, preservesPartitioning = true) { (itD, itE) =>

@@ -160,9 +160,21 @@ object TfIdf {
         .hint("shuffle_hash"), Seq("t"))
       .filter(col("ai") < col("bi"))
       .groupBy(col("ai"), col("bi")).agg(sum(col("wa") * col("wb")).as("dot"))
+    // the norms joins build on the norms side, always: left to AQE, the
+    // build side followed whichever input stage finished first, and each
+    // new plan variant recompiled its generated classes. Norms that fit
+    // the session's broadcast threshold (at most one 24-byte row per
+    // indexed doc) broadcast, so the pair relation never shuffles for
+    // them; larger ones build the hash side of shuffled joins.
+    val normsFit = idx.nDocs * 24L <=
+      idx.terms.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    def normsAs(id: String, nrm: String): DataFrame = {
+      val n = norms.select(col("id").as(id), col("nrm").as(nrm))
+      if (normsFit) broadcast(n) else n.hint("shuffle_hash")
+    }
     val sims = dots
-      .join(norms.select(col("id").as("ai"), col("nrm").as("na")), Seq("ai"))
-      .join(norms.select(col("id").as("bi"), col("nrm").as("nb")), Seq("bi"))
+      .join(normsAs("ai", "na"), Seq("ai"))
+      .join(normsAs("bi", "nb"), Seq("bi"))
       .select(col("ai"), col("bi"),
         round(col("dot") / (col("na") * col("nb")), 6).as("score"))
     val mirrored = sims.select(col("ai").as("qid"), col("bi").as("id"), col("score"))

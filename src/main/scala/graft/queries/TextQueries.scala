@@ -574,7 +574,7 @@ object TextQueries {
     // Expand pass over a per-doc relation that joins the LSH+CC near-dup
     // verdict (dup = doc is not its own cluster label). Sums are exact
     // (longs; DECIMAL for the rounded ratios) so every rollup level is
-    // bit-stable; the CC piece reuses the library's pointer-jump
+    // bit-stable; the CC piece reuses the library's connected
     // components, never a second pass over text.
     "txt_corpus_report" -> ((s, dir) => {
       val d = docs(s, dir)

@@ -99,25 +99,37 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents round count is logarithmic in chain diameter") {
-    // adversarial envelope pin: a PATH of 4^7 = 16384 nodes (diameter
-    // 16383, nothing for the duplicate-subgraph prune to drop). With one
-    // edge-hop propagation + two pointer jumps per round, resolved label
-    // distance grows ~4x per round, so convergence must land near
-    // log4(diameter) = 7 rounds (+1 confirming round) — far under the
-    // ~16k a propagate-only loop would need, and within default maxIters.
+    // adversarial envelope pin: a PATH of 2^14 = 16384 nodes whose edge
+    // (a, a + 1) sits in input partition a % 8, so no two neighbouring
+    // edges share a partition and step 1's union-find merges nothing:
+    // the whole path (diameter 16383) is the contracted remainder, and
+    // every round runs on it. At the spec session's 4 loop partitions
+    // such a path settles in 4 rounds for d from 1023 to 131071 (6 with
+    // shuffled ids), the bound connectedComponentsWithStats states — far
+    // under the ~16k a propagate-only loop would need.
     val n = 16384L
+    val edges = spark.sparkContext.parallelize(0 until 8, 8)
+      .flatMap(p => (p.toLong until n - 1 by 8).map(a => (a, a + 1)))
     val (labels, rounds) = Dedup.connectedComponentsWithStats(
-      spark.range(0, n).toDF("id"),
-      spark.range(0, n - 1).select(
-        org.apache.spark.sql.functions.col("id").as("a"),
-        (org.apache.spark.sql.functions.col("id") + 1).as("b")),
-      "id")
+      spark.range(0, n).toDF("id"), edges.toDF("a", "b"), "id")
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
     CacheScope.release()
     assert(got.length == n && got.forall(_._2 == 0L))
-    assert(rounds <= 10, s"expected ~log4($n)+1 rounds, got $rounds")
-    assert(rounds >= 6, s"a $n-node path cannot resolve in $rounds rounds " +
+    assert(rounds <= 6, s"a path at 4 loop partitions settles in at most 6 rounds, got $rounds")
+    assert(rounds >= 3, s"a $n-node path cannot settle in $rounds rounds " +
       "— the round counter is broken")
+  }
+
+  test("connectedComponents: a graph in one input partition is finished by step 1") {
+    // one partition of edges: the partition-local union-find sees the whole
+    // graph, so no contraction round runs
+    val chain = spark.sparkContext.parallelize((0L until 99L).map(i => (i, i + 1)), 1)
+    val (labels, rounds) = Dedup.connectedComponentsWithStats(
+      (0L until 120L).toDF("doc_id"), chain.toDF("a", "b"), "doc_id")
+    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    CacheScope.release()
+    assert(rounds == 0)
+    assert(got == (0L until 120L).map(i => i -> (if (i < 100) 0L else i)).toMap)
   }
 
   test("connectedComponents labels exactly the given nodes; foreign edges drop") {
@@ -153,24 +165,6 @@ class DedupSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 7L -> 1L, 8L -> 8L))
   }
 
-  test("edge-count gate: past maxLocalEdges the distributed loop runs — identical labels AND rounds") {
-    val nodes = (0L until 60L).toDF("doc_id")
-    val chain = (0L until 59L).map(i => (i, i + 1)).toDF("a", "b")
-    def run(localEdgeLimit: Long): (Map[Long, Long], Int) = {
-      val (df, rounds) = Dedup.ccWithStats(nodes, chain, "doc_id", 20, None,
-        localEdgeLimit)
-      val m = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      CacheScope.release()
-      (m, rounds)
-    }
-    val (mLocal, rLocal) = run(graft.functions.GraphRank.maxLocalEdges) // P==1 local loop
-    val (mDist, rDist) = run(0L) // force the distributed loop at P==1
-    assert(mLocal == mDist, "gate changed the labels")
-    assert(rLocal == rDist, "gate changed the round count — the local " +
-      "loop no longer replays the distributed recurrence")
-    assert(mLocal.size == 60 && mLocal.values.forall(_ == 0L))
-  }
-
   test("connectedComponents with a reliable checkpoint dir: same labels, checkpoint files written") {
     // the cluster-safe mode VERDICT asked for: per-round lineage truncation
     // goes through sc.checkpoint (survives executor loss), not local blocks
@@ -186,6 +180,104 @@ class DedupSpec extends SparkSpec {
         if (f.isDirectory) files(f) else Iterator.single(f))
     assert(files(new java.io.File(dir)).nonEmpty,
       "reliable checkpoint mode must actually write to the checkpoint dir")
+  }
+
+  /** a random graph over ids 0..nNodes-1 with edges reaching past them
+    * (foreign), self-loops, duplicated and mirrored edges
+    */
+  private def randomGraph(seed: Long, nNodes: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val base = Seq.fill(nNodes * 3 / 4)(
+      (rnd.nextInt(nNodes).toLong, rnd.nextInt(nNodes + nNodes / 10).toLong))
+    val chain = (0L until 20L).map(i => (100L + i, 101L + i)) // one long component
+    val loops = Seq.fill(5)(rnd.nextInt(nNodes).toLong).map(x => (x, x))
+    val edges = base ++ chain ++ loops
+    rnd.shuffle(edges ++ edges.take(15) ++ edges.takeRight(15).map(_.swap))
+  }
+
+  /** driver-side union-find oracle: smallest id (under `lt`) per component
+    * of the edges whose both endpoints are nodes
+    */
+  private def oracle[T](nodes: Seq[T], edges: Seq[(T, T)], lt: (T, T) => Boolean): Map[T, T] = {
+    val idx = nodes.zipWithIndex.toMap
+    val parent = Array.tabulate(nodes.size)(identity)
+    def find(i: Int): Int = if (parent(i) == i) i else { parent(i) = find(parent(i)); parent(i) }
+    edges.foreach { case (a, b) =>
+      for (i <- idx.get(a); j <- idx.get(b)) parent(find(i)) = find(j) }
+    val low = nodes.groupBy(x => find(idx(x))).map { case (r, xs) =>
+      r -> xs.reduce((x, y) => if (lt(y, x)) y else x) }
+    nodes.map(x => x -> low(find(idx(x)))).toMap
+  }
+
+  test("connectedComponents labels do not depend on the input partitioning (1, 3 and 8 partitions)") {
+    val nodes = 0L until 400L
+    val edges = randomGraph(7L, 400)
+    val want = oracle[Long](nodes, edges, _ < _)
+    val runs = Seq(1, 3, 8).map { p =>
+      val (df, rounds) = Dedup.connectedComponentsWithStats(nodes.toDF("doc_id"),
+        spark.sparkContext.parallelize(edges, p).toDF("a", "b"), "doc_id")
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      CacheScope.release()
+      assert(got == want, s"$p input partitions: labels differ from the union-find oracle")
+      (p, rounds)
+    }
+    assert(runs.head._2 == 0, s"one input partition must need no round: $runs")
+    assert(runs.tail.forall(_._2 >= 1), s"a split graph must run rounds: $runs")
+  }
+
+  test("connectedComponents matches a driver union-find on random graphs: long, string and binary ids") {
+    import org.apache.spark.sql.types._
+    // Spark orders strings by UTF-8 bytes and binary by unsigned bytes;
+    // these ids are chosen so that Java's String.compareTo and signed byte
+    // order disagree with it
+    val utf8 = (s: String) => s.getBytes("UTF-8")
+    def unsignedLt(x: Array[Byte], y: Array[Byte]): Boolean = {
+      val n = math.min(x.length, y.length)
+      var i = 0
+      while (i < n && x(i) == y(i)) i += 1
+      if (i < n) (x(i) & 0xff) < (y(i) & 0xff) else x.length < y.length
+    }
+    val str = (i: Long) => (if (i % 3 == 0) "\uFFFF" else "\uD83D\uDE00") + f"$i%05d"
+    val bin = (i: Long) => Array(((i * 37) % 256).toByte, (i % 7).toByte)
+    for (seed <- 1L to 3L) {
+      val nodes = (0L until 150L).filter(_ % 11 != 5) // holes: their edges are foreign
+      val edges = randomGraph(seed, 150)
+
+      val wantL = oracle[Long](nodes, edges, _ < _)
+      val gotL = Dedup.connectedComponents(nodes.toDF("doc_id"),
+        spark.sparkContext.parallelize(edges, 4).toDF("a", "b"), "doc_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      CacheScope.release()
+      assert(gotL == wantL, s"long ids, seed $seed")
+
+      val wantS = oracle[String](nodes.map(str), edges.map { case (a, b) => (str(a), str(b)) },
+        (x, y) => unsignedLt(utf8(x), utf8(y)))
+      assert(wantS != oracle[String](nodes.map(str),
+        edges.map { case (a, b) => (str(a), str(b)) }, _.compareTo(_) < 0),
+        "the string case must tell Spark's order from String.compareTo")
+      val gotS = Dedup.connectedComponents(nodes.map(str).toDF("doc_id"),
+        spark.sparkContext.parallelize(edges.map { case (a, b) => (str(a), str(b)) }, 4)
+          .toDF("a", "b"), "doc_id")
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      CacheScope.release()
+      assert(gotS == wantS, s"string ids, seed $seed")
+
+      val key = (x: Array[Byte]) => x.toSeq
+      val wantB = oracle[Seq[Byte]](nodes.map(i => key(bin(i))),
+        edges.map { case (a, b) => (key(bin(a)), key(bin(b))) },
+        (x, y) => unsignedLt(x.toArray, y.toArray))
+      val binSchema = StructType(Seq(StructField("a", BinaryType), StructField("b", BinaryType)))
+      val gotB = Dedup.connectedComponents(
+        spark.createDataFrame(spark.sparkContext.parallelize(nodes.map(i =>
+          org.apache.spark.sql.Row(bin(i))), 3),
+          StructType(Seq(StructField("doc_id", BinaryType)))),
+        spark.createDataFrame(spark.sparkContext.parallelize(edges.map { case (a, b) =>
+          org.apache.spark.sql.Row(bin(a), bin(b)) }, 4), binSchema),
+        "doc_id")
+        .collect().map(r => key(r.getAs[Array[Byte]](0)) -> key(r.getAs[Array[Byte]](1))).toMap
+      CacheScope.release()
+      assert(gotB == wantB, s"binary ids, seed $seed")
+    }
   }
 
   test("winnowPairs: a shared run of w+k-1 tokens guarantees a shared fingerprint") {

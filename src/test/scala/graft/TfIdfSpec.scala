@@ -160,6 +160,29 @@ class TfIdfSpec extends SparkSpec {
     assert(got == Seq((1L, 1L, both), (2L, 2L, both), (3L, 3L, one), (4L, 4L, one)))
   }
 
+  test("a repeated topKNeighbors on one input compiles no generated class") {
+    // the norms joins have a fixed strategy and build side, so a repeat on
+    // the same input meets the same plan and is served from the codegen
+    // cache; a join side left to AQE flipped between runs and recompiled
+    val rnd = new java.util.Random(5)
+    val docs = (0 until 40).map(i =>
+      (i.toLong, Seq.fill(20)(s"w${rnd.nextInt(60)}").mkString(" ")))
+    def run(): Seq[(Long, Long)] = {
+      val df = spark.sparkContext.parallelize(docs, 1).toDF("doc", "text")
+      val got = TfIdf.topKNeighbors(df, "doc", "text", 3)
+        .select("doc", "id").as[(Long, Long)].collect().toSeq.sorted
+      CacheScope.release(blocking = true)
+      got
+    }
+    val want = run()
+    val compiles = (1 to 6).map { _ =>
+      val (got, prof) = Profiler.profile(spark)(run())
+      assert(got == want)
+      prof.codegenCompiles
+    }
+    assert(compiles.forall(_ == 0L), s"repeats compiled $compiles generated classes")
+  }
+
   test("k bounds the neighbor list with smaller-id tie-break") {
     // three identical docs (plus one outlier so idf > 0): every pair among
     // 1-3 scores 1.0, k=2 keeps the two smallest neighbor ids; the
