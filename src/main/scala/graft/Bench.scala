@@ -122,86 +122,68 @@ object Bench {
     *    through the keyframe index (decode counts pinned by spec; this
     *    times it).
     */
-  /** idempotent fleet-scale WARC fixture for bt_warc_wet: 48 member-gzip
-    * files x 400 deterministic HTML response records (~15 MB of markup);
-    * built once, so timed reps pay only the parse + extract
+  /** fleet-scale WARC fixture for bt_warc_wet: 48 member-gzip files x
+    * 400 deterministic HTML response records (~15 MB of markup), so timed
+    * reps pay only the parse + extract
     */
   private def ensureWarcFleet(): String = {
     import java.nio.charset.StandardCharsets.UTF_8
-    val root = sys.props("java.io.tmpdir") + "/graft-warc-fleet"
-    val dirP = java.nio.file.Paths.get(root)
-    val marker = dirP.resolve("_SUCCESS")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(dirP)
-      for (f <- 0 until 48) {
-        val out = java.nio.file.Files.newOutputStream(
-          dirP.resolve(f"crawl-$f%03d.warc.gz"))
-        try {
-          val recs = (0 until 400).map { i =>
-            val words = (0 until 40)
-              .map(w => s"w${(f * 7919 + i * 131 + w * 17) % 9973}").mkString(" ")
-            val body = s"<html><head><title>P $f-$i</title><style>a{x:y}</style>" +
-              s"</head><body><script>var x=$i;</script><h1>H$i</h1>" +
-              s"<p>$words &amp; tail</p><p>$words</p></body></html>"
-            sources.Warc.WriteRecord("response", f"urn:uuid:$f%04d-$i%08d",
-              Some(s"https://example.org/$f/$i"), "2024-03-01T00:00:00Z",
-              body.getBytes(UTF_8), httpResponse = true)
-          }
-          sources.Warc.writeGz(out, recs)
-        } finally out.close()
+    def file(f: Int): Array[Byte] = {
+      val recs = (0 until 400).map { i =>
+        val words = (0 until 40)
+          .map(w => s"w${(f * 7919 + i * 131 + w * 17) % 9973}").mkString(" ")
+        val body = s"<html><head><title>P $f-$i</title><style>a{x:y}</style>" +
+          s"</head><body><script>var x=$i;</script><h1>H$i</h1>" +
+          s"<p>$words &amp; tail</p><p>$words</p></body></html>"
+        sources.Warc.WriteRecord("response", f"urn:uuid:$f%04d-$i%08d",
+          Some(s"https://example.org/$f/$i"), "2024-03-01T00:00:00Z",
+          body.getBytes(UTF_8), httpResponse = true)
       }
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
+      val out = new java.io.ByteArrayOutputStream()
+      sources.Warc.writeGz(out, recs)
+      out.toByteArray
     }
-    root
+    queries.Fixtures.dir("warc-fleet", Seq(48, file(0))) { d =>
+      for (f <- 0 until 48)
+        java.nio.file.Files.write(java.nio.file.Paths.get(d, f"crawl-$f%03d.warc.gz"), file(f))
+    }
   }
 
   /** pipe-bridge element count (keeps the historical 100k row comparable
     * across rounds) */
   private val PkElems = 100000L
 
-  /** build-once video fixture store for the bt decode rows: under
-    * target/ (NOT java.io.tmpdir) so a fresh-/tmp driver run doesn't
-    * re-pay the 10k-frame + VGA/HD encodes before a single timed rep —
-    * the same persistence argument as the sf1 tier (VERDICT r11 ask 6)
-    */
-  private def videoFixtureRoot: String =
-    new java.io.File("target/bench-fixtures/video").getAbsolutePath
+  /** the bt_* decode rows' video stores, one stream of synthetic frames
+    * each: store -> (frames, height, width, channels, GOP size, codec) */
+  private val BtStores: Map[String, (Int, Int, Int, Int, Int, sources.GopCodec)] = Map(
+    "bt10k" -> ((10000, 16, 24, 3, 100, sources.FakeVideoCodec)),
+    "btdz10k" -> ((10000, 16, 24, 3, 100, sources.DeflateVideoCodec)),
+    "btvga" -> ((512, 480, 640, 1, 16, sources.H264GopCodec.Default)),
+    "bthd" -> ((2048, 720, 1280, 1, 16, sources.H264GopCodec.Default)))
 
-  /** The untimed fixture step, run once before the board with no
-    * watchdog: every file fixture and video store a selected bt_* row
-    * reads is built here (when not yet present), so no warmup or timed
-    * execution encodes anything. The video stores persist under target/;
-    * the HD store encodes DISTRIBUTED — its 1.9 GB of raw frames never
-    * sit on the driver.
+  /** the fixture dir holding bt_* store `name`; the encode is distributed,
+    * so the HD store's 1.9 GB of raw frames never sit on the driver */
+  private def btStore(s: SparkSession, name: String): String = {
+    val (n, h, w, c, gop, codec) = BtStores(name)
+    queries.Fixtures.dir(s"bench-$name", queries.Fixtures.storeKey(n, gop)(
+        operators.StdKernels.syntheticFrame(0L, 0L, h, w, c), codec)) { d =>
+      import s.implicits._
+      sources.VideoStore.ingest(s.range(0, n, 1, 32)
+        .map(i => operators.StdKernels.syntheticFrame(0L, i, h, w, c)), d, name,
+        gopSize = gop, codec = codec)
+    }
+  }
+
+  /** The untimed fixture step, run once before the board: every fixture
+    * a selected bt_* row reads is resolved here, outside the watchdog,
+    * so no warmup or timed execution encodes anything.
     */
   private def ensureFixtures(s: SparkSession, rows: Set[String]): Unit = {
     if (rows("bt_warc_wet")) ensureWarcFleet()
     if (rows("bt_h264_index")) queries.VideoQueries.ensureH264Fleet()
-    import s.implicits._
-    import sources.{DeflateVideoCodec, H264GopCodec, VideoStore}
-    import graft.model.CacheMode.Ignore
-    val root = videoFixtureRoot
-    def tiny = (0 until 10000).map(i =>
-      operators.StdKernels.syntheticFrame(0L, i.toLong, 16, 24, 3)).toDS()
-    val stores: Seq[(String, String, () => Unit)] = Seq(
-      ("bt_sparse_decode", "bt10k", () =>
-        VideoStore.ingest(tiny, root, "bt10k", gopSize = 100, Ignore)),
-      ("bt_deflate_decode", "btdz10k", () =>
-        VideoStore.ingest(tiny, root, "btdz10k", gopSize = 100, Ignore,
-          codec = DeflateVideoCodec)),
-      ("bt_h264_decode_vga", "btvga", () =>
-        VideoStore.ingest((0 until 512).map(i => operators.StdKernels
-          .syntheticFrame(0L, i.toLong, 480, 640, 1)).toDS(), root, "btvga",
-          gopSize = 16, Ignore, codec = H264GopCodec.Default)),
-      ("bt_h264_decode_hd", "bthd", () =>
-        VideoStore.ingest(s.range(0, 2048, 1, 32).map(i => operators.StdKernels
-          .syntheticFrame(0L, i, 720, 1280, 1)), root, "bthd",
-          gopSize = 16, Ignore, codec = H264GopCodec.Default)))
-    for ((row, store, build) <- stores
-         if rows(row) && !sources.NamedStorage.committed(s, root, store)) {
-      System.err.println(s"[bench] encoding fixture $store for $row")
-      build()
-    }
+    Seq("bt_sparse_decode" -> "bt10k", "bt_deflate_decode" -> "btdz10k",
+        "bt_h264_decode_vga" -> "btvga", "bt_h264_decode_hd" -> "bthd")
+      .foreach { case (row, store) => if (rows(row)) btStore(s, store) }
   }
 
   private[graft] def benchTargets: Map[String, (SparkSession, String) => DataFrame] = {
@@ -555,7 +537,7 @@ object Bench {
             normal.unionAll(heavy), "ctx", "item", k = 5, maxCtxDegree = 64)
           .agg(count(lit(1)).as("n"), sum(col("n_shared")).as("mass"))
       }),
-      "bt_sparse_decode" -> ((s, _) => sources.VideoStore.gatherFrames(s, videoFixtureRoot,
+      "bt_sparse_decode" -> ((s, _) => sources.VideoStore.gatherFrames(s, btStore(s, "bt10k"),
         "bt10k", 0L, (0 until 100).map(i => (i * 97L + 13) % 10000L).distinct.sorted).toDF()),
       // BASELINE target 1 made concrete now that the pixel codec is REAL:
       // full-scan H264 decode at the reference fixture's 640x480
@@ -566,12 +548,11 @@ object Bench {
       // The 32 ~0.5 MB GOP files bin-pack into ~2 scan partitions
       // (openCost-tuned for I/O); decode is the bottleneck, so the
       // library's decode-aware default (cpuBoundDecode -> one task per
-      // GOP here) must spread them — this row pins the AUTO behavior
-      // that replaced round 11's hand-tuned minDecodeTasks=32
+      // GOP here) must spread them — this row pins that AUTO behavior
       // (measured 3.6 s unspread -> 0.75 s spread)
-      "bt_h264_decode_vga" -> ((s, _) => sources.VideoStore.frames(s, videoFixtureRoot,
+      "bt_h264_decode_vga" -> ((s, _) => sources.VideoStore.frames(s, btStore(s, "btvga"),
         "btvga", codec = sources.H264GopCodec.Default).toDF()),
-      // HD decode at fleet shape (VERDICT r11 ask 5): 2048 frames of
+      // HD decode at fleet shape: 2048 frames of
       // 1280x720 gray in 16-frame GOPs -> 128 GOP segments >> 32 cores,
       // the regime where the file scan's bin-packing SHOULD batch
       // several GOPs per task (the vga row pins the opposite regime,
@@ -582,7 +563,7 @@ object Bench {
       // task count the bin-packer actually produced.
       "bt_h264_decode_hd" -> ((s, _) => {
         import org.apache.spark.sql.functions._
-        sources.VideoStore.frames(s, videoFixtureRoot, "bthd",
+        sources.VideoStore.frames(s, btStore(s, "bthd"), "bthd",
             codec = sources.H264GopCodec.Default).toDF()
           .select(spark_partition_id().as("pid"))
           .groupBy().agg(count(lit(1)).as("frames"),
@@ -592,7 +573,7 @@ object Bench {
       // GOPs): 10k frames x 1152 B inflate+delta per task — the measurable
       // proxy for BASELINE target 1 (decode throughput) this container
       // permits; compare against bt_sparse_decode's prune economics
-      "bt_deflate_decode" -> ((s, _) => sources.VideoStore.frames(s, videoFixtureRoot,
+      "bt_deflate_decode" -> ((s, _) => sources.VideoStore.frames(s, btStore(s, "btdz10k"),
         "btdz10k", codec = sources.DeflateVideoCodec).toDF()))
   }
 
@@ -705,7 +686,7 @@ object Bench {
     * killed mid-board (sbt's destroy() sends SIGTERM; hooks run) thus
     * still leaves a line and a file that parse. */
   private[graft] final class Board(planned: Seq[String], sf1Planned: Seq[String],
-      sf1Dir: String, info: RunInfo, startNanos: Long = System.nanoTime()) {
+      @volatile var sf1Dir: String, info: RunInfo, startNanos: Long = System.nanoTime()) {
     private val rows  = scala.collection.mutable.ArrayBuffer.empty[(String, QueryResult)]
     private val rows1 = scala.collection.mutable.ArrayBuffer.empty[(String, QueryResult)]
     @volatile private var sf1Error: Option[String] = None
@@ -792,10 +773,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val startNanos = System.nanoTime()
     val sfDir  = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // under target/ (NOT java.io.tmpdir): the workspace persists between
-    // runs while /tmp may be reaped (VERDICT r11 ask 6)
-    val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR",
-      new java.io.File("target/graft-sf1").getAbsolutePath)
+    // unset: the sf1 section generates its tier as a fixture
+    val sf1Env = sys.env.get("SPARK_GRAFT_SF1_DIR")
     val cpus = GraftSession.envCpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
@@ -812,23 +791,21 @@ object Bench {
       .sortBy(_._1).partition(_._1.startsWith("bt_"))
     val ordered = bt ++ rest
     val sf1 = if (sfDir.endsWith("sf0.1")) Sf1Rows.filter(n => only.isEmpty || only(n)) else Nil
-    val board = new Board(ordered.map(_._1), sf1, sf1Dir,
+    val board = new Board(ordered.map(_._1), sf1, sf1Env.getOrElse("(generated)"),
       RunInfo(sfDir, cpus, reps, gitRev, out), startNanos)
     board.installHook()
 
     val spark = GraftSession.local(cpus.toString, "graft-bench")
     // untimed fixture step: touch every input table (session, classloader
-    // and codegen start-up are not billed to whichever row runs first),
-    // ingest the shared test video, and build every bt_* fixture
+    // and codegen start-up are not billed to whichever row runs first)
+    // and build every bt_* fixture
     Seq("lineitem", "orders", "customer", "nation", "region", "supplier",
         "part", "events", "documents", "embeddings").foreach { t =>
       try materialize(spark.read.parquet(s"$sfDir/$t.parquet").limit(1000))
       catch { case _: Throwable => () }
     }
-    try {
-      queries.VideoQueries.warmup(spark)
-      ensureFixtures(spark, ordered.map(_._1).toSet)
-    } catch { case e: Throwable => System.err.println(s"[bench] fixture step failed: $e") }
+    try ensureFixtures(spark, ordered.map(_._1).toSet)
+    catch { case e: Throwable => System.err.println(s"[bench] fixture step failed: $e") }
 
     val tally = new MetricsTally
     spark.sparkContext.addSparkListener(tally)
@@ -839,18 +816,8 @@ object Bench {
       // drop the sf0.1 board's session-shared relations (memoized
       // TermIndex) before the 10x tier brings in its own corpus
       CacheScope.releaseShared(blocking = true)
-      // generated deterministically when absent (ScaleTier is
-      // xxhash64-keyed, so the data is byte-stable across regenerations);
-      // both tables are checked so a half-written tier is rebuilt
-      val tierAbsent = Seq("documents", "embeddings").exists(t =>
-        !java.nio.file.Files.exists(java.nio.file.Paths.get(s"$sf1Dir/$t.parquet", "_SUCCESS")))
-      if (tierAbsent) {
-        System.err.println(s"[bench] generating sf1 tier at $sf1Dir (10x)")
-        tools.ScaleTier.documents(spark, 50000L).write.mode("overwrite")
-          .parquet(s"$sf1Dir/documents.parquet")
-        tools.ScaleTier.embeddings(spark, 20000L).write.mode("overwrite")
-          .parquet(s"$sf1Dir/embeddings.parquet")
-      }
+      val sf1Dir = sf1Env.getOrElse(sf1Tier(spark))
+      board.sf1Dir = sf1Dir
       sf1.foreach { name =>
         board.recordSf1(name, timeOne(spark, tally, name, SparkEntry.queries(name),
           sf1Dir, reps, Sf1ProfileRows(name), tag = "sf1 "))
@@ -861,6 +828,18 @@ object Bench {
     }
     board.finish(commit = only.isEmpty)
     spark.stop()
+  }
+
+  /** The 10x tier (50k documents, 20k embeddings), keyed by the first
+    * rows ScaleTier writes (it is xxhash64-keyed per id, so a prefix
+    * probe sees any change to the generator). */
+  private def sf1Tier(spark: SparkSession): String = {
+    import tools.ScaleTier.{documents, embeddings}
+    queries.Fixtures.dir("sf1", Seq(50000, 20000,
+        documents(spark, 8).collect().mkString, embeddings(spark, 8).collect().mkString)) { d =>
+      documents(spark, 50000L).write.parquet(s"$d/documents.parquet")
+      embeddings(spark, 20000L).write.parquet(s"$d/embeddings.parquet")
+    }
   }
 
   /** accumulated timed+warmup wall since the last settle GC (see
@@ -875,7 +854,7 @@ object Bench {
     val sc = spark.sparkContext
     var aborted = false
     // every execution of this row lives in a job group the watchdog can
-    // cancel: r12's artifact lost 44 rows to ONE uncapped 442 s rep
+    // cancel, so one hung rep cannot stall the rest of the board
     def capped(body: => Unit): Boolean = {
       val group = s"graft-bench-$name"
       val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -1002,7 +981,7 @@ object Bench {
       .mkString("[", ",", "]")
     // sub-second rows whose min lacks corroboration — the second-lowest
     // rep disagrees with the min by >25% — are FLAGGED: cross-round
-    // comparisons should discount any row listed here (ADVICE r11)
+    // comparisons should discount any row listed here
     val lowconf = results.collect {
       case (k, qr) if qr.min > 0 && qr.min < 1.0 && qr.reps.size >= 2 && {
         val s = qr.reps.map(_._1).sorted

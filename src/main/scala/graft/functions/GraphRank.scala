@@ -55,8 +55,8 @@ object GraphRank {
   private[graft] val maxLocalEdges = 5000000L
 
   /** drain a unique-key (Long, Long) iterator into a primitive LongMap —
-    * the lookup side of the narrow per-round joins below (r16: cogroup
-    * joins of co-partitioned unique-key relations paid CompactBuffer +
+    * the lookup side of the narrow per-round joins below (a cogroup join
+    * of co-partitioned unique-key relations pays CompactBuffer +
     * boxed-Option allocation per row for what is a plain map lookup)
     */
   private def lookupOf(it: Iterator[(Long, Long)])
@@ -296,13 +296,12 @@ object GraphRank {
     } else {
       var it = 0
       while (it < iters) {
-        // Per-round joins as zipPartitions over primitive LongMaps (r16,
-        // guide §1.2 step 2 + §5): all operand pairs are co-partitioned on
-        // `part` with unique lookup keys, so the cogroup-based join/
-        // leftOuterJoin machinery only added CompactBuffer/boxed-Option
-        // allocation per row. Shuffle count and bytes per round unchanged
-        // (the scalar fan-out + the map-side-combined incoming reduction);
-        // values identical (same lookups, same integer algebra).
+        // Per-round joins as zipPartitions over primitive LongMaps: all
+        // operand pairs are co-partitioned on `part` with unique lookup
+        // keys, so the cogroup-based join/leftOuterJoin machinery would
+        // only add CompactBuffer/boxed-Option allocation per row. The
+        // shuffles per round are the scalar fan-out and the map-side-
+        // combined incoming reduction.
         val joined = degR.zipPartitions(ranks, preservesPartitioning = true) {
           (itD, itR) =>
             val rk = lookupOf(itR) // ranks covers every id, every round
@@ -382,13 +381,15 @@ object GraphRank {
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
     val nodePairs: RDD[(Long, Unit)] = nodes.rdd.map(r => (r.getLong(0), ()))
-    val n = nodePairs.count()
+    // (nodes, edges) in one job
+    val (n, nEdges) = nodePairs.map(_ => (1L, 0L)).union(e.rdd.map(_ => (0L, 1L)))
+      .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
     require(n > 0, "hits over an empty edge relation")
-    // overflow envelope: round 1 starts UN-normalised (every hub = scale),
-    // so a raw sum can reach |E|*scale — and after normalisation every
-    // later round is bounded by the same product. Refuse loudly instead
-    // of wrapping (the oracle's HUGEINT sums would silently diverge).
-    val nEdges = e.count()
+    // overflow envelope: the first iteration starts UN-normalised (every
+    // hub = scale), so a raw sum can reach |E|*scale — and after
+    // normalisation every later iteration is bounded by the same product.
+    // Refuse loudly instead of wrapping (the oracle's HUGEINT sums would
+    // silently diverge).
     require(nEdges <= Long.MaxValue / scale,
       s"hits: $nEdges edges at scale $scale overflows the raw-sum envelope; lower scale")
     val part = new HashPartitioner(math.max(1,
@@ -409,7 +410,7 @@ object GraphRank {
     // partial-sum stage and the scores join) without a persist site.
     def normalise(raw: RDD[(Long, Long)]): RDD[(Long, Long)] = {
       val totRep = replicatedSum(raw, part)(_._2)
-      // LongMap lookup instead of leftOuterJoin (r16): raw has unique keys
+      // LongMap lookup instead of leftOuterJoin: raw has unique keys
       // ⊆ the node set and is co-partitioned with nodesR — same values,
       // none of the cogroup/Option allocation
       nodesR.zipPartitions(raw, totRep, preservesPartitioning = true) {

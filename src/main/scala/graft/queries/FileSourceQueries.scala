@@ -18,26 +18,26 @@ import org.apache.spark.sql.functions._
   */
 object FileSourceQueries {
 
-  /** idempotent: 2 streams x 30 caption lines, 90 frames each at 3/caption */
-  private def ensureCaptions(s: SparkSession): String = {
-    val root = sys.props("java.io.tmpdir") + "/graft-captions"
-    val dir  = Paths.get(root)
-    if (!Files.exists(dir.resolve("stream_1.cap"))) {
-      Files.createDirectories(dir)
-      for (sid <- 0L until 2L) {
-        val lines = (0 until 30).map { i =>
-          val start = i * 3
-          s"$start ${start + 2} caption s$sid line $i word${(sid * 31 + i * 7) % 97}"
-        }
-        Files.write(dir.resolve(s"stream_$sid.cap"),
-          lines.mkString("\n").getBytes(UTF_8))
-      }
-    }
-    root
-  }
+  /** caption file of stream `sid`: 30 lines, 90 frames at 3/caption */
+  private def captionFile(sid: Long): Array[Byte] =
+    (0 until 30).map { i =>
+      val start = i * 3
+      s"$start ${start + 2} caption s$sid line $i word${(sid * 31 + i * 7) % 97}"
+    }.mkString("\n").getBytes(UTF_8)
 
-  /** idempotent: embedded Derby DB (the jars Spark ships for its metastore)
-    * seeded with a deterministic annotations table — the "SQL source".
+  /** the caption fixture: one .cap file per stream, 2 streams */
+  private def ensureCaptions(): String =
+    Fixtures.dir("captions", Seq(2, captionFile(0L))) { d =>
+      for (sid <- 0L until 2L)
+        Files.write(Paths.get(d, s"stream_$sid.cap"), captionFile(sid))
+    }
+
+  /** the annotations table the SQL source serves: (stream_id, idx, label) */
+  private val jdbcRows: Seq[(Long, Long, String)] =
+    for (sid <- 0L until 2L; i <- 0L until 15L) yield (sid, i, s"label_${(sid * 31 + i * 7) % 5}")
+
+  /** Embedded Derby DB (the jars Spark ships for its metastore) seeded
+    * with [[jdbcRows]] — the "SQL source".
     *
     * Embedded Derby is a single-JVM engine: a directory-backed database is
     * locked exclusively by whichever JVM boots it, which breaks
@@ -46,57 +46,38 @@ object FileSourceQueries {
     * multi-reader deployment is a database-in-a-jar
     * (`jdbc:derby:jar:(archive)db`): read-only by construction, no
     * `db.lck`, and any number of JVMs may boot it concurrently — exactly
-    * the shape of a shared annotation store. So: seed a scratch copy,
-    * shut it down cleanly, zip it into an archive, and hand out the jar
-    * URL. `derby.storage.tempDirectory` is stored IN the database so
-    * read-only boots get a writable scratch dir on every JVM.
+    * the shape of a shared annotation store. So: seed the database, shut
+    * it down cleanly, zip it into an archive, and hand out the jar URL.
+    * `derby.storage.tempDirectory` is stored IN the database so read-only
+    * boots get a writable scratch dir on every JVM.
     */
   private def ensureJdbc(): String = {
-    val tmp  = sys.props("java.io.tmpdir")
-    val seed = Paths.get(tmp, "graft-derby-seed")
-    val jar  = Paths.get(tmp, "graft-derby.jar")
-    if (!Files.exists(jar)) {
-      if (!Files.exists(seed)) {
-        // seed into a scratch path and atomically rename after the clean
-        // shutdown: a crash mid-seed leaves only an orphan scratch tree,
-        // never a torn/un-shutdown database at the path a later run would
-        // trust enough to zip into the permanent read-only jar
-        val work = Files.createTempDirectory(Paths.get(tmp), "graft-derby-work")
-        Files.delete(work) // Derby insists on creating the db dir itself
-        val conn = java.sql.DriverManager.getConnection(s"jdbc:derby:$work;create=true")
-        try {
-          val st = conn.createStatement()
-          st.executeUpdate(
-            "CREATE TABLE annotations (stream_id BIGINT, idx BIGINT, label VARCHAR(32))")
-          val ps = conn.prepareStatement("INSERT INTO annotations VALUES (?, ?, ?)")
-          for (sid <- 0L until 2L; i <- 0L until 15L) {
-            ps.setLong(1, sid); ps.setLong(2, i)
-            ps.setString(3, s"label_${(sid * 31 + i * 7) % 5}")
-            ps.executeUpdate()
-          }
-          ps.close()
-          val cs = conn.prepareCall("CALL SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY(?, ?)")
-          cs.setString(1, "derby.storage.tempDirectory")
-          cs.setString(2, tmp)
-          cs.execute(); cs.close(); st.close()
-        } finally conn.close()
-        // clean shutdown (SQLState 08006 signals success) so the archived
-        // log needs no recovery on read-only boots
-        try java.sql.DriverManager.getConnection(s"jdbc:derby:$work;shutdown=true")
-        catch { case e: java.sql.SQLException if e.getSQLState == "08006" => () }
-        try Files.move(work, seed, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { // concurrent seeder won; discard ours
-          case _: java.nio.file.FileAlreadyExistsException =>
-            val walk = Files.walk(work)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(Files.delete(_))
-            finally walk.close()
+    val tmp = sys.props("java.io.tmpdir")
+    val dir = Fixtures.dir("derby", jdbcRows) { d =>
+      val seed = Paths.get(d, "graft-derby-seed")
+      val conn = java.sql.DriverManager.getConnection(s"jdbc:derby:$seed;create=true")
+      try {
+        val st = conn.createStatement()
+        st.executeUpdate(
+          "CREATE TABLE annotations (stream_id BIGINT, idx BIGINT, label VARCHAR(32))")
+        val ps = conn.prepareStatement("INSERT INTO annotations VALUES (?, ?, ?)")
+        jdbcRows.foreach { case (sid, i, label) =>
+          ps.setLong(1, sid); ps.setLong(2, i); ps.setString(3, label)
+          ps.executeUpdate()
         }
-      }
-      // zip the seeded tree under the "graft-derby-seed/" prefix; write to
-      // a temp name then move, so a concurrent caller never sees a torn jar
-      val part = Files.createTempFile(Paths.get(tmp), "graft-derby", ".jar.part")
-      val zos  = new java.util.zip.ZipOutputStream(Files.newOutputStream(part))
+        ps.close()
+        val cs = conn.prepareCall("CALL SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY(?, ?)")
+        cs.setString(1, "derby.storage.tempDirectory")
+        cs.setString(2, tmp)
+        cs.execute(); cs.close(); st.close()
+      } finally conn.close()
+      // clean shutdown (SQLState 08006 signals success) so the archived
+      // log needs no recovery on read-only boots
+      try java.sql.DriverManager.getConnection(s"jdbc:derby:$seed;shutdown=true")
+      catch { case e: java.sql.SQLException if e.getSQLState == "08006" => () }
+      // zip the seeded tree under the "graft-derby-seed/" prefix
+      val zos = new java.util.zip.ZipOutputStream(
+        Files.newOutputStream(Paths.get(d, "graft-derby.jar")))
       try {
         val walk = Files.walk(seed)
         try walk.filter(Files.isRegularFile(_)).forEach { p =>
@@ -106,63 +87,53 @@ object FileSourceQueries {
           zos.closeEntry()
         } finally walk.close()
       } finally zos.close()
-      try Files.move(part, jar, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException => Files.delete(part) }
     }
-    s"jdbc:derby:jar:($jar)graft-derby-seed"
+    s"jdbc:derby:jar:($dir/graft-derby.jar)graft-derby-seed"
   }
 
-  /** idempotent WARC fixture: two crawl files (one member-gzip `.warc.gz`
-    * — the Common Crawl layout — one plain `.warc`), each warcinfo +
-    * request/response pairs; response bodies are deterministic HTML
-    * pages plus one `text/plain` robots.txt (which the WET pipeline
-    * must SKIP on content type). Written via [[graft.sources.Warc]]'s
-    * own writer, so reader and writer pin each other round-trip.
+  /** WARC crawl file `f` of the fixture (0: member-gzip `.warc.gz` — the
+    * Common Crawl layout — 1: plain `.warc`): warcinfo + request/response
+    * pairs; response bodies are deterministic HTML pages plus one
+    * `text/plain` robots.txt (which the WET pipeline must SKIP on content
+    * type). Written via [[graft.sources.Warc]]'s own writer, so reader
+    * and writer pin each other round-trip.
     */
-  private def ensureWarc(): String = {
-    val root = sys.props("java.io.tmpdir") + "/graft-warc"
-    val dir  = Paths.get(root)
-    if (!Files.exists(dir.resolve("crawl-00.warc.gz"))) {
-      Files.createDirectories(dir)
-      import graft.sources.Warc
-      def page(f: Int, i: Int): String =
-        s"<html><head><title>Page $f-$i</title><style>b{font:x} q>z{}</style>" +
-          s"</head><body><script>var n=$i; if(n<3){n=3}</script><h1>Heading $i</h1>" +
-          s"<p>body text file $f rec $i word${(f * 31 + i * 7) % 97} &amp; tail</p>" +
-          ("<p>filler sentence repeated</p>" * (i % 4)) + "</body></html>"
-      for (f <- 0 until 2) {
-        val recs = scala.collection.mutable.ArrayBuffer.empty[Warc.WriteRecord]
-        def rid(i: Int) = f"urn:uuid:00000000-0000-0000-000$f%01d-${i}%012d"
-        def date(i: Int) = f"2024-01-0${f + 1}%dT00:00:$i%02dZ"
-        recs += Warc.WriteRecord("warcinfo", rid(0), None, date(0),
-          s"software: graft-crawler\r\nfile: crawl-0$f\r\n".getBytes(UTF_8),
-          httpResponse = false)
-        for (i <- 1 to 12) {
-          val uri = s"https://example.org/f$f/page$i.html"
-          recs += Warc.WriteRecord("request", rid(i * 2 - 1), Some(uri), date(i),
-            s"GET /f$f/page$i.html HTTP/1.1\r\nHost: example.org\r\n\r\n".getBytes(UTF_8),
-            httpResponse = false)
-          recs += Warc.WriteRecord("response", rid(i * 2), Some(uri), date(i),
-            page(f, i).getBytes(UTF_8), httpResponse = true)
-        }
-        recs += Warc.WriteRecord("response", rid(99),
-          Some(s"https://example.org/f$f/robots.txt"), date(59),
-          s"User-agent: *\nDisallow: /private$f\n".getBytes(UTF_8),
-          httpResponse = true, httpContentType = "text/plain")
-        val name = if (f == 0) "crawl-00.warc.gz" else "crawl-01.warc"
-        val part = Files.createTempFile(dir, name, ".part")
-        val out  = Files.newOutputStream(part)
-        try {
-          if (f == 0) Warc.writeGz(out, recs.toSeq)
-          else Warc.writePlain(out, recs.toSeq)
-        } finally out.close()
-        try Files.move(part, dir.resolve(name),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.FileAlreadyExistsException => Files.delete(part) }
-      }
+  private def warcFile(f: Int): Array[Byte] = {
+    import graft.sources.Warc
+    def page(i: Int): String =
+      s"<html><head><title>Page $f-$i</title><style>b{font:x} q>z{}</style>" +
+        s"</head><body><script>var n=$i; if(n<3){n=3}</script><h1>Heading $i</h1>" +
+        s"<p>body text file $f rec $i word${(f * 31 + i * 7) % 97} &amp; tail</p>" +
+        ("<p>filler sentence repeated</p>" * (i % 4)) + "</body></html>"
+    val recs = scala.collection.mutable.ArrayBuffer.empty[Warc.WriteRecord]
+    def rid(i: Int) = f"urn:uuid:00000000-0000-0000-000$f%01d-${i}%012d"
+    def date(i: Int) = f"2024-01-0${f + 1}%dT00:00:$i%02dZ"
+    recs += Warc.WriteRecord("warcinfo", rid(0), None, date(0),
+      s"software: graft-crawler\r\nfile: crawl-0$f\r\n".getBytes(UTF_8),
+      httpResponse = false)
+    for (i <- 1 to 12) {
+      val uri = s"https://example.org/f$f/page$i.html"
+      recs += Warc.WriteRecord("request", rid(i * 2 - 1), Some(uri), date(i),
+        s"GET /f$f/page$i.html HTTP/1.1\r\nHost: example.org\r\n\r\n".getBytes(UTF_8),
+        httpResponse = false)
+      recs += Warc.WriteRecord("response", rid(i * 2), Some(uri), date(i),
+        page(i).getBytes(UTF_8), httpResponse = true)
     }
-    root
+    recs += Warc.WriteRecord("response", rid(99),
+      Some(s"https://example.org/f$f/robots.txt"), date(59),
+      s"User-agent: *\nDisallow: /private$f\n".getBytes(UTF_8),
+      httpResponse = true, httpContentType = "text/plain")
+    val out = new java.io.ByteArrayOutputStream()
+    if (f == 0) Warc.writeGz(out, recs.toSeq) else Warc.writePlain(out, recs.toSeq)
+    out.toByteArray
   }
+
+  /** the WARC fixture: crawl-00.warc.gz and crawl-01.warc */
+  private def ensureWarc(): String =
+    Fixtures.dir("warc", Seq(2, warcFile(0))) { d =>
+      Files.write(Paths.get(d, "crawl-00.warc.gz"), warcFile(0))
+      Files.write(Paths.get(d, "crawl-01.warc"), warcFile(1))
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // WARC source: the web-crawl container (ISO 28500, Common Crawl's
@@ -208,7 +179,8 @@ object FileSourceQueries {
 
     // WebDataset tar shards: the multimodal training-corpus container
     // (sample = adjacent tar entries sharing a basename key). This query
-    // is the FULL loop — distributed sink (4 writer tasks rolling
+    // is the FULL loop, run on every execution — distributed sink (4
+    // writer tasks rolling
     // byte-budgeted shards from the documents table: .txt body +
     // deterministic .json sidecar per sample) then distributed source
     // (one task per shard), samples reassembled and checked against
@@ -218,20 +190,15 @@ object FileSourceQueries {
       import graft.sources.TarShard
       val root = sys.props("java.io.tmpdir") + "/graft-wds-" +
         dir.replaceAll("[^a-zA-Z0-9.]", "_")
-      val marker = Paths.get(root, "_SUCCESS")
-      if (!Files.exists(marker)) {
-        val src = s.read.parquet(s"$dir/documents.parquet")
-          .filter(col("doc_id") < 200)
-        val json = concat(lit("{\"doc_id\":"), col("doc_id").cast("string"),
-          lit(",\"source\":\""), col("source"), lit("\"}"))
-        val rows = src.select(
-          format_string("%06d", col("doc_id")).as("key"),
-          explode(map(lit("txt"), col("text").cast("binary"),
-            lit("json"), json.cast("binary"))).as(Seq("ext", "payload")))
-        TarShard.writeSamples(rows, root, maxShardBytes = 16L << 10, nWriters = 4)
-        Files.createDirectories(Paths.get(root))
-        Files.write(marker, Array.emptyByteArray)
-      }
+      val src = s.read.parquet(s"$dir/documents.parquet")
+        .filter(col("doc_id") < 200)
+      val json = concat(lit("{\"doc_id\":"), col("doc_id").cast("string"),
+        lit(",\"source\":\""), col("source"), lit("\"}"))
+      val rows = src.select(
+        format_string("%06d", col("doc_id")).as("key"),
+        explode(map(lit("txt"), col("text").cast("binary"),
+          lit("json"), json.cast("binary"))).as(Seq("ext", "payload")))
+      TarShard.writeSamples(rows, root, maxShardBytes = 16L << 10, nWriters = 4)
       TarShard.readDir(s, root)
         .groupBy("key")
         .agg(
@@ -263,7 +230,7 @@ object FileSourceQueries {
     // text), streamId recovered from the file path, frame range parsed from
     // the line — all expression-level (no UDFs)
     "src_captions" -> ((s, _) => {
-      val root = ensureCaptions(s)
+      val root = ensureCaptions()
       s.read.textFile(s"$root/*.cap").toDF("line")
         .withColumn("streamId",
           regexp_extract(input_file_name(), "stream_(\\d+)\\.cap", 1).cast("long"))
@@ -281,7 +248,7 @@ object FileSourceQueries {
     // its covering caption — the caption/frame alignment the reference's
     // caption source exists for
     "src_caption_align" -> ((s, _) => {
-      val root = ensureCaptions(s)
+      val root = ensureCaptions()
       val caps = s.read.textFile(s"$root/*.cap").toDF("line")
         .withColumn("streamId",
           regexp_extract(input_file_name(), "stream_(\\d+)\\.cap", 1).cast("long"))
@@ -307,7 +274,7 @@ object FileSourceQueries {
     * formula-built strings, so the oracle rebuilds every record (incl.
     * the warcinfo/request/response framing and bodies) and the gate
     * verifies the gzip-member + WARC + HTTP parse chain end-to-end
-    * against independent truth. pipeline_warc_wet (round 12) composes
+    * against independent truth. pipeline_warc_wet composes
     * the same page regeneration with txt_html_extract's proven
     * htmlToText SQL replay — the full crawl-to-text conversion verified
     * against independent recomputation.

@@ -23,26 +23,19 @@ object ImageQueries {
 
   private val frameEnc = Encoders.product[FrameElem]
 
-  /** idempotent: write 2 streams x 20 PNGs of the ramp frames (`img_`,
-    * the decode/histogram/aHash inputs) and of the hash-pixel texture
-    * frames (`tex_`, the pHash inputs — see StdKernels.texturedFrame for
-    * why the ramp is pathological for spectral hashing)
+  /** 2 streams x 20 PNGs of the ramp frames (`img_`, the decode/
+    * histogram/aHash inputs) and of the hash-pixel texture frames (`tex_`,
+    * the pHash inputs — see StdKernels.texturedFrame for why the ramp is
+    * pathological for spectral hashing)
     */
-  private def ensureImages(s: SparkSession): String = {
-    val root = sys.props("java.io.tmpdir") + "/graft-imageq"
-    val dir  = Paths.get(root)
-    Files.createDirectories(dir)
-    if (!Files.exists(dir.resolve("img_1_19.png")))
-      for (sid <- 0L until 2L; i <- 0 until 20) {
-        val png = StdKernels.encodePng(StdKernels.syntheticFrame(sid, i.toLong, 16, 24, 3))
-        Files.write(dir.resolve(s"img_${sid}_$i.png"), png)
-      }
-    if (!Files.exists(dir.resolve("tex_1_19.png")))
-      for (sid <- 0L until 2L; i <- 0 until 20) {
-        val png = StdKernels.encodePng(StdKernels.texturedFrame(sid, i.toLong, 16, 24, 3))
-        Files.write(dir.resolve(s"tex_${sid}_$i.png"), png)
-      }
-    root
+  private def ensureImages(): String = {
+    def png(prefix: String, sid: Long, i: Int): Array[Byte] = StdKernels.encodePng(
+      if (prefix == "img") StdKernels.syntheticFrame(sid, i.toLong, 16, 24, 3)
+      else StdKernels.texturedFrame(sid, i.toLong, 16, 24, 3))
+    Fixtures.dir("images", Seq(2, 20, png("img", 0L, 0), png("tex", 0L, 0))) { d =>
+      for (prefix <- Seq("img", "tex"); sid <- 0L until 2L; i <- 0 until 20)
+        Files.write(Paths.get(d, s"${prefix}_${sid}_$i.png"), png(prefix, sid, i))
+    }
   }
 
   /** binaryFile rows decoded to frames, keyed by filename-borne ids;
@@ -65,7 +58,7 @@ object ImageQueries {
     // so the gate verifies the PNG encode -> file -> decode roundtrip
     // against independent truth (PNG is lossless by spec)
     "img_decode" -> ((s, _) => {
-      val root = ensureImages(s)
+      val root = ensureImages()
       import s.implicits._
       frames(s, root)
         .flatMap(f => f.data.indices.map(p =>
@@ -82,7 +75,7 @@ object ImageQueries {
     // rebuilds the histogram — PNG encode/decode + resize + histogram
     // verified against independent truth
     "img_histogram" -> ((s, _) => {
-      val root    = ensureImages(s)
+      val root    = ensureImages()
       val resized = StdKernels.resizeOp(frames(s, root),
         Map(0L -> ((12, 8)), 1L -> ((6, 4))))
       import s.implicits._
@@ -126,7 +119,7 @@ object ImageQueries {
       val pairs = hashPairs(s, StdKernels.perceptualHash,
         b => math.min(255, math.round((b & 0xff) * 0.92).toInt + 5).toByte,
         prefix = "tex", bitsPerBand = 8, maxHamming = 7)
-      val root = ensureImages(s)
+      val root = ensureImages()
       import s.implicits._
       val ids = frames(s, root, "tex")
         .flatMap(f => Seq(f.streamId * 1000L + f.index,
@@ -150,7 +143,7 @@ object ImageQueries {
     // must hold for EVERY image, so a regression in either the kernel or
     // the blur shows as a hash mismatch, not a silent drift.
     "img_blur_scores" -> ((s, _) => {
-      val root = ensureImages(s)
+      val root = ensureImages()
       import s.implicits._
       frames(s, root, "tex").map { f =>
         val sharp = StdKernels.laplacianVariance(f)
@@ -175,7 +168,7 @@ object ImageQueries {
       bitsPerBand: Int = 16, maxHamming: Int = 3): DataFrame = {
     val nBands = 64 / bitsPerBand
     val mask   = (1L << bitsPerBand) - 1
-    val root = ensureImages(s)
+    val root = ensureImages()
     val base = frames(s, root, prefix)
     val variants = base.map(f => f.copy(index = f.index + 100,
       data = f.data.map(variantByte)))(frameEnc)
@@ -194,15 +187,15 @@ object ImageQueries {
     * ramp pixels (sid*31+idx*7+p) mod 256, texture pixels
     * bits 24..31 of (sid*1000003+idx*40503+p)*2654435761 (64-bit wrap —
     * only the low 32 bits of the product matter for those bits, so BIGINT
-    * arithmetic never overflows). img_ahash_pairs (round 12) replays the
+    * arithmetic never overflows). img_ahash_pairs replays the
     * whole aHash chain in SQL — PNG-decoded ramp + clamped variant,
     * grayscale (channel mean with per-channel mod-256 wrap), bilinear
     * 8x8 downsample at exact weights (16->8 rows is (a+b+1)//2; 24->8
     * cols lands on x0=3x+1 with weight 0), the integer-exact mean
     * threshold (64v >= sum), and pairwise Hamming <= 3 (the 4x16
     * banding is COMPLETE at that radius by pigeonhole, so candidates =
-    * all qualifying pairs). The DCT queries joined in round 13
-    * ([[phashChain]]): the whole pHash chain is replayed the same way —
+    * all qualifying pairs). The DCT queries ([[phashChain]]) replay
+    * the whole pHash chain is replayed the same way —
     * the 16x24 -> 32x32 bilinear upsample's weights are exact eighths/
     * quarters so the resample is INTEGER arithmetic ((v32+16)//32), and
     * the DCT-II cosine sums are safe at double precision because the

@@ -1,12 +1,14 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
 
 import graft.model.{CacheMode, FrameElem, FrameType}
-import graft.operators.{Kernels, SequenceOps, StdKernels}
-import graft.sources.{H264GopCodec, VideoStore}
+import graft.operators.{SequenceOps, StdKernels}
+import graft.sources.{FakeVideoCodec, H264GopCodec, VideoStore}
 
 /** Video-pipeline queries — the reference's flagship path (SURVEY.md §7
   * "minimum end-to-end slice": ingest → Range → Histogram → load,
@@ -21,21 +23,16 @@ object VideoQueries {
 
   private val frameEnc = Encoders.product[FrameElem]
 
-  /** Bench warmup hook: run the one-time ingest outside the timed loop so
-    * video query timings measure decode, not ingest.
-    */
-  def warmup(s: SparkSession): Unit = { ensureIngested(s); () }
-
-  /** idempotent ingest of the deterministic test video (2 streams) */
-  private def ensureIngested(s: SparkSession): String = {
-    val root = sys.props("java.io.tmpdir") + "/graft-videoq"
-    import s.implicits._
-    val frames =
-      (0L until 2L).flatMap(sid =>
+  /** the deterministic test video: 2 streams x 300 frames of 16x24 RGB,
+    * store "testvid" */
+  private def ensureIngested(s: SparkSession): String =
+    Fixtures.dir("videoq-testvid", Fixtures.storeKey(2, 300, 50)(
+        StdKernels.syntheticFrame(0L, 0L, 16, 24, 3), FakeVideoCodec)) { d =>
+      import s.implicits._
+      val frames = (0L until 2L).flatMap(sid =>
         (0 until 300).map(i => StdKernels.syntheticFrame(sid, i.toLong, 16, 24, 3)))
-    VideoStore.ingest(frames.toDS(), root, "testvid", gopSize = 50, CacheMode.Ignore)
-    root
-  }
+      VideoStore.ingest(frames.toDS(), d, "testvid", gopSize = 50)
+    }
 
   /** Closed-form smooth texture for the flow PROPERTY gates: a sum of
     * incommensurate sinusoids, so gradient energy exists in both axes at
@@ -56,32 +53,33 @@ object VideoQueries {
   private[graft] def flowDisp(sid: Long): (Int, Int) =
     if (sid == 0L) (1, 0) else (1, 1)
 
-  /** idempotent ingest of the translated-texture fixture: 2 streams x 48
-    * frames of 48x64 gray, frame i = flowTex shifted by i*(dx,dy) */
-  private def ensureFlowIngested(s: SparkSession): String = {
-    val root = sys.props("java.io.tmpdir") + "/graft-videoq"
-    import s.implicits._
-    val frames = (0L until 2L).flatMap { sid =>
-      val (dx, dy) = flowDisp(sid)
-      (0 until FlowFrames).map { i =>
-        val data = new Array[Byte](FlowH * FlowW)
-        var p = 0
-        while (p < data.length) {
-          data(p) = flowTex(p % FlowW - i.toLong * dx, p / FlowW - i.toLong * dy).toByte
-          p += 1
-        }
-        FrameElem(sid, i.toLong, FlowH, FlowW, 1, FrameType.U8, data)
-      }
+  /** frame i of the translated-texture stream `sid`: 48x64 gray,
+    * flowTex shifted by i*(dx,dy) */
+  private def flowFrame(sid: Long, i: Int): FrameElem = {
+    val (dx, dy) = flowDisp(sid)
+    val data = new Array[Byte](FlowH * FlowW)
+    var p = 0
+    while (p < data.length) {
+      data(p) = flowTex(p % FlowW - i.toLong * dx, p / FlowW - i.toLong * dy).toByte
+      p += 1
     }
-    VideoStore.ingest(frames.toDS(), root, "flowvid", gopSize = 16, CacheMode.Ignore)
-    root
+    FrameElem(sid, i.toLong, FlowH, FlowW, 1, FrameType.U8, data)
   }
+
+  /** the translated-texture fixture: 2 streams x 48 frames, store "flowvid" */
+  private def ensureFlowIngested(s: SparkSession): String =
+    Fixtures.dir("videoq-flowvid", Fixtures.storeKey(2, FlowFrames, 16)(
+        flowFrame(0L, 0), FakeVideoCodec)) { d =>
+      import s.implicits._
+      val frames = (0L until 2L).flatMap(sid => (0 until FlowFrames).map(flowFrame(sid, _)))
+      VideoStore.ingest(frames.toDS(), d, "flowvid", gopSize = 16)
+    }
 
   /** shared body of the two flow PROPERTY gates: store → stencil {-1,0}
     * halo pair fetch → per-pair interior mean flow → |mean − truth| < tol
     * booleans. The DuckDB oracle recomputes the expected all-true relation
-    * outright (the truth is the fixture's construction, not the
-    * estimator), replacing the frozen mean-|flow| pins of rounds 2-12.
+    * outright: the truth is the fixture's construction, not the
+    * estimator.
     */
   private def flowPropertyGate(s: SparkSession,
       estimator: (FrameElem, FrameElem) => FrameElem, tol: Double): DataFrame = {
@@ -211,9 +209,8 @@ object VideoQueries {
     // fine here — the SCALE path is the sparse decode feeding it.
     // Thumbs are 2x box scale (16x24 -> 8x12) so every bilinear weight
     // is exactly 0.5 and the DuckDB oracle replays the gather + resize +
-    // tile layout from the closed-form source (was a frozen PNG-md5 pin
-    // through round 11; the PNG encoder itself stays gated by
-    // img_decode's real round-trip oracle).
+    // tile layout from the closed-form source (the PNG encoder itself is
+    // gated by img_decode's real round-trip oracle).
     "video_thumb_grid" -> ((s, _) => {
       val root = ensureIngested(s)
       val want = Seq(0L, 60L, 120L, 180L, 240L, 299L)
@@ -235,7 +232,7 @@ object VideoQueries {
     }),
 
     // stencil {-1,0} optical-flow (real dense Lucas-Kanade estimator) as
-    // a PROPERTY gate (was a frozen mean-|flow| pin through round 12):
+    // a PROPERTY gate:
     // the fixture is a closed-form texture translated by a KNOWN per-
     // stream (dx, dy) each frame, so the interior mean of the recovered
     // field must land within tol of the construction's truth — a relation
@@ -379,7 +376,7 @@ object VideoQueries {
     // generate_series. Monochrome-in-4:2:0 PCM is lossless, so a
     // regression anywhere in slice syntax, PCM alignment, NAL escaping,
     // or the GOP seam flips specific cells of an INDEPENDENTLY
-    // recomputed relation (was: a frozen md5 pin through round 11).
+    // recomputed relation.
     "video_h264_pcm_roundtrip" -> ((s, _) => {
       val root = ensureH264Stores(s)
       import s.implicits._
@@ -390,14 +387,14 @@ object VideoQueries {
         .orderBy("streamId", "index", "pos")
     }),
 
-    // the COMPRESSED tier of the same path, High-profile-shaped since
-    // round 12: IDR + P frames at QP 12 with Intra_8x8 + the 8x8
-    // transform in the per-MB competition (transform_size_8x8_flag),
-    // real temporal prediction (motion search, skip runs), and since
-    // round 13 CABAC entropy coding (cat-5 residual contexts) — decoded
-    // sequentially-from-keyframe through the store via the Range plan. PROPERTY oracle (was a frozen md5 pin through
-    // round 11): every decoded pixel must sit within `tol` of the
-    // closed-form pre-ingest truth ([[grayPixel]]) — lossy coding cannot
+    // the COMPRESSED tier of the same path, High-profile-shaped: IDR + P
+    // frames at QP 12 with Intra_8x8 + the 8x8 transform in the per-MB
+    // competition (transform_size_8x8_flag), real temporal prediction
+    // (motion search, skip runs) and CABAC entropy coding (cat-5
+    // residual contexts) — decoded sequentially-from-keyframe through the
+    // store via the Range plan. PROPERTY oracle: every decoded pixel must
+    // sit within `tol` of the closed-form pre-ingest truth
+    // ([[grayPixel]]) — lossy coding cannot
     // be replayed in SQL, but its error is spec-bounded by the QP-12
     // quantizer step, so the oracle recomputes the expected
     // (n_pixels, 0 violations) relation outright; the `compressed` flag
@@ -435,20 +432,18 @@ object VideoQueries {
     // H264 encode (I_PCM GOP chunks) -> real avc1 MP4 mux -> DISTRIBUTED
     // MP4 demux + NAL index + GOP segmentation (ingestMp4H264Dir, one
     // task per file) -> DISTRIBUTED pixel decode (one task per GOP
-    // segment, parameter sets self-contained) -> per-frame digest vs the
-    // source digest. PCM is lossless, so every row must match — this one
-    // row gates codec, muxer, demuxer, indexer, and segmenter together.
-    // (per-PIXEL emission since round 12: PCM is lossless, so the DuckDB
-    // oracle regenerates every decoded luma sample from [[grayPixel]] —
-    // the md5 pin this replaced could only say "something changed").
-    // The ingest overwrites its store, so every execution runs it.
+    // segment, parameter sets self-contained) -> every decoded luma
+    // sample. PCM is lossless, so the DuckDB oracle regenerates each one
+    // from [[grayPixel]] — this one row gates codec, muxer, demuxer,
+    // indexer, and segmenter together, cell by cell.
     "video_h264_mp4_pixels" -> ((s, _) => {
-      val dir = ensureH264Mp4Fixture(s)
-      val root = sys.props("java.io.tmpdir") + "/graft-h264store"
-      graft.sources.H264Ingest.ingestMp4H264Dir(s, dir, root, "h264mp4",
-        graft.model.CacheMode.Overwrite)
+      // the ingest overwrites its store, beside the MP4s it reads, so
+      // every execution runs it
+      val dir = ensureH264Mp4Fixture()
+      graft.sources.H264Ingest.ingestMp4H264Dir(s, dir, dir, "h264mp4",
+        CacheMode.Overwrite)
       import s.implicits._
-      VideoStore.segments(s, root, "h264mp4")
+      VideoStore.segments(s, dir, "h264mp4")
         .flatMap { seg =>
           graft.sources.H264Codec.decode(seg.payload).zipWithIndex.flatMap {
             case (yuv, i) => yuv.y.indices.map(p =>
@@ -460,163 +455,35 @@ object VideoQueries {
         .orderBy("streamId", "index", "pos")
     }),
 
-    // ingest diagnostics: per-stream GOP structure rollup (frame count,
-    // keyframe density, bytes) — the first sanity report a video-corpus
-    // ingest prints; one map-side-combining agg over the index rows
     // CABAC entropy coding end-to-end through the committed store: the
-    // same 96 frames ingest twice — once CAVLC, once CABAC (arithmetic
-    // slice data, §9.3) — and every decoded pixel must MATCH across the
-    // two stores, because the quantized-coefficient pipeline is entropy-
-    // independent. The oracle recomputes the expected (n_pixels, 0)
-    // relation outright: a single flipped bin anywhere in the CABAC
-    // engine/contexts desynchronizes the decode and floods n_diff.
-    // I frames exercise the I16x16 CABAC path, P frames the
-    // skip/mvd/cbp path (gopSize 16 -> IDR + 15 P per GOP). Since round
-    // 13 the SAME invariant also runs at the High tier (transform8x8):
-    // the 'high' rows compare a CABAC+8x8 store against a CAVLC+8x8
-    // store, covering the ctxBlockCat-5 residual contexts and the
-    // CABAC-coded transform_size_8x8_flag end-to-end. The 'multiref'
-    // rows do the same for multi-reference P prediction (2-deep DPB,
-    // per-MB ref_idx_l0): reference selection is part of the shared
-    // analysis, so te(v)-coded CAVLC and ctxIdxOffset-54 unary CABAC
-    // streams must reconstruct identical pixels through the store.
+    // same 96 frames ingest twice per tier of [[cabacTiers]] — once
+    // CABAC (arithmetic slice data, §9.3), once CAVLC — and every decoded
+    // pixel must MATCH across the two stores, because the quantized-
+    // coefficient pipeline is entropy-independent. The oracle recomputes
+    // the expected (n_pixels, 0) relation outright: a single flipped bin
+    // anywhere in the CABAC engine/contexts desynchronizes the decode and
+    // floods n_diff. I frames exercise the I16x16 CABAC path, P frames
+    // the skip/mvd/cbp path (gopSize 16 -> IDR + 15 P per GOP).
     "video_h264_cabac_roundtrip" -> ((s, _) => {
-      val root = sys.props("java.io.tmpdir") + "/graft-videoq"
+      val root = ensureCabacStores(s)
       import s.implicits._
-      def ensure(name: String, codec: graft.sources.H264GopCodec): Unit =
-        if (!graft.sources.NamedStorage.committed(s, root, name)) {
-          // the 'scenecut' tier stores get a hard content cut MID-GOP at
-          // frame 24 (an unrelated generator stream) so the P pictures
-          // there must code intra-in-P macroblocks through the store
-          val cutAt = if (name.contains("scvid")) 24 else Int.MaxValue
-          val fr = (0L until 2L).flatMap(sid =>
-            (0 until 48).map(i =>
-              if (i < cutAt) StdKernels.syntheticFrame(sid, i.toLong, 16, 24, 3)
-              else {
-                val alt = StdKernels.syntheticFrame(sid + 9, i * 31L + 5, 16, 24, 3)
-                alt.copy(streamId = sid, index = i.toLong)
-              }))
-          VideoStore.ingest(fr.toDS(), root, name, gopSize = 16,
-            CacheMode.Ignore, codec = codec)
-        }
-      def diffRelation(tier: String, aName: String, aCodec: graft.sources.H264GopCodec,
-          bName: String, bCodec: graft.sources.H264GopCodec): DataFrame = {
-        ensure(aName, aCodec)
-        ensure(bName, bCodec)
-        val pa = VideoStore.frames(s, root, aName, codec = aCodec)
+      def pixels(name: String, codec: H264GopCodec, v: String): DataFrame =
+        VideoStore.frames(s, root, name, codec = codec)
           .flatMap(f => f.data.indices.map(p => (f.streamId, f.index, p, f.data(p))))
-          .toDF("streamId", "index", "pos", "va")
-        val pb = VideoStore.frames(s, root, bName, codec = bCodec)
-          .flatMap(f => f.data.indices.map(p => (f.streamId, f.index, p, f.data(p))))
-          .toDF("streamId", "index", "pos", "vb")
-        pa.join(pb, Seq("streamId", "index", "pos"))
+          .toDF("streamId", "index", "pos", v)
+      cabacTiers.map { case (tier, a, aCodec, b, bCodec) =>
+        pixels(a, aCodec, "va").join(pixels(b, bCodec, "vb"), Seq("streamId", "index", "pos"))
           .groupBy(col("streamId"), col("index"))
           .agg(count(lit(1)).as("n_pixels"),
             sum(when(col("va") =!= col("vb"), 1L).otherwise(0L)).as("n_diff"))
           .withColumn("tier", lit(tier))
-      }
-      diffRelation("default", "cabacvid", graft.sources.H264GopCodec.Cabac,
-          "cavlcvid", graft.sources.H264GopCodec.Default)
-        .unionAll(diffRelation("high",
-          "cabachivid", graft.sources.H264GopCodec.High, // CABAC + 8x8
-          "cavlchivid", new graft.sources.H264GopCodec(qp = 12,
-            transform8x8 = true))) // CAVLC + 8x8
-        .unionAll(diffRelation("multiref",
-          "cabacmrvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            multiRef = true), // CABAC + ref_idx
-          "cavlcmrvid", graft.sources.H264GopCodec.MultiRef)) // CAVLC + ref_idx
-        .unionAll(diffRelation("bslice",
-          "cabacbfvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            bframes = true), // CABAC + B pictures (POC reorder)
-          "cavlcbfvid", graft.sources.H264GopCodec.BFrames)) // CAVLC + B
-        // round 14: sub-16x16 partitions — the 16x8/8x16/8x8 competition
-        // plus partition-granular mvd/ref contexts must produce identical
-        // pixels under both entropy layers through the store
-        .unionAll(diffRelation("parts",
-          "cabacptvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            parts = true), // CABAC + partitions
-          "cavlcptvid", graft.sources.H264GopCodec.Parts)) // CAVLC + partitions
-        // round 14: explicit weighted prediction — the slice-header
-        // pred_weight_table + §8.4.2.3.2 reconstruction must produce
-        // identical pixels under both entropy layers through the store
-        .unionAll(diffRelation("wp",
-          "cabacwpvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            weightedPred = true), // CABAC + WP
-          "cavlcwpvid", graft.sources.H264GopCodec.Wp)) // CAVLC + WP
-        // round 14: temporal direct — POC-scaled colocated motion in B
-        // direct/skip MBs must reconstruct identically under both
-        // entropy layers through the store
-        .unionAll(diffRelation("tdirect",
-          "cabactdvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            bframes = true, tdirect = true), // CABAC + temporal direct
-          "cavlctdvid", graft.sources.H264GopCodec.BFramesTd)) // CAVLC + td
-        // round 14: intra-in-P — a mid-GOP scene cut forces intra MBs
-        // inside P slices; both entropy layers must agree through the
-        // store (P mb_type >= 5 / the Table 9-37 prefix bin)
-        .unionAll(diffRelation("scenecut",
-          "cabacscvid", graft.sources.H264GopCodec.Cabac,
-          "cavlcscvid", graft.sources.H264GopCodec.Default))
-        // round 15: adaptive QP — per-MB mb_qp_delta from source-luma
-        // activity, threaded through dequant and deblock; the per-MB QP
-        // choice is a pure function of the source so both entropy layers
-        // must pick identical QPs and reconstruct identical pixels
-        .unionAll(diffRelation("aqp",
-          "cabacaqvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            aqp = true), // CABAC + adaptive QP
-          "cavlcaqvid", graft.sources.H264GopCodec.Aqp)) // CAVLC + adaptive QP
-        // round 15: full §8.3.4 chroma intra prediction — the four
-        // intra_chroma_pred_mode values compete per intra MB on joint
-        // Cb+Cr SAD; mode signaling differs per layer (ue(v) vs TU bins)
-        // but the chosen modes and pixels must match
-        .unionAll(diffRelation("chroma",
-          "cabaccmvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            chromaModes = true), // CABAC + chroma modes
-          "cavlccmvid", graft.sources.H264GopCodec.Chroma)) // CAVLC + chroma modes
-        // round 15: implicit B weighting — weighted_bipred_idc 2 with an
-        // I B B P ladder, so the POC-derived bi weights are non-trivial
-        // (43/21 and 22/42); both entropy layers derive the same weights
-        // from the same POCs and must reconstruct identical pixels
-        .unionAll(diffRelation("wpimplicit",
-          "cabacwivid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            bframes = true, wpImplicit = true), // CABAC + implicit WP
-          "cavlcwivid", graft.sources.H264GopCodec.WpImplicit)) // CAVLC + implicit WP
-        // round 15: scaling matrices — the SPS default-CQM lists
-        // (explicit + use-default + fall-back-A encodings) weight every
-        // dequant per coefficient position; both entropy layers carry
-        // the same coefficients so the weighted reconstructions must
-        // stay pixel-identical
-        .unionAll(diffRelation("cqm",
-          "cabaccqvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            cqm = true), // CABAC + scaling matrices
-          "cavlccqvid", graft.sources.H264GopCodec.Cqm)) // CAVLC + scaling matrices
-        // round 15: ref_pic_list_modification — every P slice moves the
-        // older multiRef reference to refIdx 0 via a §8.2.4.3 short-term
-        // op; both entropy layers code against the same reordered list
-        // and must reconstruct identical pixels
-        .unionAll(diffRelation("reorder",
-          "cabacrovid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            multiRef = true, reorder = true), // CABAC + list modification
-          "cavlcrovid", graft.sources.H264GopCodec.Reorder)) // CAVLC + list modification
-        // round 15: multi-slice pictures — two slices per picture with
-        // §7.4.4 cross-slice neighbour unavailability; both entropy
-        // layers split at the same MB row and must agree on every pixel
-        // including the slice-seam deblocking
-        .unionAll(diffRelation("slices",
-          "cabacslvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            slicesPerFrame = 2), // CABAC + 2 slices/picture
-          "cavlcslvid", graft.sources.H264GopCodec.Slices2)) // CAVLC + 2 slices/picture
-        // round 15: B partitions — B frames compete 16x8/8x16/B_8x8
-        // with per-partition L0/L1/Bi selection (Table 7-14/7-18); the
-        // mb_type/sub_mb_type trees differ per layer (ue vs the 9-37/
-        // 9-38 bins) but the chosen shapes and pixels must match
-        .unionAll(diffRelation("bparts",
-          "cabacbpvid", new graft.sources.H264GopCodec(qp = 12, cabac = true,
-            bframes = true, parts = true), // CABAC + B partitions
-          "cavlcbpvid", new graft.sources.H264GopCodec(qp = 12,
-            bframes = true, parts = true))) // CAVLC + B partitions
+      }.reduce(_ unionAll _)
         .orderBy("tier", "streamId", "index")
     }),
 
+    // ingest diagnostics: per-stream GOP structure rollup (frame count,
+    // keyframe density, bytes) — the first sanity report a video-corpus
+    // ingest prints; one map-side-combining agg over the index rows
     "video_h264_gop_stats" -> ((s, _) => {
       val dir = ensureH264Fixture()
       graft.sources.H264Ingest.indexFiles(s, dir)
@@ -665,10 +532,95 @@ object VideoQueries {
       .select(col("streamId"), col("index"), col("dist"))
   }
 
-  /** deterministic grayscale fixture for the real-H264 stores: 2 streams
-    * x 60 frames of 32x48 U8 — gradient + 8x8 checker so the CAVLC tier
-    * has real AC energy to code
+  /** The cross-entropy tiers of video_h264_cabac_roundtrip: (tier, CABAC
+    * store, its codec, CAVLC store, its codec). Both stores of a tier code
+    * the same source with the same analysis, so only the entropy layer
+    * differs and the decoded pixels must match.
     */
+  private val cabacTiers: Seq[(String, String, H264GopCodec, String, H264GopCodec)] = Seq(
+    ("default", "cabacvid", H264GopCodec.Cabac, "cavlcvid", H264GopCodec.Default),
+    // transform8x8: the ctxBlockCat-5 residual contexts and the
+    // CABAC-coded transform_size_8x8_flag
+    ("high", "cabachivid", H264GopCodec.High,
+      "cavlchivid", new H264GopCodec(qp = 12, transform8x8 = true)),
+    // multi-reference P prediction (2-deep DPB, per-MB ref_idx_l0):
+    // reference selection is part of the shared analysis, so te(v)-coded
+    // CAVLC and ctxIdxOffset-54 unary CABAC must agree
+    ("multiref", "cabacmrvid", new H264GopCodec(qp = 12, cabac = true, multiRef = true),
+      "cavlcmrvid", H264GopCodec.MultiRef),
+    // B pictures in IBPBP coding order with POC output reordering
+    ("bslice", "cabacbfvid", new H264GopCodec(qp = 12, cabac = true, bframes = true),
+      "cavlcbfvid", H264GopCodec.BFrames),
+    // sub-16x16 partitions: the 16x8/8x16/8x8 competition plus
+    // partition-granular mvd/ref contexts
+    ("parts", "cabacptvid", new H264GopCodec(qp = 12, cabac = true, parts = true),
+      "cavlcptvid", H264GopCodec.Parts),
+    // explicit weighted prediction: the slice-header pred_weight_table
+    // and the §8.4.2.3.2 reconstruction
+    ("wp", "cabacwpvid", new H264GopCodec(qp = 12, cabac = true, weightedPred = true),
+      "cavlcwpvid", H264GopCodec.Wp),
+    // temporal direct: POC-scaled colocated motion in B direct/skip MBs
+    ("tdirect", "cabactdvid",
+      new H264GopCodec(qp = 12, cabac = true, bframes = true, tdirect = true),
+      "cavlctdvid", H264GopCodec.BFramesTd),
+    // intra-in-P: the mid-GOP scene cut of [[cabacFrame]] forces intra
+    // MBs inside P slices (P mb_type >= 5 / the Table 9-37 prefix bin)
+    ("scenecut", "cabacscvid", H264GopCodec.Cabac, "cavlcscvid", H264GopCodec.Default),
+    // adaptive QP: per-MB mb_qp_delta from source-luma activity through
+    // dequant and deblock; the QP choice is a pure function of the source
+    ("aqp", "cabacaqvid", new H264GopCodec(qp = 12, cabac = true, aqp = true),
+      "cavlcaqvid", H264GopCodec.Aqp),
+    // §8.3.4 chroma intra prediction: the four intra_chroma_pred_mode
+    // values compete on joint Cb+Cr SAD; ue(v) and TU bins signal them
+    ("chroma", "cabaccmvid", new H264GopCodec(qp = 12, cabac = true, chromaModes = true),
+      "cavlccmvid", H264GopCodec.Chroma),
+    // implicit B weighting (weighted_bipred_idc 2) on an I B B P ladder,
+    // so the POC-derived bi weights are non-trivial (43/21 and 22/42)
+    ("wpimplicit", "cabacwivid",
+      new H264GopCodec(qp = 12, cabac = true, bframes = true, wpImplicit = true),
+      "cavlcwivid", H264GopCodec.WpImplicit),
+    // SPS scaling matrices (explicit, use-default and fall-back-A
+    // encodings) weighting every dequant per coefficient position
+    ("cqm", "cabaccqvid", new H264GopCodec(qp = 12, cabac = true, cqm = true),
+      "cavlccqvid", H264GopCodec.Cqm),
+    // ref_pic_list_modification: every P slice moves the older multiRef
+    // reference to refIdx 0 via a §8.2.4.3 short-term op
+    ("reorder", "cabacrovid",
+      new H264GopCodec(qp = 12, cabac = true, multiRef = true, reorder = true),
+      "cavlcrovid", H264GopCodec.Reorder),
+    // two slices per picture: §7.4.4 cross-slice neighbour unavailability
+    // and slice-seam deblocking
+    ("slices", "cabacslvid", new H264GopCodec(qp = 12, cabac = true, slicesPerFrame = 2),
+      "cavlcslvid", H264GopCodec.Slices2),
+    // B partitions: 16x8/8x16/B_8x8 with per-partition L0/L1/Bi selection
+    // (Table 7-14/7-18); the mb_type/sub_mb_type trees differ per layer
+    ("bparts", "cabacbpvid",
+      new H264GopCodec(qp = 12, cabac = true, bframes = true, parts = true),
+      "cavlcbpvid", new H264GopCodec(qp = 12, bframes = true, parts = true)))
+
+  /** frame i of a cabac-roundtrip stream: the 16x24 RGB ramp; with `cut`,
+    * frames from 24 on come from an unrelated generator stream, a hard
+    * content cut mid-GOP */
+  private def cabacFrame(sid: Long, i: Int, cut: Boolean): FrameElem =
+    if (!cut || i < 24) StdKernels.syntheticFrame(sid, i.toLong, 16, 24, 3)
+    else StdKernels.syntheticFrame(sid + 9, i * 31L + 5, 16, 24, 3)
+      .copy(streamId = sid, index = i.toLong)
+
+  /** every store of [[cabacTiers]]: 2 streams x 48 frames in GOPs of 16 */
+  private def ensureCabacStores(s: SparkSession): String = {
+    val stores = cabacTiers.flatMap { case (tier, a, aCodec, b, bCodec) =>
+      Seq((a, aCodec, tier == "scenecut"), (b, bCodec, tier == "scenecut")) }
+    Fixtures.dir("videoq-cabac", Fixtures.storeKey(2, 48, 16,
+        cabacFrame(0L, 24, cut = true).data)(
+        cabacFrame(0L, 0, cut = false), stores.map(_._2): _*)) { d =>
+      import s.implicits._
+      stores.foreach { case (name, codec, cut) =>
+        val frames = (0L until 2L).flatMap(sid => (0 until 48).map(cabacFrame(sid, _, cut)))
+        VideoStore.ingest(frames.toDS(), d, name, gopSize = 16, codec = codec)
+      }
+    }
+  }
+
   /** closed-form pixel of the gray fixture — the pre-ingest truth the
     * roundtrip gates' DuckDB oracles regenerate independently */
   private[graft] def grayPixel(sid: Long, i: Long, p: Int): Int = {
@@ -677,85 +629,78 @@ object VideoQueries {
       (if ((x / 8 + y / 8) % 2 == 0) 30 else 0)).toInt
   }
 
-  private def h264GrayFixture(s: SparkSession): org.apache.spark.sql.Dataset[FrameElem] = {
-    import s.implicits._
-    (0L until 2L).flatMap { sid =>
-      (0L until 60L).map { i =>
-        val h = 32; val w = 48
-        FrameElem(sid, i, h, w, 1, FrameType.U8,
-          Array.tabulate(h * w)(p => grayPixel(sid, i, p).toByte))
-      }
-    }.toDS()
-  }
+  /** frame i of the gray fixture for the real-H264 stores (2 streams x
+    * 60 frames of 32x48 U8): gradient + 8x8 checker, so the CAVLC tier
+    * has real AC energy to code */
+  private def grayFrame(sid: Long, i: Long): FrameElem =
+    FrameElem(sid, i, 32, 48, 1, FrameType.U8,
+      Array.tabulate(32 * 48)(p => grayPixel(sid, i, p).toByte))
 
-  /** real avc1 MP4 files of the gray fixture, one per stream: each is
-    * four I_PCM GOP chunks (independent SPS/PPS+IDR every 15 frames, so
-    * the indexer splits four keyframe-aligned segments), muxed by the
-    * library's own ISO-BMFF writer. Idempotent.
-    */
-  private def ensureH264Mp4Fixture(s: SparkSession): String = {
-    import graft.sources.{H264, H264Codec, H264Mp4}
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), "graft-h264mp4")
-    dir.mkdirs()
-    val done = new java.io.File(dir, "_DONE")
-    if (done.isFile) return dir.getPath
-    val all = h264GrayFixture(s).collect() // 120 tiny frames: fixture-scale
-    all.groupBy(_.streamId).foreach { case (sid, frames) =>
-      val annexb = new java.io.ByteArrayOutputStream()
-      frames.sortBy(_.index).grouped(15).foreach { gop =>
-        val yuvs = gop.map(f => H264Codec.Yuv(f.width, f.height, f.data,
-          Array.fill(f.width / 2 * f.height / 2)(128.toByte),
-          Array.fill(f.width / 2 * f.height / 2)(128.toByte)))
-        annexb.write(H264Codec.encode(yuvs.toSeq, pcm = true))
+  /** the gray fixture through both real-H264 tiers: stores "h264pcm"
+    * (I_PCM) and "h264hi" (the compressed High tier) */
+  private def ensureH264Stores(s: SparkSession): String =
+    Fixtures.dir("h264-stores", Fixtures.storeKey(2, 60, 15)(
+        grayFrame(0L, 0L), H264GopCodec.Pcm, H264GopCodec.High)) { d =>
+      import s.implicits._
+      val frames = for (sid <- 0L until 2L; i <- 0L until 60L) yield grayFrame(sid, i)
+      Seq("h264pcm" -> H264GopCodec.Pcm, "h264hi" -> H264GopCodec.High).foreach {
+        case (name, codec) =>
+          VideoStore.ingest(frames.toDS(), d, name, gopSize = 15, codec = codec)
       }
-      val out = new java.io.FileOutputStream(new java.io.File(dir, f"stream$sid%02d.mp4"))
-      try H264Mp4.mux(H264.index(annexb.toByteArray), out) finally out.close()
     }
-    java.nio.file.Files.write(done.toPath, Array[Byte]())
-    dir.getPath
+
+  /** stream `sid` of the gray fixture as a real avc1 MP4: four I_PCM GOP
+    * chunks (independent SPS/PPS+IDR every 15 frames, so the indexer
+    * splits four keyframe-aligned segments), muxed by the library's own
+    * ISO-BMFF writer */
+  private def grayMp4(sid: Long): Array[Byte] = {
+    import graft.sources.{H264, H264Codec, H264Mp4}
+    val annexb = new java.io.ByteArrayOutputStream()
+    (0L until 60L).grouped(15).foreach { gop =>
+      annexb.write(H264Codec.encode(gop.map { i =>
+        val f = grayFrame(sid, i)
+        val chroma = f.width / 2 * f.height / 2
+        H264Codec.Yuv(f.width, f.height, f.data,
+          Array.fill(chroma)(128.toByte), Array.fill(chroma)(128.toByte))
+      }, pcm = true))
+    }
+    val out = new java.io.ByteArrayOutputStream()
+    H264Mp4.mux(H264.index(annexb.toByteArray), out)
+    out.toByteArray
   }
 
-  /** idempotent ingest of the gray fixture through BOTH real-H264 tiers */
-  private def ensureH264Stores(s: SparkSession): String = {
-    val root = sys.props("java.io.tmpdir") + "/graft-h264store"
-    VideoStore.ingest(h264GrayFixture(s), root, "h264pcm", gopSize = 15,
-      CacheMode.Ignore, codec = H264GopCodec.Pcm)
-    VideoStore.ingest(h264GrayFixture(s), root, "h264hi", gopSize = 15,
-      CacheMode.Ignore, codec = H264GopCodec.High)
-    root
-  }
+  /** the gray fixture as one MP4 file per stream */
+  private def ensureH264Mp4Fixture(): String =
+    Fixtures.dir("h264-mp4", Seq(2, grayMp4(0L))) { d =>
+      (0L until 2L).foreach(sid =>
+        Files.write(Paths.get(d, f"stream$sid%02d.mp4"), grayMp4(sid)))
+    }
 
-  /** A FLEET of deterministic Annex-B streams for the ingest bench:
-    * `files` streams of `gops` GOPs x (IDR + `pFrames` P), `fillerLen`
-    * bytes of deterministic slice payload — sized so the timed cost is
-    * the per-byte NAL scan + per-AU header parse, not file handling.
-    * One-time generation (idempotent on the marker file).
+  /** A FLEET of identical Annex-B streams for the ingest bench: 48 files
+    * of 40 GOPs x (IDR + 5 P), each slice carrying 1500 bytes of
+    * deterministic payload — sized so the timed cost is the per-byte NAL
+    * scan + per-AU header parse, not file handling.
     */
-  private[graft] def ensureH264Fleet(files: Int = 48, gops: Int = 40,
-      pFrames: Int = 5, fillerLen: Int = 1500): String = {
+  private[graft] def ensureH264Fleet(): String = {
     import graft.sources.{H264Writer => W}
-    val dir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-h264-fleet-$files-$gops-$pFrames-$fillerLen")
-    val marker = new java.io.File(dir, "_DONE")
-    if (marker.isFile) return dir.getPath
-    dir.mkdirs()
-    val filler = Array.tabulate(fillerLen)(i => (0x21 + (i * 11) % 180).toByte)
-    (0 until files).foreach { f =>
-      val s = new java.io.ByteArrayOutputStream(gops * (pFrames + 1) * (fillerLen + 32))
+    def stream: Array[Byte] = {
+      val filler = Array.tabulate(1500)(i => (0x21 + (i * 11) % 180).toByte)
+      val s = new java.io.ByteArrayOutputStream(40 * 6 * (1500 + 32))
       s.write(W.nal(3, 7, W.sps(0, 640, 480)))
       s.write(W.nal(3, 8, W.pps(0, 0)))
-      (0 until gops).foreach { g =>
+      (0 until 40).foreach { g =>
         s.write(W.nal(3, 5, W.slice(idr = true, 0, 0, 0, idrPicId = g % 2,
           filler = filler)))
-        (1 to pFrames).foreach { k =>
+        (1 to 5).foreach { k =>
           s.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k, filler = filler)))
         }
       }
-      java.nio.file.Files.write(
-        new java.io.File(dir, f"stream$f%04d.h264").toPath, s.toByteArray)
+      s.toByteArray
     }
-    java.nio.file.Files.write(marker.toPath, Array[Byte]())
-    dir.getPath
+    Fixtures.dir("h264-fleet", Seq(48, stream)) { d =>
+      val bytes = stream
+      (0 until 48).foreach(f => Files.write(Paths.get(d, f"stream$f%04d.h264"), bytes))
+    }
   }
 
   /** Deterministic Annex-B fixture: two real header-level H264 streams.
@@ -765,48 +710,48 @@ object VideoQueries {
     * frame-cropped SPS): 2 GOPs of IDR+2P with 4-byte start codes on the
     * parameter sets.
     */
-  private[graft] def ensureH264Fixture(): String = {
+  private[graft] def ensureH264Fixture(): String =
+    Fixtures.dir("h264-annexb", Seq(2, annexBStream(0))) { d =>
+      (0 until 2).foreach(i => Files.write(Paths.get(d, s"stream$i.h264"), annexBStream(i)))
+    }
+
+  private def annexBStream(stream: Int): Array[Byte] = {
     import graft.sources.{H264Writer => W}
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), "graft-h264")
-    dir.mkdirs()
-    val f0 = new java.io.File(dir, "stream0.h264")
-    val f1 = new java.io.File(dir, "stream1.h264")
-    if (f0.isFile && f1.isFile) return dir.getPath
     def filler(n: Int): Array[Byte] =
       Array.tabulate(n)(i => (0x11 + (i * 7) % 200).toByte)
-    val s0 = new java.io.ByteArrayOutputStream()
-    s0.write(W.nal(3, 7, W.sps(0, 64, 48)))
-    s0.write(W.nal(3, 8, W.pps(0, 0)))
-    (0 until 3).foreach { g =>
-      s0.write(W.nal(0, 6, filler(5))) // SEI opens the meta sequence
-      s0.write(W.nal(3, 5, W.slice(idr = true, 0, 0, 0, idrPicId = g,
-        filler = filler(40 + g))))
-      (1 to 4).foreach { k =>
-        val fno = 5 * g + k // global frame index for the fixture
-        if (fno == 7) { // two slices, one access unit (GOP 1, frame 2)
-          s0.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k,
-            filler = filler(20))))
-          s0.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k,
-            firstMb = 6, filler = filler(21))))
-        } else
-          s0.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k,
-            filler = filler(25 + fno))))
+    val s = new java.io.ByteArrayOutputStream()
+    if (stream == 0) {
+      s.write(W.nal(3, 7, W.sps(0, 64, 48)))
+      s.write(W.nal(3, 8, W.pps(0, 0)))
+      (0 until 3).foreach { g =>
+        s.write(W.nal(0, 6, filler(5))) // SEI opens the meta sequence
+        s.write(W.nal(3, 5, W.slice(idr = true, 0, 0, 0, idrPicId = g,
+          filler = filler(40 + g))))
+        (1 to 4).foreach { k =>
+          val fno = 5 * g + k // global frame index for the fixture
+          if (fno == 7) { // two slices, one access unit (GOP 1, frame 2)
+            s.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k,
+              filler = filler(20))))
+            s.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k,
+              firstMb = 6, filler = filler(21))))
+          } else
+            s.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k,
+              filler = filler(25 + fno))))
+        }
+      }
+    } else {
+      s.write(W.nal(3, 7, W.sps(0, 50, 30), fourByte = true))
+      s.write(W.nal(3, 8, W.pps(0, 0), fourByte = true))
+      (0 until 2).foreach { g =>
+        s.write(W.nal(3, 5, W.slice(idr = true, 0, 0, 0, idrPicId = g,
+          filler = filler(30 + g))))
+        (1 to 2).foreach { k =>
+          s.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k,
+            filler = filler(18 + k))))
+        }
       }
     }
-    val s1 = new java.io.ByteArrayOutputStream()
-    s1.write(W.nal(3, 7, W.sps(0, 50, 30), fourByte = true))
-    s1.write(W.nal(3, 8, W.pps(0, 0), fourByte = true))
-    (0 until 2).foreach { g =>
-      s1.write(W.nal(3, 5, W.slice(idr = true, 0, 0, 0, idrPicId = g,
-        filler = filler(30 + g))))
-      (1 to 2).foreach { k =>
-        s1.write(W.nal(2, 1, W.slice(idr = false, 0, k, 2 * k,
-          filler = filler(18 + k))))
-      }
-    }
-    java.nio.file.Files.write(f0.toPath, s0.toByteArray)
-    java.nio.file.Files.write(f1.toPath, s1.toByteArray)
-    dir.getPath
+    s.toByteArray
   }
 
   /** REAL DuckDB recomputation for the queries whose synthetic source is
@@ -1000,8 +945,8 @@ object VideoQueries {
         |SELECT sid AS "streamId", idx AS "index", 16 AS height, 24 AS width,
         |  CAST(p AS BIGINT) AS pos, CAST(v AS INT) AS pixel
         |FROM px ORDER BY 2, 5""".stripMargin,
-    // video near-dup replayed END-TO-END (pinned VALUES through round
-    // 12): regenerate all four streams' frames (ramp, brightness
+    // video near-dup replayed END-TO-END: regenerate all four streams'
+    // frames (ramp, brightness
     // variant, reversed copy), replay the aHash chain per frame
     // (the img_ahash_pairs derivation), rebuild Spark's hex tokens
     // exactly (to_hex on the two's-complement BIGINT matches Spark's
@@ -1011,7 +956,7 @@ object VideoQueries {
     // Exact token strings matter: band keys hash md5(shingle), so any
     // other token representation would re-roll the band collisions.
     "video_dup_pairs" -> videoDupPairsOracle,
-    // shot cuts replayed end-to-end (pinned VALUES through round 12):
+    // shot cuts replayed end-to-end:
     // regenerate the crushed ramp, rebuild per-frame histograms, L1
     // consecutive distance, per-stream mean + 3*stddev_samp threshold.
     // The threshold comparison is FP-robust: the nearest distance sits
@@ -1041,7 +986,7 @@ object VideoQueries {
          |  COALESCE(LEAD(idx) OVER (PARTITION BY sid ORDER BY idx) - 1, 299) AS end_index,
          |  COALESCE(LEAD(idx) OVER (PARTITION BY sid ORDER BY idx) - 1, 299) - idx + 1 AS n_frames
          |FROM starts ORDER BY 1, 2""".stripMargin,
-    // flow PROPERTY gates (pinned mean-|flow| literals through round 12):
+    // flow PROPERTY gates:
     // the fixture is an EXACT translate per frame ([[flowTex]] shifted by
     // i*(dx,dy)), so the expected relation — every interior mean within
     // tol of the construction's displacement — is recomputed outright;

@@ -277,4 +277,10 @@ class GraphRankSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got == refHits(edges, 8))
   }
+
+  test("a small hits call counts nodes and edges in one job") {
+    val edges = for (h <- 0L to 2L; a <- 8L to 9L) yield (h, a)
+    val df = edges.toDF("src", "dst")
+    assert(jobsStarted(GraphRank.hits(df, iters = 8)) == 6)
+  }
 }
